@@ -26,7 +26,12 @@ from pyspark.sql import functions as F
 
 @dataclass
 class EnrichContext:
-    """Broadcast dim tables available to enrichers (F3 fixtures)."""
+    """Broadcast dim tables available to enrichers (F3 fixtures).
+
+    Pass JVM-local dims (a table read from storage, or
+    ``createDataFrame(<pyarrow Table>)`` as ``datagen`` builds them): a
+    ``createDataFrame(<python list>)`` dim plans as a Python-RDD scan that
+    every job touching it re-runs through Python workers."""
 
     endpoints: DataFrame | None = None
     services: DataFrame | None = None
@@ -195,7 +200,12 @@ def composite_dim(ctx: EnrichContext) -> DataFrame | None:
     (true for config-derived dims, which enumerate their operations). Rows
     with an operation outside the dim get NO enrichment columns from the
     fused join (the sequential registry would still stamp service columns);
-    use the registry path when dims are open-world."""
+    use the registry path when dims are open-world.
+
+    The dims should be JVM-local (see :class:`EnrichContext`): Python-RDD
+    dims are re-scanned through Python workers on every job, and with no
+    size estimate the outer join here plans as a shuffled sort-merge join
+    instead of a broadcast."""
     if ctx.endpoints is None or ctx.services is None or ctx.status_codes is None:
         return None
     eps = ctx.endpoints.select("tenant_id", "operation", "api_id", "api_name")

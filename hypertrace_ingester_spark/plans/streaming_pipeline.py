@@ -22,7 +22,10 @@ a snapshot-versioned table with an idempotent ``batch_id`` gate
 (``sources/snapshots.commit_stream_batch``) — a retry replay no-ops, which
 is exactly-once; the same hook swaps to Iceberg ``writeTo(...).append()``
 (whose idempotent commits use the identical recipe) when the runtime jar
-exists.
+exists. On that path the parse → enrich → route chain runs ONCE per batch:
+the commit executes it, and the batch metrics are computed from the files
+the commit landed (read back column-pruned, never touching ``tokens``)
+instead of re-running the chain.
 """
 
 from __future__ import annotations
@@ -68,25 +71,37 @@ def process_batch(
     micro-batch retries — asserted in tests/test_streaming.py). Each
     partition is a mergeable partial (sum downstream), the analog of the
     reference's per-window gauge emissions; the batch pipeline's one-shot
-    metrics are the closed-input special case."""
+    metrics are the closed-input special case.
+
+    With ``cfg.snapshot_routed`` the chain executes once per batch: the
+    commit runs it, and the metrics read back the files that commit staged
+    (``Snapshot.added_files``) with column pruning — run_pipeline's
+    ``routed_back`` pattern. A replayed ``batch_id`` makes the commit no-op
+    without running the chain, so the metrics then come from ``routed``
+    itself (still one execution); that rewrites the metrics partition of a
+    batch whose commit landed but whose metrics write was lost."""
     from ..operators import aggregate as agg_ops
 
     routed = _batch_stages(batch_df, cfg, ctx, route_rules)
+    metrics_input = routed
     if cfg.snapshot_routed:
         # exactly-once: idempotent snapshot commit keyed by batch_id — a
         # foreachBatch retry replay of an already-landed batch no-ops
         # (sources/snapshots.py; the Iceberg recipe, stood-in locally)
         from ..sources import snapshots as snap
 
-        snap.commit_stream_batch(
-            routed, os.path.join(cfg.out_dir, "routed_snap"), batch_id
-        )
+        table = os.path.join(cfg.out_dir, "routed_snap")
+        landed = snap.commit_stream_batch(routed, table, batch_id)
+        if landed is not None and landed.added_files:
+            metrics_input = batch_df.sparkSession.read.schema(routed.schema).parquet(
+                *[os.path.join(table, f) for f in landed.added_files]
+            )
     else:
         route_ops.fan_out(
             routed, os.path.join(cfg.out_dir, "routed"), cfg.salt_buckets,
             mode="append",
         )
-    agg_ops.sink_metrics(routed, cfg.metric_window_ms).write.mode("overwrite").parquet(
+    agg_ops.sink_metrics(metrics_input, cfg.metric_window_ms).write.mode("overwrite").parquet(
         os.path.join(cfg.out_dir, "metrics", f"batch_id={batch_id}")
     )
 

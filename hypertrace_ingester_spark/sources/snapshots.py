@@ -50,7 +50,7 @@ import os
 import shutil
 import time
 import uuid
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -72,6 +72,10 @@ class Snapshot:
     schema_json: str | None = None
     batch_seq: int = -1
     file_stats: dict = None  # {rel_path: {col: [min, max]}}
+    # data files THIS commit staged (relative paths) — set on the Snapshot
+    # a write returns, so a caller can read back exactly what it landed;
+    # not persisted (a manifest loaded later leaves it empty)
+    added_files: tuple = ()
 
 
 def _snap_dir(path: str) -> str:
@@ -140,7 +144,8 @@ def _schema_key(schema_json: str):
     return json.dumps(strip(json.loads(schema_json)), sort_keys=True)
 
 
-def _commit_manifest(path: str, new_version: int, manifest: dict) -> Snapshot:
+def _commit_manifest(path: str, new_version: int, manifest: dict,
+                     added_files: list | tuple = ()) -> Snapshot:
     """The commit point, shared by every write path: the manifest's full
     JSON is written to a hidden temp file, then ``os.link``ed into the
     versioned name — exclusive (link fails if the target exists: the
@@ -149,7 +154,8 @@ def _commit_manifest(path: str, new_version: int, manifest: dict) -> Snapshot:
     link leaves nothing committed, only orphaned data files for the
     expiry sweep). The temp is removed on EVERY exit, including a
     serialization failure mid-dump (review find: a raise inside the
-    write block leaked it)."""
+    write block leaked it). The returned Snapshot reports ``added_files``,
+    the files this commit staged."""
     tmp = os.path.join(_snap_dir(path), f".tmp-{uuid.uuid4().hex}")
     try:
         with open(tmp, "w") as fh:
@@ -168,7 +174,8 @@ def _commit_manifest(path: str, new_version: int, manifest: dict) -> Snapshot:
             os.unlink(tmp)
         except FileNotFoundError:
             pass
-    return _load_manifest(path, new_version)
+    return replace(_load_manifest(path, new_version),
+                   added_files=tuple(added_files))
 
 
 def _stats_encode(v):
@@ -291,6 +298,9 @@ def commit(
     commit builds on whatever is current (blind append, Iceberg's
     fast-append). Raises :class:`CommitConflict` when the next version's
     manifest already exists (a racing writer won).
+
+    The returned Snapshot's ``added_files`` lists the data files this
+    commit staged (for ``overwrite`` that is the whole new file list).
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
@@ -348,7 +358,7 @@ def commit(
         "schema": df.schema.json(),
         "file_stats": base_stats,
     }
-    return _commit_manifest(path, new_version, manifest)
+    return _commit_manifest(path, new_version, manifest, new_files)
 
 
 def commit_stream_batch(
@@ -364,6 +374,8 @@ def commit_stream_batch(
     Structured Streaming re-runs a failed batch with the same id after
     restart; with a plain parquet append that double-appends
     (at-least-once) — with this gate the routed sink is exactly-once.
+    A landed batch returns :func:`commit`'s Snapshot, whose
+    ``added_files`` are exactly this batch's rows.
 
     The gate reads ONE manifest (the current one) — O(1) per batch — and
     because every commit, including maintenance commits (merge/rollback/
@@ -599,7 +611,7 @@ def merge_upsert(
         "parent": cur, "schema": updates.schema.json(),
         "batch_seq": snap.batch_seq, "file_stats": stats,
     }
-    return _commit_manifest(path, new_version, manifest)
+    return _commit_manifest(path, new_version, manifest, new_files)
 
 
 def compact(
@@ -636,7 +648,7 @@ def compact(
         "schema": snap.schema_json, "batch_seq": snap.batch_seq,
         "file_stats": new_stats,
     }
-    return _commit_manifest(path, new_version, manifest)
+    return _commit_manifest(path, new_version, manifest, new_files)
 
 
 def rollback(path: str, version: int) -> Snapshot:
@@ -673,12 +685,16 @@ def expire_snapshots(
     referenced (review find: they otherwise leak forever). Orphans are
     only removed once older than ``orphan_grace_sec`` so the sweep can
     never race an in-flight commit that has staged its files but not yet
-    linked its manifest. The current version always survives. Returns
-    {expired_versions, deleted_files, orphans_deleted}."""
+    linked its manifest. The same grace applies to ``_stage-*`` directories
+    a crashed write left behind: one is removed once nothing under it has
+    been modified for ``orphan_grace_sec``. The current version always
+    survives. Returns {expired_versions, deleted_files, orphans_deleted,
+    stage_dirs_deleted}."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
     hist = snapshots(path)
-    out = {"expired_versions": [], "deleted_files": 0, "orphans_deleted": 0}
+    out = {"expired_versions": [], "deleted_files": 0, "orphans_deleted": 0,
+           "stage_dirs_deleted": 0}
     if len(hist) > keep_last:
         keep = hist[-keep_last:]
         keep_versions = {s.version for s in keep}
@@ -711,4 +727,23 @@ def expire_snapshots(
                     out["orphans_deleted"] += 1
             except FileNotFoundError:
                 pass
+    # stage sweep: _stage-* dirs of crashed writes
+    for name in os.listdir(path) if os.path.isdir(path) else ():
+        stage = os.path.join(path, name)
+        if name.startswith("_stage-") and os.path.isdir(stage) and \
+                now - _newest_mtime(stage, now) >= orphan_grace_sec:
+            shutil.rmtree(stage, ignore_errors=True)
+            out["stage_dirs_deleted"] += 1
     return out
+
+
+def _newest_mtime(root: str, now: float) -> float:
+    """Newest mtime of ``root`` and everything under it — a live write keeps
+    touching its tree, so this is how long the tree has been idle. A path
+    vanishing mid-walk means a write is moving files: report ``now``."""
+    try:
+        return max([os.path.getmtime(root)] + [
+            os.path.getmtime(os.path.join(d, n))
+            for d, dirs, files in os.walk(root) for n in dirs + files])
+    except FileNotFoundError:
+        return now

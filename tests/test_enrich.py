@@ -91,3 +91,32 @@ def test_fused_equals_sequential(spark, sequences):
     a = seq_out.select(*cols).orderBy("doc_id").toPandas()
     b = fused_out.select(*cols).orderBy("doc_id").toPandas()
     assert a.equals(b)
+
+
+def test_datagen_dims_are_jvm_local_with_declared_schemas(spark, sequences):
+    """The datagen dims keep their declared schemas, and parse -> enrich ->
+    route over them plans no Python-RDD scan and no sort-merge join. A
+    ``createDataFrame(<python list>)`` dim (or a silent Arrow fallback to
+    one) re-scans through Python workers on every job and, with no size
+    estimate, shuffles the composite-dim join."""
+    from hypertrace_ingester_spark import schemas
+    from hypertrace_ingester_spark.operators import route as R
+
+    dims = {
+        "endpoints": (datagen.endpoints_dim(spark), schemas.ENDPOINTS_SCHEMA),
+        "services": (datagen.services_dim(spark), schemas.SERVICES_SCHEMA),
+        "status_codes": (datagen.status_codes_dim(spark), schemas.STATUS_CODES_SCHEMA),
+        "route_rules": (datagen.route_rules_dim(spark), schemas.ROUTE_RULES_SCHEMA),
+    }
+    for name, (df, declared) in dims.items():
+        assert df.schema == declared, name
+    ctx = E.EnrichContext(endpoints=dims["endpoints"][0], services=dims["services"][0],
+                          status_codes=dims["status_codes"][0])
+    parsed = P.parse_sequences(sequences)
+    alive = parsed.filter(F.col("has_tenant") & ~F.col("is_dropped")).select(
+        *P.PARSE_OUTPUT_COLS)
+    routed = R.route(E.enrich_with_bypass(alive, ctx), dims["route_rules"][0])
+    plan = routed._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+    assert "SortMergeJoin" not in plan

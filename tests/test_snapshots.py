@@ -467,3 +467,76 @@ def test_stats_on_timestamps_nested_shadow_and_maintenance(spark, tmp_path):
     last = sn.snapshots(t)[-1]
     assert last.file_stats and all(
         set(st) == {"ts", "id"} for st in last.file_stats.values())
+
+
+def test_commit_reports_staged_files(spark, tmp_path):
+    """A commit's Snapshot reports exactly the data files it staged: the
+    new tail of an append's file list, the whole list of an overwrite,
+    and the landed batch of commit_stream_batch; a replay no-op reports
+    nothing (None)."""
+    t = str(tmp_path / "tbl")
+
+    def rows_of(snap):
+        return sorted(r["id"] for r in spark.read.parquet(
+            *[os.path.join(t, f) for f in snap.added_files]).collect())
+
+    s1 = sn.commit(_df(spark, 0, 4), t)
+    assert s1.added_files and list(s1.added_files) == s1.files
+    s2 = sn.commit(_df(spark, 4, 7), t)
+    assert set(s2.added_files) == set(s2.files) - set(s1.files)
+    assert rows_of(s2) == [4, 5, 6]
+    s3 = sn.commit(_df(spark, 10, 12), t, mode="overwrite")
+    assert list(s3.added_files) == s3.files
+    assert not set(s3.added_files) & set(s2.files)
+    assert rows_of(s3) == [10, 11]
+
+    b0 = sn.commit_stream_batch(_df(spark, 20, 23), t, batch_id=0)
+    assert set(b0.added_files) == set(b0.files) - set(s3.files)
+    assert rows_of(b0) == [20, 21, 22]
+    assert sn.commit_stream_batch(_df(spark, 20, 23), t, batch_id=0) is None
+    # a manifest loaded from disk does not claim any staged files
+    assert sn.snapshots(t)[-1].added_files == ()
+
+
+def _aged_tree(root, files, age_sec):
+    """Create ``root`` with ``files`` (relative paths) and age every path
+    in it by ``age_sec``."""
+    for rel in files:
+        os.makedirs(os.path.dirname(os.path.join(root, rel)), exist_ok=True)
+        with open(os.path.join(root, rel), "wb") as fh:
+            fh.write(b"PAR1")
+    old = time.time() - age_sec
+    for d, dirs, names in os.walk(root):
+        for n in dirs + names:
+            os.utime(os.path.join(d, n), (old, old))
+    os.utime(root, (old, old))
+
+
+def test_expire_sweeps_aged_stage_dirs(spark, tmp_path):
+    """A crashed write's ``_stage-*`` directory idle past the grace is
+    removed by expire_snapshots; the table itself is untouched."""
+    t = str(tmp_path / "tbl")
+    sn.commit(_df(spark, 0, 4), t)
+    stage = os.path.join(t, "_stage-crashed")
+    _aged_tree(stage, ["part-00000.parquet", "_temporary/0/part-00001.parquet"],
+               age_sec=7200)
+    out = sn.expire_snapshots(t, keep_last=5, orphan_grace_sec=3600)
+    assert out["stage_dirs_deleted"] == 1 and not os.path.exists(stage)
+    assert sn.read_snapshot(spark, t).count() == 4
+
+
+def test_expire_keeps_fresh_stage_dirs(spark, tmp_path):
+    """Stage directories younger than the grace survive — including one
+    whose top is old but whose tree a live write is still touching."""
+    t = str(tmp_path / "tbl")
+    sn.commit(_df(spark, 0, 4), t)
+    fresh = os.path.join(t, "_stage-fresh")
+    _aged_tree(fresh, ["part-00000.parquet"], age_sec=0)
+    live = os.path.join(t, "_stage-live")
+    _aged_tree(live, ["_temporary/0/part-00000.parquet"], age_sec=7200)
+    with open(os.path.join(live, "_temporary", "0", "part-00001.parquet"), "wb") as fh:
+        fh.write(b"PAR1")
+    os.utime(live, (time.time() - 7200,) * 2)
+    out = sn.expire_snapshots(t, keep_last=5, orphan_grace_sec=3600)
+    assert out["stage_dirs_deleted"] == 0
+    assert os.path.isdir(fresh) and os.path.isdir(live)

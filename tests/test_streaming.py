@@ -229,6 +229,90 @@ def test_metrics_idempotent_under_batch_retry(spark, tmp_path):
     assert twice == once  # metrics idempotent (routed rows stay ALOS append)
 
 
+def _snapshot_batch_setup(spark, tmp_path):
+    from hypertrace_ingester_spark import datagen
+    from hypertrace_ingester_spark.operators import enrich as enrich_ops
+    from hypertrace_ingester_spark.plans.pipeline import PipelineConfig
+
+    in_dir = str(tmp_path / "snap_batch_in")
+    datagen.generate_sequences(spark, 1200, partitions=2).write.parquet(in_dir)
+    seqs = spark.read.parquet(in_dir)
+    half = F.pmod(F.xxhash64("doc_id"), F.lit(2))
+    batches = [seqs.where(half == k) for k in range(2)]
+    ctx = enrich_ops.EnrichContext(
+        endpoints=datagen.endpoints_dim(spark),
+        services=datagen.services_dim(spark),
+        status_codes=datagen.status_codes_dim(spark),
+    )
+    cfg = PipelineConfig(out_dir=str(tmp_path / "snap_batch_out"), snapshot_routed=True)
+    return batches, cfg, ctx, datagen.route_rules_dim(spark)
+
+
+def _per_sink(df, rows, tokens, errors):
+    return {
+        r["sink"]: (r["n"], r["tok"], r["err"])
+        for r in df.groupBy("sink").agg(
+            F.sum(rows).alias("n"), F.sum(tokens).alias("tok"),
+            F.sum(errors).alias("err")).collect()
+    }
+
+
+def _batch_metrics(spark, cfg, batch_id):
+    return _per_sink(
+        spark.read.parquet(f"{cfg.out_dir}/metrics/batch_id={batch_id}"),
+        "num_rows", "sum_tokens", "error_rows")
+
+
+def _snapshot_totals(spark, table, version):
+    from hypertrace_ingester_spark.sources import snapshots as sn
+
+    return _per_sink(sn.read_snapshot(spark, table, version=version),
+                     F.lit(1), "n_tok", "error_count")
+
+
+def test_snapshot_batch_metrics_match_committed_rows(spark, tmp_path):
+    """snapshot_routed=True computes each batch's metrics from the files
+    its commit landed: per sink, the metrics partition of batch k equals
+    the routed snapshot's rows, tokens and errors at version k+1 minus
+    those at version k."""
+    from hypertrace_ingester_spark.plans.streaming_pipeline import process_batch
+
+    batches, cfg, ctx, rules = _snapshot_batch_setup(spark, tmp_path)
+    table = f"{cfg.out_dir}/routed_snap"
+    prev = {}
+    for batch_id, batch in enumerate(batches):
+        process_batch(batch, batch_id, cfg, ctx, rules)
+        totals = _snapshot_totals(spark, table, batch_id + 1)
+        expected = {
+            sink: tuple(v - w for v, w in zip(vals, prev.get(sink, (0, 0, 0))))
+            for sink, vals in totals.items()
+        }
+        assert _batch_metrics(spark, cfg, batch_id) == expected
+        assert sum(v[0] for v in expected.values()) > 0
+        prev = totals
+
+
+def test_snapshot_batch_metrics_rewritten_on_replay(spark, tmp_path):
+    """Crash between the commit and the metrics write: the replayed batch
+    id no-ops the commit (version and rows unchanged) and rewrites the
+    lost metrics partition with the same values."""
+    import shutil
+
+    from hypertrace_ingester_spark.plans.streaming_pipeline import process_batch
+    from hypertrace_ingester_spark.sources import snapshots as sn
+
+    batches, cfg, ctx, rules = _snapshot_batch_setup(spark, tmp_path)
+    table = f"{cfg.out_dir}/routed_snap"
+    process_batch(batches[0], 0, cfg, ctx, rules)
+    landed = (sn.current_version(table), sn.read_snapshot(spark, table).count())
+    metrics = _batch_metrics(spark, cfg, 0)
+    shutil.rmtree(f"{cfg.out_dir}/metrics/batch_id=0")
+
+    process_batch(batches[0], 0, cfg, ctx, rules)
+    assert (sn.current_version(table), sn.read_snapshot(spark, table).count()) == landed
+    assert _batch_metrics(spark, cfg, 0) == metrics
+
+
 def test_streaming_dedup_drops_repeat_fingerprints(spark, tmp_path):
     """Streaming exact dedup (dropDuplicatesWithinWatermark on the
     normalized content fingerprint): one survivor per distinct text,
