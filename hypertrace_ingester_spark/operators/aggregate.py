@@ -43,16 +43,6 @@ def token_histogram(routed: DataFrame) -> DataFrame:
     )
 
 
-def token_length_summary(routed: DataFrame) -> DataFrame:
-    """A5 analog: per-sink n_tok distribution p50/p90/p99 (TraceEmitPunctuator
-    spans-per-trace distribution analog) via ``percentile_approx`` — a
-    mergeable sketch, single shuffle, no global sort."""
-    return routed.groupBy("sink").agg(
-        F.percentile_approx("n_tok", [0.5, 0.9, 0.99], 10_000).alias("p50_p90_p99"),
-        F.count(F.lit(1)).alias("num_rows"),
-    )
-
-
 def operational_counters(parsed_with_flags: DataFrame) -> DataFrame:
     """A6 analog: per-tenant received/dropped/missing-tenant/bypass counters
     (JaegerSpanPreProcessor.java:68-96 counter instrumentation). One pass over

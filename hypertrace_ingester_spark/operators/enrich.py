@@ -19,9 +19,22 @@ from __future__ import annotations
 import graphlib
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+# Driver-side cap on the composite dim (tenants x operations x status
+# codes). It is collected once per context and broadcast to every task, so
+# an open-world dim must fail loudly here, not OOM the driver.
+COMPOSITE_DIM_MAX_ROWS = 100_000
+COMPOSITE_KEY = ["tenant_id", "operation", "status_code"]
+# enrichment columns that come from dim lookups (nulled for bypass rows)
+DIM_COLS = ("api_id", "api_name", "service_id", "service_name", "status_message")
+
+
+class DimTooLargeError(ValueError):
+    """A dim table meant to be collected and broadcast exceeds its row bound."""
 
 
 @dataclass
@@ -31,11 +44,28 @@ class EnrichContext:
     Pass JVM-local dims (a table read from storage, or
     ``createDataFrame(<pyarrow Table>)`` as ``datagen`` builds them): a
     ``createDataFrame(<python list>)`` dim plans as a Python-RDD scan that
-    every job touching it re-runs through Python workers."""
+    every job touching it re-runs through Python workers.
+
+    The context memoises what is built from it: :meth:`enrichment` (the
+    composite dim, collected once, and the post-join expressions) and, in
+    ``chain_memo``, the one parse → enrich → route chain that
+    ``plans.pipeline.hot_chain`` last built over it. Reuse one context
+    across micro-batches so both are built once."""
 
     endpoints: DataFrame | None = None
     services: DataFrame | None = None
     status_codes: DataFrame | None = None
+    chain_memo: Any = field(default=None, init=False, repr=False, compare=False)
+    _enrichment: Enrichment | None = field(default=None, init=False, repr=False, compare=False)
+
+    def enrichment(self) -> Enrichment:
+        """The :class:`Enrichment` for the current dims, built on first use
+        and again only when a dim attribute is reassigned."""
+        dims = (self.endpoints, self.services, self.status_codes)
+        memo = self._enrichment
+        if memo is None or any(a is not b for a, b in zip(memo.dims, dims)):
+            memo = self._enrichment = Enrichment.build(self)
+        return memo
 
 
 @dataclass(frozen=True)
@@ -138,12 +168,26 @@ def status_enricher(df: DataFrame, ctx: EnrichContext) -> DataFrame:
     return df.join(F.broadcast(dim), on="status_code", how="left")
 
 
+def error_count(status_state: Column) -> Column:
+    """1 for a FAIL status, else 0."""
+    return F.when(status_state == "FAIL", F.lit(1)).otherwise(F.lit(0))
+
+
 @DEFAULT_REGISTRY.register("errors", depends_on=("api_status",))
 def error_enricher(df: DataFrame, ctx: EnrichContext) -> DataFrame:
     """ErrorsAndExceptionsEnricher per-row part (ErrorsAndExceptionsEnricher.java:44-98):
     error flag/count derived from FAIL status."""
-    return df.withColumn(
-        "error_count", F.when(F.col("status_state") == "FAIL", F.lit(1)).otherwise(F.lit(0))
+    return df.withColumn("error_count", error_count(F.col("status_state")))
+
+
+def token_bucket() -> Column:
+    """Length bucket of ``n_tok`` per FIXTURES.md F4."""
+    return (
+        F.when(F.col("n_tok") <= 16, "1-16")
+        .when(F.col("n_tok") <= 64, "17-64")
+        .when(F.col("n_tok") <= 256, "65-256")
+        .when(F.col("n_tok") <= 1024, "257-1024")
+        .otherwise("1025-4096")
     )
 
 
@@ -156,14 +200,7 @@ def token_stats_enricher(df: DataFrame, ctx: EnrichContext) -> DataFrame:
     computed here — hashing the full payload per row costs more than the
     rest of the parse+enrich stage combined (interpreted array-hash path);
     dedup flows add it on demand via :func:`token_fingerprint`."""
-    bucket = (
-        F.when(F.col("n_tok") <= 16, "1-16")
-        .when(F.col("n_tok") <= 64, "17-64")
-        .when(F.col("n_tok") <= 256, "65-256")
-        .when(F.col("n_tok") <= 1024, "257-1024")
-        .otherwise("1025-4096")
-    )
-    return df.withColumn("tok_bucket", bucket)
+    return df.withColumn("tok_bucket", token_bucket())
 
 
 def token_fingerprint(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
@@ -173,11 +210,16 @@ def token_fingerprint(df: DataFrame, tokens_col: str = "tokens") -> DataFrame:
     return df.withColumn("tok_fingerprint", F.xxhash64(F.col(tokens_col)))
 
 
+def lang_param() -> Column:
+    """The ``lang`` query parameter."""
+    return F.element_at(F.col("query_params"), F.lit("lang"))
+
+
 @DEFAULT_REGISTRY.register("lang", depends_on=("endpoint",))
 def lang_enricher(df: DataFrame, ctx: EnrichContext) -> DataFrame:
     """HttpAttributeEnricher analog (enrichers/HttpAttributeEnricher.java:38-101):
     promote a query param into a first-class enriched attribute."""
-    return df.withColumn("lang", F.element_at(F.col("query_params"), F.lit("lang")))
+    return df.withColumn("lang", lang_param())
 
 
 def enrich(df: DataFrame, ctx: EnrichContext,
@@ -202,10 +244,9 @@ def composite_dim(ctx: EnrichContext) -> DataFrame | None:
     fused join (the sequential registry would still stamp service columns);
     use the registry path when dims are open-world.
 
-    The dims should be JVM-local (see :class:`EnrichContext`): Python-RDD
-    dims are re-scanned through Python workers on every job, and with no
-    size estimate the outer join here plans as a shuffled sort-merge join
-    instead of a broadcast."""
+    This is the lazy join; :class:`Enrichment` collects it once per context
+    into a JVM-local table, so batches never re-run it. The dims should be
+    JVM-local too (see :class:`EnrichContext`)."""
     if ctx.endpoints is None or ctx.services is None or ctx.status_codes is None:
         return None
     eps = ctx.endpoints.select("tenant_id", "operation", "api_id", "api_name")
@@ -218,10 +259,31 @@ def composite_dim(ctx: EnrichContext) -> DataFrame | None:
     return eps.join(svc, on="tenant_id", how="outer").crossJoin(sc)
 
 
-def enrich_fused(df: DataFrame, ctx: EnrichContext) -> DataFrame:
-    """Payload-friendly enrichment: one composite broadcast join + the
-    non-join enrichers (error flag, token bucket, lang) as projections.
-    Falls back to the sequential registry when any dim is missing.
+def collect_local(dim: DataFrame, max_rows: int, name: str) -> DataFrame:
+    """``dim`` collected to the driver and re-created as a JVM-local table
+    (``LocalTableScan``), so later queries read it with exact size stats
+    and none of its upstream plan. One job fetches at most ``max_rows + 1``
+    rows; a larger dim raises :class:`DimTooLargeError` instead of
+    truncating."""
+    table = dim.limit(max_rows + 1).toArrow()
+    if table.num_rows > max_rows:
+        raise DimTooLargeError(
+            f"{name} has more than {max_rows} rows ({table.num_rows} collected "
+            f"before stopping; bound {max_rows}): it is too large to collect and "
+            "broadcast — use the sequential registry (enrich) for open-world dims"
+        )
+    return dim.sparkSession.createDataFrame(table, schema=dim.schema)
+
+
+@dataclass(frozen=True, eq=False)
+class Enrichment:
+    """Everything enrichment needs, built once per :class:`EnrichContext`
+    (:meth:`EnrichContext.enrichment`): the composite dim as a JVM-local
+    broadcast table, and the column expressions that run after its join.
+    Applying it to a batch is one join and two ``withColumns``.
+
+    ``dim`` is ``None`` when a dim is missing; the sequential registry then
+    stands in for the join.
 
     Open-world safety: the composite key is (tenant, operation, status);
     a row whose (tenant, operation) is absent from the endpoint dim misses
@@ -231,16 +293,61 @@ def enrich_fused(df: DataFrame, ctx: EnrichContext) -> DataFrame:
     error_count derives from the final state, so status/error enrichment
     never depends on endpoint-dim coverage. api/service/status_message do
     require dim coverage — identical to the sequential left joins."""
-    dim = composite_dim(ctx)
-    if dim is None:
+
+    ctx: EnrichContext
+    dims: tuple[DataFrame | None, ...]
+    dim: DataFrame | None
+    # enrich_fused's and enrich_with_bypass's column layers after the join
+    # (one ``withColumns`` each): status first, then the columns that
+    # derive from the final status
+    fused: list[dict[str, Column]]
+    with_bypass: list[dict[str, Column]]
+
+    @classmethod
+    def build(cls, ctx: EnrichContext) -> Enrichment:
+        dim = composite_dim(ctx)
+        heuristic = status_state_heuristic()
+        status = F.col("status_state")
+        if dim is not None:
+            dim = F.broadcast(collect_local(dim, COMPOSITE_DIM_MAX_ROWS, "composite enrichment dim"))
+            status = F.coalesce(status, heuristic)
+        derived = {"error_count": error_count(F.col("status_state")),
+                   "tok_bucket": token_bucket(), "lang": lang_param()}
+        # bypass rows skip the enricher DAG in the reference
+        # (SpanNormalizer.java:66-70): dim columns nulled, status re-derived
+        # from the raw code class
+        enriched = ~F.col("is_bypass")
+        bypass = {c: F.when(enriched, F.col(c)) for c in DIM_COLS}
+        bypass["status_state"] = F.when(enriched, status).otherwise(heuristic)
+        return cls(ctx, (ctx.endpoints, ctx.services, ctx.status_codes), dim,
+                   [{"status_state": status}, derived], [bypass, derived])
+
+    def join(self, df: DataFrame) -> DataFrame:
+        """``df`` with the dim-lookup columns: the composite broadcast join,
+        or the sequential registry when a dim is missing."""
+        if self.dim is None:
+            return enrich(df, self.ctx)
+        return df.join(self.dim, on=COMPOSITE_KEY, how="left")
+
+    def apply(self, alive: DataFrame) -> DataFrame:
+        """:func:`enrich_with_bypass` with the prebuilt parts."""
+        out = self.join(alive)
+        for layer in self.with_bypass:
+            out = out.withColumns(layer)
+        return out
+
+
+def enrich_fused(df: DataFrame, ctx: EnrichContext) -> DataFrame:
+    """Payload-friendly enrichment: one composite broadcast join + the
+    non-join enrichers (error flag, token bucket, lang) as projections
+    (see :class:`Enrichment`). Falls back to the sequential registry when
+    any dim is missing."""
+    e = ctx.enrichment()
+    if e.dim is None:
         return enrich(df, ctx)
-    out = df.join(F.broadcast(dim), on=["tenant_id", "operation", "status_code"], how="left")
-    out = out.withColumn(
-        "status_state", F.coalesce(F.col("status_state"), status_state_heuristic())
-    )
-    out = error_enricher(out, ctx)
-    out = token_stats_enricher(out, ctx)
-    out = lang_enricher(out, ctx)
+    out = e.join(df)
+    for layer in e.fused:
+        out = out.withColumns(layer)
     return out
 
 
@@ -300,21 +407,6 @@ def enrich_with_bypass(alive: DataFrame, ctx: EnrichContext) -> DataFrame:
     fused enrichment, then bypass semantics — bypass rows skip the
     enricher DAG in the reference (SpanNormalizer.java:66-70), so their
     dim-lookup columns are nulled and status is EXPLICITLY re-derived from
-    the raw code class; error_count follows the final status_state."""
-    enriched = enrich_fused(alive, ctx)
-    dim_cols = [
-        c
-        for c in ("api_id", "api_name", "service_id", "service_name", "status_message")
-        if c in enriched.columns
-    ]
-    out = enriched.withColumns(
-        {c: F.when(~F.col("is_bypass"), F.col(c)) for c in dim_cols}
-    ).withColumn(
-        "status_state",
-        F.when(~F.col("is_bypass"), F.col("status_state")).otherwise(
-            status_state_heuristic()
-        ),
-    )
-    return out.withColumn(
-        "error_count", F.when(F.col("status_state") == "FAIL", F.lit(1)).otherwise(F.lit(0))
-    )
+    the raw code class; error_count follows the final status_state. Uses
+    the context's memoised :class:`Enrichment`."""
+    return ctx.enrichment().apply(alive)

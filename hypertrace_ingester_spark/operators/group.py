@@ -104,23 +104,6 @@ def session_emit_capped(
     )
 
 
-def cap_rows_per_group(
-    df: DataFrame,
-    cap: int,
-    group_cols: list[str],
-    order_cols: list[str],
-) -> DataFrame:
-    """G3 per-group row cap (RawSpansProcessor.java:347-388): keep the first
-    ``cap`` rows per group in deterministic order; excess rows dropped
-    (truncation counters come from comparing counts before/after)."""
-    w = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= cap)
-        .withColumnRenamed("_rn", "rn")
-    )
-
-
 def group_distinct_stats(df: DataFrame, group_col: str, value_col: str) -> DataFrame:
     """G2 dedup semantics: distinct member count per group
     (array_distinct(collect_list(span_id)) analog, TraceEmitPunctuator.java:123-150).

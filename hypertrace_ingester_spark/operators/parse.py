@@ -36,19 +36,25 @@ DEFAULT_GROK_FIELDS: list[tuple[str, str, str | None]] = [
 ]
 
 
-def grok_extract(df: DataFrame, line_col: str = "source_line",
-                 fields: list[tuple[str, str, str | None]] | None = None) -> DataFrame:
-    """Vectorized regex extraction via native ``regexp_extract`` (codegen'd).
+def grok_columns(line_col: str = "source_line",
+                 fields: list[tuple[str, str, str | None]] | None = None) -> dict[str, Column]:
+    """Vectorized regex extraction via native ``regexp_extract`` (codegen'd),
+    one expression per field, all reading ``line_col``.
 
     ``nullif`` (not a when/otherwise rewrap) keeps each regex to ONE call
     site: the CASE form evaluates the regex 2-3x per field in interpreted
     mode and triples the generated bytecode in codegen mode."""
+    out = {}
     for name, pattern, cast in fields or DEFAULT_GROK_FIELDS:
         col = F.nullif(F.regexp_extract(F.col(line_col), pattern, 1), F.lit(""))
-        if cast:
-            col = col.cast(cast)
-        df = df.withColumn(name, col)
-    return df
+        out[name] = col.cast(cast) if cast else col
+    return out
+
+
+def grok_extract(df: DataFrame, line_col: str = "source_line",
+                 fields: list[tuple[str, str, str | None]] | None = None) -> DataFrame:
+    """Apply :func:`grok_columns` to ``df``."""
+    return df.withColumns(grok_columns(line_col, fields))
 
 
 def grok_extract_pandas(df: DataFrame, line_col: str = "source_line",
@@ -78,7 +84,7 @@ def grok_extract_pandas(df: DataFrame, line_col: str = "source_line",
     return df.mapInPandas(extract, schema=out_schema)
 
 
-def url_fields(df: DataFrame, url_col: str = "url") -> DataFrame:
+def url_columns(url_col: str = "url") -> dict[str, Column]:
     """HTTP URL decomposition — HttpFieldsGenerator.java:587-612 analog.
 
     path (leading slash kept, trailing slash stripped), query-string params
@@ -90,15 +96,17 @@ def url_fields(df: DataFrame, url_col: str = "url") -> DataFrame:
     # keep leading '/', strip trailing slashes (HttpFieldsGenerator path rules)
     path = F.when(F.length(path_raw) > 1, F.regexp_replace(path_raw, "/+$", "")).otherwise(path_raw)
     query = F.parse_url(full, F.lit("QUERY"))
-    return (
-        df.withColumn("url_path", path)
-        .withColumn(
-            "query_params",
-            F.when(query.isNotNull(), F.str_to_map(query, F.lit("&"), F.lit("="))).otherwise(
-                F.create_map().cast("map<string,string>")
-            ),
-        )
-    )
+    return {
+        "url_path": path,
+        "query_params": F.when(query.isNotNull(), F.str_to_map(query, F.lit("&"), F.lit("="))).otherwise(
+            F.create_map().cast("map<string,string>")
+        ),
+    }
+
+
+def url_fields(df: DataFrame, url_col: str = "url") -> DataFrame:
+    """Apply :func:`url_columns` to ``df``."""
+    return df.withColumns(url_columns(url_col))
 
 
 # ---------------------------------------------------------------------------
@@ -147,15 +155,20 @@ def rate_limit_per_key(df: DataFrame, key_cols: list[str], order_cols: list[str]
 # Tenant resolution (P2 — jaeger/TenantIdHandler.java:29-81)
 # ---------------------------------------------------------------------------
 
-def resolve_tenant(df: DataFrame, tenant_col: str = "tenant_raw",
-                   default_tenant: str | None = None) -> DataFrame:
+def tenant_column(tenant_col: str = "tenant_raw", default_tenant: str | None = None) -> Column:
     """Tenant from extracted field else configured static default; rows with
     no resolvable tenant get NULL (dropped downstream)."""
     raw = F.col(tenant_col)
     resolved = F.when((raw.isNotNull()) & (raw != ""), raw)
     if default_tenant is not None:
         resolved = resolved.otherwise(F.lit(default_tenant))
-    return df.withColumn("tenant_id", resolved)
+    return resolved
+
+
+def resolve_tenant(df: DataFrame, tenant_col: str = "tenant_raw",
+                   default_tenant: str | None = None) -> DataFrame:
+    """Apply :func:`tenant_column` to ``df`` as ``tenant_id``."""
+    return df.withColumn("tenant_id", tenant_column(tenant_col, default_tenant))
 
 
 # ---------------------------------------------------------------------------
@@ -259,6 +272,62 @@ PARSE_OUTPUT_COLS = [
 ]
 
 
+def parse_layers(
+    drop_criteria: DropCriteria = DEFAULT_DROP,
+    exclude_rule: dict | None = None,
+    default_tenant: str | None = None,
+) -> list[dict[str, Column]]:
+    """The parse stage as three layers of column expressions, each applied
+    with one ``withColumns``: grok fields → URL fields, tenant and bypass
+    flag → drop/tenant flags and the attribute map. Each layer reads only
+    columns the layers before it produced, so the drop criteria see every
+    extracted field (but not ``has_tenant`` or the new ``attributes``).
+
+    Building these costs hundreds of Python→JVM round trips (every ``F.*``
+    call is several), so a caller that parses many DataFrames builds them
+    once and reuses them (see plans/pipeline.hot_chain); the expressions
+    name columns only, so they bind to any input with ``source_line``."""
+    drop_col = drop_criteria.to_column()
+    if exclude_rule is not None:
+        drop_col = drop_col | compile_rule_tree(exclude_rule)
+    return [
+        grok_columns(),
+        {
+            **url_columns(),
+            "tenant_id": tenant_column(default_tenant=default_tenant),
+            "is_bypass": bypass_predicate(),
+        },
+        {
+            "is_dropped": F.coalesce(drop_col, F.lit(False)),
+            "has_tenant": F.col("tenant_id").isNotNull(),
+            "attributes": F.map_from_arrays(
+                F.array(F.lit("op"), F.lit("status"), F.lit("lang")),
+                F.array(
+                    F.col("operation"),
+                    F.col("status_code"),
+                    F.element_at(F.col("query_params"), F.lit("lang")),
+                ),
+            ),
+        },
+    ]
+
+
+def apply_parse(df: DataFrame, layers: list[dict[str, Column]],
+                use_pandas_grok: bool = False) -> DataFrame:
+    """Run :func:`parse_layers` output over ``df``; ``use_pandas_grok``
+    swaps the first (grok) layer for :func:`grok_extract_pandas`."""
+    if use_pandas_grok:
+        df, layers = grok_extract_pandas(df), layers[1:]
+    for layer in layers:
+        df = df.withColumns(layer)
+    return df
+
+
+def alive_predicate() -> Column:
+    """Rows that survive parsing: a resolved tenant and no drop match."""
+    return F.col("has_tenant") & ~F.col("is_dropped")
+
+
 def parse_sequences(
     df: DataFrame,
     drop_criteria: DropCriteria = DEFAULT_DROP,
@@ -268,38 +337,15 @@ def parse_sequences(
 ) -> DataFrame:
     """sequences → parsed records, with per-row drop/bypass flags still attached.
 
-    Chain: grok extract → URL fields → tenant resolve → drop-filter flags.
-    Mirrors JaegerSpanPreProcessor.preProcessSpan ordering (:100-127): cheap
-    predicates first so Catalyst pushes them ahead of expensive extraction.
-    Callers split on ``is_dropped`` / ``tenant_id IS NULL`` and record counters
-    (see aggregate.operational_counters).
+    Chain: grok extract → URL fields → tenant resolve → drop-filter flags
+    (:func:`parse_layers`). Mirrors JaegerSpanPreProcessor.preProcessSpan
+    ordering (:100-127): cheap predicates first so Catalyst pushes them
+    ahead of expensive extraction. Callers split on ``is_dropped`` /
+    ``tenant_id IS NULL`` and record counters (see
+    aggregate.operational_counters).
     """
-    extract = grok_extract_pandas if use_pandas_grok else grok_extract
-    out = extract(df)
-    out = url_fields(out)
-    out = resolve_tenant(out, default_tenant=default_tenant)
-
-    drop_col = drop_criteria.to_column()
-    if exclude_rule is not None:
-        drop_col = drop_col | compile_rule_tree(exclude_rule)
-
-    out = (
-        out.withColumn("is_bypass", bypass_predicate())
-        .withColumn("is_dropped", F.coalesce(drop_col, F.lit(False)))
-        .withColumn("has_tenant", F.col("tenant_id").isNotNull())
-        .withColumn(
-            "attributes",
-            F.map_from_arrays(
-                F.array(F.lit("op"), F.lit("status"), F.lit("lang")),
-                F.array(
-                    F.col("operation"),
-                    F.col("status_code"),
-                    F.element_at(F.col("query_params"), F.lit("lang")),
-                ),
-            ),
-        )
-    )
-    return out
+    return apply_parse(df, parse_layers(drop_criteria, exclude_rule, default_tenant),
+                       use_pandas_grok)
 
 
 def split_parsed(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -308,7 +354,7 @@ def split_parsed(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
     kept = survives tenant + drop filters and is NOT bypass; bypass rows skip
     grouping/enrichment (RawSpanToStructuredTraceTransformer.java:28-44 analog).
     """
-    alive = parsed.filter(F.col("has_tenant") & ~F.col("is_dropped"))
+    alive = parsed.filter(alive_predicate())
     kept = alive.filter(~F.col("is_bypass")).select(*PARSE_OUTPUT_COLS)
     bypass = alive.filter(F.col("is_bypass")).select(*PARSE_OUTPUT_COLS)
     return kept, bypass

@@ -15,20 +15,38 @@ file layout, never row content.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from dataclasses import dataclass
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 DEFAULT_SALT_BUCKETS = 16
+DEFAULT_SINK = "sink-default"
+
+
+@dataclass(frozen=True, eq=False)
+class Routing:
+    """The route stage built once: the broadcast (source, sink) rules and
+    the sink expression; applying it is one join and one projection."""
+
+    rules: DataFrame
+    sink: Column
+
+    @classmethod
+    def build(cls, route_rules: DataFrame, default_sink: str = DEFAULT_SINK) -> Routing:
+        return cls(F.broadcast(route_rules.select("source", "sink")),
+                   F.coalesce(F.col("sink"), F.lit(default_sink)))
+
+    def apply(self, enriched: DataFrame) -> DataFrame:
+        return enriched.join(self.rules, on="source", how="left").withColumn("sink", self.sink)
 
 
 def route(enriched: DataFrame, route_rules: DataFrame,
-          default_sink: str = "sink-default") -> DataFrame:
+          default_sink: str = DEFAULT_SINK) -> DataFrame:
     """Stamp each row with its sink via broadcast join on source.
 
     Unmatched sources go to ``default_sink`` (dead-letter analog)."""
-    dim = route_rules.select("source", "sink")
-    routed = enriched.join(F.broadcast(dim), on="source", how="left")
-    return routed.withColumn("sink", F.coalesce(F.col("sink"), F.lit(default_sink)))
+    return Routing.build(route_rules, default_sink).apply(enriched)
 
 
 def salted_repartition(df: DataFrame, key: str = "sink",
@@ -83,10 +101,6 @@ def fan_out(routed: DataFrame, out_dir: str,
         .partitionBy("sink")
         .parquet(out_dir)
     )
-
-
-def sink_names(route_rules: DataFrame) -> list[str]:
-    return [r["sink"] for r in route_rules.select("sink").distinct().collect()]
 
 
 def diagnose_skew(

@@ -17,7 +17,7 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import datagen
@@ -70,6 +70,60 @@ class PipelineConfig:
     # The sink lands as ONE table with `sink` as a column (snapshot
     # manifests replace partition dirs as the pruning metadata).
     snapshot_routed: bool = False
+
+
+@dataclass(frozen=True, eq=False)
+class HotChain:
+    """The parse → alive filter → enrich → route chain, built once per
+    (context, route rules, drop criteria) by :func:`hot_chain` — the
+    reference compiles its filter and enrichment configs once at topology
+    start (SpanFilter.java:62-117) the same way. Applying it to a DataFrame
+    is a handful of DataFrame calls and no expression building: layered
+    ``withColumns`` → ``filter`` → ``select`` → composite-dim broadcast join
+    → two ``withColumns`` → route-rules broadcast join. It is the same
+    composition as ``parse_sequences`` → alive filter →
+    ``enrich_with_bypass`` → ``route``, from the same builders."""
+
+    route_rules: DataFrame
+    drop_criteria: parse_ops.DropCriteria
+    parse_layers: list[dict[str, Column]]
+    alive_predicate: Column
+    enrichment: enrich_ops.Enrichment
+    routing: route_ops.Routing
+
+    def parse(self, df: DataFrame, use_pandas_grok: bool = False) -> DataFrame:
+        """``parse_sequences`` output: every row, with its flags."""
+        return parse_ops.apply_parse(df, self.parse_layers, use_pandas_grok)
+
+    def alive(self, parsed: DataFrame) -> DataFrame:
+        """The surviving rows of :meth:`parse`, as ``PARSE_OUTPUT_COLS``."""
+        return parsed.filter(self.alive_predicate).select(*parse_ops.PARSE_OUTPUT_COLS)
+
+    def route(self, alive: DataFrame) -> DataFrame:
+        """Enrich (with bypass semantics) and route the :meth:`alive` rows."""
+        return self.routing.apply(self.enrichment.apply(alive))
+
+    def apply(self, df: DataFrame, use_pandas_grok: bool = False) -> DataFrame:
+        """The routed rows of ``df``."""
+        return self.route(self.alive(self.parse(df, use_pandas_grok)))
+
+
+def hot_chain(ctx: enrich_ops.EnrichContext, route_rules: DataFrame,
+              drop_criteria: parse_ops.DropCriteria) -> HotChain:
+    """The :class:`HotChain` over ``ctx``, memoised in ``ctx.chain_memo``:
+    one slot, reused while the route rules are the same object, the drop
+    criteria are equal and the context's enrichment is unchanged. Building
+    costs hundreds of Python→JVM round trips (and, on a context's first
+    use, the composite-dim collect), so streaming callers pass one context
+    and one rules frame to every micro-batch."""
+    enrichment = ctx.enrichment()
+    memo = ctx.chain_memo
+    if (memo is None or memo.route_rules is not route_rules
+            or memo.drop_criteria != drop_criteria or memo.enrichment is not enrichment):
+        memo = ctx.chain_memo = HotChain(
+            route_rules, drop_criteria, parse_ops.parse_layers(drop_criteria),
+            parse_ops.alive_predicate(), enrichment, route_ops.Routing.build(route_rules))
+    return memo
 
 
 # the pre-keyed layout's key: the (tenant, trace_id) analog for sequences
@@ -139,6 +193,7 @@ def run_pipeline(
         status_codes=datagen.status_codes_dim(spark),
     )
     route_rules = route_rules if route_rules is not None else datagen.route_rules_dim(spark)
+    chain = hot_chain(ctx, route_rules, cfg.drop_criteria)
 
     # ---- PARSE ----------------------------------------------------------
     parse_ckpt = os.path.join(cfg.out_dir, "_checkpoints", "parsed")
@@ -173,9 +228,7 @@ def run_pipeline(
         else:
             parsed = spark.read.parquet(parse_ckpt)
     else:
-        parsed = parse_ops.parse_sequences(
-            sequences, drop_criteria=cfg.drop_criteria, use_pandas_grok=cfg.use_pandas_grok
-        )
+        parsed = chain.parse(sequences, cfg.use_pandas_grok)
         if cfg.checkpoint_parse and cfg.bucket_parse_checkpoint:
             tbl = _parse_ckpt_table(cfg.out_dir)
             bucketing.write_bucketed(
@@ -195,18 +248,7 @@ def run_pipeline(
 
     counters = agg_ops.operational_counters(parsed)
 
-    # ---- ENRICH (single pass; no branch-union double scan) --------------
-    # The reference branches bypass spans around enrichment
-    # (SpanNormalizer.java:66-70). Expressed as two filter+union branches
-    # that costs a second scan of the input; instead enrich ALL surviving
-    # rows in one pass and null out the dim-lookup columns for bypass rows
-    # afterwards — identical result, half the scans.
-    alive = parsed.filter(F.col("has_tenant") & ~F.col("is_dropped")).select(
-        *parse_ops.PARSE_OUTPUT_COLS
-    )
-    # fused path: ONE composite broadcast join instead of three — each
-    # chained join re-materializes the wide token payload
-    enriched_all = enrich_ops.enrich_with_bypass(alive, ctx)
+    alive = chain.alive(parsed)
 
     # ---- GROUP (opt-in; raw-spans-grouper analog) ------------------------
     n_sessions = None
@@ -225,8 +267,15 @@ def run_pipeline(
         sessions.write.mode("overwrite").parquet(sessions_dir)
         n_sessions = spark.read.parquet(sessions_dir).count()
 
-    # ---- ROUTE ----------------------------------------------------------
-    routed = route_ops.route(enriched_all, route_rules)
+    # ---- ENRICH + ROUTE (single pass; no branch-union double scan) ------
+    # The reference branches bypass spans around enrichment
+    # (SpanNormalizer.java:66-70). Expressed as two filter+union branches
+    # that costs a second scan of the input; instead enrich ALL surviving
+    # rows in one pass and null out the dim-lookup columns for bypass rows
+    # afterwards — identical result, half the scans. Enrichment is ONE
+    # composite broadcast join instead of three — each chained join
+    # re-materializes the wide token payload.
+    routed = chain.route(alive)
     routed_dir = os.path.join(cfg.out_dir, "routed")
     if not (resume and manifest["stages"].get("route", {}).get("complete")):
         route_ops.fan_out(routed, routed_dir, cfg.salt_buckets)

@@ -26,10 +26,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def widen(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Repartition ONLY when the source is narrower than the cluster.
 

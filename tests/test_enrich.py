@@ -120,3 +120,22 @@ def test_datagen_dims_are_jvm_local_with_declared_schemas(spark, sequences):
     assert "LocalTableScan" in plan
     assert "ExistingRDD" not in plan
     assert "SortMergeJoin" not in plan
+
+
+def test_composite_dim_collect_is_bounded(spark, sequences, monkeypatch):
+    """The composite dim (5 tenants x 13 operations x 5 codes = 325 rows)
+    is collected once with a row bound: at the bound it enriches, one row
+    under it raises a named error giving the rows seen and the bound."""
+    alive = P.parse_sequences(sequences).filter(P.alive_predicate()).select(
+        *P.PARSE_OUTPUT_COLS)
+
+    def ctx():
+        return E.EnrichContext(endpoints=datagen.endpoints_dim(spark),
+                               services=datagen.services_dim(spark),
+                               status_codes=datagen.status_codes_dim(spark))
+
+    monkeypatch.setattr(E, "COMPOSITE_DIM_MAX_ROWS", 325)
+    assert E.enrich_with_bypass(alive, ctx()).count() == alive.count()
+    monkeypatch.setattr(E, "COMPOSITE_DIM_MAX_ROWS", 324)
+    with pytest.raises(E.DimTooLargeError, match=r"more than 324 rows \(325 collected"):
+        E.enrich_with_bypass(alive, ctx())

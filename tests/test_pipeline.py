@@ -113,3 +113,74 @@ def test_prometheus_exposition(spark, run):
     for sink, n in manifest["stages"]["route"]["sink_counts"].items():
         assert f'ingester_routed_rows_total{{sink="{sink}"}} {n}' in text
     assert "# TYPE ingester_run_seconds gauge" in text  # durations are gauges
+
+
+def _comparable(df):
+    """Rows ``exceptAll`` can compare: tokens hashed, maps as sorted entries."""
+    cols = []
+    for f in df.schema:
+        c = F.col(f.name)
+        if f.dataType.typeName() == "map":
+            c = F.to_json(F.array_sort(F.map_entries(c)))
+        elif f.name == "tokens":
+            c = F.xxhash64(c)
+        cols.append(c.alias(f.name))
+    return df.select(*cols)
+
+
+def _ctx(spark):
+    from hypertrace_ingester_spark.operators import enrich as E
+
+    return E.EnrichContext(endpoints=datagen.endpoints_dim(spark),
+                           services=datagen.services_dim(spark),
+                           status_codes=datagen.status_codes_dim(spark))
+
+
+def test_hot_chain_equals_operator_composition(spark, sequences):
+    """The built chain routes exactly the rows the public operators do when
+    composed one by one (parse_sequences -> alive filter ->
+    enrich_with_bypass -> route), missing-tenant, dropped and bypass rows
+    included."""
+    from hypertrace_ingester_spark.operators import enrich as E
+    from hypertrace_ingester_spark.operators import parse as P
+    from hypertrace_ingester_spark.operators import route as R
+    from hypertrace_ingester_spark.plans.pipeline import hot_chain
+
+    rules = datagen.route_rules_dim(spark)
+    parsed = P.parse_sequences(sequences)
+    flags = parsed.agg(
+        F.sum((~F.col("has_tenant")).cast("int")).alias("missing"),
+        F.sum(F.col("is_dropped").cast("int")).alias("dropped"),
+        F.sum((F.col("is_bypass") & F.col("has_tenant") & ~F.col("is_dropped"))
+              .cast("int")).alias("bypass"),
+    ).first()
+    assert flags.missing > 0 and flags.dropped > 0 and flags.bypass > 0
+    alive = parsed.filter(F.col("has_tenant") & ~F.col("is_dropped")).select(
+        *P.PARSE_OUTPUT_COLS)
+    composed = R.route(E.enrich_with_bypass(alive, _ctx(spark)), rules)
+    built = hot_chain(_ctx(spark), rules, P.DEFAULT_DROP).apply(sequences)
+
+    assert built.schema == composed.schema
+    a, b = _comparable(built), _comparable(composed)
+    assert a.exceptAll(b).count() == 0
+    assert b.exceptAll(a).count() == 0
+    assert built.count() == alive.count()
+    assert built.filter("is_bypass").count() == flags.bypass
+
+
+def test_hot_chain_memo_is_one_slot_keyed_by_rules_and_drop(spark):
+    """One chain per context: reused for the same rules object and equal
+    drop criteria, rebuilt when either changes, and a rebuild reuses the
+    context's enrichment (the composite dim is collected once)."""
+    from hypertrace_ingester_spark.operators import parse as P
+    from hypertrace_ingester_spark.plans.pipeline import hot_chain
+
+    ctx = _ctx(spark)
+    rules = datagen.route_rules_dim(spark)
+    first = hot_chain(ctx, rules, P.DEFAULT_DROP)
+    assert hot_chain(ctx, rules, P.DropCriteria(P.DEFAULT_DROP.criteria)) is first
+    other_rules = hot_chain(ctx, datagen.route_rules_dim(spark), P.DEFAULT_DROP)
+    assert other_rules is not first
+    assert other_rules.enrichment is first.enrichment
+    other_drop = hot_chain(ctx, other_rules.route_rules, P.DropCriteria())
+    assert other_drop is not other_rules and ctx.chain_memo is other_drop

@@ -313,6 +313,37 @@ def test_snapshot_batch_metrics_rewritten_on_replay(spark, tmp_path):
     assert _batch_metrics(spark, cfg, 0) == metrics
 
 
+def test_snapshot_batches_reuse_built_chain(spark, tmp_path, monkeypatch):
+    """Micro-batches sharing a context and rules frame build the chain
+    once: two snapshot-path batches collect the composite dim once, and
+    a batch runs at most 6 Spark jobs (it was 8 while every batch rebuilt
+    the chain and its dim)."""
+    from hypertrace_ingester_spark.operators import enrich as enrich_ops
+    from hypertrace_ingester_spark.plans.streaming_pipeline import process_batch
+
+    collected = []
+    collect_local = enrich_ops.collect_local
+
+    def counting(*args, **kwargs):
+        collected.append(args)
+        return collect_local(*args, **kwargs)
+
+    monkeypatch.setattr(enrich_ops, "collect_local", counting)
+    batches, cfg, ctx, rules = _snapshot_batch_setup(spark, tmp_path)
+    sc = spark.sparkContext
+    jobs = []
+    try:
+        for batch_id, batch in enumerate(batches):
+            group = f"reuse-chain-{tmp_path.name}-{batch_id}"
+            sc.setJobGroup(group, group)
+            process_batch(batch, batch_id, cfg, ctx, rules)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(collected) == 1
+    assert 0 < jobs[1] <= 6, jobs
+
+
 def test_streaming_dedup_drops_repeat_fingerprints(spark, tmp_path):
     """Streaming exact dedup (dropDuplicatesWithinWatermark on the
     normalized content fingerprint): one survivor per distinct text,
