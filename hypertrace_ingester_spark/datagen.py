@@ -15,10 +15,13 @@ match the bypass predicate (ByPassPredicate.java:28-44 analog).
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from .operators.enrich import EnrichContext
 from .schemas import (
     ENDPOINTS_SCHEMA,
     ROUTE_RULES_SCHEMA,
@@ -165,3 +168,24 @@ def status_codes_dim(spark: SparkSession) -> DataFrame:
         ("503", "FAIL", "Service Unavailable"),
     ]
     return _local_dim(spark, rows, STATUS_CODES_SCHEMA)
+
+
+# one default (context, route rules) per session; see default_dims
+_DEFAULT_DIMS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def default_dims(spark: SparkSession) -> tuple[EnrichContext, DataFrame]:
+    """The default enrichment context (F3.1/F3.2/F3.4 dims) and route rules
+    (F3.3), built once per ``SparkSession`` and reused by every call that
+    passes none of its own. Reuse is what makes the context's memos pay
+    off: the composite dim is collected and the parse → enrich → route
+    chain built once per session, not once per pipeline call. A new
+    session (``spark.newSession()``) builds its own. The dims' DataFrames
+    refer back to their session, so in practice an entry is kept for the
+    life of the process; sessions are few and long-lived."""
+    dims = _DEFAULT_DIMS.get(spark)
+    if dims is None:
+        ctx = EnrichContext(endpoints=endpoints_dim(spark), services=services_dim(spark),
+                            status_codes=status_codes_dim(spark))
+        dims = _DEFAULT_DIMS[spark] = (ctx, route_rules_dim(spark))
+    return dims

@@ -46,9 +46,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .enrich import collect_local
 from .views import mask_log_line
 
 WILDCARD = "<*>"
+# row bound on the template table assign_templates collects and broadcasts
+TEMPLATE_TABLE_MAX_ROWS = 100_000
 
 
 def _masked_msg(col: Column) -> Column:
@@ -204,9 +207,16 @@ def assign_templates(
     msg_col: str = "summary",
 ) -> DataFrame:
     """Label every log line with its Drain cluster/template: re-derive the
-    masked message map-side and broadcast-join the (bounded) template
-    table — the line frame never shuffles."""
+    masked message map-side and broadcast-join the template table — the
+    line frame never shuffles. The table is collected once into a
+    JVM-local table (one job fetching at most
+    ``TEMPLATE_TABLE_MAX_ROWS + 1`` rows); a larger one raises
+    ``enrich.DimTooLargeError`` with the rows seen and the bound instead
+    of broadcasting it."""
     with_mask = logs.withColumn(
         "masked_msg", _masked_msg(F.col(msg_col)))
-    dim = templates.select("masked_msg", "cluster_id", "template")
+    dim = collect_local(
+        templates.select("masked_msg", "cluster_id", "template"),
+        TEMPLATE_TABLE_MAX_ROWS, "Drain template table",
+        "the logs have too many distinct masked messages to label by broadcast join")
     return with_mask.join(F.broadcast(dim), "masked_msg", "left")

@@ -259,18 +259,18 @@ def composite_dim(ctx: EnrichContext) -> DataFrame | None:
     return eps.join(svc, on="tenant_id", how="outer").crossJoin(sc)
 
 
-def collect_local(dim: DataFrame, max_rows: int, name: str) -> DataFrame:
+def collect_local(dim: DataFrame, max_rows: int, name: str, hint: str) -> DataFrame:
     """``dim`` collected to the driver and re-created as a JVM-local table
     (``LocalTableScan``), so later queries read it with exact size stats
     and none of its upstream plan. One job fetches at most ``max_rows + 1``
-    rows; a larger dim raises :class:`DimTooLargeError` instead of
-    truncating."""
+    rows; a larger dim raises :class:`DimTooLargeError` (ending with
+    ``hint``, what to do instead) rather than truncating."""
     table = dim.limit(max_rows + 1).toArrow()
     if table.num_rows > max_rows:
         raise DimTooLargeError(
             f"{name} has more than {max_rows} rows ({table.num_rows} collected "
             f"before stopping; bound {max_rows}): it is too large to collect and "
-            "broadcast — use the sequential registry (enrich) for open-world dims"
+            f"broadcast — {hint}"
         )
     return dim.sparkSession.createDataFrame(table, schema=dim.schema)
 
@@ -309,7 +309,9 @@ class Enrichment:
         heuristic = status_state_heuristic()
         status = F.col("status_state")
         if dim is not None:
-            dim = F.broadcast(collect_local(dim, COMPOSITE_DIM_MAX_ROWS, "composite enrichment dim"))
+            dim = F.broadcast(collect_local(
+                dim, COMPOSITE_DIM_MAX_ROWS, "composite enrichment dim",
+                "use the sequential registry (enrich) for open-world dims"))
             status = F.coalesce(status, heuristic)
         derived = {"error_count": error_count(F.col("status_state")),
                    "tok_bucket": token_bucket(), "lang": lang_param()}

@@ -43,10 +43,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .. import datagen
 from ..operators import enrich as enrich_ops
 from ..operators import route as route_ops
-from .pipeline import PipelineConfig, hot_chain
+from .pipeline import PipelineConfig, dims_or_default, hot_chain
 
 
 def process_batch(
@@ -119,13 +118,10 @@ def run_streaming_pipeline(
     reference collapsed into one partitioned table family. Checkpoint state
     lives under ``cfg.out_dir/_stream_checkpoint`` (restart-safe offsets,
     the RocksDB/changelog analog). The chain is built here, before the
-    query starts, and every batch reuses it."""
-    ctx = ctx or enrich_ops.EnrichContext(
-        endpoints=datagen.endpoints_dim(spark),
-        services=datagen.services_dim(spark),
-        status_codes=datagen.status_codes_dim(spark),
-    )
-    rules = route_rules if route_rules is not None else datagen.route_rules_dim(spark)
+    query starts, and every batch reuses it. ``ctx`` and ``route_rules``
+    default to the session's ``datagen.default_dims``, which
+    ``run_pipeline`` shares, so a session builds that chain once."""
+    ctx, rules = dims_or_default(spark, ctx, route_rules)
     hot_chain(ctx, rules, cfg.drop_criteria)
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:

@@ -40,6 +40,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 from . import bucketing
+from .snapshots import _top_level_column_index
 
 DEFAULT_TARGET_MB = 256
 
@@ -385,7 +386,7 @@ def clustering_stats(path: str, column: str) -> dict:
             if f.startswith(("_", ".")) or not f.endswith(".parquet"):
                 continue
             md = pq.ParquetFile(os.path.join(root, f)).metadata
-            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+            idx = _top_level_column_index(md)
             if column not in idx:
                 continue
             lo, hi = None, None
@@ -472,8 +473,7 @@ def delete_ids(
                 continue
             fpath = os.path.join(root, fname)
             md = pq.ParquetFile(fpath).metadata
-            idx = {md.schema.column(i).name: i
-                   for i in range(md.num_columns)}
+            idx = _top_level_column_index(md)
             if id_col not in idx:
                 continue
             files_scanned += 1

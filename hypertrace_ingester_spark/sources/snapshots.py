@@ -571,7 +571,7 @@ def merge_upsert(
     for rel in snap.files:
         fpath = os.path.join(path, rel)
         md = pq.ParquetFile(fpath).metadata
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+        idx = _top_level_column_index(md)
         rng = footer_range(md, idx[key_col]) if key_col in idx else None
         if rng is not None:
             lo, hi = rng

@@ -162,6 +162,21 @@ def test_delete_ids_never_touches_null_id_rows(spark, tmp_path):
     assert set(left["text"]) == {"a", "keep me", "me too", "c"}
 
 
+def test_delete_ids_key_not_shadowed_by_struct_leaf(spark, tmp_path):
+    """For a schema {doc_id, s: struct<doc_id>} the file pruner reads the
+    footer stats of the TOP-LEVEL id: the struct leaf, also named
+    'doc_id', holds values far outside the id range, and pruning on it
+    would skip the file and leave the requested rows undeleted."""
+    path = str(tmp_path / "shadowed")
+    spark.range(0, 50).selectExpr(
+        "id as doc_id", "named_struct('doc_id', id + 100000) as s"
+    ).coalesce(1).write.mode("overwrite").parquet(path)
+    man = cpa.delete_ids(spark, path, "doc_id", [3, 4])
+    assert man["files_rewritten"] == 1 and man["rows_deleted"] == 2
+    left = {r["doc_id"] for r in spark.read.parquet(path).collect()}
+    assert left == set(range(50)) - {3, 4}
+
+
 def test_delete_ids_raises_on_missing_column(spark, tmp_path):
     path = str(tmp_path / "no_such_col")
     spark.createDataFrame([(1, "x")], "doc_id long, text string") \

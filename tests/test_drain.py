@@ -175,6 +175,22 @@ def test_assign_templates_is_broadcast_and_total(spark):
     assert "Exchange hashpartitioning" not in head
 
 
+def test_assign_templates_template_table_is_bounded(spark, monkeypatch):
+    """The template table is collected with a row bound: at the bound the
+    lines are labeled, one row under it raises a named error giving the
+    rows seen and the bound."""
+    from hypertrace_ingester_spark.operators.enrich import DimTooLargeError
+
+    logs = _spark_logs(spark)
+    templ = drain.drain_templates(logs).cache()
+    n = templ.count()
+    monkeypatch.setattr(drain, "TEMPLATE_TABLE_MAX_ROWS", n)
+    assert drain.assign_templates(logs, templ).count() == len(LINES)
+    monkeypatch.setattr(drain, "TEMPLATE_TABLE_MAX_ROWS", n - 1)
+    with pytest.raises(DimTooLargeError, match=rf"more than {n - 1} rows \({n} collected"):
+        drain.assign_templates(logs, templ)
+
+
 def test_drain_deterministic_across_runs(spark):
     a = drain.drain_templates(_spark_logs(spark)).toPandas() \
         .sort_values("masked_msg").reset_index(drop=True)

@@ -184,3 +184,150 @@ def test_hot_chain_memo_is_one_slot_keyed_by_rules_and_drop(spark):
     assert other_rules.enrichment is first.enrichment
     other_drop = hot_chain(ctx, other_rules.route_rules, P.DropCriteria())
     assert other_drop is not other_rules and ctx.chain_memo is other_drop
+
+
+def test_manifest_records_stage_walls_beside_stages(run):
+    """Wall seconds per pipeline stage sit beside ``stages``, never inside
+    it: stage entries stay pure counts."""
+    _, manifest = run
+    walls = manifest["stage_walls"]
+    assert set(walls) == {"build", "route", "aggregate", "manifest"}
+    assert all(w >= 0 for w in walls.values())
+    assert set(manifest["stages"]["route"]) == {"complete", "sink_counts", "partition_lineage"}
+    assert manifest["stages"]["aggregate"] == {"complete": True}
+
+
+def _per_sink(spark, path):
+    rows = spark.read.parquet(path).groupBy("sink").agg(F.sum("num_rows").alias("n")).collect()
+    return {r["sink"]: r["n"] for r in rows}
+
+
+def test_sink_counts_equal_metrics_and_histogram(spark, sequences, run, tmp_path):
+    """The manifest's per-sink counts (summed on the driver from the
+    histogram output) equal the per-sink sums of both aggregate outputs,
+    and are empty for an empty input."""
+    out, manifest = run
+    empty_out = str(tmp_path / "empty")
+    empty = run_pipeline(spark, sequences.limit(0), PipelineConfig(out_dir=empty_out))
+    for d, m in ((out, manifest), (empty_out, empty)):
+        counts = m["stages"]["route"]["sink_counts"]
+        assert counts == _per_sink(spark, os.path.join(d, "metrics"))
+        assert counts == _per_sink(spark, os.path.join(d, "histogram"))
+    assert empty["stages"]["route"]["sink_counts"] == {}
+
+
+def test_pipeline_leaves_session_serializable(spark, run):
+    """Spark ML model UDFs capture the session and serialize it into
+    tasks; a pipeline run must leave it serializable (a
+    ``pyspark.sql.Observation`` would not, on Spark 4.1)."""
+    spark._jvm.org.apache.spark.util.Utils.serialize(spark._jsparkSession)
+
+
+def test_default_dims_are_per_session(spark):
+    """One default context and rules frame per session: the same objects
+    on every call, and a new session gets its own, built on it."""
+    ctx, rules = datagen.default_dims(spark)
+    again = datagen.default_dims(spark)
+    assert again[0] is ctx and again[1] is rules
+    other = spark.newSession()
+    other_ctx, other_rules = datagen.default_dims(other)
+    assert other_ctx is not ctx and other_rules is not rules
+    assert other_ctx.endpoints.sparkSession is other
+    assert other_rules.sparkSession is other
+
+
+def test_default_dims_pipeline_builds_once_and_runs_nine_jobs(spark, tmp_path, monkeypatch):
+    """Two default-dims calls in one session collect the composite dim
+    once, and the second call runs at most 9 Spark jobs (16 when each call
+    rebuilt the dims and ran its actions one after another). The jobs of
+    the helper threads count too: they inherit the caller's job group."""
+    from hypertrace_ingester_spark.operators import enrich as enrich_ops
+
+    collected = []
+    collect_local = enrich_ops.collect_local
+
+    def counting(*args, **kwargs):
+        collected.append(args)
+        return collect_local(*args, **kwargs)
+
+    monkeypatch.setattr(enrich_ops, "collect_local", counting)
+    session = spark.newSession()  # fresh default dims, not built yet
+    seq = datagen.generate_sequences(session, 2000, partitions=8)
+    sc = spark.sparkContext
+    jobs = []
+    try:
+        for i in range(2):
+            group = f"default-dims-{tmp_path.name}-{i}"
+            sc.setJobGroup(group, group)
+            run_pipeline(session, seq, PipelineConfig(out_dir=str(tmp_path / str(i))))
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(collected) == 1
+    # the caller's own jobs are 5 (fan-out write, histogram write, ...);
+    # the counters and the metrics write add theirs
+    assert 5 < jobs[1] <= 9, jobs
+
+
+def test_failing_metrics_write_raises_and_joins_threads(spark, sequences, tmp_path, monkeypatch):
+    """A failure in a concurrently run action raises from run_pipeline,
+    and no helper thread is left running."""
+    import threading
+
+    from pyspark import InheritableThread
+
+    from hypertrace_ingester_spark.operators import aggregate as agg_ops
+
+    sink_metrics = agg_ops.sink_metrics
+
+    def failing(*args, **kwargs):
+        return sink_metrics(*args, **kwargs).withColumn(
+            "boom", F.raise_error(F.lit("metrics write failed")))
+
+    monkeypatch.setattr(agg_ops, "sink_metrics", failing)
+    with pytest.raises(Exception, match="metrics write failed"):
+        run_pipeline(spark, sequences, PipelineConfig(out_dir=str(tmp_path / "fail")))
+    assert not [t for t in threading.enumerate()
+                if isinstance(t, InheritableThread) and t.is_alive()]
+
+
+def test_concurrent_actions_inherit_group_join_all_and_raise_first(spark):
+    """The helper behind run_pipeline's concurrent actions: a submitted
+    action sees the caller's job group; leaving the block waits for every
+    action, even when the block raises; the block's own error wins,
+    otherwise the first failed action's error is re-raised."""
+    import threading
+
+    from hypertrace_ingester_spark.plans.pipeline import _concurrent_actions
+
+    sc = spark.sparkContext
+    sc.setJobGroup("concurrent-actions", "concurrent-actions")
+    try:
+        with _concurrent_actions() as submit:
+            group = submit(lambda: sc.getLocalProperty("spark.jobGroup.id"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert group.result() == "concurrent-actions"
+
+    release, finished = threading.Event(), []
+
+    def slow():
+        release.wait(30)
+        finished.append(release.is_set())
+
+    with pytest.raises(RuntimeError, match="block"):
+        with _concurrent_actions() as submit:
+            submit(slow)
+            threading.Timer(0.2, release.set).start()
+            raise RuntimeError("block")
+    assert finished == [True]
+
+    def failing(msg):
+        def fn():
+            raise ValueError(msg)
+        return fn
+
+    with pytest.raises(ValueError, match="first"):
+        with _concurrent_actions() as submit:
+            submit(failing("first"))
+            submit(failing("second"))

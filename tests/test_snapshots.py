@@ -311,6 +311,23 @@ def test_batch_seq_survives_expiry_and_maintenance(spark, tmp_path):
     assert sn.commit_stream_batch(_df(spark, 50, 51), t, batch_id=2) is not None
 
 
+def test_merge_upsert_key_not_shadowed_by_struct_leaf(spark, tmp_path):
+    """For a schema {id, s: struct<id>} the file pruner reads the footer
+    stats of the TOP-LEVEL key: the struct leaf, also named 'id', holds
+    values far outside the key range, and pruning on it would skip the
+    file holding the matched key and leave it duplicated."""
+    t = str(tmp_path / "tbl")
+    sn.commit(spark.range(0, 50).selectExpr(
+        "id", "id * 10 as v", "named_struct('id', id + 100000) as s").coalesce(1), t)
+    updates = spark.createDataFrame(
+        [(10, -1, (7,))], "id long, v long, s struct<id: long>")
+    s = sn.merge_upsert(spark, updates, t, "id")
+    assert s.rows == 50
+    got = sn.read_snapshot(spark, t).collect()
+    assert len(got) == len({r["id"] for r in got}) == 50
+    assert {r["id"]: r["v"] for r in got}[10] == -1
+
+
 def test_merge_rejects_duplicate_update_keys(spark, tmp_path):
     t = str(tmp_path / "tbl")
     sn.commit(_df(spark, 0, 3), t)
