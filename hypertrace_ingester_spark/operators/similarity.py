@@ -970,6 +970,14 @@ def pq_topk(
     )
 
 
+# metadata key of the encoding-geometry stamp on ivfpq_encode's _pq_geom
+_PQ_GEOM_KEY = "pq_geometry"
+
+
+def _pq_geometry(normalize: bool, exact_fold: bool) -> str:
+    return f"norm={int(bool(normalize))},fold={int(bool(exact_fold))}"
+
+
 def ivfpq_encode(
     df: DataFrame,
     dim: int,
@@ -1037,10 +1045,12 @@ def ivfpq_encode(
     )
     # stamp the encoding geometry so a persisted/reused frame can be
     # validated by ivfpq_topk (review find: a normalize=False encoding
-    # queried with normalize=True LUTs would silently mix two geometries)
+    # queried with normalize=True LUTs would silently mix two geometries).
+    # The value also rides in the column's metadata, which the plan
+    # carries (and parquet/table writes keep), so the check needs no job.
+    geom = _pq_geometry(normalize, exact_fold)
     return out.withColumn(
-        "_pq_geom",
-        F.lit(f"norm={int(bool(normalize))},fold={int(bool(exact_fold))}"),
+        "_pq_geom", F.lit(geom).alias("_pq_geom", metadata={_PQ_GEOM_KEY: geom})
     )
 
 
@@ -1072,24 +1082,29 @@ def ivfpq_topk(
     from pyspark.sql import Window
 
     m, kk, dsub = codebooks.shape
-    if encoded is None:
+    if encoded is None:  # built here: matches the query side by construction
         encoded = ivfpq_encode(
             corpus, dim, codebooks, n_cells, corpus_probe,
             id_col, vec_col, centroids,
             normalize=normalize, exact_fold=exact_fold)
-    if "_pq_geom" in encoded.columns:
+    elif "_pq_geom" in encoded.columns:
         # a reused encoding must have been built in the SAME geometry the
         # query-side LUTs assume (review find: normalize=False codes
-        # scanned with normalize=True LUTs return silently wrong top-k)
-        want = f"norm={int(bool(normalize))},fold={int(bool(exact_fold))}"
-        got = encoded.select("_pq_geom").first()
-        if got is not None and got["_pq_geom"] != want:
+        # scanned with normalize=True LUTs return silently wrong top-k).
+        # Read the stamp from the column metadata; only a frame that lost
+        # it (e.g. rebuilt through a UDF) pays a job to read the value.
+        want = _pq_geometry(normalize, exact_fold)
+        got = encoded.schema["_pq_geom"].metadata.get(_PQ_GEOM_KEY)
+        if got is None:
+            first = encoded.select("_pq_geom").first()
+            got = want if first is None else first["_pq_geom"]
+        if got != want:
             raise ValueError(
-                f"ivfpq_topk: encoded frame geometry {got['_pq_geom']!r} "
+                f"ivfpq_topk: encoded frame geometry {got!r} "
                 f"does not match query-side flags {want!r} — re-encode or "
                 "pass matching normalize/exact_fold"
             )
-        encoded = encoded.drop("_pq_geom")
+    encoded = encoded.drop("_pq_geom")
     q_cells = ivf_assign(
         queries, dim, n_cells, nprobe, id_col, vec_col, centroids,
         exact_fold=exact_fold,

@@ -34,12 +34,20 @@ Reference semantics implemented here (all cited against /root/reference):
   (`TransactionNameEnricher.java:24-49`).
 
 Spark design (SURVEY §7 hard-part 1): a trace is SMALL (≤ thousands of
-spans, capped upstream by the G3 row cap), so each walk runs per-group in
-ONE ``applyInPandas`` — Arrow batches in, plain-Python dict/BFS per trace,
-narrow rows out. The only shuffle is the hash partition on
-(tenant_id, trace_id); at 1000-executor scale this is the exact analog of
-the reference's trace-keyed Kafka partitioning, and AQE handles skewed
-tenants. No driver-side loops, no distributed graph engine.
+spans, capped upstream by the G3 row cap), so a walk is plain-Python
+dict/BFS work per trace. Traces are many and small, though, and a
+grouped-map UDF (``groupBy(...).applyInPandas``) pays ~7 ms per group to
+build and convert one pandas frame each way — 150 traces cost ~1 s of a
+~2 s query for ~0.3 s of walking. So every walk runs in ONE
+``mapInArrow`` call per partition (``_walk``): the spans are
+hash-clustered on (tenant_id, trace_id) and sorted within each partition
+into event order, each Arrow batch becomes Python lists once, is cut
+into per-trace runs, and the walks append plain row tuples that leave as
+one Arrow batch per input batch. A trace cut by a batch boundary is
+carried into the next batch. The only shuffle is that hash partition; at
+1000-executor scale it is the exact analog of the reference's
+trace-keyed Kafka partitioning, and AQE still picks the partition count.
+No driver-side loops, no distributed graph engine.
 """
 
 from __future__ import annotations
@@ -47,16 +55,15 @@ from __future__ import annotations
 from collections import deque
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Input columns every walk expects (a subset is fine for api_nodes/edges).
-SPAN_COLS = [
+# Columns the shared per-trace state reads; each walk adds the columns its
+# own rows read, and only those cross the Arrow boundary.
+_STATE_COLS = [
     "tenant_id", "trace_id", "span_id", "parent_span_id", "ts_ms", "kind",
-    "service", "api_name", "op_name", "start_ms", "end_ms", "duration_ms",
-    "error_count", "exception_count", "status_code",
-    "backend_name", "backend_path", "is_entry_api", "is_exit_api",
-    "has_parent_ref",
+    "is_entry_api", "is_exit_api",
 ]
 
 API_NODES_SCHEMA = (
@@ -88,29 +95,33 @@ RAW_SERVICE_SCHEMA = (
     "num_calls long, transaction_name string"
 )
 
+_ARROW_TYPES = {"long": pa.int64(), "boolean": pa.bool_(), "string": pa.string()}
+
 
 class _TraceState:
     """One trace's adjacency + ApiTraceGraph state (ViewGeneratorState.java
-    analog: built once, shared by every view generator)."""
+    analog: built once, shared by every view generator).
 
-    def __init__(self, pdf: pd.DataFrame):
-        spans = pdf.sort_values(["ts_ms", "span_id"], ignore_index=True)
-        self.spans = spans
-        self.order = list(spans["span_id"])
-        self.row = {sid: i for i, sid in enumerate(self.order)}
-        get = spans.to_dict("list")
-        self.kind = dict(zip(get["span_id"], get["kind"]))
-        self.col = get
-        ids = set(self.order)
+    ``cols`` maps column name → list of values for a batch of key-sorted
+    spans; the trace is rows ``[lo, hi)``, already in event order
+    (ts_ms, span_id). Column values stay in the batch lists — ``v`` reads
+    them by row index, so no per-trace copy of the wide columns is made."""
+
+    def __init__(self, cols: dict, lo: int, hi: int):
+        self.col = cols
+        self.tenant, self.trace = cols["tenant_id"][lo], cols["trace_id"][lo]
+        self.order = cols["span_id"][lo:hi]
+        self.row = {sid: i for i, sid in enumerate(self.order, lo)}
+        self.kind = dict(zip(self.order, cols["kind"][lo:hi]))
         self.parent: dict = {}
         self.children: dict = {}
-        for sid, pid in zip(get["span_id"], get["parent_span_id"]):
-            if pid is not None and not pd.isna(pid) and pid in ids:
+        for sid, pid in zip(self.order, cols["parent_span_id"][lo:hi]):
+            if pid in self.row:
                 self.parent[sid] = pid
                 self.children.setdefault(pid, []).append(sid)
-        # children in event order (ts, id) — pdf is pre-sorted
-        self.is_entry_api = dict(zip(get["span_id"], get["is_entry_api"]))
-        self.is_exit_api = dict(zip(get["span_id"], get["is_exit_api"]))
+        # children in event order (ts, id) — the rows are pre-sorted
+        self.is_entry_api = dict(zip(self.order, cols["is_entry_api"][lo:hi]))
+        self.is_exit_api = dict(zip(self.order, cols["is_exit_api"][lo:hi]))
         # node/edge state is built lazily: the SpanEventView walks need only
         # the parent/boundary dicts, so they skip the BFS entirely
 
@@ -261,222 +272,227 @@ class _TraceState:
         return None
 
 
-def _grouped(spans: DataFrame, fn, schema: str) -> DataFrame:
-    # Null parent ids would force Arrow→pandas to deliver the whole column
-    # as float64, silently rounding 64-bit span ids past 2^53 and breaking
-    # parent links at realistic id ranges. Encode "no parent" as -1 (the
-    # same sentinel the spans domain uses for broken refs) so the column
-    # stays exact int64; the walks already treat any id not present in the
-    # trace as a root.
-    spans = spans.withColumn(
-        "parent_span_id", F.coalesce(F.col("parent_span_id"), F.lit(-1).cast("long"))
+def _trace_starts(cols: dict) -> list:
+    """Row offsets where a new (tenant_id, trace_id) run begins in a
+    key-sorted batch. Plain equality on the raw values, so null keys form
+    one run, as ``groupBy`` groups them."""
+    tenant, trace = cols["tenant_id"], cols["trace_id"]
+    if not trace:
+        return []
+    return [0] + [
+        i for i in range(1, len(trace))
+        if trace[i] != trace[i - 1] or tenant[i] != tenant[i - 1]
+    ]
+
+
+def _walk(spans: DataFrame, cols: list, per_trace, schema: str) -> DataFrame:
+    """Run ``per_trace(state, emit)`` on every trace, one Python call per
+    partition.
+
+    The spans are hash-clustered on (tenant_id, trace_id) with no explicit
+    partition count, so AQE still picks it, and sorted within each
+    partition into event order: every trace arrives as one contiguous run,
+    already sorted. Each Arrow batch becomes Python lists once and is cut
+    into runs on the key lists. The last run may continue in the next
+    batch, so it is carried over and prepended to it; at most one batch
+    plus one trace is held, the bound a grouped-map UDF gives. The walk
+    emits plain row tuples in ``schema`` order, and each input batch
+    yields one output batch."""
+    fields = [f.split() for f in schema.split(", ")]
+    out_schema = pa.schema([(name, _ARROW_TYPES[ty]) for name, ty in fields])
+
+    def to_batch(rows: list) -> pa.RecordBatch:
+        columns = list(zip(*rows)) if rows else [()] * len(fields)
+        return pa.RecordBatch.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(columns, out_schema)],
+            schema=out_schema,
+        )
+
+    def per_partition(batches):
+        carry = None
+        for batch in batches:
+            data = batch.to_pydict()
+            if carry is not None:
+                data = {c: carry[c] + v for c, v in data.items()}
+            starts = _trace_starts(data)
+            if not starts:
+                continue
+            rows: list = []
+            for lo, hi in zip(starts, starts[1:]):
+                per_trace(_TraceState(data, lo, hi), rows.append)
+            carry = {c: v[starts[-1]:] for c, v in data.items()}
+            yield to_batch(rows)
+        if carry is not None:
+            rows = []
+            per_trace(_TraceState(carry, 0, len(carry["span_id"])), rows.append)
+            yield to_batch(rows)
+
+    # "No parent" is the -1 sentinel the spans domain uses for broken refs,
+    # so a null parent and a -1 parent are the same root to every walk (any
+    # parent id not present in the trace is one). Within a trace, a null
+    # ts_ms or span_id sorts last.
+    clustered = (
+        spans.select(*cols)
+        .withColumn("parent_span_id", F.coalesce(F.col("parent_span_id"), F.lit(-1).cast("long")))
+        .repartition("tenant_id", "trace_id")
+        .sortWithinPartitions(
+            "tenant_id", "trace_id", F.asc_nulls_last("ts_ms"), F.asc_nulls_last("span_id")
+        )
     )
-    return spans.groupBy("tenant_id", "trace_id").applyInPandas(fn, schema=schema)
+    return clustered.mapInArrow(per_partition, schema)
+
+
+# -- per-trace walks: each appends row tuples in its schema's order --------
+
+
+def _api_node_rows(st: _TraceState, emit) -> None:
+    for sid, (head, depth) in st.member.items():
+        emit((st.tenant, st.trace, sid, head, depth, sid == head))
+
+
+def _api_edge_rows(st: _TraceState, emit) -> None:
+    for sh, dh, sx, de in st.edges:
+        emit((st.tenant, st.trace, sh, dh, sx, de))
+
+
+def _span_event_rows(st: _TraceState, emit) -> None:
+    callee_map = st.exit_to_callee_entry()
+    for sid in st.order:
+        kind = st.kind[sid]
+        entry = st.api_entry_ancestor(sid)
+        callee = callee_map.get(sid)
+        service = st.v("service", sid)
+        # display_entity_name — SpanEventViewGenerator.java:262-287
+        if kind != "EXIT":
+            display_entity = service
+        elif callee is not None:
+            display_entity = st.v("service", callee)
+        else:
+            be = st.v("backend_name", sid)
+            display_entity = be if be else service
+        # display_span_name — SpanEventViewGenerator.java:289-312
+        if kind == "ENTRY":
+            display_span = st.v("api_name", sid)
+        elif kind == "EXIT":
+            if callee is not None:
+                display_span = st.v("api_name", callee)
+            else:
+                bp = st.v("backend_path", sid)
+                display_span = bp if bp else st.v("op_name", sid)
+        else:
+            display_span = st.v("op_name", sid)
+        emit((st.tenant, st.trace, sid, entry, 1 if entry == sid else 0,
+              display_entity, display_span))
+
+
+def _service_call_rows(st: _TraceState, emit) -> None:
+    def row(scenario, client=None, server=None, caller_service=None,
+            callee_service=None, callee_backend=None, request_url=None,
+            error=0, exc=0, duration=0):
+        emit((st.tenant, st.trace, scenario, client, server, caller_service,
+              callee_service, callee_backend, request_url, error, exc, duration))
+
+    # (a) one row per ApiNode edge — ServiceCallViewGenerator.java:95-150
+    for _, _, src, dst in st.edges:
+        err = 1 if (st.v("error_count", src) + st.v("error_count", dst)) > 0 else 0
+        exc = st.v("exception_count", src) + st.v("exception_count", dst)
+        row("EDGE", client=src, server=dst,
+            caller_service=st.v("service", src),
+            callee_service=st.v("service", dst),
+            error=err, exc=exc, duration=st.v("duration_ms", dst))
+
+    # (b) root entries: entry boundaries with no incoming edge (:233-262)
+    for sid in st.order:
+        if st.is_entry_api[sid] and sid not in st.entry_with_incoming:
+            row("ROOT_ENTRY", server=sid,
+                callee_service=st.v("service", sid),
+                error=1 if st.v("error_count", sid) > 0 else 0,
+                exc=st.v("exception_count", sid),
+                duration=st.v("duration_ms", sid))
+
+    # (c) backends: member exit boundaries with no outgoing edge (:270-344)
+    for head in st.heads:
+        for sid in st.node_members[head]:
+            if not st.is_exit_api[sid] or sid in st.exit_with_outgoing:
+                continue
+            be = st.v("backend_name", sid)
+            url = None
+            if be:  # backend entity resolved → composed request URL
+                bp = st.v("backend_path", sid)
+                url = "http://" + be + (bp if bp else "")
+            row("BACKEND", client=sid,
+                caller_service=st.v("service", sid),
+                callee_backend=be, request_url=url,
+                error=1 if st.v("error_count", sid) > 0 else 0,
+                exc=st.v("exception_count", sid),
+                duration=st.v("duration_ms", sid))
+
+    # (d) entry-less nodes → distinct real root ancestors (:352-418)
+    seen_roots = set()
+    for head in st.heads:
+        if st.is_entry_api[head]:
+            continue
+        for sid in st.node_members[head]:
+            if not st.is_exit_api[sid]:
+                continue
+            root = st.root_ancestor(sid)
+            if root in seen_roots:
+                continue
+            seen_roots.add(root)
+            if st.v("has_parent_ref", root):
+                continue  # broken span, not a real root
+            row("NON_ENTRY_ROOT", server=root,
+                callee_service=st.v("service", root),
+                error=1 if st.v("error_count", root) > 0 else 0,
+                exc=st.v("exception_count", root),
+                duration=st.v("duration_ms", root))
+
+
+def _raw_service_rows(st: _TraceState, emit) -> None:
+    txn = st.transaction_name()
+    for head in st.heads:
+        kind = st.kind[head]
+        emit((st.tenant, st.trace, head, st.parent.get(head),
+              st.v("service", head), st.v("api_name", head), kind,
+              st.v("start_ms", head), st.v("end_ms", head),
+              st.v("duration_ms", head), st.v("status_code", head),
+              st.v("error_count", head), st.v("exception_count", head),
+              1 if kind == "ENTRY" else 0, txn))
 
 
 def api_nodes(spans: DataFrame) -> DataFrame:
     """Span → ApiNode membership (node identity = head span id)."""
-
-    def per_trace(pdf: pd.DataFrame) -> pd.DataFrame:
-        st = _TraceState(pdf)
-        t, tr = pdf["tenant_id"].iloc[0], pdf["trace_id"].iloc[0]
-        rows = [
-            {
-                "tenant_id": t, "trace_id": tr, "span_id": sid,
-                "head_span_id": head, "node_depth": depth,
-                "is_node_head": sid == head,
-            }
-            for sid, (head, depth) in st.member.items()
-        ]
-        return pd.DataFrame(rows, columns=[f.split()[0] for f in API_NODES_SCHEMA.split(", ")])
-
-    return _grouped(spans, per_trace, API_NODES_SCHEMA)
+    return _walk(spans, _STATE_COLS, _api_node_rows, API_NODES_SCHEMA)
 
 
 def api_edges(spans: DataFrame) -> DataFrame:
     """ApiNode→ApiNode edges through exit→entry parent-child pairs."""
-
-    def per_trace(pdf: pd.DataFrame) -> pd.DataFrame:
-        st = _TraceState(pdf)
-        t, tr = pdf["tenant_id"].iloc[0], pdf["trace_id"].iloc[0]
-        rows = [
-            {
-                "tenant_id": t, "trace_id": tr,
-                "src_head_span_id": sh, "dst_head_span_id": dh,
-                "src_span_id": sx, "dst_span_id": de,
-            }
-            for sh, dh, sx, de in st.edges
-        ]
-        return pd.DataFrame(rows, columns=[f.split()[0] for f in API_EDGES_SCHEMA.split(", ")])
-
-    return _grouped(spans, per_trace, API_EDGES_SCHEMA)
+    return _walk(spans, _STATE_COLS, _api_edge_rows, API_EDGES_SCHEMA)
 
 
 def span_event_walks(spans: DataFrame) -> DataFrame:
     """Per-span SpanEventView ancestor-walk columns: api_trace_id,
     api_trace_count, display entity/span names."""
-
-    def per_trace(pdf: pd.DataFrame) -> pd.DataFrame:
-        st = _TraceState(pdf)
-        t, tr = pdf["tenant_id"].iloc[0], pdf["trace_id"].iloc[0]
-        callee_map = st.exit_to_callee_entry()
-        n = len(st.order)
-        entries, counts, display_entities, display_spans = [], [], [], []
-        for sid in st.order:
-            kind = st.kind[sid]
-            entry = st.api_entry_ancestor(sid)
-            callee = callee_map.get(sid)
-            service = st.v("service", sid)
-            # display_entity_name — SpanEventViewGenerator.java:262-287
-            if kind != "EXIT":
-                display_entity = service
-            elif callee is not None:
-                display_entity = st.v("service", callee)
-            else:
-                be = st.v("backend_name", sid)
-                display_entity = be if be else service
-            # display_span_name — SpanEventViewGenerator.java:289-312
-            if kind == "ENTRY":
-                display_span = st.v("api_name", sid)
-            elif kind == "EXIT":
-                if callee is not None:
-                    display_span = st.v("api_name", callee)
-                else:
-                    bp = st.v("backend_path", sid)
-                    display_span = bp if bp else st.v("op_name", sid)
-            else:
-                display_span = st.v("op_name", sid)
-            entries.append(entry)
-            counts.append(1 if entry == sid else 0)
-            display_entities.append(display_entity)
-            display_spans.append(display_span)
-        return pd.DataFrame(
-            {
-                "tenant_id": [t] * n,
-                "trace_id": [tr] * n,
-                "span_id": st.order,
-                "api_trace_id": entries,
-                "api_trace_count": counts,
-                "display_entity_name": display_entities,
-                "display_span_name": display_spans,
-            }
-        )
-
-    return _grouped(spans, per_trace, SPAN_EVENT_SCHEMA)
+    cols = _STATE_COLS + ["service", "api_name", "op_name", "backend_name", "backend_path"]
+    return _walk(spans, cols, _span_event_rows, SPAN_EVENT_SCHEMA)
 
 
 def service_call_edges(spans: DataFrame) -> DataFrame:
     """ServiceCallView's 4-scenario union per trace."""
-
-    def per_trace(pdf: pd.DataFrame) -> pd.DataFrame:
-        st = _TraceState(pdf)
-        t, tr = pdf["tenant_id"].iloc[0], pdf["trace_id"].iloc[0]
-        rows = []
-
-        def row(scenario, client=None, server=None, caller_service=None,
-                callee_service=None, callee_backend=None, request_url=None,
-                error=0, exc=0, duration=0):
-            rows.append(
-                {
-                    "tenant_id": t, "trace_id": tr, "scenario": scenario,
-                    "client_span_id": client, "server_span_id": server,
-                    "caller_service": caller_service,
-                    "callee_service": callee_service,
-                    "callee_backend": callee_backend, "request_url": request_url,
-                    "error_count": error, "exception_count": exc,
-                    "duration_ms": duration,
-                }
-            )
-
-        # (a) one row per ApiNode edge — ServiceCallViewGenerator.java:95-150
-        for _, _, src, dst in st.edges:
-            err = 1 if (st.v("error_count", src) + st.v("error_count", dst)) > 0 else 0
-            exc = st.v("exception_count", src) + st.v("exception_count", dst)
-            row("EDGE", client=src, server=dst,
-                caller_service=st.v("service", src),
-                callee_service=st.v("service", dst),
-                error=err, exc=exc, duration=st.v("duration_ms", dst))
-
-        # (b) root entries: entry boundaries with no incoming edge (:233-262)
-        for sid in st.order:
-            if st.is_entry_api[sid] and sid not in st.entry_with_incoming:
-                row("ROOT_ENTRY", server=sid,
-                    callee_service=st.v("service", sid),
-                    error=1 if st.v("error_count", sid) > 0 else 0,
-                    exc=st.v("exception_count", sid),
-                    duration=st.v("duration_ms", sid))
-
-        # (c) backends: member exit boundaries with no outgoing edge (:270-344)
-        for head in st.heads:
-            for sid in st.node_members[head]:
-                if not st.is_exit_api[sid] or sid in st.exit_with_outgoing:
-                    continue
-                be = st.v("backend_name", sid)
-                url = None
-                if be:  # backend entity resolved → composed request URL
-                    bp = st.v("backend_path", sid)
-                    url = "http://" + be + (bp if bp else "")
-                row("BACKEND", client=sid,
-                    caller_service=st.v("service", sid),
-                    callee_backend=be, request_url=url,
-                    error=1 if st.v("error_count", sid) > 0 else 0,
-                    exc=st.v("exception_count", sid),
-                    duration=st.v("duration_ms", sid))
-
-        # (d) entry-less nodes → distinct real root ancestors (:352-418)
-        seen_roots = set()
-        for head in st.heads:
-            if st.is_entry_api[head]:
-                continue
-            for sid in st.node_members[head]:
-                if not st.is_exit_api[sid]:
-                    continue
-                root = st.root_ancestor(sid)
-                if root in seen_roots:
-                    continue
-                seen_roots.add(root)
-                if st.v("has_parent_ref", root):
-                    continue  # broken span, not a real root
-                row("NON_ENTRY_ROOT", server=root,
-                    callee_service=st.v("service", root),
-                    error=1 if st.v("error_count", root) > 0 else 0,
-                    exc=st.v("exception_count", root),
-                    duration=st.v("duration_ms", root))
-
-        return pd.DataFrame(rows, columns=[f.split()[0] for f in SERVICE_CALL_SCHEMA.split(", ")])
-
-    return _grouped(spans, per_trace, SERVICE_CALL_SCHEMA)
+    cols = _STATE_COLS + [
+        "service", "backend_name", "backend_path", "error_count",
+        "exception_count", "duration_ms", "has_parent_ref",
+    ]
+    return _walk(spans, cols, _service_call_rows, SERVICE_CALL_SCHEMA)
 
 
 def raw_service_view(spans: DataFrame) -> DataFrame:
     """One row per ApiNode head span — RawServiceViewGenerator.java:25-105."""
-
-    def per_trace(pdf: pd.DataFrame) -> pd.DataFrame:
-        st = _TraceState(pdf)
-        t, tr = pdf["tenant_id"].iloc[0], pdf["trace_id"].iloc[0]
-        txn = st.transaction_name()
-        rows = []
-        for head in st.heads:
-            rows.append(
-                {
-                    "tenant_id": t, "trace_id": tr, "span_id": head,
-                    "parent_span_id": st.parent.get(head),
-                    "service": st.v("service", head),
-                    "api_name": st.v("api_name", head),
-                    "kind": st.kind[head],
-                    "start_ms": st.v("start_ms", head),
-                    "end_ms": st.v("end_ms", head),
-                    "duration_ms": st.v("duration_ms", head),
-                    "status_code": st.v("status_code", head),
-                    "error_count": st.v("error_count", head),
-                    "exception_count": st.v("exception_count", head),
-                    "num_calls": 1 if st.kind[head] == "ENTRY" else 0,
-                    "transaction_name": txn,
-                }
-            )
-        return pd.DataFrame(rows, columns=[f.split()[0] for f in RAW_SERVICE_SCHEMA.split(", ")])
-
-    return _grouped(spans, per_trace, RAW_SERVICE_SCHEMA)
+    cols = _STATE_COLS + [
+        "service", "api_name", "start_ms", "end_ms", "duration_ms",
+        "status_code", "error_count", "exception_count",
+    ]
+    return _walk(spans, cols, _raw_service_rows, RAW_SERVICE_SCHEMA)
 
 
 def span_boundary_types(spans: DataFrame) -> DataFrame:

@@ -1029,11 +1029,12 @@ def s_ann_ivf(spark, sf_dir):
 
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 20)
-    cents = sim.vectors_by_id(emb, 0, 16)          # (16, 64) raw corpus rows
-    planes = sim.vectors_by_id(emb, 100, 356).T    # (dim, tables*bits)
+    vecs = sim.vectors_by_id(emb, 0, 416)          # one bounded collect
+    cents = vecs[0:16]                             # (16, 64) raw corpus rows
+    planes = vecs[100:356].T                       # (dim, tables*bits)
     # PQ codebooks from raw corpus subvectors: entry c of subspace j is
     # dims [j*8, j*8+8) of corpus vector 400+c -> shape (m=8, kk=16, dsub=8)
-    cbsrc = sim.vectors_by_id(emb, 400, 416)       # (16, 64)
+    cbsrc = vecs[400:416]                          # (16, 64)
     books = np.stack([cbsrc[:, j * 8:(j + 1) * 8] for j in range(8)])
 
     def label(df, method, score_col):

@@ -286,3 +286,60 @@ def test_ivfpq_topk_rejects_geometry_mismatched_encoding(spark):
     ok = sim.ivfpq_topk(corpus, queries, dim, books, k=3, n_cells=8,
                         centroids=cents, encoded=enc_raw, normalize=False)
     assert ok.count() > 0
+
+
+def test_ivfpq_geometry_stamp_is_column_metadata(spark, tmp_path):
+    """The geometry rides in ``_pq_geom``'s metadata and survives a
+    parquet round trip, so a persisted encoding keeps its stamp."""
+    corpus = _corpus(spark)
+    dim = _dim(spark)
+    books = sim.fit_pq_codebooks(corpus, dim, m=8, k=16)
+    cents = sim.fit_centroids(corpus, dim, n_cells=8)
+    enc = sim.ivfpq_encode(corpus, dim, books, n_cells=8, centroids=cents,
+                           normalize=False, exact_fold=True)
+    want = {"pq_geometry": "norm=0,fold=1"}
+    assert enc.schema["_pq_geom"].metadata == want
+    enc.write.parquet(str(tmp_path / "enc"))
+    back = spark.read.parquet(str(tmp_path / "enc"))
+    assert back.schema["_pq_geom"].metadata == want
+
+
+def test_ivfpq_topk_geometry_check_runs_no_job(spark):
+    """A stamped encoding is checked from its schema: the mismatch raises
+    before any Spark job runs."""
+    corpus = _corpus(spark)
+    dim = _dim(spark)
+    books = sim.fit_pq_codebooks(corpus, dim, m=8, k=16)
+    cents = sim.fit_centroids(corpus, dim, n_cells=8)
+    enc_raw = sim.ivfpq_encode(corpus, dim, books, n_cells=8,
+                               centroids=cents, normalize=False)
+    sc = spark.sparkContext
+    group = "ivfpq-geometry-check"
+    sc.setJobGroup(group, "geometry check")
+    try:
+        with pytest.raises(ValueError, match="geometry"):
+            sim.ivfpq_topk(corpus, corpus.where("vec_id < 3"), dim, books,
+                           k=3, n_cells=8, centroids=cents, encoded=enc_raw)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_ivfpq_topk_checks_unstamped_geometry_by_value(spark):
+    """An encoding whose ``_pq_geom`` lost its metadata is still checked,
+    from the column's value."""
+    corpus = _corpus(spark)
+    dim = _dim(spark)
+    books = sim.fit_pq_codebooks(corpus, dim, m=8, k=16)
+    cents = sim.fit_centroids(corpus, dim, n_cells=8)
+    enc_raw = sim.ivfpq_encode(corpus, dim, books, n_cells=8,
+                               centroids=cents, normalize=False)
+    bare = enc_raw.withColumn("_pq_geom", F.col("_pq_geom").alias("_pq_geom", metadata={}))
+    assert bare.schema["_pq_geom"].metadata == {}
+    queries = corpus.where("vec_id < 3")
+    with pytest.raises(ValueError, match="geometry"):
+        sim.ivfpq_topk(corpus, queries, dim, books, k=3, n_cells=8,
+                       centroids=cents, encoded=bare)
+    ok = sim.ivfpq_topk(corpus, queries, dim, books, k=3, n_cells=8,
+                        centroids=cents, encoded=bare, normalize=False)
+    assert ok.count() > 0

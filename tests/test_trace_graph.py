@@ -211,3 +211,119 @@ def test_spans_build_arrow_equals_relational(spark):
     for c in a.columns:
         eq = (a[c].isna() & b[c].isna()) | (a[c] == b[c])
         assert eq.all(), f"column {c} differs"
+
+
+# -- one Python call per partition: batch cutting, carried traces -----------
+
+_WALKS = [
+    (tg.api_nodes, tg._api_node_rows),
+    (tg.api_edges, tg._api_edge_rows),
+    (tg.span_event_walks, tg._span_event_rows),
+    (tg.service_call_edges, tg._service_call_rows),
+    (tg.raw_service_view, tg._raw_service_rows),
+]
+_WALK_IDS = [w.__name__ for w, _ in _WALKS]
+
+
+def _random_traces(spark, seed: int = 7):
+    """Seeded random trees whose event order (ts_ms, span_id) disagrees
+    with span id order, with ts ties, null and -1 parents, null
+    tenant/trace keys and a single-span trace. Boundary flags follow the
+    relational rule of ``span_boundary_types``, computed here per trace."""
+    import random
+
+    rng = random.Random(seed)
+    keys = [(0, 11), (0, 12), (1, 11), (None, 13), (2, None), (0, 15), (1, 14)]
+    rows = []
+    for tenant, trace in keys:
+        n = 1 if trace == 15 else rng.randint(8, 18)
+        ids = rng.sample(range(1, 2**62), n)
+        spans = []
+        for i, sid in enumerate(ids):
+            if i == 0:
+                parent = None
+            else:
+                r = rng.random()
+                parent = None if r < 0.08 else (-1 if r < 0.14 else ids[rng.randrange(i)])
+            kind = rng.choice(["ENTRY", "ENTRY", "EXIT", "EXIT", "UNSPECIFIED"])
+            be = rng.choice([None, "", f"be{i}"])
+            spans.append({
+                "tenant_id": tenant, "trace_id": trace, "span_id": sid,
+                "parent_span_id": parent, "ts_ms": rng.randint(0, 6) * 10,
+                "kind": kind, "service": rng.choice(["a", "b", "c"]),
+                "api_name": f"api_{i}", "op_name": f"op_{i}",
+                "start_ms": i, "end_ms": i + 3, "duration_ms": 3,
+                "error_count": rng.randint(0, 1), "exception_count": rng.randint(0, 2),
+                "status_code": rng.choice([200, 500]), "backend_name": be,
+                "backend_path": rng.choice([None, "", f"/p{i}"]) if be else None,
+                "has_parent_ref": parent is not None,
+            })
+        by_id = {s["span_id"]: s for s in spans}
+        for s in spans:
+            p = by_id.get(s["parent_span_id"])
+            kids = [c for c in spans if c["parent_span_id"] == s["span_id"]]
+            s["is_entry_api"] = s["kind"] == "ENTRY" and (
+                p is None or p["kind"] != "ENTRY" or p["service"] != s["service"])
+            s["is_exit_api"] = s["kind"] == "EXIT" and (
+                not kids or any(c["kind"] == "ENTRY" for c in kids))
+        rows += spans
+    # the seed gives a null parent below a trace's first span and a -1 parent
+    assert any(r["parent_span_id"] is None for r in rows if r["start_ms"] > 0)
+    assert any(r["parent_span_id"] == -1 for r in rows)
+    schema = (
+        "tenant_id long, trace_id long, span_id long, parent_span_id long, "
+        "ts_ms long, kind string, service string, api_name string, "
+        "op_name string, start_ms long, end_ms long, duration_ms long, "
+        "error_count long, exception_count long, status_code long, "
+        "backend_name string, backend_path string, has_parent_ref boolean, "
+        "is_entry_api boolean, is_exit_api boolean"
+    )
+    names = [f.split()[0] for f in schema.split(", ")]
+    return spark.createDataFrame([tuple(r[c] for c in names) for r in rows], schema)
+
+
+def _per_trace_reference(spans, per_trace) -> list:
+    """The walk run one trace at a time on the driver: group on the raw
+    keys (null keys form a group), sort each trace into event order and
+    map a null parent to the -1 sentinel — what the grouped-map path did."""
+    groups: dict = {}
+    for r in spans.collect():
+        groups.setdefault((r["tenant_id"], r["trace_id"]), []).append(r.asDict())
+    out: list = []
+    for rows in groups.values():
+        rows.sort(key=lambda r: (r["ts_ms"], r["span_id"]))
+        cols = {c: [r[c] for r in rows] for c in rows[0]}
+        cols["parent_span_id"] = [-1 if p is None else p for p in cols["parent_span_id"]]
+        per_trace(tg._TraceState(cols, 0, len(rows)), out.append)
+    return sorted(out, key=repr)
+
+
+@pytest.fixture(scope="module")
+def random_traces(spark):
+    return _random_traces(spark).cache()
+
+
+@pytest.fixture
+def tiny_arrow_batches(spark):
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    yield
+    spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("walk,per_trace", _WALKS, ids=_WALK_IDS)
+def test_walk_matches_per_trace_path_across_arrow_batches(
+    random_traces, tiny_arrow_batches, walk, per_trace
+):
+    """Three rows per Arrow batch: every multi-span trace straddles a batch
+    boundary and is carried into the next batch."""
+    got = sorted((tuple(r) for r in walk(random_traces).collect()), key=repr)
+    assert got == _per_trace_reference(random_traces, per_trace)
+
+
+@pytest.mark.parametrize("walk", [w for w, _ in _WALKS], ids=_WALK_IDS)
+def test_walk_plan_has_no_grouped_map(random_traces, walk):
+    plan = walk(random_traces)._jdf.queryExecution().toString()
+    assert "FlatMapGroupsInPandas" not in plan
+    assert "MapInArrow" in plan
