@@ -14,18 +14,12 @@ SPARK_GRAFT_BENCH_ROWS (default 1,000,000 synthetic sequences).
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 import sys
 import tempfile
 import time
-
-from hypertrace_ingester_spark import datagen
-from hypertrace_ingester_spark.plans.pipeline import PipelineConfig, run_pipeline
-from hypertrace_ingester_spark.queries import REGISTRY, _load_extensions
-
-_load_extensions()
-from hypertrace_ingester_spark.session import get_spark
 
 # round-3 note: catalog consolidated to 50 entries (driver samples the
 # first 50); v_span_event_view / v_service_call_view / e_backend_classify
@@ -59,13 +53,13 @@ def force(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def spin_probe() -> float:
-    """Single-thread CPU speed in Mops over a 0.2 s window — the per-run
-    machine-state marker recorded next to every measured number. Module
-    scope so sibling scripts (write_options_ab) share ONE calibration."""
+def spin_probe(window_s: float = 0.2) -> float:
+    """Single-thread CPU speed in Mops over ``window_s`` — the per-run
+    machine-state marker recorded next to every measured number. The
+    scripts import this one so every spin figure shares one calibration."""
     t0 = time.time()
     x = 0
-    while time.time() - t0 < 0.2:
+    while time.time() - t0 < window_s:
         x += 1
     return round(x / (time.time() - t0) / 1e6, 2)
 
@@ -101,11 +95,7 @@ def host_probe(own_jvms: int = 0) -> dict:
         return list(map(int, v))  # user nice sys idle iowait irq softirq steal
 
     a = stat()
-    t0 = time.time()
-    x = 0
-    while time.time() - t0 < 0.4:
-        x += 1
-    spin_mops = round(x / (time.time() - t0) / 1e6, 2)
+    spin_mops = spin_probe(window_s=0.4)
     b = stat()
     d = [y - z for z, y in zip(a, b)]
     steal_pct = round(100 * d[7] / max(sum(d), 1), 1)
@@ -132,7 +122,42 @@ def host_probe(own_jvms: int = 0) -> dict:
     return probe
 
 
+def regime(fault_gbps: float) -> str:
+    """One-word host regime for a fault-bandwidth reading, so a reader of
+    the JSON doesn't have to re-derive the calibration (BENCH/BASELINE.md):
+    healthy >= 2 GB/s, sub-healthy 1-2 (numbers inflated up to ~2x),
+    degraded < 1 (numbers meaningless for code comparisons)."""
+    return ("healthy" if fault_gbps >= 2.0 else
+            "sub-healthy" if fault_gbps >= 1.0 else "degraded")
+
+
+def wait_for_window(probe, ok, budget_s: float, step_s: float,
+                    deadline: float = math.inf, *, sleep=time.sleep,
+                    clock=time.time):
+    """Defer until ``ok(probe())``: re-probe every ``step_s`` while the
+    reading is bad, giving up once ``budget_s`` has passed since the first
+    reading or the clock reaches ``deadline``. Both bounds are WALL clock,
+    not summed sleeps: mid-episode a probe's own page-touch can take tens
+    of seconds, so counting only the sleeps would let a gate run 2x+ past
+    its budget. Returns ``(last_reading, waited_s)``; ``waited_s`` is 0.0
+    when the first reading passes."""
+    reading, waited = probe(), 0.0
+    t0 = clock()
+    while not ok(reading) and waited < budget_s and clock() < deadline:
+        sleep(step_s)
+        reading = probe()
+        waited = clock() - t0
+    return reading, waited
+
+
 def main() -> None:
+    from hypertrace_ingester_spark import datagen
+    from hypertrace_ingester_spark.plans.pipeline import PipelineConfig, run_pipeline
+    from hypertrace_ingester_spark.queries import REGISTRY, _load_extensions
+    from hypertrace_ingester_spark.session import get_spark
+
+    _load_extensions()
+
     # bench-process heap default: 24 GB pinned (tests keep the lighter 16 GB
     # session default). Round-4 A/B, alternating fresh JVMs under an
     # (admittedly degraded) host window, 4 reps each × 2 rounds:
@@ -145,7 +170,6 @@ def main() -> None:
     n_rows = int(os.environ.get("SPARK_GRAFT_BENCH_ROWS", "1000000"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
-    probe_pre = host_probe(own_jvms=0)
     # bounded pre-wait: if the opening probe catches a collapsed page-fault
     # window (the root-caused degraded-DRAM regime, healthy ~1.7 GB/s,
     # episodes 0.05-0.2), wait up to 6 minutes for recovery before burning
@@ -153,15 +177,10 @@ def main() -> None:
     # 250 s of the 300 s pipeline budget, leaving min-of-2 instead of
     # min-of-5. Episodes often clear in tens of seconds; if this one
     # doesn't, proceed anyway (the per-run probes make it visible).
-    wait_t0 = time.time()
-    # deadline on WALL clock, not summed sleeps: mid-episode the probe's own
-    # 256 MB page-touch can take tens of seconds, so counting only the
-    # sleeps would let the gate run 2x+ past its documented 6-minute budget
-    while probe_pre.get("fault_gbps", 9.9) < 0.8 and time.time() - wait_t0 < 360:
-        time.sleep(45)
-        probe_pre = host_probe(own_jvms=0)
-    if time.time() - wait_t0 >= 45:
-        probe_pre["pre_wait_sec"] = round(time.time() - wait_t0, 1)
+    probe_pre, waited = wait_for_window(
+        host_probe, lambda p: p["fault_gbps"] >= 0.8, budget_s=360, step_s=45)
+    if waited:
+        probe_pre["pre_wait_sec"] = round(waited, 1)
     spark = get_spark(app_name="bench", master=f"local[{cpus}]",
                       shuffle_partitions=max(cpus, 8))
 
@@ -206,23 +225,19 @@ def main() -> None:
     run_spins = []
     run_faults = []
     gate_wait_sec = 0.0
-    i = 0
-    while i < 6:
-        f = fault_probe() if i > 0 else -1.0
-        # gate at 1.5 GB/s: round-5 observation — reps admitted at
-        # 1.1-1.3 GB/s still measured 35-40 s (the regime is degraded well
-        # below the healthy ≥2); the 6.8-8.9 s captures all ran at ≥1.5.
-        # The budget bound keeps a fully-degraded window from stalling the
-        # bench: after 150 s of deferrals it measures anyway, visibly.
-        if (
-            i > 0
-            and f < 1.5
-            and gate_wait_sec < 150
-            and time.time() - bench_t0 < 330
-        ):
-            time.sleep(20)
-            gate_wait_sec += 20
-            continue
+    for i in range(6):
+        f = -1.0
+        if i > 0:
+            # gate at 1.5 GB/s: round-5 observation — reps admitted at
+            # 1.1-1.3 GB/s still measured 35-40 s (the regime is degraded
+            # well below the healthy ≥2); the 6.8-8.9 s captures all ran at
+            # ≥1.5. The budget bound keeps a fully-degraded window from
+            # stalling the bench: after 150 s of deferrals (summed over
+            # reps) it measures anyway, visibly.
+            f, waited = wait_for_window(
+                fault_probe, lambda g: g >= 1.5, budget_s=150 - gate_wait_sec,
+                step_s=20, deadline=bench_t0 + 330)
+            gate_wait_sec += waited
         out_dir = tempfile.mkdtemp(prefix="bench_pipe_", dir=scratch)
         t0 = time.time()
         run_pipeline(spark, seqs, PipelineConfig(out_dir=out_dir))
@@ -232,7 +247,6 @@ def main() -> None:
             pipeline_runs.append(dt)
             run_spins.append(spin_probe())
             run_faults.append(f)
-        i += 1
         if len(pipeline_runs) >= 2 and time.time() - bench_t0 > 300:
             break
     # report runs in RUN ORDER (spin/fault lists stay aligned per rep);
@@ -266,16 +280,17 @@ def main() -> None:
     # the degraded-host guard has already spent the time budget.
     query_runs: dict[str, list[float]] = {}
     query_spins: dict[str, float] = {}
+    query_faults: dict[str, float] = {}
     passes_done = 0
     pass_gate_wait = 0.0
     for _pass in range(3):
-        # between-pass fault gate (same rationale as the pipeline reps):
-        # don't start a whole 20-query pass inside a collapsed window
-        while (_pass > 0 and pass_gate_wait < 60
-               and fault_probe() < 1.5
-               and time.time() - bench_t0 < 420):
-            time.sleep(20)
-            pass_gate_wait += 20
+        if _pass > 0:
+            # between-pass fault gate (same rationale as the pipeline reps):
+            # don't start a whole 20-query pass inside a collapsed window
+            _, waited = wait_for_window(
+                fault_probe, lambda g: g >= 1.5, budget_s=60 - pass_gate_wait,
+                step_s=20, deadline=bench_t0 + 420)
+            pass_gate_wait += waited
         for name in HEADLINE:
             qd = REGISTRY[name]
             t0 = time.time()
@@ -283,7 +298,9 @@ def main() -> None:
             dt = round(time.time() - t0, 3)
             runs = query_runs.setdefault(name, [])
             if not runs or dt <= min(runs):
+                # spin alone cannot see degraded DRAM; the fault reading can
                 query_spins[name] = spin_probe()
+                query_faults[name] = fault_probe()
             runs.append(dt)
         passes_done += 1
         if time.time() - bench_t0 > 420:
@@ -397,20 +414,14 @@ def main() -> None:
         "n_clusters": int(stats["n_clusters"]),
     }
 
-    # one-word regime tag so a reader of the JSON doesn't have to re-derive
-    # the calibration (BENCH/BASELINE.md): healthy >= 2 GB/s fault
-    # bandwidth, sub-healthy 1-2 (numbers inflated up to ~2x), degraded
-    # < 1 (numbers meaningless for code comparisons)
     faults_seen = [f for f in run_faults if f >= 0]
     med_fault = sorted(faults_seen)[len(faults_seen) // 2] if faults_seen \
-        else probe_pre.get("fault_gbps", -1)
-    regime = ("healthy" if med_fault >= 2.0 else
-              "sub-healthy" if med_fault >= 1.0 else "degraded")
+        else probe_pre["fault_gbps"]
 
     result = {
         "metric": "e2e_pipeline_sec",
         "value": round(pipeline_sec, 3),
-        "host_regime": regime,
+        "host_regime": regime(med_fault),
         "unit": "sec",
         "queries": query_secs,
         "ann_recall_at_5": ann_recall,
@@ -430,6 +441,7 @@ def main() -> None:
         "query_pass_gate_wait_sec": round(pass_gate_wait, 1),
         "query_runs_sec": query_runs,
         "query_spin_mops": query_spins,
+        "query_fault_gbps": query_faults,
         "host_probe_pre": probe_pre,
         "host_probe_post": host_probe(own_jvms=1),
     }

@@ -312,12 +312,8 @@ def parse_layers(
     ]
 
 
-def apply_parse(df: DataFrame, layers: list[dict[str, Column]],
-                use_pandas_grok: bool = False) -> DataFrame:
-    """Run :func:`parse_layers` output over ``df``; ``use_pandas_grok``
-    swaps the first (grok) layer for :func:`grok_extract_pandas`."""
-    if use_pandas_grok:
-        df, layers = grok_extract_pandas(df), layers[1:]
+def apply_parse(df: DataFrame, layers: list[dict[str, Column]]) -> DataFrame:
+    """Run :func:`parse_layers` output over ``df``."""
     for layer in layers:
         df = df.withColumns(layer)
     return df
@@ -333,7 +329,6 @@ def parse_sequences(
     drop_criteria: DropCriteria = DEFAULT_DROP,
     exclude_rule: dict | None = None,
     default_tenant: str | None = None,
-    use_pandas_grok: bool = False,
 ) -> DataFrame:
     """sequences → parsed records, with per-row drop/bypass flags still attached.
 
@@ -344,8 +339,7 @@ def parse_sequences(
     ``tenant_id IS NULL`` and record counters (see
     aggregate.operational_counters).
     """
-    return apply_parse(df, parse_layers(drop_criteria, exclude_rule, default_tenant),
-                       use_pandas_grok)
+    return apply_parse(df, parse_layers(drop_criteria, exclude_rule, default_tenant))
 
 
 def split_parsed(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:

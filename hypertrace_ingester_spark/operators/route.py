@@ -90,7 +90,7 @@ def fan_out(routed: DataFrame, out_dir: str,
     # 4 MB data pages (default 1 MB): token rows are ~1 KB, so 1 MB pages
     # flush the encoder every ~1k rows; bigger pages amortize page
     # header/stats/CRC overhead on the widest column. Interleaved A/B at
-    # 1M rows (scripts/write_options_ab.py): base 10.41 s → 9.44 s (-9%).
+    # 1M rows (BENCH/BASELINE.md "Round 4"): base 10.41 s → 9.44 s (-9%).
     # Disabling page checksums on top was within noise (9.59), so CRCs
     # stay on.
     (

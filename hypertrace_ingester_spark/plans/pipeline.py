@@ -74,11 +74,6 @@ class PipelineConfig:
     # row per closed session to out_dir/sessions.
     session_stage: bool = False
     session_gap_ms: int = group_ops.SESSION_GAP_MS
-    # persist the parse output when the upstream lineage is expensive to
-    # recompute (e.g. a generator); False when input is a columnar table —
-    # re-scanning with column pruning beats caching the full token payload.
-    cache_parse: bool = False
-    use_pandas_grok: bool = False
     # STREAMING ONLY, opt-in: commit each micro-batch's routed rows to a
     # snapshot-versioned table (out_dir/routed_snap) with the idempotent
     # batch_id gate — a foreachBatch retry replay no-ops, upgrading the
@@ -108,9 +103,9 @@ class HotChain:
     enrichment: enrich_ops.Enrichment
     routing: route_ops.Routing
 
-    def parse(self, df: DataFrame, use_pandas_grok: bool = False) -> DataFrame:
+    def parse(self, df: DataFrame) -> DataFrame:
         """``parse_sequences`` output: every row, with its flags."""
-        return parse_ops.apply_parse(df, self.parse_layers, use_pandas_grok)
+        return parse_ops.apply_parse(df, self.parse_layers)
 
     def alive(self, parsed: DataFrame) -> DataFrame:
         """The surviving rows of :meth:`parse`, as ``PARSE_OUTPUT_COLS``."""
@@ -120,9 +115,9 @@ class HotChain:
         """Enrich (with bypass semantics) and route the :meth:`alive` rows."""
         return self.routing.apply(self.enrichment.apply(alive))
 
-    def apply(self, df: DataFrame, use_pandas_grok: bool = False) -> DataFrame:
+    def apply(self, df: DataFrame) -> DataFrame:
         """The routed rows of ``df``."""
-        return self.route(self.alive(self.parse(df, use_pandas_grok)))
+        return self.route(self.alive(self.parse(df)))
 
 
 def hot_chain(ctx: enrich_ops.EnrichContext, route_rules: DataFrame,
@@ -273,7 +268,6 @@ def run_pipeline(
 
     # ---- PARSE ----------------------------------------------------------
     parse_ckpt = os.path.join(cfg.out_dir, "_checkpoints", "parsed")
-    cached_parse = None
     parse_state = manifest["stages"].get("parse", {})
     resumed_from_ckpt = bool(
         resume and parse_state.get("complete") and parse_state.get("checkpoint")
@@ -304,7 +298,7 @@ def run_pipeline(
         else:
             parsed = spark.read.parquet(parse_ckpt)
     else:
-        parsed = chain.parse(sequences, cfg.use_pandas_grok)
+        parsed = chain.parse(sequences)
         if cfg.checkpoint_parse and cfg.bucket_parse_checkpoint:
             tbl = _parse_ckpt_table(cfg.out_dir)
             bucketing.write_bucketed(
@@ -315,12 +309,6 @@ def run_pipeline(
         elif cfg.checkpoint_parse:
             parsed.write.mode("overwrite").parquet(parse_ckpt)
             parsed = spark.read.parquet(parse_ckpt)
-        elif cfg.cache_parse:
-            # persist only when the upstream lineage is expensive; for
-            # columnar-table input the downstream consumers each re-scan
-            # with column pruning, which is cheaper than caching tokens.
-            parsed = parsed.persist()
-            cached_parse = parsed
 
     counters = agg_ops.operational_counters(parsed)
 
@@ -419,6 +407,4 @@ def run_pipeline(
     from ..sources import prometheus as prom
 
     prom.write_pipeline_metrics(cfg.out_dir, manifest)
-    if cached_parse is not None:
-        cached_parse.unpersist()
     return manifest

@@ -79,7 +79,7 @@ def process_batch(
     frame to every batch."""
     from ..operators import aggregate as agg_ops
 
-    routed = hot_chain(ctx, route_rules, cfg.drop_criteria).apply(batch_df, cfg.use_pandas_grok)
+    routed = hot_chain(ctx, route_rules, cfg.drop_criteria).apply(batch_df)
     metrics_input = routed
     if cfg.snapshot_routed:
         # exactly-once: idempotent snapshot commit keyed by batch_id — a

@@ -1045,18 +1045,6 @@ def d_embed_near_dup(spark, sf_dir):
     )
 
 
-def s_ann_lsh(spark, sf_dir):
-    """Hyperplane-LSH approximate top-k — out of the 50-entry driver
-    catalog (its slot carries d_embed_near_dup, which exercises the same
-    bucketing machinery under a FULL value-hash oracle). The top-k path's
-    evidence: recall tests vs brute force (tests/test_similarity_ivf.py,
-    incl. multi-table dominance) and the measured recall@5 table bench.py
-    reports per run."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 20)
-    return sim.ann_topk(emb, queries, dim=64, k=5, bits=8)
-
-
 # ---------------------------------------------------------------------------
 # Additional operator-parity queries
 # ---------------------------------------------------------------------------

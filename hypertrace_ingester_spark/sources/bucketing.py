@@ -42,7 +42,7 @@ def write_bucketed(
         .mode(mode)
         # 4 MB data pages: same writer-side win as the fan-out write
         # (operators/route.py fan_out docstring; A/B in
-        # scripts/write_options_ab.py) — checkpoints carry the full token
+        # BENCH/BASELINE.md "Round 4") — checkpoints carry the full token
         # payload too.
         .option("parquet.page.size", str(4 * 1024 * 1024))
         .bucketBy(n_buckets, *bucket_cols)

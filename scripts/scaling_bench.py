@@ -7,10 +7,19 @@ Two modes:
 - executors: local-cluster[N,8,12g] — N separate executor JVMs × 8 cores,
              the in-sandbox analog of an N-executor cluster.
 
-Each level runs in a fresh subprocess (own JVM — fair JIT state), does one
-untimed warmup run, then ``--reps`` measured runs; median + min reported,
+Each level runs in a fresh worker subprocess (this file with ``--worker
+N``; own JVM — fair JIT state) driven over stdin one rep at a time: one
+untimed warmup rep, then ``--reps`` measured reps; median + min reported,
 plus a RESULT_JSON line. BENCH/BASELINE.md holds the curated results and
 the scaling analysis (hardware ceilings measured via microbenchmarks).
+
+Rep order follows from the mode. Threads mode keeps both level workers
+alive and alternates reps ABAB (only one executes at a time), so an
+episodic host slowdown lands on reps of BOTH levels rather than silently
+poisoning whichever level ran during the episode — the failure mode that
+produced round-3's 32-slower-than-8 artifacts. Executors mode runs one
+level at a time: both levels alive = ~108 GB of Xms-pinned heaps on a
+128 GiB box, and the JVM gateway dies.
 
 CPU pinning (round-3 methodology fix): each level is pinned with
 ``taskset`` to exactly its core budget (N cores for threads mode, N×8 for
@@ -19,10 +28,11 @@ physical cores' cache and turbo headroom (8 worker threads migrate
 freely), understating the small level's true cost and adding 2.3×
 run-to-run spread in executors mode from scheduler migration; pinned, the
 levels measure what N-core hardware actually does, and the JVM sizes its
-GC/compiler pools from the affinity mask. Disable with --no-pin.
+GC/compiler pools from the affinity mask. A level is left unpinned (and
+reported so) when ``taskset`` is missing or the host has too few cores.
 
 Usage: python scripts/scaling_bench.py [--rows 4000000] [--reps 3]
-       [--levels 8 32] [--mode threads|executors] [--no-pin]
+       [--levels 8 32] [--mode threads|executors] [--narrow] [--noop]
 """
 
 from __future__ import annotations
@@ -30,229 +40,163 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import statistics
 import subprocess
-from shutil import which as shutil_which
 import sys
 import tempfile
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 SCRATCH = "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
 
-WORKER = r"""
-import json, os, shutil, sys, tempfile, time
-sys.path.insert(0, {repo!r})
-from hypertrace_ingester_spark.session import get_spark
-from hypertrace_ingester_spark.plans.pipeline import run_pipeline, PipelineConfig
 
-mode, n, input_dir, reps, scratch = sys.argv[1], int(sys.argv[2]), sys.argv[3], int(sys.argv[4]), sys.argv[5]
-narrow = "narrow" in sys.argv[6:]
-interleaved = "interleaved" in sys.argv[6:]
-noop = "noop" in sys.argv[6:]
-if mode == "executors":
-    # N separate executor JVMs x 8 cores — the in-sandbox analog of an
-    # N-executor cluster (own heap + GC per executor, shared host DRAM)
-    master, cores = f"local-cluster[{{n}},8,12288]", n * 8
-    extra = {{"spark.executor.memory": "12g", "spark.driver.memory": "8g",
-              "spark.executor.extraJavaOptions": "-XX:+UseParallelGC -Xmn4g"}}
-else:
-    master, cores = f"local[{{n}}]", n
-    extra = {{}}
-spark = get_spark(app_name=f"scaling_{{mode}}_{{n}}", master=master,
-                  shuffle_partitions=max(cores, 8), extra_conf=extra)
-if narrow:
-    # the narrow input is ~20x smaller on disk, so the default 128 MB
-    # maxPartitionBytes would pack it into ~1 input split and serialize
-    # the parse stage — size splits to the SAME task count the wide input
-    # gets (~1 split per 128 MB of wide bytes ~ 64 splits at 4M rows),
-    # keeping the two plans task-for-task comparable
-    nbytes = sum(
-        os.path.getsize(os.path.join(input_dir, f))
-        for f in os.listdir(input_dir) if f.endswith(".parquet")
-    )
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(max(nbytes // 64, 1 << 20)))
-    spark.conf.set("spark.sql.files.openCostInBytes", "0")
-seqs = spark.read.parquet(input_dir)
+def worker(args) -> None:
+    """One level's JVM: print READY, run one rep per RUN line on stdin and
+    answer ``REP <sec> <spin>``, print ``RESULT {...}`` on QUIT or EOF."""
+    import bench
+    from hypertrace_ingester_spark.plans.pipeline import PipelineConfig, run_pipeline
+    from hypertrace_ingester_spark.session import get_spark
 
-def one_rep():
-    out = tempfile.mkdtemp(prefix=f"scale_{{n}}_", dir=scratch)
-    t0 = time.time()
-    m = run_pipeline(spark, seqs, PipelineConfig(out_dir=out))
-    dt = time.time() - t0
-    shutil.rmtree(out, ignore_errors=True)
-    return dt, m
+    n = args.worker
+    if args.mode == "executors":
+        # N separate executor JVMs x 8 cores — the in-sandbox analog of an
+        # N-executor cluster (own heap + GC per executor, shared host DRAM)
+        master, cores = f"local-cluster[{n},8,12288]", n * 8
+        extra = {"spark.executor.memory": "12g", "spark.driver.memory": "8g",
+                 "spark.executor.extraJavaOptions": "-XX:+UseParallelGC -Xmn4g"}
+    else:
+        master, cores, extra = f"local[{n}]", n, {}
+    spark = get_spark(app_name=f"scaling_{args.mode}_{n}", master=master,
+                      shuffle_partitions=max(cores, 8), extra_conf=extra)
+    if args.narrow:
+        # the narrow input is ~20x smaller on disk, so the default 128 MB
+        # maxPartitionBytes would pack it into ~1 input split and serialize
+        # the parse stage — size splits to the SAME task count the wide input
+        # gets (~1 split per 128 MB of wide bytes ~ 64 splits at 4M rows),
+        # keeping the two plans task-for-task comparable
+        nbytes = sum(
+            os.path.getsize(os.path.join(args.input_dir, f))
+            for f in os.listdir(args.input_dir) if f.endswith(".parquet")
+        )
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(max(nbytes // 64, 1 << 20)))
+        spark.conf.set("spark.sql.files.openCostInBytes", "0")
+    seqs = spark.read.parquet(args.input_dir)
 
-if noop:
-    # compute-only decomposition: the full parse -> enrich -> route DAG with
-    # every routed row (token payload included) materialized into Spark's
-    # built-in `noop` batch writer — all the engine work minus the parquet
-    # encode + tmpfs page faults of the sink. Scaling of THIS variant is the
-    # engine's own N->4N behavior with the one-DRAM-domain write substrate
-    # removed; the aggregate stage is excluded because in the real pipeline
-    # it re-reads the written sink with column pruning (tokens never read),
-    # i.e. it belongs to the write side of the decomposition.
-    from hypertrace_ingester_spark import datagen
-    from hypertrace_ingester_spark.operators import enrich as enrich_ops
-    from hypertrace_ingester_spark.operators import parse as parse_ops
-    from hypertrace_ingester_spark.operators import route as route_ops
-    from pyspark.sql import functions as F
-    _ctx = enrich_ops.EnrichContext(
-        endpoints=datagen.endpoints_dim(spark),
-        services=datagen.services_dim(spark),
-        status_codes=datagen.status_codes_dim(spark),
-    )
-    _rules = datagen.route_rules_dim(spark)
+    if args.noop:
+        # compute-only decomposition: the full parse -> enrich -> route DAG
+        # with every routed row (token payload included) materialized into
+        # Spark's built-in `noop` batch writer — all the engine work minus
+        # the parquet encode + tmpfs page faults of the sink. Scaling of THIS
+        # variant is the engine's own N->4N behavior with the one-DRAM-domain
+        # write substrate removed; the aggregate stage is excluded because
+        # in the real pipeline it re-reads the written sink with column
+        # pruning (tokens never read), i.e. it belongs to the write side.
+        from hypertrace_ingester_spark import datagen
+        from hypertrace_ingester_spark.operators import parse as parse_ops
+        from hypertrace_ingester_spark.plans.pipeline import hot_chain
 
-    def one_rep():
-        t0 = time.time()
-        parsed = parse_ops.parse_sequences(seqs)
-        alive = parsed.filter(
-            F.col("has_tenant") & ~F.col("is_dropped")
-        ).select(*parse_ops.PARSE_OUTPUT_COLS)
-        routed = route_ops.route(enrich_ops.enrich_with_bypass(alive, _ctx), _rules)
-        routed.write.format("noop").mode("overwrite").save()
-        return time.time() - t0, {{"total_routed_rows": None}}
+        def one_rep():
+            t0 = time.time()
+            hot_chain(*datagen.default_dims(spark), parse_ops.DEFAULT_DROP).apply(
+                seqs).write.format("noop").mode("overwrite").save()
+            return time.time() - t0, None
+    else:
+        def one_rep():
+            out = tempfile.mkdtemp(prefix=f"scale_{n}_", dir=SCRATCH)
+            t0 = time.time()
+            m = run_pipeline(spark, seqs, PipelineConfig(out_dir=out))
+            dt = time.time() - t0
+            shutil.rmtree(out, ignore_errors=True)
+            return dt, m["total_routed_rows"]
 
-def spin_probe():
-    # single-thread spin speed: <4 Mops on this box = degraded host window
-    # (hypervisor steal / fault-bandwidth collapse; BENCH/BASELINE.md
-    # "Measurement hygiene" #3) — lets a slow rep be attributed in the JSON
-    t0 = time.time()
-    x = 0
-    while time.time() - t0 < 0.2:
-        x += 1
-    return round(x / (time.time() - t0) / 1e6, 2)
-
-if interleaved:
-    # driven over stdin by the parent: one rep per RUN line, so reps
-    # alternate between parallelism levels (ABAB) — an episodic host
-    # slowdown (hypervisor steal / memory-reclaim stall) contaminates
-    # both levels instead of silently poisoning one
-    routed = None
+    routed_rows = None
     print("READY", flush=True)
     for line in sys.stdin:
-        cmd = line.strip()
-        if cmd == "QUIT":
+        if line.strip() == "QUIT":
             break
-        dt, m = one_rep()
-        routed = m["total_routed_rows"]
-        print(f"REP {{dt:.3f}} {{spin_probe()}}", flush=True)
-    print("RESULT " + json.dumps({{"n": n, "routed": routed}}), flush=True)
-else:
-    times, spins = [], []
-    for i in range(reps + 1):  # rep 0 = untimed warmup
-        dt, m = one_rep()
-        if i > 0:
-            times.append(dt)
-            spins.append(spin_probe())
-    print("RESULT " + json.dumps({{"n": n, "times": times, "spins": spins,
-                                   "routed": m["total_routed_rows"]}}))
-"""
+        dt, routed_rows = one_rep()
+        print(f"REP {dt:.3f} {bench.spin_probe()}", flush=True)
+    print("RESULT " + json.dumps({"n": n, "routed": routed_rows}), flush=True)
 
 
-def _level_cmd(mode: str, n: int, input_dir: str, reps: int, pin: bool,
-               narrow: bool, interleaved: bool = False,
-               noop: bool = False) -> tuple[list, bool]:
-    script = WORKER.format(repo=REPO)
-    cores = n * 8 if mode == "executors" else n
-    cmd = [sys.executable, "-c", script, mode, str(n), input_dir, str(reps), SCRATCH]
-    if narrow:
-        cmd.append("narrow")
-    if interleaved:
-        cmd.append("interleaved")
-    if noop:
-        cmd.append("noop")
-    # record whether THIS level actually got pinned — taskset may be
-    # missing or the level may need more cores than the host has, and a
-    # silently-unpinned level must not be reported as pinned
-    pinned = bool(pin and shutil_which("taskset") and cores <= os.cpu_count())
-    if pinned:
-        cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
-    return cmd, pinned
+def _err_path(mode: str, n: int) -> str:
+    return os.path.join(tempfile.gettempdir(), f"scale_worker_{mode}_{n}.err")
 
 
-def run_level(mode: str, n: int, input_dir: str, reps: int, pin: bool = True, narrow: bool = False, noop: bool = False) -> dict:
-    cmd, pinned = _level_cmd(mode, n, input_dir, reps, pin, narrow, noop=noop)
-    out = subprocess.run(
-        cmd,
-        capture_output=True, text=True, timeout=3600,
-    )
-    for line in out.stdout.splitlines():
-        if line.startswith("RESULT "):
-            result = json.loads(line[len("RESULT "):])
-            result["pinned"] = pinned
-            return result
-    raise RuntimeError(f"no RESULT from {mode}={n}:\n{out.stdout[-2000:]}\n{out.stderr[-2000:]}")
+def _await(p, prefix: str) -> str:
+    """The worker's next line starting with ``prefix``; "" if it exited."""
+    line = p.stdout.readline()
+    while line and not line.startswith(prefix):
+        line = p.stdout.readline()
+    return line
 
 
-def run_interleaved(mode: str, levels: list, input_dir: str, reps: int,
-                    pin: bool, narrow: bool, noop: bool = False) -> dict:
-    """ABAB rep ordering: both level workers stay alive (only one executes
-    at a time, driven over stdin), so an episodic host slowdown lands on
-    reps of BOTH levels rather than silently poisoning whichever level ran
-    during the episode — the failure mode that produced round-3's
-    32-slower-than-8 artifacts."""
-    procs, pinned = {}, {}
-    for n in levels:
-        cmd, pn = _level_cmd(mode, n, input_dir, reps, pin, narrow, interleaved=True, noop=noop)
-        # stderr to a file, not DEVNULL: a worker that dies mid-rep (one
-        # did, silently, during a host-stall episode) must leave its
-        # traceback somewhere findable
-        errf = open(os.path.join(tempfile.gettempdir(), f"scale_worker_{mode}_{n}.err"), "w")
-        procs[n] = subprocess.Popen(
-            cmd, stdin=subprocess.PIPE, stdout=subprocess.PIPE,
-            stderr=errf, text=True, bufsize=1,
-        )
-        pinned[n] = pn
-    try:
-        for n in levels:  # wait for session init before any timing
-            line = procs[n].stdout.readline()
-            while line and not line.startswith("READY"):
-                line = procs[n].stdout.readline()
-            if not line:
-                raise RuntimeError(f"worker {n} died before READY")
-        times = {n: [] for n in levels}
-        spins = {n: [] for n in levels}
-        for rep in range(reps + 1):  # rep 0 = untimed warmup (both levels)
-            for n in levels:
-                p = procs[n]
-                p.stdin.write("RUN\n")
-                p.stdin.flush()
-                line = p.stdout.readline()
-                while line and not line.startswith("REP "):
-                    line = p.stdout.readline()
-                if not line:
-                    raise RuntimeError(f"worker {n} died mid-rep")
-                if rep > 0:
-                    parts = line.split()
-                    times[n].append(float(parts[1]))
-                    spins[n].append(float(parts[2]) if len(parts) > 2 else -1.0)
-                    print(f"  rep {rep} {mode}={n}: {times[n][-1]:.1f}s "
-                          f"(spin {spins[n][-1]})", flush=True)
-        results = {}
-        for n in levels:
-            p = procs[n]
-            p.stdin.write("QUIT\n")
-            p.stdin.flush()
-            line = p.stdout.readline()
-            while line and not line.startswith("RESULT "):
-                line = p.stdout.readline()
-            r = json.loads(line[len("RESULT "):]) if line else {"n": n, "routed": None}
-            r["times"] = times[n]
-            r["spins"] = spins[n]
-            r["pinned"] = pinned[n]
-            results[n] = r
-        return results
-    finally:
-        for p in procs.values():
-            try:
-                p.stdin.close()
-            except Exception:
-                pass
-            try:
-                p.wait(timeout=60)
-            except Exception:
-                p.kill()
+def run_levels(args, input_dir: str) -> dict:
+    """Run every level's reps; threads mode alternates the levels ABAB with
+    both workers alive, executors mode runs each level's reps in turn."""
+    groups = [args.levels] if args.mode == "threads" else [[n] for n in args.levels]
+    flags = [f for f, on in (("--narrow", args.narrow), ("--noop", args.noop)) if on]
+    results = {}
+    for group in groups:
+        procs, pinned = {}, {}
+        for n in group:
+            cores = n * 8 if args.mode == "executors" else n
+            cmd = [sys.executable, os.path.abspath(__file__), "--worker", str(n),
+                   "--mode", args.mode, "--input-dir", input_dir, *flags]
+            # record whether THIS level actually got pinned — taskset may be
+            # missing or the level may need more cores than the host has, and
+            # a silently-unpinned level must not be reported as pinned
+            pinned[n] = bool(shutil.which("taskset") and cores <= os.cpu_count())
+            if pinned[n]:
+                cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
+            # stderr to a file, not DEVNULL: a worker that dies mid-rep (one
+            # did, silently, during a host-stall episode) must leave its
+            # traceback somewhere findable
+            with open(_err_path(args.mode, n), "w") as errf:
+                procs[n] = subprocess.Popen(
+                    cmd, stdin=subprocess.PIPE, stdout=subprocess.PIPE,
+                    stderr=errf, text=True, bufsize=1,
+                )
+        try:
+            for n in group:  # wait for session init before any timing
+                if not _await(procs[n], "READY"):
+                    raise RuntimeError(f"worker {n} died before READY "
+                                       f"(stderr in {_err_path(args.mode, n)})")
+            times = {n: [] for n in group}
+            spins = {n: [] for n in group}
+            for rep in range(args.reps + 1):  # rep 0 = untimed warmup
+                for n in group:
+                    procs[n].stdin.write("RUN\n")
+                    procs[n].stdin.flush()
+                    parts = _await(procs[n], "REP ").split()
+                    if not parts:
+                        raise RuntimeError(f"worker {n} died mid-rep "
+                                           f"(stderr in {_err_path(args.mode, n)})")
+                    if rep > 0:
+                        times[n].append(float(parts[1]))
+                        spins[n].append(float(parts[2]))
+                        print(f"  rep {rep} {args.mode}={n}: {times[n][-1]:.1f}s "
+                              f"(spin {spins[n][-1]})", flush=True)
+            for n in group:
+                procs[n].stdin.write("QUIT\n")
+                procs[n].stdin.flush()
+                line = _await(procs[n], "RESULT ")
+                r = json.loads(line[len("RESULT "):]) if line else {"n": n, "routed": None}
+                results[n] = {**r, "times": times[n], "spins": spins[n],
+                              "pinned": pinned[n]}
+        finally:
+            for p in procs.values():
+                try:
+                    p.stdin.close()
+                except OSError:
+                    pass
+                try:
+                    p.wait(timeout=60)
+                except subprocess.TimeoutExpired:
+                    p.kill()
+    return results
 
 
 def main() -> None:
@@ -261,17 +205,9 @@ def main() -> None:
     ap.add_argument("--reps", type=int, default=3)
     ap.add_argument("--levels", type=int, nargs=2, default=[8, 32])
     ap.add_argument("--mode", choices=["threads", "executors"], default="threads",
-                    help="threads: local[N]; executors: local-cluster[N,8,12g] "
-                         "(levels are executor counts, e.g. 1 4)")
-    ap.add_argument("--no-report", action="store_true",
-                    help="print results only; don't write BENCH/BASELINE.md")
-    ap.add_argument("--no-pin", action="store_true",
-                    help="skip taskset CPU pinning (measure the unpinned legacy way)")
-    ap.add_argument("--interleave", action="store_true",
-                    help="keep both level workers alive and alternate reps "
-                         "ABAB (only one executes at a time) so episodic host "
-                         "slowdowns contaminate both levels symmetrically "
-                         "instead of poisoning one level's whole series")
+                    help="threads: local[N], reps interleaved ABAB; executors: "
+                         "local-cluster[N,8,12g] (levels are executor counts, "
+                         "e.g. 1 4), one level at a time")
     ap.add_argument("--narrow", action="store_true",
                     help="payload-decomposition experiment: identical rows and "
                          "plan, but the tokens array truncated to 1 element "
@@ -286,7 +222,11 @@ def main() -> None:
                          "materialized into Spark's built-in noop writer — "
                          "engine scaling with the parquet-encode + tmpfs "
                          "page-fault write substrate removed.")
+    ap.add_argument("--worker", type=int, default=None, help=argparse.SUPPRESS)
+    ap.add_argument("--input-dir", default=None, help=argparse.SUPPRESS)
     args = ap.parse_args()
+    if args.worker is not None:
+        return worker(args)
 
     suffix = "_narrow" if args.narrow else ""
     input_dir = os.path.join(SCRATCH, f"bench_seq_{args.rows}{suffix}.parquet")
@@ -305,16 +245,7 @@ def main() -> None:
         ).format(repo=REPO, rows=args.rows, inp=input_dir, shrink=shrink)
         subprocess.run([sys.executable, "-c", gen], check=True, timeout=3600)
 
-    if args.interleave:
-        results = run_interleaved(args.mode, args.levels, input_dir, args.reps,
-                                  pin=not args.no_pin, narrow=args.narrow,
-                                  noop=args.noop)
-    else:
-        results = {}
-        for n in args.levels:
-            results[n] = run_level(args.mode, n, input_dir, args.reps,
-                                   pin=not args.no_pin, narrow=args.narrow,
-                                   noop=args.noop)
+    results = run_levels(args, input_dir)
     for n in args.levels:
         r = results[n]
         r["median_sec"] = statistics.median(r["times"])
@@ -330,7 +261,7 @@ def main() -> None:
     min_speedup = (args.rows / results[n4]["min_sec"]) / (args.rows / results[n]["min_sec"])
     print("RESULT_JSON " + json.dumps({"mode": args.mode, "rows": args.rows,
                                        "narrow": args.narrow, "noop": args.noop,
-                                       "interleaved": args.interleave,
+                                       "interleaved": args.mode == "threads",
                                        "min_based_efficiency": min_speedup / (n4 / n),
                                        "pinned": all(r["pinned"] for r in results.values()),
                                        "levels": args.levels,
