@@ -37,23 +37,27 @@ def words(text_col: str = "text") -> Column:
     return F.split(F.col(text_col), " ")
 
 
-def shingles(text_col: str = "text", k: int = SHINGLE_K) -> Column:
-    """Distinct word k-gram shingles via sequence+transform (no explode).
+def word_grams(w: Column, k: int) -> Column:
+    """Word k-grams of the words array ``w``, in order, joined by ' '.
 
-    Docs with fewer than ``k`` words have NO shingles — guarded with an
-    explicit empty array: ``sequence(1, n-k+1)`` would otherwise DESCEND
-    ([1, 0]) for short docs and the out-of-range ``element_at`` throws
-    under Spark 4 ANSI mode (review find r3)."""
-    w = words(text_col)
+    Docs with fewer than ``k`` words have NO grams — guarded with an
+    explicit empty array: the slice length ``n-k+1`` is negative for short
+    docs and throws under Spark 4 ANSI mode (review find r3). The k shifted
+    slices of ``w`` are zipped pairwise, so the lambda bodies see only
+    lambda variables: a lambda body gets no common-subexpression
+    elimination, and ``element_at(w, i)`` there re-evaluated ``w`` (a
+    ``split`` of the whole text) once per element."""
     n = F.size(w)
-    grams = F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.concat_ws(" ", *[F.element_at(w, i + j) for j in range(k)]),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams)
+    m = n - (k - 1)
+    grams = F.slice(w, 1, m)
+    for j in range(1, k):
+        grams = F.zip_with(grams, F.slice(w, j + 1, m), lambda a, b: F.concat_ws(" ", a, b))
+    return F.when(n >= k, grams).otherwise(F.array().cast("array<string>"))
+
+
+def shingles(text_col: str = "text", k: int = SHINGLE_K) -> Column:
+    """Distinct word k-gram shingles (no explode)."""
+    return F.array_distinct(word_grams(words(text_col), k))
 
 
 def exact_dedup(docs: DataFrame, text_col: str = "text") -> DataFrame:

@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.numeric import round_half_up
+from .dedup import SHINGLE_K, word_grams
 
 # tiny per-language stopword lists for the n-gram/stopword language heuristic
 LANG_STOPWORDS = {
@@ -39,85 +40,107 @@ PII_PATTERNS = {
 }
 
 
+# Reserved internal columns (refused on input, like ``_nt_orig``): the
+# words array each per-doc builder reads, projected ONCE per row, and the
+# per-candidate counts an argmax reads.
+_WORDS_COL = "_tp_words"
+_LANG_PREFIX = "_tp_lang_"
+_SCRIPT_PREFIX = "_tp_script_"
+
+
 def _words(text_col: str) -> Column:
     return F.split(F.col(text_col), " ")
 
 
-def _stopword_hits(text_col: str, stops: list[str]) -> Column:
+def _reserve(docs: DataFrame, names) -> None:
+    """Refuse input that carries an internal column name (keep_canonical's
+    reserved-internal-name rule)."""
+    clash = set(names) & set(docs.columns)
+    if clash:
+        raise ValueError(f"input carries reserved column(s): {sorted(clash)}")
+
+
+def _stopword_hits(w: Column, stops: list[str]) -> Column:
     """# words that are in the stopword set (word-level, not substring)."""
-    return F.size(F.filter(_words(text_col), lambda w: w.isin(stops)))
+    return F.size(F.filter(w, lambda x: x.isin(stops)))
 
 
-def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Whitespace token count + BPE-ish estimate (ceil(chars/4)) per doc."""
-    return docs.withColumn("n_words", F.size(_words(text_col))).withColumn(
+def _argmax(df: DataFrame, counts: dict[str, Column], prefix: str):
+    """Project each candidate's count ONCE as an internal ``prefix+name``
+    column, then argmax over those columns. Returns ``(df, refs, best,
+    pick)``: ``refs[name]`` reads a count, ``best`` is ``greatest(counts,
+    0)`` and ``pick`` the first name in sorted order whose count equals it
+    ('unk' when it is 0) — later names win only on a strictly greater
+    count. A nested ``when(c > best, c).otherwise(best)`` chain doubles its
+    tree per candidate, and Spark shares no subexpression across CASE
+    branches, so it re-ran each count dozens of times per row."""
+    names = sorted(counts)
+    cols = {n: prefix + n for n in names}
+    _reserve(df, cols.values())
+    df = df.withColumns({cols[n]: counts[n] for n in names})
+    refs = {n: F.col(cols[n]) for n in names}
+    best = F.greatest(*refs.values(), F.lit(0))
+    pick = F.when(best == 0, F.lit("unk"))
+    for n in names[:-1]:
+        pick = pick.when(refs[n] == best, F.lit(n))
+    return df, refs, best, pick.otherwise(F.lit(names[-1]))
+
+
+def _over_words(docs: DataFrame, text_col: str, build) -> DataFrame:
+    """Project the words array once as a reserved column, run ``build(df,
+    text_col, words)`` over it, and drop every internal column. The
+    builders reference the array only OUTSIDE lambda bodies: a lambda body
+    gets no common-subexpression elimination, so ``split`` there would run
+    once per array element."""
+    _reserve(docs, [_WORDS_COL])
+    out = build(docs.withColumn(_WORDS_COL, _words(text_col)), text_col,
+                F.col(_WORDS_COL))
+    return out.drop(_WORDS_COL, *(_LANG_PREFIX + lang for lang in LANG_STOPWORDS))
+
+
+def _token_counts(df: DataFrame, text_col: str, w: Column) -> DataFrame:
+    return df.withColumn("n_words", F.size(w)).withColumn(
         "n_tokens_est",
         F.ceil(F.length(F.col(text_col)).cast("double") / BPE_CHARS_PER_TOKEN).cast("int"),
     )
 
 
-def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Stopword-vote language ID: score each language by stopword hits,
-    predict the argmax (deterministic tiebreak: language name order),
-    'unk' when nothing scores. Same structure as fasttext-style n-gram
-    voting, reduced to an auditable SQL-expressible rule."""
-    scores = {lang: _stopword_hits(text_col, stops) for lang, stops in LANG_STOPWORDS.items()}
-    best = None
-    best_lang = F.lit("unk")
-    for lang in sorted(LANG_STOPWORDS):  # later langs win only on strictly-greater
-        s = scores[lang]
-        if best is None:
-            best = F.when(s > 0, s).otherwise(F.lit(0))
-            best_lang = F.when(s > 0, F.lit(lang)).otherwise(F.lit("unk"))
-        else:
-            best_lang = F.when(s > best, F.lit(lang)).otherwise(best_lang)
-            best = F.when(s > best, s).otherwise(best)
-    return docs.withColumn("pred_lang", best_lang).withColumn("lang_score", best.cast("int"))
+def _language_id(df: DataFrame, text_col: str, w: Column) -> DataFrame:
+    df, _, best, pick = _argmax(
+        df,
+        {lang: _stopword_hits(w, stops) for lang, stops in LANG_STOPWORDS.items()},
+        _LANG_PREFIX,
+    )
+    return df.withColumn("pred_lang", pick).withColumn("lang_score", best.cast("int"))
 
 
-def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Heuristic quality features: word count, mean word length, stopword
-    ratio, and a composite keep/drop flag (Gopher-rules-style thresholds)."""
-    w = _words(text_col)
+def _quality_score(df: DataFrame, text_col: str, w: Column) -> DataFrame:
     n_words = F.size(w)
+    en = _LANG_PREFIX + "en"  # language_id's count, when it ran in this pass
+    en_hits = F.col(en) if en in df.columns else _stopword_hits(w, LANG_STOPWORDS["en"])
     mean_wlen = round_half_up(
         F.aggregate(w, F.lit(0).cast("long"), lambda acc, x: acc + F.length(x)).cast("double")
         / F.greatest(n_words, F.lit(1)),
         2,
     )
-    stop_ratio = round_half_up(
-        _stopword_hits(text_col, LANG_STOPWORDS["en"]).cast("double")
-        / F.greatest(n_words, F.lit(1)),
-        3,
-    )
-    keep = (n_words >= 10) & (mean_wlen >= 2.0) & (mean_wlen <= 12.0)
+    stop_ratio = round_half_up(en_hits.cast("double") / F.greatest(n_words, F.lit(1)), 3)
     return (
-        docs.withColumn("n_words", n_words)
+        df.withColumn("n_words", n_words)
         .withColumn("mean_word_len", mean_wlen)
         .withColumn("stopword_ratio", stop_ratio)
-        .withColumn("quality_keep", keep)
+        .withColumn(
+            "quality_keep",
+            (F.col("n_words") >= 10)
+            & (F.col("mean_word_len") >= 2.0)
+            & (F.col("mean_word_len") <= 12.0),
+        )
     )
 
 
-def repetition_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Gopher-style repetition/quality filters (Rae et al. 2021, public):
-    duplicate-word fraction, duplicate-2-gram fraction, symbol-to-word
-    ratio, alpha-word fraction, and the composite ``gopher_keep`` flag.
-    All pure column expressions (one map stage, codegen'd) — the shape a
-    web-scale curation pass runs before any dedup shuffle. Ratios use
-    ``round_half_up`` so the DuckDB oracle restates them bit-identically."""
-    w = _words(text_col)
+def _repetition_signals(df: DataFrame, text_col: str, w: Column) -> DataFrame:
     n = F.size(w)
     g = F.greatest(n, F.lit(1))
-    # word 2-grams, same ANSI-safe guard as dedup.shingles (n=1 docs must
-    # yield an EMPTY array, not a descending sequence)
-    bigrams = F.when(
-        n >= 2,
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.concat_ws(" ", F.element_at(w, i), F.element_at(w, i + 1)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    bigrams = word_grams(w, 2)
     n2 = F.size(bigrams)
     dup_word = round_half_up(
         (n - F.size(F.array_distinct(w))).cast("double") / g, 3)
@@ -129,7 +152,7 @@ def repetition_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
     alpha_frac = round_half_up(
         F.size(F.filter(w, lambda x: x.rlike("[A-Za-z]"))).cast("double") / g, 3)
     return (
-        docs.withColumn("dup_word_frac", dup_word)
+        df.withColumn("dup_word_frac", dup_word)
         .withColumn("dup_2gram_frac", dup_2gram)
         .withColumn("symbol_word_ratio", symbol_ratio)
         .withColumn("alpha_word_frac", alpha_frac)
@@ -141,6 +164,35 @@ def repetition_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
             & (F.col("dup_word_frac") <= 0.5),
         )
     )
+
+
+def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """Whitespace token count + BPE-ish estimate (ceil(chars/4)) per doc."""
+    return _over_words(docs, text_col, _token_counts)
+
+
+def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """Stopword-vote language ID: score each language by stopword hits,
+    predict the argmax (deterministic tiebreak: language name order),
+    'unk' when nothing scores. Same structure as fasttext-style n-gram
+    voting, reduced to an auditable SQL-expressible rule."""
+    return _over_words(docs, text_col, _language_id)
+
+
+def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """Heuristic quality features: word count, mean word length, stopword
+    ratio, and a composite keep/drop flag (Gopher-rules-style thresholds)."""
+    return _over_words(docs, text_col, _quality_score)
+
+
+def repetition_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """Gopher-style repetition/quality filters (Rae et al. 2021, public):
+    duplicate-word fraction, duplicate-2-gram fraction, symbol-to-word
+    ratio, alpha-word fraction, and the composite ``gopher_keep`` flag.
+    All pure column expressions (one map stage, codegen'd) — the shape a
+    web-scale curation pass runs before any dedup shuffle. Ratios use
+    ``round_half_up`` so the DuckDB oracle restates them bit-identically."""
+    return _over_words(docs, text_col, _repetition_signals)
 
 
 def c4_line_signals(
@@ -237,18 +289,15 @@ def text_profile(docs: DataFrame, text_col: str = "text") -> DataFrame:
     shingle count (the primitive under MinHash/Jaccard dedup). One scan of
     the text column instead of five — at 100 TB the scan dominates, so the
     fused profile is the shape a real curation pipeline runs."""
-    from . import dedup as dd
 
-    return pii_scrub(
-        repetition_signals(
-            fingerprint(
-                quality_score(language_id(token_counts(docs, text_col), text_col), text_col),
-                text_col,
-            ).withColumn("n_shingles", F.size(dd.shingles(text_col))),
-            text_col,
-        ),
-        text_col,
-    )
+    def build(df: DataFrame, text_col: str, w: Column) -> DataFrame:
+        for step in (_token_counts, _language_id, _quality_score):
+            df = step(df, text_col, w)
+        df = fingerprint(df, text_col).withColumn(
+            "n_shingles", F.size(F.array_distinct(word_grams(w, SHINGLE_K))))
+        return _repetition_signals(df, text_col, w)
+
+    return pii_scrub(_over_words(docs, text_col, build), text_col)
 
 
 def fingerprint(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -291,8 +340,7 @@ def normalize_text(
     restates the NFC form for the oracle tests."""
     from pyspark.sql import types as T
 
-    if "_nt_orig" in docs.columns:  # reserved-internal-name rule
-        raise ValueError("input carries reserved column '_nt_orig'")
+    _reserve(docs, ["_nt_orig"])
     pre = (
         F.regexp_replace(F.col(text_col), CONTROL_CHARS_RE, "")
         if strip_controls
@@ -328,13 +376,13 @@ def normalize_text(
 
 def _bigram_structs(text_col: str) -> Column:
     """Adjacent word pairs as struct<w_prev, w>, built map-side from the
-    words array (no self-join, no window)."""
+    words array (no self-join, no window). Zipped shifted slices, like
+    ``dedup.word_grams``: the lambda sees only its own variables."""
     w = _words(text_col)
-    pairs = F.transform(
-        F.sequence(F.lit(2), F.size(w)),
-        lambda i: F.struct(
-            F.element_at(w, i - 1).alias("w_prev"), F.element_at(w, i).alias("w")
-        ),
+    m = F.size(w) - 1
+    pairs = F.zip_with(
+        F.slice(w, 1, m), F.slice(w, 2, m),
+        lambda a, b: F.struct(a.alias("w_prev"), b.alias("w")),
     )
     return F.when(F.size(w) >= 2, pairs).otherwise(
         F.array().cast("array<struct<w_prev:string,w:string>>")
@@ -466,12 +514,8 @@ def perplexity_buckets(
     if len(labels) != len(cuts) + 1:
         raise ValueError(f"need len(labels) == len(cuts)+1, got "
                          f"{len(labels)} labels / {len(cuts)} cuts")
-    reserved = {"_pb_g", "_pb_rk", "_pb_n"} | {
-        f"_pb_cut{i}" for i in range(len(cuts))
-    }
-    clash = reserved & set(scored.columns)
-    if clash:  # keep_canonical's reserved-internal-name rule
-        raise ValueError(f"input carries reserved column(s): {sorted(clash)}")
+    _reserve(scored, {"_pb_g", "_pb_rk", "_pb_n"}
+             | {f"_pb_cut{i}" for i in range(len(cuts))})
     gcols = list(by) if by else []
     gexprs = [F.col(c) for c in gcols] or [F.lit(1).alias("_pb_g")]
     gnames = gcols or ["_pb_g"]
@@ -545,22 +589,13 @@ def script_profile(docs: DataFrame, text_col: str = "text") -> DataFrame:
     (pure codegen'd column math, zero shuffle — the d_text_profile
     fusion argument); the ranges are literal characters so a DuckDB
     oracle restates every count bit-identically."""
-    counts = {
-        name: F.regexp_count(F.col(text_col), F.lit(cls))
-        for name, cls in SCRIPT_CLASSES.items()
-    }
-    total = None
-    for c in counts.values():
-        total = c if total is None else total + c
-    out = docs.withColumn("n_script_chars", total.cast("long"))
-    names = sorted(SCRIPT_CLASSES)
-    first = counts[names[0]]
-    best = F.when(first > 0, first).otherwise(F.lit(0))
-    best_name = F.when(first > 0, F.lit(names[0])).otherwise(F.lit("unk"))
-    for name in names[1:]:
-        c = counts[name]
-        best_name = F.when(c > best, F.lit(name)).otherwise(best_name)
-        best = F.when(c > best, c).otherwise(best)
+    out, counts, best, pick = _argmax(
+        docs,
+        {name: F.regexp_count(F.col(text_col), F.lit(cls))
+         for name, cls in SCRIPT_CLASSES.items()},
+        _SCRIPT_PREFIX,
+    )
+    out = out.withColumn("n_script_chars", sum(counts.values()).cast("long"))
     for name in sorted(SCRIPT_CLASSES):
         out = out.withColumn(
             f"frac_{name}",
@@ -571,10 +606,10 @@ def script_profile(docs: DataFrame, text_col: str = "text") -> DataFrame:
                     / F.col("n_script_chars"), 4),
             ).otherwise(F.lit(0.0)),
         )
-    return out.withColumn("pred_script", best_name).withColumn(
+    return out.withColumn("pred_script", pick).withColumn(
         "script_confidence",
         F.when(
             F.col("n_script_chars") > 0,
             round_half_up(best.cast("double") / F.col("n_script_chars"), 4),
         ).otherwise(F.lit(0.0)),
-    )
+    ).drop(*(_SCRIPT_PREFIX + name for name in SCRIPT_CLASSES))

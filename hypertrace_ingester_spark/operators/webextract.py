@@ -260,15 +260,18 @@ def roundtrip_documents(docs: DataFrame, n_files: int = 32) -> DataFrame:
     records = pages.select(
         "doc_id", warc.wrap_record(F.col("doc_id"), F.col("html")).alias("record")
     )
-    # pin file-grain width: the group_warc_files shuffle emits n_files
-    # rows whose BYTE size is tiny by AQE's accounting, so adaptive
-    # coalescing folds them into ONE partition — and every downstream
-    # regexp stage (record split, header parse, tag strip, the fused
-    # profile in d_text_profile) inherits that width, serializing ~40 s
-    # of 32-way CPU onto one core (measured: roundtrip+profile 7.22 s →
-    # 1.11 s at sf0.1). An explicit repartition(n) is exempt from AQE
-    # coalescing; real ingestion gets its width from the many-files scan.
-    files = warc.group_warc_files(records, n_files=n_files).repartition(n_files)
+    # pin file-grain width to the cluster's cores: the group_warc_files
+    # shuffle emits n_files rows whose BYTE size is tiny by AQE's
+    # accounting, so adaptive coalescing folds them into ONE partition —
+    # and every downstream regexp stage (record split, header parse, tag
+    # strip, the fused profile in d_text_profile) inherits that width,
+    # serializing the whole chain onto one core (measured: roundtrip+profile
+    # 7.22 s → 1.11 s at sf0.1). An explicit repartition(n) is exempt from
+    # AQE coalescing. The width is ``defaultParallelism`` (sources.widen's
+    # rule), not n_files: a fixed 32 ran 32 tasks and wrote 32 result files
+    # on a 4-core box. Real ingestion gets its width from the many-files scan.
+    width = docs.sparkSession.sparkContext.defaultParallelism
+    files = warc.group_warc_files(records, n_files=n_files).repartition(width)
     parsed = warc.parse_warc(files).filter(
         (F.col("warc_type") == "response") & F.col("content_len_ok")
     )
