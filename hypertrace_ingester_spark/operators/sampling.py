@@ -425,7 +425,7 @@ def cluster_balanced_sample(
 
     Scale shape: centroid fit is the bounded seeded driver-sample
     (similarity.fit_centroids); assignment is the pass-through
-    ``mapInPandas`` signer (no join-back shuffle); then one broadcastable
+    ``mapInArrow`` signer (no join-back shuffle); then one broadcastable
     id→cluster join onto docs and the single-scan hash filter from
     mixture_sample. Returns docs + ``cluster`` with balanced token mass."""
     from .similarity import fit_centroids, ivf_assign

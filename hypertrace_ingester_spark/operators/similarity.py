@@ -3,21 +3,18 @@
 Training-data-pipeline extension (driver mandate):
 - brute-force cosine top-k — the exact baseline, pure JVM column math
   (``zip_with`` + ``aggregate`` dot products, no UDF);
-- hyperplane-LSH ANN (with margin-ordered multiprobe) and IVF ANN (with
-  optionally k-means-trained coarse centroids) — the 100 TB scale paths:
-  signatures/assignments are one Arrow-batched numpy matmul per batch
-  (``mapInPandas``), candidate generation only within matching buckets.
+- hyperplane-LSH ANN (margin-ordered multiprobe), IVF ANN (optionally
+  k-means-trained coarse centroids) and IVF-PQ — the 100 TB scale paths.
 
-Scale design: the signer is a PASS-THROUGH ``mapInPandas`` — it yields the
-id, the embedding, its norm, and the bucket/cell from the same Arrow batch,
-so there is no join-back on vec_id and the corpus is never re-shuffled to
-reunite with its own signatures (round-2 VERDICT fix). The bucket join is a
-plain equi-join with no forced broadcast — AQE picks broadcast only while
-the probe side is actually small (round-2 ADVICE: a forced broadcast of
-(id + vector) × nprobe rows OOMs executors once the query set grows).
-Top-k uses two-phase selection — per-partition top-k before the final
-per-query top-k — so the shuffle carries k·partitions rows, not the whole
-scored corpus.
+Scale design: every signer is one numpy kernel over the PASS-THROUGH
+``mapInArrow`` of ``_pass_through``, which yields the id, the embedding,
+its norm and the bucket/cell from the same Arrow batch, so the corpus is
+never re-shuffled to reunite with its own signatures (round-2 VERDICT
+fix). The bucket join is a plain equi-join with no forced broadcast — AQE
+broadcasts only while the probe side is actually small (round-2 ADVICE: a
+forced broadcast of (id + vector) × nprobe rows OOMs executors once the
+query set grows). Every search ends in one per-query top-k tail
+(``_top_k``).
 """
 
 from __future__ import annotations
@@ -26,7 +23,9 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 SEED = 42
@@ -45,13 +44,44 @@ def _dot(a, b):
     )
 
 
+def _top_k(
+    scored: DataFrame,
+    k: int,
+    nid: str,
+    by: Column | None = None,
+    dedup: bool = False,
+    round_cos: int | None = None,
+    per_partition: bool = False,
+) -> DataFrame:
+    """The per-query top-k tail of every search over (query_id, ``nid``,
+    score) candidates: drop self-matches, optionally ``dedup`` a pair found
+    more than once (with the same score each time), keep the k best by
+    ``by`` (default cosine descending; neighbor id breaks ties), then round
+    ``cos_sim`` for display. ``per_partition`` first prunes to k rows per
+    (query, input partition), so the final exchange carries k·partitions
+    rows, not the whole scored corpus. Output: the input columns + rank."""
+    order = [F.desc("cos_sim") if by is None else by, F.asc(nid)]
+    scored = scored.where(F.col(nid) != F.col("query_id"))
+    if dedup:
+        scored = scored.distinct()
+    if per_partition:
+        part_w = Window.partitionBy("query_id", F.spark_partition_id()).orderBy(*order)
+        scored = scored.withColumn("_prn", F.row_number().over(part_w)).filter(
+            F.col("_prn") <= k
+        ).drop("_prn")
+    w = Window.partitionBy("query_id").orderBy(*order)
+    out = scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    if round_cos is not None:
+        out = out.withColumn("cos_sim", F.round("cos_sim", round_cos))
+    return out
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    two_phase: bool = True,
 ) -> DataFrame:
     """Exact cosine top-k neighbors for each query vector.
 
@@ -63,34 +93,28 @@ def cosine_topk(
     intentionally keyless (all-pairs exact baseline) so a broadcast
     nested-loop is the only distributed plan; this shape must NOT leak into
     the ANN paths, which are keyed equi-joins."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        _norm(F.col(vec_col)).alias("qnorm"),
+
+    def vecs(df):
+        return df.select(id_col, vec_col, _norm(F.col(vec_col)))
+
+    return _rerank(vecs(corpus), vecs(queries), k, per_partition=True).select(
+        "query_id", "neighbor_id", "rank"
     )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("cvec"),
-        _norm(F.col(vec_col)).alias("cnorm"),
+
+
+def _rerank(c: DataFrame, q: DataFrame, k: int, key: str | None = None, **tail) -> DataFrame:
+    """Exact cosine of each corpus row (id, vec, norm[, key]) against the
+    query rows of the same shape that share its ``key``, then the top-k
+    tail. ``key=None`` pairs all rows: the query side is broadcast, since a
+    keyless join has no other distributed plan."""
+    c = c.toDF("neighbor_id", "cvec", "cnorm", *c.columns[3:])
+    q = q.toDF("query_id", "qvec", "qnorm", *q.columns[3:])
+    pairs = c.join(q, on=key) if key else c.join(F.broadcast(q))
+    scored = pairs.select(
+        "query_id", "neighbor_id",
+        (_dot(F.col("qvec"), F.col("cvec")) / (F.col("qnorm") * F.col("cnorm"))).alias("cos_sim"),
     )
-    scored = (
-        c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", _dot(F.col("qvec"), F.col("cvec")) / (F.col("qnorm") * F.col("cnorm")))
-        .select("query_id", "neighbor_id", "cos_sim")
-    )
-    if two_phase:
-        part_w = Window.partitionBy("query_id", F.spark_partition_id()).orderBy(
-            F.desc("cos_sim"), F.asc("neighbor_id")
-        )
-        scored = scored.withColumn("_prn", F.row_number().over(part_w)).filter(
-            F.col("_prn") <= k
-        ).drop("_prn")
-    final_w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(final_w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank")
-    )
+    return _top_k(scored, k, "neighbor_id", **tail)
 
 
 def _hyperplanes(dim: int, bits: int = ANN_BITS) -> np.ndarray:
@@ -120,6 +144,63 @@ def _fold_norm_np(x: np.ndarray) -> np.ndarray:
     return np.sqrt(acc)
 
 
+def _norms(x: np.ndarray, exact_fold: bool) -> np.ndarray:
+    return _fold_norm_np(x) if exact_fold else np.sqrt((x * x).sum(axis=1))
+
+
+class RaggedVectorError(ValueError):
+    """A vector row is null or does not hold exactly ``dim`` values."""
+
+
+def _matrix(vecs: pa.Array, dim: int, vec_col: str) -> np.ndarray:
+    """An Arrow list column as an (n, dim) float64 matrix — one flatten,
+    one reshape. A null or wrong-length row would shift every later row of
+    the flattened values silently, so it raises instead."""
+    lens = pc.list_value_length(vecs).to_numpy(zero_copy_only=False)
+    bad = np.flatnonzero(lens != dim)
+    if len(bad):
+        raise RaggedVectorError(
+            f"{vec_col}: row {bad[0]} is null or not {dim} values long")
+    flat = vecs.flatten().to_numpy(zero_copy_only=False)
+    return flat.astype(np.float64).reshape(len(vecs), dim)
+
+
+def _pass_through(
+    df: DataFrame, dim: int, kernel, key: str,
+    id_col: str, vec_col: str, narrow: bool = False,
+) -> DataFrame:
+    """The PASS-THROUGH signer of lsh_signatures, ivf_assign and
+    ivfpq_encode: one ``mapInArrow`` pass per Arrow batch. ``kernel`` maps
+    the batch's (n, dim) matrix to ``(vnorm, keys, codes)``: ``keys`` is
+    (n, fan) and each row is emitted once per key, so the fan-out always
+    matches the keys; ``codes`` is an (n, m) per-row payload or None. Rows
+    repeat by Arrow ``take`` and the vector stays ``array<float>``.
+    Output: (id, vec, vnorm, key), or the vector-free (id, key, codes)
+    when ``narrow``."""
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            vnorm, keys, codes = kernel(_matrix(b.column(1), dim, vec_col))
+            fan = keys.shape[1]
+            rows = pa.array(np.repeat(np.arange(b.num_rows), fan))
+            out = {id_col: b.column(0).cast(pa.int64()).take(rows)}
+            if not narrow:
+                out[vec_col] = b.column(1).cast(pa.list_(pa.float32())).take(rows)
+                out["vnorm"] = pa.array(np.repeat(vnorm, fan))
+            out[key] = pa.array(keys.reshape(-1).astype(np.int64))
+            if narrow:
+                offsets = pa.array(np.arange(0, codes.size + 1, codes.shape[1], dtype=np.int32))
+                out["codes"] = pa.ListArray.from_arrays(
+                    offsets, pa.array(codes.reshape(-1))).take(rows)
+            yield pa.RecordBatch.from_pydict(out)
+
+    schema = (f"{id_col} bigint, {key} bigint, codes array<smallint>" if narrow
+              else f"{id_col} bigint, {vec_col} array<float>, vnorm double, {key} bigint")
+    return df.select(id_col, vec_col).mapInArrow(run, schema=schema)
+
+
 def vectors_by_id(
     df: DataFrame, lo: int, hi: int,
     id_col: str = "vec_id", vec_col: str = "embedding",
@@ -147,9 +228,9 @@ def lsh_signatures(
     planes: np.ndarray | None = None, exact_fold: bool = False,
 ) -> DataFrame:
     """Random-hyperplane LSH bucket id(s) per vector, as a PASS-THROUGH
-    ``mapInPandas``: yields (id, embedding, vnorm, bucket) from the same
-    Arrow batch — one numpy matmul per batch (all tables at once: the
-    plane matrix is (dim, tables*bits)), no per-row Python, and no
+    signer (``_pass_through``): yields (id, embedding, vnorm, bucket) from
+    the same Arrow batch — one numpy matmul per batch (all tables at once:
+    the plane matrix is (dim, tables*bits)), no per-row Python, and no
     join-back shuffle to reattach the signature to its vector.
 
     ``nprobe`` > 1 enables margin-ordered multiprobe (query side): besides
@@ -178,43 +259,24 @@ def lsh_signatures(
     if planes.shape != (dim, bits * tables):
         raise ValueError(f"planes must be ({dim}, {bits * tables}), got {planes.shape}")
     nprobe = max(1, min(nprobe, bits + 1))
+    weights = (1 << np.arange(bits)).astype(np.int64)
+    table_tag = (np.arange(tables).astype(np.int64) << bits)  # disjoint bucket spaces
 
-    def signer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        weights = (1 << np.arange(bits)).astype(np.int64)
-        table_tag = (np.arange(tables).astype(np.int64) << bits)  # disjoint bucket spaces
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            if exact_fold:
-                margins = _fold_dot_np(x, planes).reshape(len(pdf), tables, bits)
-                vnorm = _fold_norm_np(x)
-            else:
-                margins = (x @ planes).reshape(len(pdf), tables, bits)
-                vnorm = np.sqrt((x * x).sum(axis=1))
-            bucket = (margins > 0).astype(np.int64) @ weights + table_tag  # (n, tables)
-            ids = pdf[id_col].to_numpy()
-            vecs = pdf[vec_col]
-            if nprobe > 1:
-                # multiprobe: per table, flip the (nprobe-1) lowest-|margin|
-                # bits one at a time — Hamming-1 neighbor buckets per row
-                flip_order = np.argsort(np.abs(margins), axis=2, kind="stable")[:, :, : nprobe - 1]
-                probes = [bucket]
-                for j in range(nprobe - 1):
-                    probes.append(np.bitwise_xor(bucket, weights[flip_order[:, :, j]]))
-                bucket = np.concatenate(probes, axis=1)  # (n, tables*nprobe)
-            fan = bucket.shape[1]
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(ids, fan),
-                    vec_col: vecs.loc[vecs.index.repeat(fan)].reset_index(drop=True),
-                    "vnorm": np.repeat(vnorm, fan),
-                    "bucket": bucket.reshape(-1),
-                }
-            )
+    def kernel(x):
+        margins = (_fold_dot_np(x, planes) if exact_fold else x @ planes).reshape(
+            len(x), tables, bits)
+        bucket = (margins > 0).astype(np.int64) @ weights + table_tag  # (n, tables)
+        if nprobe > 1:
+            # multiprobe: per table, flip the (nprobe-1) lowest-|margin|
+            # bits one at a time — Hamming-1 neighbor buckets per row
+            flip_order = np.argsort(np.abs(margins), axis=2, kind="stable")[:, :, : nprobe - 1]
+            probes = [bucket]
+            for j in range(nprobe - 1):
+                probes.append(np.bitwise_xor(bucket, weights[flip_order[:, :, j]]))
+            bucket = np.concatenate(probes, axis=1)  # (n, tables*nprobe)
+        return _norms(x, exact_fold), bucket, None
 
-    schema = f"{id_col} bigint, {vec_col} array<float>, vnorm double, bucket bigint"
-    return df.select(id_col, vec_col).mapInPandas(signer, schema=schema)
+    return _pass_through(df, dim, kernel, "bucket", id_col, vec_col)
 
 
 def ann_topk(
@@ -243,17 +305,11 @@ def ann_topk(
     ``planes``/``exact_fold`` are the oracle-parity knobs (see
     lsh_signatures); ``round_cos=None`` returns the raw cosine double
     (bit-identical to the oracle's) instead of the 4-digit display round."""
-    c = lsh_signatures(corpus, dim, bits, id_col, vec_col, tables=tables,
-                       planes=planes, exact_fold=exact_fold).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"),
-        F.col("vnorm").alias("cnorm"), "bucket",
-    )
-    q = lsh_signatures(queries, dim, bits, id_col, vec_col, nprobe=nprobe, tables=tables,
-                       planes=planes, exact_fold=exact_fold).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-        F.col("vnorm").alias("qnorm"), "bucket",
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+
+    def sign(df, probe):
+        return lsh_signatures(df, dim, bits, id_col, vec_col, nprobe=probe, tables=tables,
+                              planes=planes, exact_fold=exact_fold)
+
     # Single-table: no dedup needed even with multiprobe — a query's probe
     # buckets are pairwise distinct (the base signature XOR distinct single
     # bits) and each corpus vector lives in exactly ONE bucket, so a
@@ -261,21 +317,9 @@ def ann_topk(
     # previous unconditional distinct added a second full shuffle for
     # nothing). Multi-table: the same pair can collide in several tables
     # (that is the point), so dedup before the top-k window.
-    scored = (
-        c.join(q, on="bucket")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", _dot(F.col("qvec"), F.col("cvec")) / (F.col("qnorm") * F.col("cnorm")))
-        .select("query_id", "neighbor_id", "cos_sim")
-    )
-    if tables > 1:
-        scored = scored.distinct()
-    cos_out = (F.round("cos_sim", round_cos) if round_cos is not None
-               else F.col("cos_sim")).alias("cos_sim")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", cos_out)
-    )
+    return _rerank(sign(corpus, 1), sign(queries, nprobe), k, "bucket",
+                   dedup=tables > 1, round_cos=round_cos).select(
+        "query_id", "neighbor_id", "rank", "cos_sim")
 
 
 # ---------------------------------------------------------------------------
@@ -297,6 +341,17 @@ def _centroids(dim: int, n_cells: int = IVF_CELLS) -> np.ndarray:
     return c / np.linalg.norm(c, axis=1, keepdims=True)
 
 
+def _unit_sample(corpus: DataFrame, dim: int, sample_size: int, vec_col: str) -> np.ndarray:
+    """The bounded, seeded driver sample (≤``sample_size`` unit rows) both
+    k-means fits train on — the bounded collect Spark MLlib's KMeans uses
+    for init, so fit cost is independent of corpus size (k-means|| on
+    executors is the variant without the collect)."""
+    frac = min(1.0, sample_size / max(corpus.count(), 1))
+    tbl = corpus.select(vec_col).sample(fraction=frac, seed=SEED).limit(sample_size).toArrow()
+    x = _matrix(tbl.column(0).combine_chunks(), dim, vec_col)
+    return x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+
+
 def fit_centroids(
     corpus: DataFrame,
     dim: int,
@@ -305,22 +360,12 @@ def fit_centroids(
     iters: int = KMEANS_ITERS,
     vec_col: str = "embedding",
 ) -> np.ndarray:
-    """Spherical k-means over a bounded, seeded corpus sample.
-
-    The sample (≤``sample_size`` vectors) is collected to the driver and fit
-    with numpy — the same bounded-collect shape Spark MLlib's KMeans uses
-    for init. At 100 TB the sample fraction is tiny and the fit cost is
-    O(sample × cells × iters) on the driver, independent of corpus size;
-    k-means|| on executors is the fully-distributed variant if even the
-    sample collect is unwanted. Deterministic given the corpus (seeded
-    sample + seeded init + stable iteration order)."""
-    n = corpus.count()
-    frac = min(1.0, sample_size / max(n, 1))
-    pdf = corpus.select(vec_col).sample(fraction=frac, seed=SEED).limit(sample_size).toPandas()
-    if len(pdf) < n_cells:
+    """Spherical k-means over a bounded, seeded corpus sample
+    (``_unit_sample``). Deterministic given the corpus (seeded sample +
+    seeded init + stable iteration order)."""
+    x = _unit_sample(corpus, dim, sample_size, vec_col)
+    if len(x) < n_cells:
         return _centroids(dim, n_cells)
-    x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-    x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
     rng = np.random.RandomState(SEED + 2)
     cents = x[rng.choice(len(x), n_cells, replace=False)]
     for _ in range(iters):
@@ -333,51 +378,38 @@ def fit_centroids(
     return cents
 
 
+def _cell_order(x: np.ndarray, cents: np.ndarray, width: int, exact_fold: bool):
+    """(vnorm, each row's ``width`` nearest cells by cosine, ties by cell
+    index) — the one cell ranking of ivf_assign and ivfpq_encode, on the
+    centroids AS GIVEN, so corpus cells and query probes share a geometry.
+    ``exact_fold`` (oracle-parity mode) computes dot/(|x|·|c|) with strict
+    index-order folds — what a SQL oracle states as
+    ``list_dot_product(e, ce) / (nrm * cnrm)`` — instead of the
+    pre-normalized matmul."""
+    vnorm = _norms(x, exact_fold)
+    if exact_fold:
+        sims = _fold_dot_np(x, cents.T) / (vnorm[:, None] * _fold_norm_np(cents)[None, :])
+    else:
+        sims = (x / np.maximum(vnorm[:, None], 1e-12)) @ cents.T
+    return vnorm, np.argsort(-sims, axis=1, kind="stable")[:, :width]
+
+
 def ivf_assign(
     df: DataFrame, dim: int, n_cells: int = IVF_CELLS, nprobe: int = 1,
     id_col: str = "vec_id", vec_col: str = "embedding",
     centroids: np.ndarray | None = None, exact_fold: bool = False,
 ) -> DataFrame:
     """Assign each vector to its ``nprobe`` nearest coarse centroids by
-    cosine — a PASS-THROUGH ``mapInPandas`` yielding (id, embedding, vnorm,
-    cell) from the same Arrow batch (no join-back shuffle). nprobe=1 builds
-    the inverted lists (corpus side); nprobe>1 yields the probe set per
-    query.
-
-    ``exact_fold`` (oracle-parity mode) computes the cosines as
-    dot/(|x|·|c|) with strict index-order folds on the RAW (possibly
-    unnormalized) centroids — the exact arithmetic a SQL oracle states as
-    ``list_dot_product(e, ce) / (nrm * cnrm)`` — instead of the default
-    pre-normalized matmul."""
+    cosine (``_cell_order``; at most every cell once) — a PASS-THROUGH
+    signer yielding (id, embedding, vnorm, cell) from the same Arrow batch
+    (no join-back shuffle). nprobe=1 builds the inverted lists (corpus
+    side); nprobe>1 yields the probe set per query."""
     cents = _centroids(dim, n_cells) if centroids is None else centroids
-    cnorm = _fold_norm_np(cents) if exact_fold else None
 
-    def assigner(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            if exact_fold:
-                vnorm = _fold_norm_np(x)
-                sims = _fold_dot_np(x, cents.T) / (vnorm[:, None] * cnorm[None, :])
-            else:
-                vnorm = np.sqrt((x * x).sum(axis=1))
-                xn = x / np.maximum(vnorm[:, None], 1e-12)
-                sims = xn @ cents.T
-            # top-nprobe cells, deterministic tie-break by cell index
-            order = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(pdf[id_col].to_numpy(), nprobe),
-                    vec_col: pdf[vec_col].loc[pdf.index.repeat(nprobe)].reset_index(drop=True),
-                    "vnorm": np.repeat(vnorm, nprobe),
-                    "cell": order.reshape(-1),
-                }
-            )
+    def kernel(x):
+        return (*_cell_order(x, cents, nprobe, exact_fold), None)
 
-    schema = f"{id_col} bigint, {vec_col} array<float>, vnorm double, cell bigint"
-    return df.select(id_col, vec_col).mapInPandas(assigner, schema=schema)
+    return _pass_through(df, dim, kernel, "cell", id_col, vec_col)
 
 
 def ivf_topk(
@@ -413,35 +445,17 @@ def ivf_topk(
 
     ``exact_fold``/``round_cos`` are the oracle-parity knobs (see
     ivf_assign / ann_topk)."""
-    c = ivf_assign(corpus, dim, n_cells, corpus_probe, id_col, vec_col, centroids,
-                   exact_fold=exact_fold).select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec"),
-        F.col("vnorm").alias("cnorm"), "cell",
-    )
-    q = ivf_assign(queries, dim, n_cells, nprobe, id_col, vec_col, centroids,
-                   exact_fold=exact_fold).select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"),
-        F.col("vnorm").alias("qnorm"), "cell",
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    scored = (
-        c.join(q, on="cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("cos_sim", _dot(F.col("qvec"), F.col("cvec")) / (F.col("qnorm") * F.col("cnorm")))
-        .select("query_id", "neighbor_id", "cos_sim")
-    )
-    if corpus_probe > 1:
-        # only multiple assignment can surface a pair twice (once per
-        # corpus cell that intersects the query's probe set); with
-        # single assignment the distinct would just add a shuffle
-        scored = scored.distinct()
-    cos_out = (F.round("cos_sim", round_cos) if round_cos is not None
-               else F.col("cos_sim")).alias("cos_sim")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", cos_out)
-    )
+
+    def assign(df, probe):
+        return ivf_assign(df, dim, n_cells, probe, id_col, vec_col, centroids,
+                          exact_fold=exact_fold)
+
+    # only multiple assignment can surface a pair twice (once per corpus
+    # cell that intersects the query's probe set); with single assignment
+    # the distinct would just add a shuffle
+    return _rerank(assign(corpus, corpus_probe), assign(queries, nprobe), k, "cell",
+                   dedup=corpus_probe > 1, round_cos=round_cos).select(
+        "query_id", "neighbor_id", "rank", "cos_sim")
 
 
 # ---------------------------------------------------------------------------
@@ -526,7 +540,7 @@ def embedding_near_dups_lsh(
     shuffles once keyed by bucket (×``tables``); never all-pairs."""
     # materialize the signatures ONCE: three consumers read this frame (the
     # bucket-size counts and both sides of the self-join), and without the
-    # checkpoint each re-runs the mapInPandas signer — parquet scan + Python
+    # checkpoint each re-runs the pass-through signer — parquet scan + Python
     # worker + matmul, the most expensive stage of the job, ×3 (round-3
     # ADVICE). localCheckpoint (not cache) for the same reason as
     # dedup.lsh_candidate_pairs: blocks are ContextCleaner-collected when
@@ -793,27 +807,18 @@ def fit_pq_codebooks(
     sample_size: int = KMEANS_SAMPLE,
     iters: int = KMEANS_ITERS,
     vec_col: str = "embedding",
-    normalize: bool = True,
 ) -> np.ndarray:
     """Per-subspace k-means codebooks, shape ``(m, k, dim // m)``.
 
-    Same bounded-driver-sample shape as :func:`fit_centroids` (seeded
-    sample + seeded init ⇒ deterministic given the corpus; cost is
-    O(sample × k × iters) per subspace, corpus-size-independent).
-    ``normalize=True`` fits on unit vectors so ADC L2 ranking matches
-    cosine ranking (‖a−b‖² = 2−2cos on unit vectors)."""
+    Same bounded driver sample as :func:`fit_centroids` (``_unit_sample``:
+    seeded sample + seeded init ⇒ deterministic given the corpus; cost is
+    O(sample × k × iters) per subspace, corpus-size-independent). Fit on
+    unit vectors so ADC L2 ranking matches cosine ranking
+    (‖a−b‖² = 2−2cos on unit vectors)."""
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m {m}")
     dsub = dim // m
-    n = corpus.count()
-    frac = min(1.0, sample_size / max(n, 1))
-    pdf = (
-        corpus.select(vec_col).sample(fraction=frac, seed=SEED)
-        .limit(sample_size).toPandas()
-    )
-    x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-    if normalize:
-        x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+    x = _unit_sample(corpus, dim, sample_size, vec_col)
     k_eff = min(k, len(x))
     books = np.zeros((m, k, dsub))
     rng = np.random.RandomState(SEED + 3)
@@ -830,43 +835,6 @@ def fit_pq_codebooks(
         if k_eff < k:  # duplicate-pad so code values stay < k
             books[j, k_eff:] = cents[0]
     return books
-
-
-def pq_encode(
-    df: DataFrame,
-    codebooks: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    normalize: bool = True,
-) -> DataFrame:
-    """Encode vectors to PQ codes: ``(id, codes array<smallint>)`` where
-    ``codes[j]`` is the nearest codebook entry of subspace ``j``.
-
-    One pass-through ``mapInPandas`` (Arrow-batched numpy argmin per
-    subspace, codebooks in the task closure — no join, no shuffle); the
-    payload REPLACEMENT is the point: downstream frames carry m small
-    ints instead of the float vector."""
-    m, k, dsub = codebooks.shape
-
-    def encoder(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            if normalize:
-                x = x / np.maximum(
-                    np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-            codes = np.empty((len(x), m), dtype=np.int16)
-            for j in range(m):
-                sub = x[:, j * dsub:(j + 1) * dsub]
-                codes[:, j] = _sub_argmin(sub, codebooks[j])
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), "codes": list(codes)}
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(
-        encoder, schema=f"{id_col} bigint, codes array<smallint>"
-    )
 
 
 PQ_MAX_QUERIES = 100_000
@@ -891,85 +859,6 @@ def _bounded_query_pdf(queries: DataFrame, id_expr, vec_expr,
     return pdf
 
 
-def pq_topk(
-    codes_df: DataFrame,
-    queries: DataFrame,
-    codebooks: np.ndarray,
-    k: int = 10,
-    id_col: str = "vec_id",
-    q_id_col: str = "vec_id",
-    q_vec_col: str = "embedding",
-    normalize: bool = True,
-) -> DataFrame:
-    """Asymmetric-distance top-k over PQ codes: for each query, the k
-    codes with the smallest ADC distance ``Σ_j LUT[j][code_j]`` where
-    ``LUT[j][c] = ‖q_sub_j − codebook[j][c]‖²``.
-
-    Scale shape: queries are bounded and travel in the task closure with
-    their per-query LUTs (``m × k`` doubles each — the whole point of
-    ADC: the scan does TABLE LOOKUPS, no float vector math per corpus
-    row); each Arrow batch emits only its per-query top-k candidates, so
-    the final exchange carries ``≤ k × queries × partitions`` narrow
-    rows into one global window. Output: (query_id, vec_id, rank,
-    adc_dist) — deterministic (distance, id) tie-break."""
-    from pyspark.sql import Window
-
-    m, kk, dsub = codebooks.shape
-    qpdf = _bounded_query_pdf(
-        queries, F.col(q_id_col).alias("qid"), F.col(q_vec_col).alias("qv")
-    )
-    if len(qpdf) == 0:
-        return codes_df.sparkSession.createDataFrame(
-            [], f"query_id bigint, {id_col} bigint, adc_dist double, rank int"
-        )
-    q = np.stack(qpdf["qv"].to_numpy()).astype(np.float64)
-    if normalize:
-        q = q / np.maximum(np.linalg.norm(q, axis=1, keepdims=True), 1e-12)
-    luts = np.empty((len(q), m, kk))
-    for j in range(m):
-        qs = q[:, j * dsub:(j + 1) * dsub]
-        luts[:, j, :] = (
-            (qs[:, None, :] - codebooks[j][None, :, :]) ** 2
-        ).sum(axis=2)
-    qids = qpdf["qid"].to_numpy()
-
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            dist = np.zeros((len(qids), len(codes)))
-            for j in range(m):
-                dist += luts[:, j, :][:, codes[:, j]]
-            ids = pdf[id_col].to_numpy()
-            take = min(k, len(codes))
-            out_q, out_i, out_d = [], [], []
-            for qi in range(len(qids)):
-                # batch-local prune under the SAME (dist, id) total order
-                # as the global window — a distance-only argpartition
-                # could drop the lower-ID member of a tied pair at the
-                # boundary, making results layout-dependent (review find;
-                # ties are guaranteed: identical PQ codes -> identical ADC)
-                sel = np.lexsort((ids, dist[qi]))[:take]
-                out_q.extend([qids[qi]] * len(sel))
-                out_i.extend(ids[sel])
-                out_d.extend(dist[qi, sel])
-            yield pd.DataFrame(
-                {"query_id": out_q, id_col: out_i, "adc_dist": out_d}
-            )
-
-    cand = codes_df.select(id_col, "codes").mapInPandas(
-        scan, schema=f"query_id bigint, {id_col} bigint, adc_dist double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc(id_col)
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
-
-
 # metadata key of the encoding-geometry stamp on ivfpq_encode's _pq_geom
 _PQ_GEOM_KEY = "pq_geometry"
 
@@ -990,59 +879,32 @@ def ivfpq_encode(
     normalize: bool = True,
     exact_fold: bool = False,
 ) -> DataFrame:
-    """IVF-PQ corpus representation in ONE pass-through ``mapInPandas``:
-    each vector's ``corpus_probe`` coarse cells AND its m-byte PQ code
-    from the same Arrow batch — ``(id, cell, codes)``, the float vector
-    never leaves the encoder. This is the frame a 100 TB deployment
-    writes bucketed by ``cell``: inverted lists of m-smallint codes.
+    """IVF-PQ corpus representation in ONE narrow pass-through signer:
+    each vector's ``corpus_probe`` coarse cells (``_cell_order``, as
+    ivf_assign ranks them for the query side) AND its m-byte PQ code —
+    ``(id, cell, codes)``; the float vector never leaves the encoder. This
+    is the frame a 100 TB deployment writes bucketed by ``cell``.
 
     ``normalize=False`` encodes RAW subvectors (L2-on-raw metric);
-    ``exact_fold`` is the oracle-parity knob: cell cosines as
-    dot/(|x|·|c|) strict index-order folds (the arithmetic the SQL
-    oracle states — see ``ivf_assign``) and PQ-code distances in the
+    ``exact_fold`` is the oracle-parity knob: cell cosines in strict
+    index-order folds (see ``_cell_order``) and PQ-code distances in the
     ``faa − 2·fab + fbb`` fold form of :func:`_fold_sub_dists`."""
     m, kk, dsub = codebooks.shape
     cents = _centroids(dim, n_cells) if centroids is None else centroids
-    cnorm = _fold_norm_np(cents) if exact_fold else None
-    # NO extra normalization of the CENTROIDS here: cells must rank
-    # exactly as ivf_assign ranks them for the query side (centroids AS
-    # GIVEN), or a non-unit custom centroid set would silently put corpus
-    # vectors and query probes in different geometries (review find);
-    # fit_centroids/_centroids both return unit-norm centroids.
 
-    def enc(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
+    def kernel(x):
+        vnorm, cells = _cell_order(x, cents, corpus_probe, exact_fold)
+        xe = (x / np.maximum(vnorm[:, None], 1e-12)) if normalize else x
+        codes = np.empty((len(x), m), dtype=np.int16)
+        for j in range(m):
+            sub = xe[:, j * dsub:(j + 1) * dsub]
             if exact_fold:
-                vnorm = _fold_norm_np(x)
-                sims = _fold_dot_np(x, cents.T) / (
-                    vnorm[:, None] * cnorm[None, :])
+                codes[:, j] = np.argmin(_fold_sub_dists(sub, codebooks[j]), axis=1)
             else:
-                vnorm = np.linalg.norm(x, axis=1)
-                sims = (x / np.maximum(vnorm[:, None], 1e-12)) @ cents.T
-            xe = (x / np.maximum(vnorm[:, None], 1e-12)) if normalize else x
-            order = np.argsort(-sims, axis=1, kind="stable")[:, :corpus_probe]
-            codes = np.empty((len(x), m), dtype=np.int16)
-            for j in range(m):
-                sub = xe[:, j * dsub:(j + 1) * dsub]
-                if exact_fold:
-                    codes[:, j] = np.argmin(
-                        _fold_sub_dists(sub, codebooks[j]), axis=1)
-                else:
-                    codes[:, j] = _sub_argmin(sub, codebooks[j])
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(pdf[id_col].to_numpy(), corpus_probe),
-                    "cell": order.reshape(-1),
-                    "codes": list(np.repeat(codes, corpus_probe, axis=0)),
-                }
-            )
+                codes[:, j] = _sub_argmin(sub, codebooks[j])
+        return vnorm, cells, codes
 
-    out = df.select(id_col, vec_col).mapInPandas(
-        enc, schema=f"{id_col} bigint, cell bigint, codes array<smallint>"
-    )
+    out = _pass_through(df, dim, kernel, "cell", id_col, vec_col, narrow=True)
     # stamp the encoding geometry so a persisted/reused frame can be
     # validated by ivfpq_topk (review find: a normalize=False encoding
     # queried with normalize=True LUTs would silently mix two geometries).
@@ -1071,16 +933,24 @@ def ivfpq_topk(
     exact_fold: bool = False,
 ) -> DataFrame:
     """The full IVF-PQ ANN query: probe ``nprobe`` coarse cells, ADC-scan
-    only those cells' m-byte codes. The two classic bounds compose —
-    IVF bounds the FRACTION of the corpus touched (nprobe / n_cells), PQ
-    bounds the BYTES per touched row (m smallints) — so the cell join
-    shuffles narrow code rows, never float vectors, and the scan does
-    lookup-table adds only. Self-matches excluded; deterministic
-    (distance, id) tie-break; multiple-assignment duplicates collapse to
-    the min distance. Pass ``encoded=ivfpq_encode(...)`` to reuse a
-    persisted (bucketed-by-cell) corpus encoding across query batches."""
-    from pyspark.sql import Window
+    only those cells' m-byte codes — for each query, the k codes with the
+    smallest asymmetric distance ``Σ_j LUT[j][code_j]`` where
+    ``LUT[j][c] = ‖q_sub_j − codebook[j][c]‖²``. The two classic bounds
+    compose — IVF bounds the FRACTION of the corpus touched (nprobe /
+    n_cells), PQ bounds the BYTES per touched row (m smallints) — so the
+    cell join shuffles narrow code rows, never float vectors, and the scan
+    does lookup-table adds only. ``n_cells=1`` is flat PQ: one cell, the
+    whole corpus scanned.
 
+    Scale shape: queries are bounded and travel in the task closure with
+    their per-query LUTs (``m × k`` doubles each); each Arrow batch emits
+    only its per-query top-k candidates, so the final exchange carries
+    ``≤ k × queries × partitions`` narrow rows into one global window.
+    Output: (query_id, ``id_col``, adc_dist, rank) — self-matches
+    excluded; deterministic (distance, id) tie-break; multiple-assignment
+    duplicates collapse to one row. Pass ``encoded=ivfpq_encode(...)`` to
+    reuse a persisted (bucketed-by-cell) corpus encoding across query
+    batches."""
     m, kk, dsub = codebooks.shape
     if encoded is None:  # built here: matches the query side by construction
         encoded = ivfpq_encode(
@@ -1119,20 +989,17 @@ def ivfpq_topk(
         )
     qv = np.stack(qpdf["qv"].to_numpy()).astype(np.float64)
     if normalize:
-        qn = (_fold_norm_np(qv) if exact_fold
-              else np.linalg.norm(qv, axis=1))
-        qv = qv / np.maximum(qn[:, None], 1e-12)
-    luts = {}
-    for qid, v in zip(qpdf["qid"], qv):
-        lut = np.empty((m, kk))
-        for j in range(m):
-            qs = v[j * dsub:(j + 1) * dsub]
-            if exact_fold:
-                lut[j] = _fold_sub_dists(qs[None, :], codebooks[j])[0]
-            else:
-                lut[j] = ((qs[None, :] - codebooks[j]) ** 2).sum(axis=1)
-        luts[int(qid)] = lut
+        qv = qv / np.maximum(_norms(qv, exact_fold)[:, None], 1e-12)
+    qsub = qv.reshape(len(qv), m, dsub)
+    luts = np.stack([  # (queries, m, kk)
+        _fold_sub_dists(qsub[:, j], codebooks[j]) if exact_fold
+        else ((qsub[:, j, None, :] - codebooks[j][None]) ** 2).sum(axis=2)
+        for j in range(m)
+    ], axis=1)
+    lut_row = {int(qid): i for i, qid in enumerate(qpdf["qid"])}
 
+    # self-matches go BEFORE the scan too: the batch-local prune below
+    # must not spend one of its k slots on the query itself
     joined = encoded.join(q_cells, "cell").where(
         F.col(id_col) != F.col("query_id")
     ).select("query_id", id_col, "codes")
@@ -1141,42 +1008,30 @@ def ivfpq_topk(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            out = []
-            for qid, grp in pdf.groupby("query_id"):
-                # multiple assignment surfaces a (query, neighbor) pair
-                # once per shared cell with the SAME distance — dedupe
-                # before the batch-local prune or duplicates occupy
-                # top-k slots and crowd out distinct candidates
-                grp = grp.drop_duplicates(subset=[id_col])
-                lut = luts[int(qid)]
-                codes = np.stack(grp["codes"].to_numpy()).astype(np.int64)
-                dist = np.zeros(len(codes))
-                for j in range(m):
-                    dist += lut[j][codes[:, j]]
-                take = min(k, len(codes))
-                ids = grp[id_col].to_numpy()
-                # (dist, id) total order — see pq_topk's prune comment
-                sel = np.lexsort((ids, dist))[:take]
-                out.append(pd.DataFrame({
-                    "query_id": qid,
-                    id_col: ids[sel],
-                    "adc_dist": dist[sel],
-                }))
-            yield pd.concat(out) if out else pd.DataFrame(
-                {"query_id": [], id_col: [], "adc_dist": []})
+            # multiple assignment surfaces a pair once per shared cell, at
+            # the same distance: dedupe first, or copies take top-k slots
+            pdf = pdf.drop_duplicates(subset=["query_id", id_col])
+            qids, ids = pdf["query_id"].to_numpy(), pdf[id_col].to_numpy()
+            rows = pdf["query_id"].map(lut_row).to_numpy()
+            codes = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
+            dist = np.zeros(len(codes))
+            for j in range(m):
+                dist += luts[rows, j, codes[:, j]]
+            # batch-local prune: each query's first k rows under the SAME
+            # (dist, id) total order as the global window — a distance-only
+            # argpartition could drop the lower-ID member of a tied pair at
+            # the boundary, making results layout-dependent (review find;
+            # ties are guaranteed: identical PQ codes -> identical ADC)
+            order = np.lexsort((ids, dist, qids))
+            qs = qids[order]
+            sel = order[np.arange(len(qs)) - np.searchsorted(qs, qs) < k]
+            yield pd.DataFrame(
+                {"query_id": qids[sel], id_col: ids[sel], "adc_dist": dist[sel]})
 
     cand = joined.mapInPandas(
         scan, schema=f"query_id bigint, {id_col} bigint, adc_dist double"
     )
-    # multiple assignment can surface a pair once per shared cell
-    best = cand.groupBy("query_id", id_col).agg(
-        F.min("adc_dist").alias("adc_dist"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_dist"), F.asc(id_col))
-    return (
-        best.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _top_k(cand, k, id_col, by=F.asc("adc_dist"), dedup=True)
 
 
 def ivfpq_rerank_topk(
@@ -1231,15 +1086,9 @@ def ivfpq_rerank_topk(
     scored = (
         cand.join(cvec, id_col)
         .join(F.broadcast(qvec), "query_id")
-        .withColumn(
-            "cos_sim",
-            _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn")),
+        .select(
+            "query_id", id_col,
+            (_dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))).alias("cos_sim"),
         )
-        .select("query_id", id_col, "cos_sim")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _top_k(scored, k, id_col)

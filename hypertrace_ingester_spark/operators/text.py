@@ -166,11 +166,6 @@ def _repetition_signals(df: DataFrame, text_col: str, w: Column) -> DataFrame:
     )
 
 
-def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Whitespace token count + BPE-ish estimate (ceil(chars/4)) per doc."""
-    return _over_words(docs, text_col, _token_counts)
-
-
 def language_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Stopword-vote language ID: score each language by stopword hits,
     predict the argmax (deterministic tiebreak: language name order),

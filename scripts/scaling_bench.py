@@ -234,12 +234,15 @@ def main() -> None:
         shrink = (
             ".withColumn('tokens', F.slice(F.col('tokens'), 1, 1))" if args.narrow else ""
         )
+        # the host's default master, not local[32]: 32 concurrent writers
+        # on a small heap make parquet shrink its row groups, so the input
+        # layout would depend on the heap it was generated with
         gen = (
             "import sys; sys.path.insert(0, {repo!r})\n"
             "from hypertrace_ingester_spark.session import get_spark\n"
             "from hypertrace_ingester_spark import datagen\n"
             "from pyspark.sql import functions as F\n"
-            "spark = get_spark(master='local[32]')\n"
+            "spark = get_spark()\n"
             "datagen.generate_sequences(spark, {rows}, partitions=128){shrink}"
             ".write.mode('overwrite').parquet({inp!r})\n"
         ).format(repo=REPO, rows=args.rows, inp=input_dir, shrink=shrink)

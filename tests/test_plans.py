@@ -44,7 +44,7 @@ def test_ann_lsh_no_joinback_no_forced_broadcast(spark):
     q = emb.filter(F.col("vec_id") < 20)
     plan = _executed(sim.ann_topk(emb, q, dim=64, k=5, bits=8))
     # corpus side: scan -> signer -> join with NO exchange in between
-    assert plan.count("MapInPandas") == 2  # corpus + query signers, no extras
+    assert plan.count("MapInArrow") == 2  # corpus + query signers, no extras
     # the only shuffle is the final per-query top-k window
     assert plan.count("Exchange hashpartitioning") == 1
 

@@ -56,7 +56,10 @@ def _py_topk(codes, ids, q, books, k):
     return [(int(ids[i]), float(dist[i])) for i in order[:k]]
 
 
-def test_pq_encode_and_topk_match_numpy_reference(spark):
+def test_ivfpq_one_cell_matches_numpy_reference(spark):
+    """Flat PQ is IVF-PQ with one cell: codes and the ADC top-k (at the
+    default nprobe, above the cell count) equal the numpy reference, which
+    excludes self-matches as ivfpq_topk does."""
     corpus = _corpus(spark)
     dim = _dim(spark)
     books = sim.fit_pq_codebooks(corpus, dim, m=8, k=16)
@@ -64,34 +67,41 @@ def test_pq_encode_and_topk_match_numpy_reference(spark):
     # deterministic fit
     again = sim.fit_pq_codebooks(corpus, dim, m=8, k=16)
     assert np.array_equal(books, again)
+    one = np.ones((1, dim))
 
     pdf = corpus.toPandas()
     x = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
     ids = pdf["vec_id"].to_numpy()
     want_codes = _py_encode(x, books)
 
-    got = sim.pq_encode(corpus, books).toPandas().set_index("vec_id")
+    got = (sim.ivfpq_encode(corpus, dim, books, n_cells=1, centroids=one)
+           .toPandas().set_index("vec_id"))
+    assert set(got["cell"]) == {0}
     for i, vid in enumerate(ids):
         assert list(got.loc[vid, "codes"]) == list(want_codes[i]), vid
 
     queries = corpus.where("vec_id % 37 = 0").limit(5)
     got_topk = (
-        sim.pq_topk(sim.pq_encode(corpus, books), queries, books, k=7)
+        sim.ivfpq_topk(corpus, queries, dim, books, k=7, n_cells=1,
+                       centroids=one)
         .orderBy("query_id", "rank").collect()
     )
     qpdf = queries.toPandas()
     for qid, qv in zip(qpdf["vec_id"], qpdf["embedding"]):
-        want = _py_topk(want_codes, ids, np.asarray(qv, float), books, 7)
+        others = ids != qid
+        want = _py_topk(want_codes[others], ids[others],
+                        np.asarray(qv, float), books, 7)
         have = [(r["vec_id"], r["adc_dist"]) for r in got_topk
                 if r["query_id"] == qid]
         assert [h[0] for h in have] == [w[0] for w in want], qid
         assert np.allclose([h[1] for h in have], [w[1] for w in want])
 
 
-def test_pq_reconstruction_exact_ranks_like_brute_force(spark):
+def test_ivfpq_one_cell_reconstruction_exact_finds_lossless_copy(spark):
     # corpus vectors assembled FROM codebook entries: encoding is lossless,
-    # so ADC distance equals the true distance and top-1 is the true
-    # nearest neighbor for every query
+    # so ADC distance equals the true distance. The queries are corpus rows
+    # under offset ids, so self-exclusion keeps their lossless copies, and
+    # top-1 is the lowest-id copy (rows i and i+8 are identical) at 0
     rng = np.random.RandomState(5)
     m, k, dsub = 4, 8, 3
     books = rng.randn(m, k, dsub)
@@ -101,37 +111,36 @@ def test_pq_reconstruction_exact_ranks_like_brute_force(spark):
         v = np.concatenate([books[j][picks[j]] for j in range(m)])
         rows.append((i, [float(t) for t in v]))
     corpus = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    queries = corpus.where("vec_id < 5").withColumn("vec_id", F.col("vec_id") + 1000)
     # normalize=False: vectors are raw codebook concatenations
-    codes = sim.pq_encode(corpus, books, normalize=False)
-    queries = corpus.where("vec_id < 5")
     got = (
-        sim.pq_topk(codes, queries, books, k=1, normalize=False)
+        sim.ivfpq_topk(corpus, queries, m * dsub, books, k=1, n_cells=1,
+                       centroids=np.ones((1, m * dsub)), normalize=False)
         .orderBy("query_id").collect()
     )
+    assert len(got) == 5
     for r in got:
-        assert r["vec_id"] == r["query_id"]       # self is its own NN
-        assert abs(r["adc_dist"]) < 1e-18         # lossless: distance 0
+        assert r["vec_id"] == r["query_id"] - 1000  # the lossless copy
+        assert abs(r["adc_dist"]) < 1e-18           # lossless: distance 0
 
 
-def test_pq_recall_beats_random_and_code_width(spark):
+def test_ivfpq_one_cell_recall_beats_random_and_code_width(spark):
     corpus = _corpus(spark)
     dim = _dim(spark)
     n = corpus.count()
     books = sim.fit_pq_codebooks(corpus, dim, m=8, k=16)
-    codes = sim.pq_encode(corpus, books)
+    one = np.ones((1, dim))
+    enc = sim.ivfpq_encode(corpus, dim, books, n_cells=1, centroids=one)
     # the code row is m smallint entries vs dim floats
-    row = codes.first()
-    assert len(row["codes"]) == 8
+    assert len(enc.first()["codes"]) == 8
 
     queries = corpus.where("vec_id % 29 = 0").limit(10)
     exact = {
         (r["query_id"], r["neighbor_id"])
         for r in sim.cosine_topk(corpus, queries, k=5).collect()
     }
-    approx = (
-        sim.pq_topk(codes, queries, books, k=6).collect()
-    )
-    # drop self-matches (cosine_topk excludes them; ADC rank-1 is self)
+    approx = sim.ivfpq_topk(corpus, queries, dim, books, k=5, n_cells=1,
+                            centroids=one, encoded=enc).collect()
     hits = sum(
         1 for r in approx
         if (r["query_id"], r["vec_id"]) in exact
@@ -142,6 +151,28 @@ def test_pq_recall_beats_random_and_code_width(spark):
     # measured 0.24 with m=8, k=16 — ~5× random at 32× compression)
     assert recall > 0.15, recall
     assert recall > 3 * (25 / n)
+
+
+def test_ivfpq_encoder_cells_equal_ivf_assign_cells(spark):
+    """The corpus cells of ivfpq_encode are exactly ivf_assign's for the
+    same NON-unit centroids, in both fold modes: a scan over encoded
+    corpus cells and a query probe set must share one geometry."""
+    corpus = _corpus(spark)
+    dim = _dim(spark)
+    books = sim.fit_pq_codebooks(corpus, dim, m=8, k=16)
+    # raw corpus rows at eight different scales: the default mode ranks
+    # cells by x̂·c, so a centroid normalization in one signer only would
+    # reorder cells here
+    cents = sim.vectors_by_id(corpus, 0, 8) * np.arange(1.0, 9.0)[:, None]
+    for fold in (False, True):
+        enc = {(r["vec_id"], r["cell"]) for r in sim.ivfpq_encode(
+            corpus, dim, books, n_cells=8, corpus_probe=2, centroids=cents,
+            exact_fold=fold).collect()}
+        ivf = {(r["vec_id"], r["cell"]) for r in sim.ivf_assign(
+            corpus, dim, n_cells=8, nprobe=2, centroids=cents,
+            exact_fold=fold).collect()}
+        assert len(enc) == 2 * corpus.count()
+        assert enc == ivf, fold
 
 
 def _py_ivfpq(x, ids, centroids, books, qid, qv, nprobe, corpus_probe, k):

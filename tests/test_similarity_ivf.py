@@ -212,3 +212,48 @@ def test_vectors_by_id_contiguity_guard(spark):
     assert m.shape == (2, 4) and m[1, 0] == 1.0
     with pytest.raises(ValueError, match="contiguous"):
         sim.vectors_by_id(df, 0, 4, vec_col="embedding")
+
+
+def test_one_cell_at_default_nprobe_is_brute_force(spark):
+    """A probe count above the cell count probes every cell once: with
+    n_cells=1 at the default nprobe, ivf_assign emits one row per vector
+    and ivf_topk ranks exactly like the brute-force baseline."""
+    emb = load_table(spark, SF_DIR, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 20)
+    assert sim.IVF_NPROBE > 1
+    assert sim.ivf_assign(emb, 64, n_cells=1, nprobe=sim.IVF_NPROBE).count() == emb.count()
+    got = {
+        (r["query_id"], r["neighbor_id"], r["rank"])
+        for r in sim.ivf_topk(emb, queries, dim=64, k=5, n_cells=1).collect()
+    }
+    want = {
+        (r["query_id"], r["neighbor_id"], r["rank"])
+        for r in sim.cosine_topk(emb, queries, k=5).collect()
+    }
+    assert got == want
+
+
+def test_vector_matrix_rejects_null_and_ragged_rows():
+    """The signers read a batch's vectors with one flatten + reshape; a
+    null or wrong-length row raises the named error instead of shifting
+    every later row (the last case flattens to a valid-looking 2x2)."""
+    import pyarrow as pa
+    import pytest
+
+    f32 = pa.list_(pa.float32())
+    ok = sim._matrix(pa.array([[1.0, 2.0], [3.0, 4.0]], f32), 2, "embedding")
+    assert ok.dtype == "float64" and ok.tolist() == [[1.0, 2.0], [3.0, 4.0]]
+    for bad in ([[1.0, 2.0], [3.0]], [[1.0, 2.0], None], [[1.0], [2.0, 3.0, 4.0]]):
+        with pytest.raises(sim.RaggedVectorError, match="row 1|row 0"):
+            sim._matrix(pa.array(bad, f32), 2, "embedding")
+
+
+def test_signer_raises_named_error_on_ragged_row(spark):
+    import pytest
+
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [1.0]), (2, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(Exception, match="RaggedVectorError"):
+        sim.ivf_assign(df, 2, n_cells=2).collect()
