@@ -19,9 +19,8 @@ import weakref
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
-from .operators.enrich import EnrichContext
+from .operators.enrich import EnrichContext, local_dim
 from .schemas import (
     ENDPOINTS_SCHEMA,
     ROUTE_RULES_SCHEMA,
@@ -120,21 +119,6 @@ def generate_sequences(spark: SparkSession, n_rows: int, partitions: int | None 
     return df.select("doc_id", "tokens", "n_tok", "source", "source_line")
 
 
-def _local_dim(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
-    """A small dim table built in the JVM: the rows go over as one pyarrow
-    Table and plan as ``LocalTableScan`` (exact size stats, no Python worker,
-    broadcast without a shuffle). ``createDataFrame(<python list>)`` instead
-    plans a Python-RDD scan that every job touching the dim re-runs through
-    Python workers, and its unknown size turns the composite-dim join into a
-    shuffled sort-merge join."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows],
-                                 schema=to_arrow_schema(schema))
-    return spark.createDataFrame(table, schema=schema)
-
-
 def endpoints_dim(spark: SparkSession) -> DataFrame:
     """F3.1 endpoints dim — EndpointEnricher analog (enrichers/endpoint/EndpointEnricher.java:55-130)."""
     rows = [
@@ -142,20 +126,20 @@ def endpoints_dim(spark: SparkSession) -> DataFrame:
         for t in range(N_TENANTS)
         for i, op in enumerate([f"op-{j}" for j in range(N_OPS)] + ["healthcheck"])
     ]
-    return _local_dim(spark, rows, ENDPOINTS_SCHEMA)
+    return local_dim(spark, rows, ENDPOINTS_SCHEMA)
 
 
 def services_dim(spark: SparkSession) -> DataFrame:
     """F3.2 services dim — DefaultServiceEntityEnricher analog."""
     rows = [(f"tenant-{t}", f"svc-{t}", f"service-{t:04d}") for t in range(N_TENANTS)]
-    return _local_dim(spark, rows, SERVICES_SCHEMA)
+    return local_dim(spark, rows, SERVICES_SCHEMA)
 
 
 def route_rules_dim(spark: SparkSession) -> DataFrame:
     """F3.3 route rules: 8 sources → 3 sinks — per-view topic analog
     (hypertrace-view-generator/.../view-gen-*/application.conf)."""
     rows = [(f"src-{i}", f"sink-{i % 3}") for i in range(N_SOURCES)]
-    return _local_dim(spark, rows, ROUTE_RULES_SCHEMA)
+    return local_dim(spark, rows, ROUTE_RULES_SCHEMA)
 
 
 def status_codes_dim(spark: SparkSession) -> DataFrame:
@@ -167,7 +151,7 @@ def status_codes_dim(spark: SparkSession) -> DataFrame:
         ("500", "FAIL", "Internal Server Error"),
         ("503", "FAIL", "Service Unavailable"),
     ]
-    return _local_dim(spark, rows, STATUS_CODES_SCHEMA)
+    return local_dim(spark, rows, STATUS_CODES_SCHEMA)
 
 
 # one default (context, route rules) per session; see default_dims

@@ -10,10 +10,26 @@ partial/final pattern Kafka Streams implements by hand.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 METRIC_WINDOW_MS = 5_000  # metric.aggregation.timeMs analog (metrics-gen conf:14)
+
+# one definition of the sink_metrics key and values, shared by the Spark
+# aggregate and the driver partial so the two cannot drift
+METRIC_KEYS = ("sink", "tenant_id", "bucket_start_ms", "status_state")
+METRIC_COUNT = "num_rows"
+METRIC_SUMS = (("sum_tokens", "n_tok"), ("error_rows", "error_count"))  # (output, input)
+METRICS_SCHEMA = pa.schema(
+    [(k, pa.int64() if k == "bucket_start_ms" else pa.string()) for k in METRIC_KEYS]
+    + [(name, pa.int64()) for name in (METRIC_COUNT, *(n for n, _ in METRIC_SUMS))]
+)
+# the routed columns the metrics read (never ``tokens``)
+METRIC_INPUTS = tuple("ts_ms" if k == "bucket_start_ms" else k for k in METRIC_KEYS) + tuple(
+    c for _, c in METRIC_SUMS)
 
 HIST_BUCKETS = ["1-16", "17-64", "65-256", "257-1024", "1025-4096"]
 
@@ -24,15 +40,38 @@ def sink_metrics(routed: DataFrame, window_ms: int = METRIC_WINDOW_MS) -> DataFr
     MetricsProcessor.java:129-136 builds the key as uuid5(name + sorted attr
     tuple); grouping columns ARE that key here — no hashing needed, the shuffle
     hash-partitions on the same tuple."""
-    bucket = (F.col("ts_ms") - F.pmod(F.col("ts_ms"), F.lit(window_ms))).alias("bucket_start_ms")
-    return (
-        routed.groupBy(F.col("sink"), F.col("tenant_id"), bucket, F.col("status_state"))
-        .agg(
-            F.count(F.lit(1)).alias("num_rows"),
-            F.sum("n_tok").cast("long").alias("sum_tokens"),
-            F.sum("error_count").cast("long").alias("error_rows"),
-        )
+    bucket = F.col("ts_ms") - F.pmod(F.col("ts_ms"), F.lit(window_ms))
+    keys = [bucket.alias(k) if k == "bucket_start_ms" else F.col(k) for k in METRIC_KEYS]
+    return routed.groupBy(*keys).agg(
+        F.count(F.lit(1)).alias(METRIC_COUNT),
+        *[F.sum(src).cast("long").alias(name) for name, src in METRIC_SUMS],
     )
+
+
+def sink_metrics_local(paths: list[str], window_ms: int = METRIC_WINDOW_MS) -> pa.Table:
+    """:func:`sink_metrics` over the routed parquet files at ``paths``,
+    computed on the driver with pyarrow: no Spark job. The same groups and
+    values (a null key is its own group, a null ``ts_ms`` a null bucket, an
+    all-null sum null) in :data:`METRICS_SCHEMA`. Reads only
+    :data:`METRIC_INPUTS` and holds them in driver memory, so callers bound
+    the rows they pass (``plans.streaming_pipeline.LOCAL_METRICS_MAX_ROWS``)."""
+    if window_ms == 0:
+        raise ValueError("sink_metrics_local: window_ms must be non-zero")
+    t = pa.concat_tables([pq.read_table(p, columns=list(METRIC_INPUTS)) for p in paths])
+    # Spark's ts - pmod(ts, w): numpy's integer mod takes the divisor's sign,
+    # as pmod does, so a negative ts floors into the bucket below it
+    ts = t.column("ts_ms").cast(pa.int64())
+    vals = ts.fill_null(0).to_numpy()
+    bucket = pa.array(vals - np.mod(vals, window_ms), mask=ts.is_null().to_numpy())
+    t = t.append_column("bucket_start_ms", bucket)
+    # single-threaded: with use_threads=True (pyarrow 16) this group_by left
+    # pool work behind that aborted the interpreter at exit ("terminate
+    # called without an active exception") in most runs over 200k rows
+    out = t.group_by(list(METRIC_KEYS), use_threads=False).aggregate(
+        [([], "count_all")] + [(src, "sum") for _, src in METRIC_SUMS])
+    names = {"count_all": METRIC_COUNT} | {f"{src}_sum": name for name, src in METRIC_SUMS}
+    out = out.rename_columns([names.get(c, c) for c in out.column_names])
+    return out.select(METRICS_SCHEMA.names).cast(METRICS_SCHEMA)
 
 
 def token_histogram(routed: DataFrame) -> DataFrame:

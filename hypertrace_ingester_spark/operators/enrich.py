@@ -21,8 +21,9 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # Driver-side cap on the composite dim (tenants x operations x status
 # codes). It is collected once per context and broadcast to every task, so
@@ -257,6 +258,21 @@ def composite_dim(ctx: EnrichContext) -> DataFrame | None:
         F.col("message").alias("status_message"),
     )
     return eps.join(svc, on="tenant_id", how="outer").crossJoin(sc)
+
+
+def local_dim(spark: SparkSession, rows: list[tuple], schema: StructType) -> DataFrame:
+    """A small dim table built in the JVM: the rows go over as one pyarrow
+    Table and plan as ``LocalTableScan`` (exact size stats, no Python worker,
+    broadcast without a shuffle). ``createDataFrame(<python list>)`` instead
+    plans a Python-RDD scan (``LogicalRDD``) that every job touching the dim
+    re-runs through Python workers, and its unknown size turns a join with
+    it into a shuffled sort-merge join."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows],
+                                 schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema=schema)
 
 
 def collect_local(dim: DataFrame, max_rows: int, name: str, hint: str) -> DataFrame:

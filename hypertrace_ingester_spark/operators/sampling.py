@@ -179,7 +179,10 @@ def pack_offsets(
 
     Returns ``docs`` + ``tok_offset``, ``first_block``, ``last_block``,
     ``n_blocks`` (all long)."""
+    from pyspark.sql import types as T
     from pyspark.sql.window import Window
+
+    from .enrich import local_dim
 
     live = docs.where(F.col(tokens_col) > 0)
     max_id = live.agg(F.max(order_col).alias("m")).first()["m"]
@@ -205,7 +208,8 @@ def pack_offsets(
     for b in sorted(totals):
         bases.append((b, running))
         running += totals[b]
-    base_df = docs.sparkSession.createDataFrame(bases, "_pk_bucket long, _pk_base long")
+    base_df = local_dim(docs.sparkSession, bases, T.StructType(
+        [T.StructField("_pk_bucket", T.LongType()), T.StructField("_pk_base", T.LongType())]))
     w = (
         Window.partitionBy("_pk_bucket")
         .orderBy(order_col)

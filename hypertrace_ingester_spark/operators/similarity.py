@@ -615,7 +615,10 @@ def semdedup(
     partial-agg'd min(struct) per duplicate group. The centroid dim is
     ``n_cells`` rows, broadcast.
     """
+    from pyspark.sql import types as T
+
     from .dedup import duplicate_clusters
+    from .enrich import local_dim
 
     if dim is None:
         dim = len(vectors.select(vec_col).first()[0])
@@ -628,10 +631,11 @@ def semdedup(
         vectors, dim, n_cells, nprobe=1, id_col=id_col, vec_col=vec_col,
         centroids=cents,
     )
-    spark = vectors.sparkSession
-    cdim = spark.createDataFrame(
+    cdim = local_dim(
+        vectors.sparkSession,
         [(int(i), [float(x) for x in c]) for i, c in enumerate(cents)],
-        "cell bigint, _cvec array<double>",
+        T.StructType([T.StructField("cell", T.LongType()),
+                      T.StructField("_cvec", T.ArrayType(T.DoubleType()))]),
     )
     scored = (
         assigned.join(F.broadcast(cdim), "cell")

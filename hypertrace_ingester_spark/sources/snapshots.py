@@ -72,10 +72,13 @@ class Snapshot:
     schema_json: str | None = None
     batch_seq: int = -1
     file_stats: dict = None  # {rel_path: {col: [min, max]}}
-    # data files THIS commit staged (relative paths) — set on the Snapshot
-    # a write returns, so a caller can read back exactly what it landed;
-    # not persisted (a manifest loaded later leaves it empty)
+    file_rows: dict = None  # {rel_path: row count}
+    # data files THIS commit staged (relative paths) and their total rows —
+    # set on the Snapshot a write returns, so a caller can read back exactly
+    # what it landed; not persisted (a manifest loaded later leaves them
+    # empty)
     added_files: tuple = ()
+    added_rows: int = 0
 
 
 def _snap_dir(path: str) -> str:
@@ -124,6 +127,7 @@ def _load_manifest(path: str, version: int) -> Snapshot:
         batch_id=bid, schema_json=d.get("schema"),
         batch_seq=d.get("batch_seq", bid if bid is not None else -1),
         file_stats=d.get("file_stats") or {},
+        file_rows=d.get("file_rows") or {},
     )
 
 
@@ -154,8 +158,8 @@ def _commit_manifest(path: str, new_version: int, manifest: dict,
     link leaves nothing committed, only orphaned data files for the
     expiry sweep). The temp is removed on EVERY exit, including a
     serialization failure mid-dump (review find: a raise inside the
-    write block leaked it). The returned Snapshot reports ``added_files``,
-    the files this commit staged."""
+    write block leaked it). The returned Snapshot reports ``added_files``
+    and ``added_rows``, the files this commit staged and their rows."""
     tmp = os.path.join(_snap_dir(path), f".tmp-{uuid.uuid4().hex}")
     try:
         with open(tmp, "w") as fh:
@@ -174,8 +178,9 @@ def _commit_manifest(path: str, new_version: int, manifest: dict,
             os.unlink(tmp)
         except FileNotFoundError:
             pass
-    return replace(_load_manifest(path, new_version),
-                   added_files=tuple(added_files))
+    snap = _load_manifest(path, new_version)
+    return replace(snap, added_files=tuple(added_files),
+                   added_rows=sum(snap.file_rows[f] for f in added_files))
 
 
 def _stats_encode(v):
@@ -231,7 +236,7 @@ def _top_level_column_index(md) -> dict:
 def _stage_files(df: DataFrame, path: str, new_version: int,
                  stats_cols: tuple = ()):
     """Write ``df``'s parquet files under data/ with a commit-local prefix;
-    returns (relative paths, total rows, per-file column stats). A
+    returns (relative paths, per-file row counts, per-file column stats). A
     failed/conflicted commit leaves only unreferenced data files, which
     :func:`expire_snapshots`' orphan sweep garbage-collects.
 
@@ -239,7 +244,9 @@ def _stage_files(df: DataFrame, path: str, new_version: int,
     columns INTO THE MANIFEST (Iceberg's manifest-level file statistics)
     — :func:`scan_snapshot` then prunes files at plan time from one JSON
     read, no footer access. The footers are already open here for the
-    row counts, so the stats are free at commit time. Note: timestamp
+    row counts, so the stats are free at commit time; the row counts go
+    into the manifest too (``file_rows``), so :func:`merge_upsert` can
+    prune and count carried files without opening them. Note: timestamp
     columns only carry footer stats under the modern physical type (set
     ``spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS``; Spark's
     legacy INT96 default writes no min/max, so those columns are simply
@@ -251,14 +258,14 @@ def _stage_files(df: DataFrame, path: str, new_version: int,
     stage = os.path.join(path, f"_stage-{uuid.uuid4().hex}")
     df.write.mode("overwrite").parquet(stage)
     prefix = f"c{new_version:06d}-{uuid.uuid4().hex[:8]}"
-    new_files, rows, file_stats = [], 0, {}
+    new_files, file_rows, file_stats = [], {}, {}
     for i, name in enumerate(sorted(os.listdir(stage))):
         if not name.endswith(".parquet"):
             continue
         rel = os.path.join("data", f"{prefix}-{i:05d}.parquet")
         os.rename(os.path.join(stage, name), os.path.join(path, rel))
         md = pq.ParquetFile(os.path.join(path, rel)).metadata
-        rows += md.num_rows
+        file_rows[rel] = md.num_rows
         new_files.append(rel)
         if stats_cols:
             idx = _top_level_column_index(md)
@@ -272,7 +279,7 @@ def _stage_files(df: DataFrame, path: str, new_version: int,
             if st:
                 file_stats[rel] = st
     shutil.rmtree(stage, ignore_errors=True)
-    return new_files, rows, file_stats
+    return new_files, file_rows, file_stats
 
 
 def commit(
@@ -300,7 +307,8 @@ def commit(
     manifest already exists (a racing writer won).
 
     The returned Snapshot's ``added_files`` lists the data files this
-    commit staged (for ``overwrite`` that is the whole new file list).
+    commit staged (for ``overwrite`` that is the whole new file list) and
+    ``added_rows`` their row count.
     """
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
@@ -337,26 +345,29 @@ def commit(
             c for c in _stats_cols_of(prev) if c in df.columns)
 
     new_version = (cur or 0) + 1
-    new_files, rows, new_stats = _stage_files(
+    new_files, new_rows, new_stats = _stage_files(
         df, path, new_version, stats_cols=eff_stats_cols)
 
-    base = prev.files if mode == "append" and prev is not None else []
-    base_rows = prev.rows if mode == "append" and prev is not None else 0
-    base_stats = dict(prev.file_stats or {}) \
-        if mode == "append" and prev is not None else {}
+    inherit = mode == "append" and prev is not None
+    base = prev.files if inherit else []
+    base_rows = prev.rows if inherit else 0
+    base_stats = dict(prev.file_stats) if inherit else {}
     base_stats.update(new_stats)
+    base_file_rows = dict(prev.file_rows) if inherit else {}
+    base_file_rows.update(new_rows)
     prev_seq = prev.batch_seq if prev is not None else -1
     manifest = {
         "version": new_version,
         "ts": time.time(),
         "operation": mode,
         "files": base + new_files,
-        "rows": base_rows + rows,
+        "rows": base_rows + sum(new_rows.values()),
         "parent": cur,
         "batch_id": batch_id,
         "batch_seq": max(prev_seq, batch_id if batch_id is not None else -1),
         "schema": df.schema.json(),
         "file_stats": base_stats,
+        "file_rows": base_file_rows,
     }
     return _commit_manifest(path, new_version, manifest, new_files)
 
@@ -375,7 +386,8 @@ def commit_stream_batch(
     restart; with a plain parquet append that double-appends
     (at-least-once) — with this gate the routed sink is exactly-once.
     A landed batch returns :func:`commit`'s Snapshot, whose
-    ``added_files`` are exactly this batch's rows.
+    ``added_files`` hold exactly this batch's rows (``added_rows`` of
+    them).
 
     The gate reads ONE manifest (the current one) — O(1) per batch — and
     because every commit, including maintenance commits (merge/rollback/
@@ -517,9 +529,13 @@ def merge_upsert(
     rewritten (the tests assert byte-identity; time travel still sees the
     pre-merge rows through the old manifest).
 
-    File pruning shares ``compaction.footer_range`` with ``delete_ids``
-    (one copy of the row-group statistics subtleties): only files whose
-    footer [min, max] for ``key_col`` intersects an update key are
+    File pruning reads each file's [min, max] for ``key_col`` and its row
+    count from the manifest (``file_stats`` / ``file_rows``, recorded at
+    commit time) and opens a footer only for a file the manifest lacks
+    them for (one written under an older manifest, or a column without
+    usable stats); the footer path shares ``compaction.footer_range`` with
+    ``delete_ids`` (one copy of the row-group statistics subtleties). Only
+    files whose [min, max] for ``key_col`` intersects an update key are
     re-read, anti-joined against the (broadcast) update keys — a JOIN,
     not a million-literal ``isin`` expression — and rewritten together
     with the updates as new data files. NULL-keyed table rows always
@@ -567,24 +583,29 @@ def merge_upsert(
             "distinct keys) — batch the merge")
     keys = sorted(r[key_col] for r in key_rows)
 
+    def range_and_rows(rel):
+        st = snap.file_stats.get(rel, {}).get(key_col)
+        n = snap.file_rows.get(rel)
+        if st is not None and n is not None:
+            return (_stats_decode(st[0]), _stats_decode(st[1])), n
+        md = pq.ParquetFile(os.path.join(path, rel)).metadata
+        idx = _top_level_column_index(md)
+        return (footer_range(md, idx[key_col]) if key_col in idx else None,
+                md.num_rows)
+
     untouched, touched, untouched_rows = [], [], 0
     for rel in snap.files:
-        fpath = os.path.join(path, rel)
-        md = pq.ParquetFile(fpath).metadata
-        idx = _top_level_column_index(md)
-        rng = footer_range(md, idx[key_col]) if key_col in idx else None
+        rng, n = range_and_rows(rel)
         if rng is not None:
-            lo, hi = rng
-            left = bisect.bisect_left(keys, lo)
-            if left >= len(keys) or keys[left] > hi:
-                untouched.append(rel)
-                untouched_rows += md.num_rows
+            left = bisect.bisect_left(keys, rng[0])
+            if left < len(keys) and keys[left] <= rng[1]:
+                touched.append(rel)
                 continue
-        elif not keys:
-            untouched.append(rel)
-            untouched_rows += md.num_rows
+        elif keys:
+            touched.append(rel)
             continue
-        touched.append(rel)
+        untouched.append(rel)
+        untouched_rows += n
 
     new_version = cur + 1
     if touched:
@@ -601,15 +622,17 @@ def merge_upsert(
     new_files, new_rows, new_stats = _stage_files(
         to_write, path, new_version, stats_cols=_stats_cols_of(snap))
     untouched_set = set(untouched)
-    stats = {f: st for f, st in (snap.file_stats or {}).items()
-             if f in untouched_set}
+    stats = {f: st for f, st in snap.file_stats.items() if f in untouched_set}
     stats.update(new_stats)
+    file_rows = {f: n for f, n in snap.file_rows.items() if f in untouched_set}
+    file_rows.update(new_rows)
     manifest = {
         "version": new_version, "ts": time.time(), "operation": "merge",
         "files": untouched + new_files,
-        "rows": untouched_rows + new_rows,
+        "rows": untouched_rows + sum(new_rows.values()),
         "parent": cur, "schema": updates.schema.json(),
         "batch_seq": snap.batch_seq, "file_stats": stats,
+        "file_rows": file_rows,
     }
     return _commit_manifest(path, new_version, manifest, new_files)
 
@@ -639,14 +662,14 @@ def compact(
         return None                  # already at/under target geometry
     df = spark.read.parquet(*[os.path.join(path, f) for f in snap.files])
     new_version = cur + 1
-    new_files, rows, new_stats = _stage_files(
+    new_files, new_rows, new_stats = _stage_files(
         df.coalesce(int(n)), path, new_version,
         stats_cols=_stats_cols_of(snap))
     manifest = {
         "version": new_version, "ts": time.time(), "operation": "compact",
-        "files": new_files, "rows": rows, "parent": cur,
+        "files": new_files, "rows": sum(new_rows.values()), "parent": cur,
         "schema": snap.schema_json, "batch_seq": snap.batch_seq,
-        "file_stats": new_stats,
+        "file_stats": new_stats, "file_rows": new_rows,
     }
     return _commit_manifest(path, new_version, manifest, new_files)
 
@@ -666,10 +689,12 @@ def rollback(path: str, version: int) -> Snapshot:
         "operation": f"rollback-to-v{version}",
         "files": old.files, "rows": old.rows, "parent": cur,
         "schema": old.schema_json, "batch_seq": cur_seq,
-        # the file list is exactly old.files, so old's stats are exactly
-        # valid — dropping them would silently kill pruning AND the
-        # append-inheritance chain for the whole table (review find)
-        "file_stats": old.file_stats or {},
+        # the file list is exactly old.files, so old's stats and row
+        # counts are exactly valid — dropping them would silently kill
+        # pruning AND the append-inheritance chain for the whole table
+        # (review find)
+        "file_stats": old.file_stats,
+        "file_rows": old.file_rows,
     }
     return _commit_manifest(path, new_version, manifest)
 

@@ -95,3 +95,13 @@ def test_pack_offsets_empty_and_zero_token_docs(spark):
     assert out[2]["first_block"] == 1 and out[2]["last_block"] == 1
     empty = sampling.pack_offsets(df.where("n_tokens < 0"))
     assert empty.count() == 0
+
+
+def test_bucket_bases_dim_is_jvm_local(spark):
+    """The per-bucket token bases join in as a LocalRelation, not a
+    LogicalRDD (a Python-RDD scan every job re-runs in Python workers)."""
+    out = sampling.pack_offsets(_docs_with_tokens(spark), block_tokens=BLOCK, buckets=7)
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    lines = [ln for ln in plan.splitlines() if "_pk_base" in ln]
+    assert any("LocalRelation" in ln for ln in lines), plan
+    assert "LogicalRDD" not in plan, plan

@@ -63,3 +63,24 @@ def test_planted_scaled_copies_removed(spark):
         threshold=0.95,
     )
     assert again.count() == 0
+
+
+def _plan_lines_with(df, col):
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return [ln for ln in plan.splitlines() if col in ln]
+
+
+def test_centroid_dim_is_jvm_local(spark):
+    """The centroid dim plans as a LocalRelation, not a LogicalRDD: a
+    Python-list dim is a Python-RDD scan every job re-runs in Python
+    workers."""
+    cents = np.array([[1.0, 0.0], [0.0, 1.0]])
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.1]), (2, [1.0, 0.2]), (3, [0.05, 1.0])],
+        "vec_id bigint, embedding array<float>",
+    )
+    out = sim.semdedup(vecs, dim=2, n_cells=2, threshold=0.95, centroids=cents)
+    lines = _plan_lines_with(out, "_cvec")
+    assert any("LocalRelation" in ln for ln in lines), lines
+    assert not any("LogicalRDD" in ln for ln in lines), lines
+    assert {r["vec_id"] for r in out.collect()} == {2, 3}

@@ -328,6 +328,68 @@ def test_merge_upsert_key_not_shadowed_by_struct_leaf(spark, tmp_path):
     assert {r["id"]: r["v"] for r in got}[10] == -1
 
 
+def test_merge_upsert_prunes_from_manifest(spark, tmp_path, monkeypatch):
+    """On a table whose manifest stats cover the key, merge_upsert prunes
+    and counts carried files from the manifest's ``file_stats`` and
+    ``file_rows``: it opens no footer of an existing file. The same merge
+    on a copy whose manifest lacks ``file_rows`` (as older commits wrote
+    it) opens every footer and gives the same result. Compaction and
+    rollback carry ``file_rows``."""
+    import pyarrow.parquet as pq
+
+    tables = {}
+    for name in ("manifest", "footer"):
+        t = str(tmp_path / name)
+        sn.commit(_df(spark, 0, 20).repartition(1), t, stats_cols=("id",))
+        for b in range(1, 6):                        # appends inherit stats
+            sn.commit(_df(spark, b * 100, b * 100 + 20).repartition(1), t)
+        tables[name] = t
+    snap = sn.snapshots(tables["manifest"])[-1]
+    assert len(snap.files) == 6 and set(snap.file_rows) == set(snap.files)
+    assert sum(snap.file_rows.values()) == snap.rows == 120
+    footer = tables["footer"]
+    mpath = os.path.join(footer, "_snapshots",
+                         f"v{sn.current_version(footer):06d}.json")
+    with open(mpath) as fh:
+        manifest = json.load(fh)
+    del manifest["file_rows"]
+    with open(mpath, "w") as fh:
+        json.dump(manifest, fh)
+
+    opened = []
+    parquet_file = pq.ParquetFile
+
+    def counting(source, *args, **kwargs):
+        opened.append(os.path.abspath(source))
+        return parquet_file(source, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    updates = spark.createDataFrame(
+        [(105, -1), (301, -2), (9999, -3)], "id long, v long")
+    res = {}
+    for name, t in tables.items():
+        existing = {os.path.abspath(os.path.join(t, f))
+                    for f in sn.snapshots(t)[-1].files}
+        opened.clear()
+        s = sn.merge_upsert(spark, updates, t, "id")
+        res[name] = (s, sorted(tuple(r) for r in sn.read_snapshot(spark, t).collect()),
+                     len(existing & set(opened)))
+    (s, rows, n_open), (fs, frows, f_open) = res["manifest"], res["footer"]
+    assert (n_open, f_open) == (0, 6)
+    assert rows == frows and len(rows) == s.rows == fs.rows == 121
+    assert s.added_rows == fs.added_rows == 41
+    assert len(set(s.files) & set(snap.files)) == 4    # carried by reference
+    assert set(s.file_rows) == set(s.files)
+    assert sum(s.file_rows.values()) == s.rows
+
+    t = tables["manifest"]
+    c = sn.compact(spark, t, target_file_mb=1)
+    assert c is not None and set(c.file_rows) == set(c.files)
+    assert sum(c.file_rows.values()) == c.rows == c.added_rows == 121
+    r = sn.rollback(t, s.version)
+    assert r.file_rows == s.file_rows and r.added_rows == 0
+
+
 def test_merge_rejects_duplicate_update_keys(spark, tmp_path):
     t = str(tmp_path / "tbl")
     sn.commit(_df(spark, 0, 3), t)

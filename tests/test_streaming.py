@@ -316,8 +316,11 @@ def test_snapshot_batch_metrics_rewritten_on_replay(spark, tmp_path):
 def test_snapshot_batches_reuse_built_chain(spark, tmp_path, monkeypatch):
     """Micro-batches sharing a context and rules frame build the chain
     once: two snapshot-path batches collect the composite dim once, and
-    a batch runs at most 6 Spark jobs (it was 8 while every batch rebuilt
-    the chain and its dim)."""
+    a batch runs at most 3 Spark jobs, the 2 dim broadcasts and the commit
+    write (it was 8 while every batch rebuilt the chain and its dim, and 6
+    while the metrics were a Spark aggregate). A landed batch's metrics
+    step, counted in its own job group, starts no Spark job."""
+    from hypertrace_ingester_spark.operators import aggregate as agg_ops
     from hypertrace_ingester_spark.operators import enrich as enrich_ops
     from hypertrace_ingester_spark.plans.streaming_pipeline import process_batch
 
@@ -329,19 +332,120 @@ def test_snapshot_batches_reuse_built_chain(spark, tmp_path, monkeypatch):
         return collect_local(*args, **kwargs)
 
     monkeypatch.setattr(enrich_ops, "collect_local", counting)
-    batches, cfg, ctx, rules = _snapshot_batch_setup(spark, tmp_path)
     sc = spark.sparkContext
-    jobs = []
+    metrics_local = agg_ops.sink_metrics_local
+    metric_groups = []
+
+    def in_own_group(*args, **kwargs):
+        # the metrics step runs after the commit; its jobs, if any, land
+        # in this group until process_batch returns
+        metric_groups.append(f"{sc.getLocalProperty('spark.jobGroup.id')}-metrics")
+        sc.setJobGroup(metric_groups[-1], metric_groups[-1])
+        return metrics_local(*args, **kwargs)
+
+    monkeypatch.setattr(agg_ops, "sink_metrics_local", in_own_group)
+    batches, cfg, ctx, rules = _snapshot_batch_setup(spark, tmp_path)
+    jobs, metric_jobs = [], []
     try:
         for batch_id, batch in enumerate(batches):
             group = f"reuse-chain-{tmp_path.name}-{batch_id}"
             sc.setJobGroup(group, group)
             process_batch(batch, batch_id, cfg, ctx, rules)
             jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            metric_jobs.append(len(sc.statusTracker().getJobIdsForGroup(metric_groups[-1])))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(collected) == 1
-    assert 0 < jobs[1] <= 6, jobs
+    assert len(metric_groups) == 2 and metric_jobs == [0, 0], metric_jobs
+    assert 0 < jobs[1] <= 3, jobs
+
+
+_EDGE_SCHEMA = ("sink string, tenant_id string, ts_ms bigint, status_state string, "
+                "n_tok int, error_count int, tokens array<int>")
+# routed rows for the metrics edge cases: null keys, null values, negative
+# and null timestamps, and bucket boundaries for both windows under test
+_EDGE_ROWS = [
+    ("sink-0", "tenant-0", 1_700_000_001_234, "SUCCESS", 10, 0, [1, 2]),
+    ("sink-0", "tenant-0", 1_700_000_003_999, "SUCCESS", 5, 1, [3]),
+    ("sink-0", "tenant-0", 1_700_000_005_000, "SUCCESS", 1, 0, []),
+    ("sink-0", None, 1_700_000_000_000, "FAIL", 3, 1, [4]),
+    ("sink-1", "tenant-1", None, "SUCCESS", 7, 0, [5]),
+    ("sink-1", "tenant-1", None, "SUCCESS", None, None, None),
+    ("sink-2", "tenant-2", -1, None, 2, 0, [6]),
+    ("sink-2", "tenant-2", -3_001, None, 4, 1, [7]),
+    ("sink-2", "tenant-2", -5_000, None, 8, 1, [8]),
+    (None, "tenant-3", 42, "FAIL", 1, 0, [9]),
+]
+
+
+def _driver_vs_spark_metrics(spark, tmp_path, landed, table, window_ms):
+    """The driver partial and ``aggregate.sink_metrics`` over the same staged
+    files, each written as a partition and read back by Spark. The driver's
+    partition is first filled with a Spark-written partition and a stray
+    staging file, so the write is a rewrite."""
+    import os
+    import shutil
+
+    from hypertrace_ingester_spark.operators import aggregate as agg
+    from hypertrace_ingester_spark.plans.streaming_pipeline import _overwrite_partition
+
+    files = [os.path.join(table, f) for f in landed.added_files]
+    want_dir, got_dir = str(tmp_path / "spark_part"), str(tmp_path / "driver_part")
+    agg.sink_metrics(spark.read.parquet(*files), window_ms).repartition(2) \
+        .write.mode("overwrite").parquet(want_dir)
+    shutil.copytree(want_dir, got_dir)
+    open(os.path.join(got_dir, ".tmp-stale"), "wb").close()
+    _overwrite_partition(agg.sink_metrics_local(files, window_ms), got_dir)
+
+    names = os.listdir(got_dir)
+    assert len([n for n in names if n.endswith(".parquet")]) == 1, names
+    assert not [n for n in names if n.startswith(".tmp-")], names
+    got, want = spark.read.parquet(got_dir), spark.read.parquet(want_dir)
+    assert [(f.name, f.dataType) for f in got.schema] == \
+        [(f.name, f.dataType) for f in want.schema]
+    rows = sorted(map(repr, got.collect()))
+    assert rows == sorted(map(repr, want.collect()))
+    return rows
+
+
+@pytest.mark.parametrize("window_ms", [5_000, 3_000])
+def test_driver_metrics_partial_matches_spark(spark, tmp_path, window_ms):
+    """The driver partial equals aggregate.sink_metrics over the files a
+    commit staged, row for row and in schema: null sink, tenant, status
+    and ts_ms keys form their own groups, a negative ts_ms floors into
+    the bucket below, all-null sums stay null, under the default and a
+    non-default window, with the batch staged as several files."""
+    from hypertrace_ingester_spark.sources import snapshots as sn
+
+    table = str(tmp_path / "routed_snap")
+    batch = spark.createDataFrame(_EDGE_ROWS * 3, _EDGE_SCHEMA).repartition(3)
+    landed = sn.commit_stream_batch(batch, table, 0)
+    assert len(landed.added_files) > 1 and landed.added_rows == 3 * len(_EDGE_ROWS)
+    rows = _driver_vs_spark_metrics(spark, tmp_path, landed, table, window_ms)
+    assert any("bucket_start_ms=None" in r for r in rows)
+    assert any("bucket_start_ms=-" in r for r in rows)
+
+
+def test_driver_metrics_partial_of_empty_batch(spark, tmp_path):
+    """A zero-row batch stages one schema-only file; the driver partial of
+    it is an empty partition with the Spark aggregate's schema, and
+    process_batch writes that partition for an empty landed batch."""
+    import os
+
+    from hypertrace_ingester_spark.plans.streaming_pipeline import process_batch
+    from hypertrace_ingester_spark.sources import snapshots as sn
+
+    table = str(tmp_path / "routed_snap")
+    empty = spark.createDataFrame(_EDGE_ROWS, _EDGE_SCHEMA).limit(0)
+    landed = sn.commit_stream_batch(empty, table, 0)
+    assert landed.added_files and landed.added_rows == 0
+    assert _driver_vs_spark_metrics(spark, tmp_path, landed, table, 5_000) == []
+
+    batches, cfg, ctx, rules = _snapshot_batch_setup(spark, tmp_path)
+    process_batch(batches[0].limit(0), 0, cfg, ctx, rules)
+    part = f"{cfg.out_dir}/metrics/batch_id=0"
+    assert [n for n in os.listdir(part) if n.endswith(".parquet")]
+    assert spark.read.parquet(part).count() == 0
 
 
 def test_streaming_dedup_drops_repeat_fingerprints(spark, tmp_path):
