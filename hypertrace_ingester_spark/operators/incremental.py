@@ -285,14 +285,10 @@ def _dir_rows(path: str) -> int:
     """Exact row count from parquet footers — metadata only, no job."""
     import pyarrow.parquet as pq
 
-    n = 0
-    for root, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for f in files:
-            if f.startswith(("_", ".")) or not f.endswith(".parquet"):
-                continue
-            n += pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-    return n
+    from ..sources.compaction import data_files
+
+    return sum(pq.ParquetFile(f).metadata.num_rows
+               for f in data_files(path) if f.endswith(".parquet"))
 
 
 def remove_docs(
@@ -309,62 +305,29 @@ def remove_docs(
     against deleted content and silently re-suppress a legitimate
     re-submission.
 
-    Layout-preserving: each table is re-read through its bucket-aligned
-    scan (one task = one whole bucket, ``autoBucketedScan`` forced off —
-    the ``compact_bucketed_table`` rule), anti-filtered against the
-    broadcast id list (a Filter never disturbs the scan's reported
-    partitioning), and rewritten with the IDENTICAL bucketBy spec — zero
-    Exchange — then rename-swapped (crash leaves the original). Row
-    counts in the manifest come from parquet footers, not count jobs.
+    Layout-preserving: each table's bucketed scan is anti-filtered against
+    the broadcast id list (a Filter never disturbs the scan's reported
+    partitioning) and rewritten through ``compaction._rewrite`` — the
+    ``compact_bucketed_table`` path: bucket-aligned scan (one task = one
+    whole bucket), IDENTICAL bucketBy spec, zero Exchange, then
+    rename-swapped (crash leaves the original). Row counts in the manifest
+    come from parquet footers, not count jobs.
 
     Deletion requests are bounded, so ``doc_ids`` is a driver-held list
     (the ids are matched as strings — the index's storage type)."""
-    from pyspark.sql import functions as F
-
     from ..sources import compaction as cpa
 
     idx = load_index(spark, path, prefix=prefix)
-    meta = idx.get("_meta") or {}
-    n_buckets = meta.get("n_buckets", INDEX_BUCKETS)
+    n_buckets = (idx.get("_meta") or {}).get("n_buckets", INDEX_BUCKETS)
     ids = [str(i) for i in doc_ids]
-    specs = INDEX_SPECS
     out: dict = {"path": path, "tables": {}}
-    auto_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    prev_auto = spark.conf.get(auto_key, "true")
-    spark.conf.set(auto_key, "false")
-    try:
-        for name, (ddl, cols) in specs.items():
-            table = f"{prefix}_{name}"
-            tpath = f"{path}/{name}"
-            before = _dir_rows(tpath)
-            src = bucketing.ensure_bucketed_table(
-                spark, table, tpath, ddl, cols, n_buckets
-            ).filter(
-                # three-valued NOT IN is NULL for NULL doc_ids — keep
-                # NULL-keyed rows explicitly (a takedown must never delete
-                # un-requested rows; matches delete_ids)
-                F.col("doc_id").isNull() | ~F.col("doc_id").isin(ids)
-            )
-            tmp_path = cpa._hidden_sibling(tpath, "remove-tmp")
-            tmp_table = f"{table}_remove_tmp"
-            if os.path.exists(tmp_path):
-                import shutil
-
-                shutil.rmtree(tmp_path)
-            bucketing.write_bucketed(
-                src, tmp_table, cols, n_buckets, mode="overwrite",
-                path=tmp_path,
-            )
-            spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
-            spark.sql(f"DROP TABLE IF EXISTS {table}")
-            cpa._swap_dirs(tpath, tmp_path)
-            bucketing.ensure_bucketed_table(
-                spark, table, tpath, ddl, cols, n_buckets
-            )
-            out["tables"][name] = {
-                "rows_before": before,
-                "rows_after": _dir_rows(tpath),
-            }
-    finally:
-        spark.conf.set(auto_key, prev_auto)
+    for name, (ddl, cols) in INDEX_SPECS.items():
+        tpath = f"{path}/{name}"
+        before = _dir_rows(tpath)
+        # three-valued NOT IN is NULL for NULL doc_ids — keep NULL-keyed
+        # rows explicitly (a takedown must never delete un-requested rows;
+        # matches delete_ids)
+        kept = idx[name].filter(F.col("doc_id").isNull() | ~F.col("doc_id").isin(ids))
+        cpa._rewrite(kept, tpath, (f"{prefix}_{name}", ddl, cols, n_buckets, None))
+        out["tables"][name] = {"rows_before": before, "rows_after": _dir_rows(tpath)}
     return out

@@ -18,9 +18,11 @@ user of the reference's always-on ingester would run:
 Exactly-once notes: ``foreachBatch`` + parquet append gives at-least-once
 on retries (the reference's Kafka Streams default is also ALOS). With
 ``cfg.snapshot_routed=True`` the routed sink instead commits each batch to
-a snapshot-versioned table with an idempotent ``batch_id`` gate
-(``sources/snapshots.commit_stream_batch``) — a retry replay no-ops, which
-is exactly-once; the same hook swaps to Iceberg ``writeTo(...).append()``
+a snapshot-versioned table with an idempotent ``batch_id`` gate per
+stream (``sources/snapshots.commit_stream_batch``; the stream is the
+query's checkpoint-stable id) — a retry replay no-ops, which is
+exactly-once, and a fresh checkpoint lands its batches as a new stream;
+the same hook swaps to Iceberg ``writeTo(...).append()``
 (whose idempotent commits use the identical recipe) when the runtime jar
 exists. On that path the parse → enrich → route chain runs ONCE per batch:
 the commit executes it, and the batch metrics are computed from the files
@@ -43,6 +45,7 @@ and re-broadcast per batch).
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
@@ -91,6 +94,7 @@ def process_batch(
     cfg: PipelineConfig,
     ctx: enrich_ops.EnrichContext,
     route_rules: DataFrame,
+    app_id: str | None = None,
 ) -> None:
     """One micro-batch: routed rows APPEND (at-least-once, the reference's
     Kafka Streams ALOS default); per-batch metrics OVERWRITE their own
@@ -114,6 +118,10 @@ def process_batch(
     metrics partition of a batch whose commit landed but whose metrics
     write was lost.
 
+    ``app_id`` names the stream for the snapshot sink's exactly-once gate
+    (``snapshots.commit_stream_batch``): ``run_streaming_pipeline`` passes
+    its query's checkpoint-stable id; None is one default stream.
+
     The chain comes from ``pipeline.hot_chain``: built on the first batch
     that sees this ``ctx`` with these ``route_rules`` (same object) and
     ``cfg.drop_criteria``, then reused. Pass the same context and rules
@@ -128,7 +136,7 @@ def process_batch(
         from ..sources import snapshots as snap
 
         table = os.path.join(cfg.out_dir, "routed_snap")
-        landed = snap.commit_stream_batch(routed, table, batch_id)
+        landed = snap.commit_stream_batch(routed, table, batch_id, app_id=app_id)
         if landed is not None and landed.added_files:
             files = [os.path.join(table, f) for f in landed.added_files]
             if landed.added_rows <= LOCAL_METRICS_MAX_ROWS:
@@ -159,20 +167,22 @@ def run_streaming_pipeline(
     ``cfg.out_dir/routed`` partitioned by sink — the per-view topics of the
     reference collapsed into one partitioned table family. Checkpoint state
     lives under ``cfg.out_dir/_stream_checkpoint`` (restart-safe offsets,
-    the RocksDB/changelog analog). The chain is built here, before the
+    the RocksDB/changelog analog); the query id Structured Streaming keeps
+    there names the stream for the snapshot sink's exactly-once gate, so a
+    fresh checkpoint is a new stream. The chain is built here, before the
     query starts, and every batch reuses it. ``ctx`` and ``route_rules``
     default to the session's ``datagen.default_dims``, which
     ``run_pipeline`` shares, so a session builds that chain once."""
     ctx, rules = dims_or_default(spark, ctx, route_rules)
     hot_chain(ctx, rules, cfg.drop_criteria)
+    checkpoint = os.path.join(cfg.out_dir, "_stream_checkpoint")
 
     def per_batch(batch_df: DataFrame, batch_id: int) -> None:
-        process_batch(batch_df, batch_id, cfg, ctx, rules)
+        with open(os.path.join(checkpoint, "metadata")) as fh:
+            app_id = json.load(fh)["id"]
+        process_batch(batch_df, batch_id, cfg, ctx, rules, app_id)
 
-    writer = (
-        stream.writeStream.foreachBatch(per_batch)
-        .option("checkpointLocation", os.path.join(cfg.out_dir, "_stream_checkpoint"))
-    )
+    writer = stream.writeStream.foreachBatch(per_batch).option("checkpointLocation", checkpoint)
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()

@@ -1049,19 +1049,6 @@ def d_embed_near_dup(spark, sf_dir):
 # Additional operator-parity queries
 # ---------------------------------------------------------------------------
 
-def p_grok_pandas(spark, sf_dir):
-    """P10 pandas path — the Arrow-batched mapInPandas grok variant
-    (grok_extract_pandas), for patterns needing Python-only regex features.
-    Out of the 50-entry driver catalog: equality with the JVM regexp path
-    (p_grok_extract's extractor) is asserted in tests/test_parse.py and
-    tests/test_oracle_extras.py instead."""
-    df = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    out = parse_ops.grok_extract_pandas(
-        df, line_col="text", fields=[("first_word", r"^(\w+)", None)]
-    )
-    return out.select("doc_id", "first_word")
-
-
 # A1 metric-key generation (MetricIdentity = hash of metric name + attr
 # tuple + window, MetricsProcessor.java:129-136) is folded into
 # "a_otlp_gauges" in queries_fieldgen.py — each gauge data point carries

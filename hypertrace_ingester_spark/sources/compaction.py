@@ -24,11 +24,14 @@ analog, with the two layouts the repo writes:
   compaction itself never shuffles; input files are write-sized and
   near-uniform, so coalesce skew is bounded by the target size.
 
-Both rewrite to a temp sibling and atomically swap directories, so a
-crashed compaction leaves the original layout untouched and readers never
-see a half-written table (the same idempotence contract as the streaming
-sink's per-batch overwrite). On an object store the "rename" is the
-table-format metadata swap; the seam is this module's `_swap_dirs`.
+Both — and `cluster_dir` and `incremental.remove_docs` — rewrite through
+ONE helper, `_rewrite`: write to a hidden temp sibling, then atomically
+swap directories, so a crashed rewrite leaves the original layout
+untouched and readers never see a half-written table (the same
+idempotence contract as the streaming sink's per-batch overwrite). On an
+object store the "rename" is the table-format metadata swap; the seam is
+`_rewrite`'s `_swap_dirs`. Every directory walk here goes through
+`data_files`, and every footer [min, max] through `footer_ranges`.
 """
 
 from __future__ import annotations
@@ -40,46 +43,47 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 from . import bucketing
-from .snapshots import _top_level_column_index
 
 DEFAULT_TARGET_MB = 256
+
+
+def data_files(path: str):
+    """Every data file under ``path`` (full paths; walk order, names
+    sorted within a directory). `_`-prefixed bookkeeping (``_SUCCESS``,
+    ``_index_meta.json``, ``_snapshots/``) and hidden files and
+    directories are skipped, matching Spark's own data-file filter — THE
+    one copy of that rule for every walk in this module and
+    ``incremental``."""
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if not f.startswith(("_", ".")):
+                yield os.path.join(root, f)
+
+
+def _parquet_files(path: str) -> list[str]:
+    return [f for f in data_files(path) if f.endswith(".parquet")]
 
 
 def file_stats(path: str) -> dict:
     """Recursive data-file census of ``path``: count, bytes, min/max size.
 
     Driver-side metadata listing only (the same cost every planner listing
-    pays); `_`-prefixed bookkeeping (``_SUCCESS``, ``_index_meta.json``)
-    and hidden files are excluded, matching Spark's own data-file filter.
+    pays) over :func:`data_files`.
     """
-    n, total, smallest, largest = 0, 0, None, 0
-    for root, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for f in files:
-            if f.startswith("_") or f.startswith("."):
-                continue
-            sz = os.path.getsize(os.path.join(root, f))
-            n += 1
-            total += sz
-            largest = max(largest, sz)
-            smallest = sz if smallest is None else min(smallest, sz)
+    sizes = [os.path.getsize(f) for f in data_files(path)]
     return {
-        "n_files": n,
-        "total_bytes": total,
-        "min_bytes": smallest or 0,
-        "max_bytes": largest,
+        "n_files": len(sizes),
+        "total_bytes": sum(sizes),
+        "min_bytes": min(sizes, default=0),
+        "max_bytes": max(sizes, default=0),
     }
 
 
 def _leaf_partition_dirs(path: str) -> list[str]:
     """Leaf directories holding data files: ``path`` itself for a flat
     layout, else every ``key=value`` leaf of a hive-partitioned tree."""
-    leaves = []
-    for root, dirs, files in os.walk(path):
-        if any(not f.startswith(("_", ".")) for f in files):
-            leaves.append(root)
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-    return leaves or [path]
+    return list(dict.fromkeys(map(os.path.dirname, data_files(path)))) or [path]
 
 
 def _hidden_sibling(path: str, tag: str) -> str:
@@ -108,6 +112,52 @@ def _swap_dirs(path: str, tmp_path: str) -> None:
     shutil.rmtree(old)
 
 
+def _rewrite(df: DataFrame, path: str, bucket_spec: tuple | None = None) -> None:
+    """Replace the directory ``path`` with ``df``'s rows — THE
+    rewrite-and-swap of every maintenance pass: write into a hidden temp
+    sibling, then :func:`_swap_dirs` it in (a crash before the swap leaves
+    ``path`` untouched). Plain parquet with 4 MB pages by default.
+
+    ``bucket_spec`` = ``(table, schema_ddl, bucket_cols, n_buckets,
+    sort_cols)`` of the EXTERNAL bucketed table at ``path``: the rewrite
+    keeps that ``bucketBy`` spec and re-registers ``table`` over the
+    swapped directory. Pass ``df`` as that table's bucketed scan (narrow
+    transforms such as a Filter keep its reported partitioning): the write
+    forces the bucket-aligned scan — ``autoBucketedScan`` may otherwise
+    plan a plain file-split read (no downstream operator needs the
+    distribution), and a task holding a file split rather than a whole
+    bucket writes one file per (task, bucket) again, exactly the
+    fragmentation being repaired. With the aligned scan each task IS one
+    bucket and emits exactly one file, and the planner drops the Exchange
+    the write would otherwise require."""
+    tmp = _hidden_sibling(path, "rewrite-tmp")
+    if os.path.exists(tmp):
+        shutil.rmtree(tmp)
+    if bucket_spec is None:
+        df.write.mode("overwrite").option(
+            "parquet.page.size", str(4 * 1024 * 1024)).parquet(tmp)
+        _swap_dirs(path, tmp)
+        return
+    spark = df.sparkSession
+    table, schema_ddl, bucket_cols, n_buckets, sort_cols = bucket_spec
+    auto_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
+    prev_auto = spark.conf.get(auto_key, "true")
+    spark.conf.set(auto_key, "false")
+    try:
+        bucketing.write_bucketed(
+            df, f"{table}_rewrite_tmp", bucket_cols, n_buckets,
+            sort_cols=sort_cols, mode="overwrite", path=tmp,
+        )
+    finally:
+        spark.conf.set(auto_key, prev_auto)
+    spark.sql(f"DROP TABLE IF EXISTS {table}_rewrite_tmp")
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    _swap_dirs(path, tmp)
+    bucketing.ensure_bucketed_table(
+        spark, table, path, schema_ddl, bucket_cols, n_buckets, sort_cols
+    )
+
+
 def compact_dir(
     spark: SparkSession,
     path: str,
@@ -132,15 +182,7 @@ def compact_dir(
         n_out = max(1, math.ceil(stats["total_bytes"] / (target_mb * 1024 * 1024)))
         if n_out >= stats["n_files"]:
             continue
-        tmp = _hidden_sibling(leaf, "compact-tmp")
-        (
-            spark.read.parquet(leaf)
-            .coalesce(n_out)
-            .write.mode("overwrite")
-            .option("parquet.page.size", str(4 * 1024 * 1024))
-            .parquet(tmp)
-        )
-        _swap_dirs(leaf, tmp)
+        _rewrite(spark.read.parquet(leaf).coalesce(n_out), leaf)
         compacted_leaves += 1
     return {
         "path": path,
@@ -163,44 +205,18 @@ def compact_bucketed_table(
     """Zero-Exchange compaction of an EXTERNAL bucketed table.
 
     Reads the bucketed scan (its reported partitioning is the bucket
-    hash), rewrites with the identical ``bucketBy`` spec to a temp
-    location — the planner drops the Exchange the write would otherwise
-    require, so the whole pass is scan → sort-within-bucket → write —
-    then rename-swaps the data directory and re-registers the table.
-    After N appends a bucket holds N×tasks files; after compaction it
-    holds one. Layout metadata (catalog DDL, ``ensure_bucketed_table``
+    hash) and rewrites it with the identical ``bucketBy`` spec through
+    :func:`_rewrite` — the planner drops the Exchange the write would
+    otherwise require, so the whole pass is scan → sort-within-bucket →
+    write — which rename-swaps the data directory and re-registers the
+    table. After N appends a bucket holds N×tasks files; after compaction
+    it holds one. Layout metadata (catalog DDL, ``ensure_bucketed_table``
     validation) is unchanged, so downstream zero-Exchange joins keep
     their plans."""
-    src = bucketing.ensure_bucketed_table(
-        spark, table, path, schema_ddl, bucket_cols, n_buckets, sort_cols
-    )
+    spec = (table, schema_ddl, bucket_cols, n_buckets, sort_cols)
+    src = bucketing.ensure_bucketed_table(spark, table, path, *spec[1:])
     before = file_stats(path)
-    tmp_path = _hidden_sibling(path, "compact-tmp")
-    tmp_table = f"{table}_compact_tmp"
-    if os.path.exists(tmp_path):
-        shutil.rmtree(tmp_path)
-    # Force the bucket-aligned scan for the rewrite: autoBucketedScan may
-    # otherwise plan a plain file-split read (no downstream operator needs
-    # the distribution), and a task holding a file split rather than a
-    # whole bucket writes one file per (task, bucket) again — exactly the
-    # fragmentation being repaired. With the aligned scan each task IS one
-    # bucket and emits exactly one file.
-    auto_key = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    prev_auto = spark.conf.get(auto_key, "true")
-    spark.conf.set(auto_key, "false")
-    try:
-        bucketing.write_bucketed(
-            src, tmp_table, bucket_cols, n_buckets,
-            sort_cols=sort_cols, mode="overwrite", path=tmp_path,
-        )
-    finally:
-        spark.conf.set(auto_key, prev_auto)
-    spark.sql(f"DROP TABLE IF EXISTS {tmp_table}")
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    _swap_dirs(path, tmp_path)
-    bucketing.ensure_bucketed_table(
-        spark, table, path, schema_ddl, bucket_cols, n_buckets, sort_cols
-    )
+    _rewrite(src, path, spec)
     return {
         "table": table,
         "files_before": before["n_files"],
@@ -329,18 +345,8 @@ def cluster_dir(
         n_out = n_files or max(
             1, math.ceil(stats["total_bytes"] / (target_mb * 1024 * 1024))
         )
-        tmp = _hidden_sibling(leaf, "cluster-tmp")
-        if os.path.exists(tmp):
-            shutil.rmtree(tmp)
-        (
-            spark.read.parquet(leaf)
-            .repartitionByRange(n_out, *keys)
-            .sortWithinPartitions(*keys)
-            .write.mode("overwrite")
-            .option("parquet.page.size", str(4 * 1024 * 1024))
-            .parquet(tmp)
-        )
-        _swap_dirs(leaf, tmp)
+        _rewrite(spark.read.parquet(leaf).repartitionByRange(n_out, *keys)
+                 .sortWithinPartitions(*keys), leaf)
     out = {
         "path": path,
         "files_before": before_files,
@@ -352,21 +358,46 @@ def cluster_dir(
     return out
 
 
-def footer_range(md, col_pos: int):
-    """Whole-file [min, max] from parquet row-group statistics for the
-    column at ``col_pos``, or None when ANY row group lacks usable stats
-    (the caller must then treat the file as a candidate). ONE copy of the
-    statistics subtleties (missing stats, NULL-only groups), shared by
-    ``delete_ids`` and ``snapshots.merge_upsert`` so fixes cannot drift
-    between the two pruners (review find)."""
-    lo = hi = None
-    for rg in range(md.num_row_groups):
-        st = md.row_group(rg).column(col_pos).statistics
-        if st is None or not st.has_min_max:
-            return None
-        lo = st.min if lo is None else min(lo, st.min)
-        hi = st.max if hi is None else max(hi, st.max)
-    return None if lo is None else (lo, hi)
+def _top_level_column_index(md) -> dict:
+    """{top-level column name -> parquet column position}. Uses the full
+    dotted PATH, not the leaf name — for schema {id, s: struct<id>} both
+    leaves are NAMED 'id' and the leaf-name dict silently recorded the
+    struct-inner column's stats under the top-level name (review find:
+    wrong pruning = wrong results). Nested leaves are excluded — only
+    top-level columns are prunable here."""
+    out = {}
+    for i in range(md.num_columns):
+        p = md.schema.column(i).path
+        if "." not in p:
+            out[p] = i
+    return out
+
+
+def footer_ranges(md, cols) -> dict:
+    """{col: whole-file (min, max)} from the parquet footer ``md``'s
+    row-group statistics, for each of ``cols`` that is a top-level column
+    of the file (others are absent from the result); a column maps to None
+    when ANY row group lacks usable stats (the caller must then treat the
+    file as a candidate). ONE copy of the statistics subtleties (missing
+    stats, NULL-only groups, nested leaves shadowing a top-level name),
+    shared by ``delete_ids`` and ``snapshots``' commit stats and
+    ``merge_upsert`` so fixes cannot drift between the pruners (review
+    find)."""
+    idx = _top_level_column_index(md)
+    out = {}
+    for col in cols:
+        if col not in idx:
+            continue
+        lo = hi = None
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(idx[col]).statistics
+            if st is None or not st.has_min_max:
+                lo = None
+                break
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+        out[col] = None if lo is None else (lo, hi)
+    return out
 
 
 def clustering_stats(path: str, column: str) -> dict:
@@ -380,24 +411,20 @@ def clustering_stats(path: str, column: str) -> dict:
     import pyarrow.parquet as pq
 
     ranges = []
-    for root, dirs, files in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for f in sorted(files):
-            if f.startswith(("_", ".")) or not f.endswith(".parquet"):
+    for fpath in _parquet_files(path):
+        md = pq.ParquetFile(fpath).metadata
+        idx = _top_level_column_index(md)
+        if column not in idx:
+            continue
+        lo, hi = None, None
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(idx[column]).statistics
+            if st is None or not st.has_min_max:
                 continue
-            md = pq.ParquetFile(os.path.join(root, f)).metadata
-            idx = _top_level_column_index(md)
-            if column not in idx:
-                continue
-            lo, hi = None, None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx[column]).statistics
-                if st is None or not st.has_min_max:
-                    continue
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-            if lo is not None:
-                ranges.append((lo, hi, f))
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+        if lo is not None:
+            ranges.append((lo, hi, os.path.basename(fpath)))
     ranges.sort()
     overlaps = 0
     for i in range(len(ranges)):
@@ -466,63 +493,54 @@ def delete_ids(
     files_scanned = 0
     files_rewritten = 0
     rows_deleted = 0
-    for root, dirs, fnames in os.walk(path):
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        for fname in sorted(fnames):
-            if fname.startswith(("_", ".")) or not fname.endswith(".parquet"):
-                continue
-            fpath = os.path.join(root, fname)
-            md = pq.ParquetFile(fpath).metadata
-            idx = _top_level_column_index(md)
-            if id_col not in idx:
-                continue
-            files_scanned += 1
-            n_rows = md.num_rows
-            rng = footer_range(md, idx[id_col])
-            if rng is not None:
-                lo, hi = rng
-                # any target inside [lo, hi]? (sorted ids, binary search)
-                left = bisect.bisect_left(ids_sorted, lo)
-                if left >= len(ids_sorted) or ids_sorted[left] > hi:
-                    continue  # pruned: file untouched, never read
-                cand = ids_sorted[left:bisect.bisect_right(ids_sorted, hi)]
-            else:
-                cand = ids_sorted  # no stats: must check everything
-            tmp = _hidden_sibling(fpath, "delete-tmp")
-            if os.path.exists(tmp):
-                shutil.rmtree(tmp)
-            (
-                spark.read.parquet(fpath)
-                # NOT-IN is three-valued: NULL ids would evaluate to NULL
-                # and be dropped by WHERE — keep them explicitly (review
-                # find: a takedown must never delete un-requested rows)
-                .filter(
-                    F.col(id_col).isNull() | ~F.col(id_col).isin(list(cand))
-                )
-                .coalesce(1)
-                .write.mode("overwrite")
-                .option("parquet.page.size", str(4 * 1024 * 1024))
-                .parquet(tmp)
+    for fpath in _parquet_files(path):
+        md = pq.ParquetFile(fpath).metadata
+        rng = footer_ranges(md, [id_col])
+        if id_col not in rng:
+            continue
+        files_scanned += 1
+        n_rows = md.num_rows
+        if rng[id_col] is not None:
+            lo, hi = rng[id_col]
+            # any target inside [lo, hi]? (sorted ids, binary search)
+            left = bisect.bisect_left(ids_sorted, lo)
+            if left >= len(ids_sorted) or ids_sorted[left] > hi:
+                continue  # pruned: file untouched, never read
+            cand = ids_sorted[left:bisect.bisect_right(ids_sorted, hi)]
+        else:
+            cand = ids_sorted  # no stats: must check everything
+        tmp = _hidden_sibling(fpath, "delete-tmp")
+        if os.path.exists(tmp):
+            shutil.rmtree(tmp)
+        (
+            spark.read.parquet(fpath)
+            # NOT-IN is three-valued: NULL ids would evaluate to NULL
+            # and be dropped by WHERE — keep them explicitly (review
+            # find: a takedown must never delete un-requested rows)
+            .filter(
+                F.col(id_col).isNull() | ~F.col(id_col).isin(list(cand))
             )
-            parts = [p for p in os.listdir(tmp)
-                     if p.endswith(".parquet") and not p.startswith(("_", "."))]
-            new_rows = sum(
-                pq.ParquetFile(os.path.join(tmp, p)).metadata.num_rows
-                for p in parts
-            )
-            rows_deleted += n_rows - new_rows
-            # the local Hadoop FS keeps a `.<name>.crc` sidecar per file;
-            # replacing the parquet bytes under the old name would leave a
-            # stale checksum and poison every future read — drop it
-            crc = os.path.join(root, f".{fname}.crc")
-            if os.path.exists(crc):
-                os.remove(crc)
-            if parts and new_rows > 0:
-                os.replace(os.path.join(tmp, parts[0]), fpath)
-            else:  # everything in the file was deleted: no 0-row husk
-                os.remove(fpath)
-            shutil.rmtree(tmp, ignore_errors=True)
-            files_rewritten += 1
+            .coalesce(1)
+            .write.mode("overwrite")
+            .option("parquet.page.size", str(4 * 1024 * 1024))
+            .parquet(tmp)
+        )
+        parts = _parquet_files(tmp)
+        new_rows = sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
+        rows_deleted += n_rows - new_rows
+        # the local Hadoop FS keeps a `.<name>.crc` sidecar per file;
+        # replacing the parquet bytes under the old name would leave a
+        # stale checksum and poison every future read — drop it
+        root, fname = os.path.split(fpath)
+        crc = os.path.join(root, f".{fname}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+        if parts and new_rows > 0:
+            os.replace(parts[0], fpath)
+        else:  # everything in the file was deleted: no 0-row husk
+            os.remove(fpath)
+        shutil.rmtree(tmp, ignore_errors=True)
+        files_rewritten += 1
     if files_scanned == 0:
         # a compliance delete must never silently no-op: the id column is
         # not a data-file column here (hive partition key? typo?)

@@ -15,6 +15,8 @@ rely on, each with the same contract:
   table (review find: an orphaned manifest + stale pointer made every
   later commit conflict forever while the idempotency gate thought the
   data had landed). ``current_version`` derives from the manifest set.
+  Every write path builds its manifest in ONE writer (``_commit``), so
+  every manifest has the same keys and carries the same state forward.
 - **optimistic concurrency**: the manifest's version number is the lock.
   Two writers racing to commit version N+1 both try to link
   ``v000N+1.json``; the loser gets :class:`CommitConflict` (Iceberg's
@@ -26,11 +28,14 @@ rely on, each with the same contract:
   history is append-only, like ``rollback_to_snapshot``.
 - **MERGE INTO**: :func:`merge_upsert` — copy-on-write upsert with
   footer-pruned file selection (untouched files carried by reference).
-- **exactly-once streaming**: :func:`commit_stream_batch` — every
-  manifest carries the running ``batch_seq`` (highest micro-batch id
-  ever committed), so the replay gate is one manifest read, O(1), and
-  survives :func:`expire_snapshots` dropping old batch-bearing manifests
-  (review find: a history-scan gate was voided by expiry).
+- **exactly-once streaming, per stream**: :func:`commit_stream_batch` —
+  every manifest carries each stream's last committed micro-batch id
+  (``streams``: {app_id: batch id}, Delta's ``txn`` action), so the
+  replay gate is one manifest read, O(1), and survives
+  :func:`expire_snapshots` dropping old batch-bearing manifests (review
+  find: a history-scan gate was voided by expiry). Keying the gate by
+  stream lets a fresh checkpoint, whose ids restart at 0, land its
+  batches in an existing table instead of no-opping them all.
 - **expiry**: ``expire_snapshots`` drops old manifests, deletes data
   files no surviving manifest references, and sweeps ORPHANED data files
   (from crashed or conflict-losing commits) past a grace age.
@@ -54,10 +59,19 @@ from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .compaction import footer_ranges
+
 
 class CommitConflict(RuntimeError):
     """Another writer committed this version first (optimistic-lock loss).
     Retry: re-read the current version and re-commit on top of it."""
+
+
+class BatchRegression(RuntimeError):
+    """A stream offered a batch id below the last one it committed: its
+    micro-batch ids went backwards (a checkpoint restored from an older
+    copy, or two queries sharing one stream id). Landing the batch could
+    duplicate rows and skipping it could lose them, so neither happens."""
 
 
 @dataclass
@@ -70,15 +84,21 @@ class Snapshot:
     parent: int | None
     batch_id: int | None = None
     schema_json: str | None = None
-    batch_seq: int = -1
     file_stats: dict = None  # {rel_path: {col: [min, max]}}
     file_rows: dict = None  # {rel_path: row count}
+    # every stream's last committed batch id ("" = the default stream),
+    # carried by every commit
+    streams: dict = None  # {app_id: batch id}
     # data files THIS commit staged (relative paths) and their total rows —
     # set on the Snapshot a write returns, so a caller can read back exactly
     # what it landed; not persisted (a manifest loaded later leaves them
     # empty)
     added_files: tuple = ()
     added_rows: int = 0
+
+
+# what a commit that carries no existing file builds on
+_NO_FILES = Snapshot(0, 0.0, "", [], 0, None, file_stats={}, file_rows={})
 
 
 def _snap_dir(path: str) -> str:
@@ -111,24 +131,41 @@ def current_version(path: str) -> int | None:
     return vs[-1] if vs else None
 
 
+def _decode(d: dict) -> Snapshot:
+    bid = d.get("batch_id")
+    streams = d.get("streams")
+    if streams is None:
+        # written before per-stream gates: one stream, whose running id
+        # the manifest kept as batch_seq
+        seq = d.get("batch_seq", -1 if bid is None else bid)
+        streams = {"": seq} if seq >= 0 else {}
+    return Snapshot(
+        version=d["version"], ts=d["ts"], operation=d["operation"],
+        files=d["files"], rows=d["rows"], parent=d.get("parent"),
+        batch_id=bid, schema_json=d.get("schema"),
+        file_stats=d.get("file_stats") or {},
+        file_rows=d.get("file_rows") or {}, streams=streams,
+    )
+
+
 def _load_manifest(path: str, version: int) -> Snapshot:
     try:
         with open(_manifest_path(path, version)) as fh:
-            d = json.load(fh)
+            return _decode(json.load(fh))
     except FileNotFoundError:
         raise ValueError(
             f"snapshot v{version} of {path} does not exist (expired or "
             "never committed)"
         ) from None
-    bid = d.get("batch_id")
-    return Snapshot(
-        version=d["version"], ts=d["ts"], operation=d["operation"],
-        files=d["files"], rows=d["rows"], parent=d.get("parent"),
-        batch_id=bid, schema_json=d.get("schema"),
-        batch_seq=d.get("batch_seq", bid if bid is not None else -1),
-        file_stats=d.get("file_stats") or {},
-        file_rows=d.get("file_rows") or {},
-    )
+
+
+def _current(path: str) -> Snapshot | None:
+    cur = current_version(path)
+    return None if cur is None else _load_manifest(path, cur)
+
+
+def _next_version(parent: Snapshot | None) -> int:
+    return 1 if parent is None else parent.version + 1
 
 
 def _schema_key(schema_json: str):
@@ -148,18 +185,32 @@ def _schema_key(schema_json: str):
     return json.dumps(strip(json.loads(schema_json)), sort_keys=True)
 
 
+def _check_schema(snap: Snapshot, schema_json: str, path: str, op: str):
+    """Writes that add rows to ``snap``'s files must match its schema
+    (Iceberg writes are schema-checked): silently unioning mismatched
+    parquet files would surface as nulls/corruption at read time."""
+    if snap.schema_json is not None and \
+            _schema_key(snap.schema_json) != _schema_key(schema_json):
+        raise ValueError(
+            f"{op} schema mismatch vs v{snap.version} of {path}: table has "
+            f"{snap.schema_json} but frame has {schema_json} — overwrite "
+            "to change the schema"
+        )
+
+
 def _commit_manifest(path: str, new_version: int, manifest: dict,
                      added_files: list | tuple = ()) -> Snapshot:
-    """The commit point, shared by every write path: the manifest's full
-    JSON is written to a hidden temp file, then ``os.link``ed into the
-    versioned name — exclusive (link fails if the target exists: the
-    optimistic lock) AND atomic-with-complete-content (a reader or a
-    crash can never observe a half-written manifest; a crash before the
-    link leaves nothing committed, only orphaned data files for the
-    expiry sweep). The temp is removed on EVERY exit, including a
-    serialization failure mid-dump (review find: a raise inside the
-    write block leaked it). The returned Snapshot reports ``added_files``
-    and ``added_rows``, the files this commit staged and their rows."""
+    """The commit point: the manifest's full JSON is written to a hidden
+    temp file, then ``os.link``ed into the versioned name — exclusive
+    (link fails if the target exists: the optimistic lock) AND
+    atomic-with-complete-content (a reader or a crash can never observe a
+    half-written manifest; a crash before the link leaves nothing
+    committed, only orphaned data files for the expiry sweep). The temp is
+    removed on EVERY exit, including a serialization failure mid-dump
+    (review find: a raise inside the write block leaked it). Returns the
+    Snapshot of ``manifest`` itself (no re-read), reporting
+    ``added_files`` and ``added_rows``, the files this commit staged and
+    their rows."""
     tmp = os.path.join(_snap_dir(path), f".tmp-{uuid.uuid4().hex}")
     try:
         with open(tmp, "w") as fh:
@@ -178,9 +229,43 @@ def _commit_manifest(path: str, new_version: int, manifest: dict,
             os.unlink(tmp)
         except FileNotFoundError:
             pass
-    snap = _load_manifest(path, new_version)
+    snap = _decode(manifest)
     return replace(snap, added_files=tuple(added_files),
                    added_rows=sum(snap.file_rows[f] for f in added_files))
+
+
+def _commit(path: str, parent: Snapshot | None, operation: str,
+            schema_json: str | None, carried: Snapshot = _NO_FILES,
+            staged: tuple = ([], {}, {}), batch: tuple = (None, None)) -> Snapshot:
+    """THE manifest writer: append, overwrite, stream batch, merge,
+    compaction and rollback all commit here. ``parent`` is the table's
+    current snapshot (None for a new table); the version, the parent link
+    and the per-stream gate state derive from it, and ``batch`` =
+    (app_id, batch_id) of a stream batch is recorded on top of the
+    parent's stream map — a maintenance commit carries the map unchanged,
+    so it never disturbs the exactly-once gate. The file list is
+    ``carried``'s files, kept by reference with their stats and row
+    counts, plus the files ``staged`` (:func:`_stage_files`' result)."""
+    new_files, new_rows, new_stats = staged
+    app_id, batch_id = batch
+    streams = dict(parent.streams) if parent is not None else {}
+    if app_id is not None:
+        streams[app_id] = batch_id
+    version = _next_version(parent)
+    manifest = {
+        "version": version,
+        "ts": time.time(),
+        "operation": operation,
+        "files": carried.files + new_files,
+        "rows": carried.rows + sum(new_rows.values()),
+        "parent": None if parent is None else parent.version,
+        "batch_id": batch_id,
+        "streams": streams,
+        "schema": schema_json,
+        "file_stats": {**carried.file_stats, **new_stats},
+        "file_rows": {**carried.file_rows, **new_rows},
+    }
+    return _commit_manifest(path, version, manifest, new_files)
 
 
 def _stats_encode(v):
@@ -211,53 +296,39 @@ def _stats_decode(v):
     return v
 
 
-def _stats_cols_of(snap: Snapshot) -> tuple:
-    """The stats columns a manifest carries (ONE derivation shared by
-    append-inheritance, merge, and compact — review find: three copies)."""
-    return tuple(sorted(
-        {c for st in (snap.file_stats or {}).values() for c in st}))
-
-
-def _top_level_column_index(md) -> dict:
-    """{top-level column name -> parquet column position}. Uses the full
-    dotted PATH, not the leaf name — for schema {id, s: struct<id>} both
-    leaves are NAMED 'id' and the leaf-name dict silently recorded the
-    struct-inner column's stats under the top-level name (review find:
-    wrong pruning = wrong results). Nested leaves are excluded — only
-    top-level columns are prunable here."""
-    out = {}
-    for i in range(md.num_columns):
-        p = md.schema.column(i).path
-        if "." not in p:
-            out[p] = i
-    return out
-
-
-def _stage_files(df: DataFrame, path: str, new_version: int,
+def _stage_files(df: DataFrame, path: str, parent: Snapshot | None,
                  stats_cols: tuple = ()):
-    """Write ``df``'s parquet files under data/ with a commit-local prefix;
-    returns (relative paths, per-file row counts, per-file column stats). A
-    failed/conflicted commit leaves only unreferenced data files, which
-    :func:`expire_snapshots`' orphan sweep garbage-collects.
+    """Write ``df``'s parquet files under data/ with a prefix naming the
+    version they are staged for; returns (relative paths, per-file row
+    counts, per-file column stats) — the ``staged`` argument of
+    :func:`_commit`. A failed/conflicted commit leaves only unreferenced
+    data files, which :func:`expire_snapshots`' orphan sweep
+    garbage-collects.
 
     ``stats_cols``: record each file's footer [min, max] for these
     columns INTO THE MANIFEST (Iceberg's manifest-level file statistics)
     — :func:`scan_snapshot` then prunes files at plan time from one JSON
-    read, no footer access. The footers are already open here for the
-    row counts, so the stats are free at commit time; the row counts go
-    into the manifest too (``file_rows``), so :func:`merge_upsert` can
-    prune and count carried files without opening them. Note: timestamp
-    columns only carry footer stats under the modern physical type (set
-    ``spark.sql.parquet.outputTimestampType=TIMESTAMP_MICROS``; Spark's
-    legacy INT96 default writes no min/max, so those columns are simply
-    not recorded)."""
+    read, no footer access. By default they are the columns ``parent``
+    records stats for that ``df`` still has, so appends, overwrites,
+    merges and compactions keep a table pruned without re-passing them
+    (review find: an overwrite silently lost them). The footers are
+    already open here for the row counts, so the stats are free at commit
+    time; the row counts go into the manifest too (``file_rows``), so
+    :func:`merge_upsert` can prune and count carried files without opening
+    them. Note: timestamp columns only carry footer stats under the modern
+    physical type (set ``spark.sql.parquet.outputTimestampType=
+    TIMESTAMP_MICROS``; Spark's legacy INT96 default writes no min/max, so
+    those columns are simply not recorded)."""
     import pyarrow.parquet as pq
 
-    from .compaction import footer_range
-
+    if not stats_cols and parent is not None and parent.file_stats:
+        stats_cols = sorted({c for st in parent.file_stats.values()
+                             for c in st} & set(df.columns))
+    os.makedirs(_snap_dir(path), exist_ok=True)
+    os.makedirs(os.path.join(path, "data"), exist_ok=True)
     stage = os.path.join(path, f"_stage-{uuid.uuid4().hex}")
     df.write.mode("overwrite").parquet(stage)
-    prefix = f"c{new_version:06d}-{uuid.uuid4().hex[:8]}"
+    prefix = f"c{_next_version(parent):06d}-{uuid.uuid4().hex[:8]}"
     new_files, file_rows, file_stats = [], {}, {}
     for i, name in enumerate(sorted(os.listdir(stage))):
         if not name.endswith(".parquet"):
@@ -267,19 +338,32 @@ def _stage_files(df: DataFrame, path: str, new_version: int,
         md = pq.ParquetFile(os.path.join(path, rel)).metadata
         file_rows[rel] = md.num_rows
         new_files.append(rel)
-        if stats_cols:
-            idx = _top_level_column_index(md)
-            st = {}
-            for col in stats_cols:
-                rng = footer_range(md, idx[col]) if col in idx else None
-                if rng is not None:
-                    lo, hi = _stats_encode(rng[0]), _stats_encode(rng[1])
-                    if lo is not None and hi is not None:
-                        st[col] = [lo, hi]
-            if st:
-                file_stats[rel] = st
+        encoded = {col: [_stats_encode(v) for v in rng]
+                   for col, rng in footer_ranges(md, stats_cols).items()
+                   if rng is not None}
+        st = {col: v for col, v in encoded.items() if None not in v}
+        if st:
+            file_stats[rel] = st
     shutil.rmtree(stage, ignore_errors=True)
     return new_files, file_rows, file_stats
+
+
+def _write(df: DataFrame, path: str, mode: str, prev: Snapshot | None,
+           stats_cols: tuple = (), batch: tuple = (None, None)) -> Snapshot:
+    """Stage ``df`` and commit it on top of ``prev``, the current snapshot
+    the caller read: ``append`` keeps ``prev``'s files and must match its
+    schema, ``overwrite`` replaces them and SETS a new schema (the
+    evolution path; per-version schemas make old snapshots read with their
+    own schema)."""
+    if mode not in ("append", "overwrite"):
+        raise ValueError(f"mode must be append|overwrite, got {mode!r}")
+    schema_json = df.schema.json()
+    carried = _NO_FILES
+    if mode == "append" and prev is not None:
+        _check_schema(prev, schema_json, path, "append")
+        carried = prev
+    return _commit(path, prev, mode, schema_json, carried,
+                   _stage_files(df, path, prev, stats_cols), batch)
 
 
 def commit(
@@ -287,7 +371,6 @@ def commit(
     path: str,
     mode: str = "append",
     expected_version: int | None = ...,
-    batch_id: int | None = None,
     stats_cols: tuple = (),
 ) -> Snapshot:
     """Write ``df`` as the next snapshot of the table at ``path``.
@@ -310,66 +393,12 @@ def commit(
     commit staged (for ``overwrite`` that is the whole new file list) and
     ``added_rows`` their row count.
     """
-    if mode not in ("append", "overwrite"):
-        raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-    os.makedirs(_snap_dir(path), exist_ok=True)
-    os.makedirs(os.path.join(path, "data"), exist_ok=True)
-
-    cur = current_version(path)
+    prev = _current(path)
+    cur = None if prev is None else prev.version
     if expected_version is not ... and expected_version != cur:
         raise CommitConflict(
             f"table moved: expected v{expected_version}, current is v{cur}")
-    prev = _load_manifest(path, cur) if cur is not None else None
-    # schema enforcement (Iceberg writes are schema-checked): an append
-    # must match the table's current schema exactly — silently unioning
-    # mismatched parquet files would surface as nulls/corruption at read
-    # time. Overwrite SETS a new schema (the evolution path: rewrite with
-    # the new shape; per-version schemas make old snapshots read with
-    # their own schema).
-    if mode == "append" and prev is not None:
-        if prev.schema_json is not None and \
-                _schema_key(prev.schema_json) != _schema_key(df.schema.json()):
-            raise ValueError(
-                f"append schema mismatch vs v{cur} of {path}: table has "
-                f"{prev.schema_json} but frame has {df.schema.json()} — "
-                "overwrite to change the schema"
-            )
-
-    # appends AND overwrites inherit the table's existing stats columns
-    # (restricted to columns the new frame still has), so pruning stays
-    # uniform without re-passing stats_cols per batch and an overwrite
-    # doesn't silently lose it (review find)
-    eff_stats_cols = tuple(stats_cols)
-    if not eff_stats_cols and prev is not None and prev.file_stats:
-        eff_stats_cols = tuple(
-            c for c in _stats_cols_of(prev) if c in df.columns)
-
-    new_version = (cur or 0) + 1
-    new_files, new_rows, new_stats = _stage_files(
-        df, path, new_version, stats_cols=eff_stats_cols)
-
-    inherit = mode == "append" and prev is not None
-    base = prev.files if inherit else []
-    base_rows = prev.rows if inherit else 0
-    base_stats = dict(prev.file_stats) if inherit else {}
-    base_stats.update(new_stats)
-    base_file_rows = dict(prev.file_rows) if inherit else {}
-    base_file_rows.update(new_rows)
-    prev_seq = prev.batch_seq if prev is not None else -1
-    manifest = {
-        "version": new_version,
-        "ts": time.time(),
-        "operation": mode,
-        "files": base + new_files,
-        "rows": base_rows + sum(new_rows.values()),
-        "parent": cur,
-        "batch_id": batch_id,
-        "batch_seq": max(prev_seq, batch_id if batch_id is not None else -1),
-        "schema": df.schema.json(),
-        "file_stats": base_stats,
-        "file_rows": base_file_rows,
-    }
-    return _commit_manifest(path, new_version, manifest, new_files)
+    return _write(df, path, mode, prev, stats_cols)
 
 
 def commit_stream_batch(
@@ -377,35 +406,83 @@ def commit_stream_batch(
     path: str,
     batch_id: int,
     mode: str = "append",
+    app_id: str | None = None,
 ) -> Snapshot | None:
-    """Idempotent micro-batch commit — the Iceberg exactly-once
-    ``foreachBatch`` recipe: micro-batch ids are monotone, so a batch
-    whose id is ≤ the table's running ``batch_seq`` is a RETRY REPLAY of
-    work that already landed, and the commit no-ops (returns None).
-    Structured Streaming re-runs a failed batch with the same id after
-    restart; with a plain parquet append that double-appends
-    (at-least-once) — with this gate the routed sink is exactly-once.
-    A landed batch returns :func:`commit`'s Snapshot, whose
-    ``added_files`` hold exactly this batch's rows (``added_rows`` of
-    them).
+    """Idempotent micro-batch commit — the Iceberg/Delta exactly-once
+    ``foreachBatch`` recipe, gated per stream. ``app_id`` names the stream
+    (``run_streaming_pipeline`` passes its query's checkpoint-stable id;
+    None is one default stream), and a stream's micro-batch ids are
+    monotone, so against the last id the table holds for that stream:
+
+    - an EQUAL id is a RETRY REPLAY of work that already landed, and the
+      commit no-ops (returns None). Structured Streaming re-runs a failed
+      batch with the same id after restart; with a plain parquet append
+      that double-appends (at-least-once) — with this gate the routed sink
+      is exactly-once;
+    - a LOWER id means the stream's ids went backwards and raises
+      :class:`BatchRegression` — landing it could duplicate rows,
+      skipping it could lose them;
+    - a higher id, or any id of a stream the table has not seen (a fresh
+      checkpoint, whose ids restart at 0), lands and returns the commit's
+      Snapshot, whose ``added_files`` hold exactly this batch's rows
+      (``added_rows`` of them).
 
     The gate reads ONE manifest (the current one) — O(1) per batch — and
-    because every commit, including maintenance commits (merge/rollback/
-    compaction-style rewrites), carries the running ``batch_seq``
-    forward, expiring old batch-bearing manifests cannot void it
-    (review finds: the first version scanned all manifests per batch and
-    lost the gate entirely once expiry dropped them)."""
-    cur = current_version(path)
-    if cur is not None and \
-            _load_manifest(path, cur).batch_seq >= batch_id:
+    the commit builds on that same read. Every commit, including
+    maintenance commits (merge/rollback/compaction), carries the stream
+    map forward, so expiring old batch-bearing manifests cannot void the
+    gate (review finds: the first version scanned all manifests per batch
+    and lost the gate entirely once expiry dropped them)."""
+    prev = _current(path)
+    app_id = app_id or ""
+    last = -1 if prev is None else prev.streams.get(app_id, -1)
+    if batch_id < last:
+        raise BatchRegression(
+            f"stream {app_id!r} offered batch {batch_id} to {path} after "
+            f"committing batch {last}")
+    if batch_id == last:
         return None
-    return commit(df, path, mode=mode, batch_id=batch_id)
+    return _write(df, path, mode, prev, batch=(app_id, batch_id))
 
 
 def snapshots(path: str) -> list:
     """Committed history, oldest first by NUMERIC version (expired
     versions absent)."""
     return [_load_manifest(path, v) for v in _versions(path)]
+
+
+def _resolve(path: str, version: int | None = None,
+             as_of_ts: float | None = None) -> Snapshot:
+    """The snapshot a read pins: ``version``, else the latest committed at
+    or before ``as_of_ts``, else the current one."""
+    if version is not None and as_of_ts is not None:
+        raise ValueError("pass version OR as_of_ts, not both")
+    if as_of_ts is not None:
+        eligible = [s for s in snapshots(path) if s.ts <= as_of_ts]
+        if not eligible:
+            raise ValueError(f"no snapshot of {path} at or before {as_of_ts}")
+        return eligible[-1]
+    if version is None:
+        version = current_version(path)
+        if version is None:
+            raise ValueError(f"{path} has no committed snapshots")
+    return _load_manifest(path, version)
+
+
+def _read(spark: SparkSession, path: str, snap: Snapshot,
+          files: list) -> DataFrame:
+    """``files`` of ``snap`` as one explicit-path scan; no files reads
+    typed-empty from the schema ``snap`` pins."""
+    if files:
+        return spark.read.parquet(*[os.path.join(path, f) for f in files])
+    if snap.schema_json is None:
+        raise ValueError(
+            f"snapshot v{snap.version} of {path} has no files to read and "
+            "pins no schema")
+    from pyspark.sql.types import StructType
+
+    return spark.createDataFrame(
+        [], StructType.fromJson(json.loads(snap.schema_json)))
 
 
 def read_snapshot(
@@ -417,29 +494,8 @@ def read_snapshot(
     """Read the table as of a version (time travel). Default: current.
     ``as_of_ts`` resolves to the latest snapshot committed at or before
     that timestamp."""
-    if version is not None and as_of_ts is not None:
-        raise ValueError("pass version OR as_of_ts, not both")
-    if as_of_ts is not None:
-        eligible = [s for s in snapshots(path) if s.ts <= as_of_ts]
-        if not eligible:
-            raise ValueError(f"no snapshot of {path} at or before {as_of_ts}")
-        version = eligible[-1].version
-    if version is None:
-        version = current_version(path)
-        if version is None:
-            raise ValueError(f"{path} has no committed snapshots")
-    snap = _load_manifest(path, version)
-    if not snap.files:
-        # empty snapshot: typed-empty read from the pinned schema
-        if snap.schema_json is None:
-            raise ValueError(
-                f"snapshot v{version} of {path} lists no files and pins "
-                "no schema")
-        from pyspark.sql.types import StructType
-
-        return spark.createDataFrame(
-            [], StructType.fromJson(json.loads(snap.schema_json)))
-    return spark.read.parquet(*[os.path.join(path, f) for f in snap.files])
+    snap = _resolve(path, version, as_of_ts)
+    return _read(spark, path, snap, snap.files)
 
 
 def scan_snapshot(
@@ -457,12 +513,7 @@ def scan_snapshot(
     prune what wasn't measured). The caller still applies the real
     predicate — pruning only shrinks the scan set, never changes results
     (tests assert both). Requires a commit made with ``stats_cols``."""
-    if version is None:
-        version = current_version(path)
-        if version is None:
-            raise ValueError(f"{path} has no committed snapshots")
-    snap = _load_manifest(path, version)
-    stats = snap.file_stats or {}
+    snap = _resolve(path, version)
 
     import datetime as _dt
 
@@ -478,7 +529,7 @@ def scan_snapshot(
         return a, b
 
     def keep(rel):
-        st = stats.get(rel, {}).get(col)
+        st = snap.file_stats.get(rel, {}).get(col)
         if st is None:
             return True
         fmin, fmax = _stats_decode(st[0]), _stats_decode(st[1])
@@ -500,17 +551,7 @@ def scan_snapshot(
             ) from None
         return True
 
-    files = [f for f in snap.files if keep(f)]
-    if not files:
-        from pyspark.sql.types import StructType
-
-        if snap.schema_json is None:
-            raise ValueError(
-                f"snapshot v{version} of {path} pruned to zero files and "
-                "pins no schema")
-        return spark.createDataFrame(
-            [], StructType.fromJson(json.loads(snap.schema_json)))
-    return spark.read.parquet(*[os.path.join(path, f) for f in files])
+    return _read(spark, path, snap, [f for f in snap.files if keep(f)])
 
 
 def merge_upsert(
@@ -533,16 +574,17 @@ def merge_upsert(
     count from the manifest (``file_stats`` / ``file_rows``, recorded at
     commit time) and opens a footer only for a file the manifest lacks
     them for (one written under an older manifest, or a column without
-    usable stats); the footer path shares ``compaction.footer_range`` with
-    ``delete_ids`` (one copy of the row-group statistics subtleties). Only
-    files whose [min, max] for ``key_col`` intersects an update key are
-    re-read, anti-joined against the (broadcast) update keys — a JOIN,
-    not a million-literal ``isin`` expression — and rewritten together
-    with the updates as new data files. NULL-keyed table rows always
-    survive (a merge must never drop un-addressed rows); NULL-keyed
-    update rows match nothing and insert as plain rows. Duplicate keys
-    WITHIN the updates raise — real MERGE INTO rejects multiple source
-    matches rather than silently writing duplicate keys.
+    usable stats); the footer path shares ``compaction.footer_ranges`` with
+    ``delete_ids`` and :func:`_stage_files` (one copy of the row-group
+    statistics subtleties). Only files whose [min, max] for ``key_col``
+    intersects an update key are re-read, anti-joined against the
+    (broadcast) update keys — a JOIN, not a million-literal ``isin``
+    expression — and rewritten together with the updates as new data
+    files. NULL-keyed table rows always survive (a merge must never drop
+    un-addressed rows); NULL-keyed update rows match nothing and insert as
+    plain rows. Duplicate keys WITHIN the updates raise — real MERGE INTO
+    rejects multiple source matches rather than silently writing duplicate
+    keys.
 
     Update keys are collected driver-side under ``max_keys`` (the
     bounded-collect guard pattern) for the footer pruning; beyond that,
@@ -556,18 +598,10 @@ def merge_upsert(
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
-    from .compaction import footer_range
-
-    cur = current_version(path)
-    if cur is None:
+    snap = _current(path)
+    if snap is None:
         return commit(updates, path, mode="append")
-    snap = _load_manifest(path, cur)
-    if snap.schema_json is not None and \
-            _schema_key(snap.schema_json) != \
-            _schema_key(updates.schema.json()):
-        raise ValueError(
-            f"merge schema mismatch vs v{cur} of {path} — updates must "
-            "match the table schema exactly")
+    _check_schema(snap, updates.schema.json(), path, "merge")
     key_frame = updates.select(key_col).where(
         F.col(key_col).isNotNull())
     dup = key_frame.groupBy(key_col).count().where("count > 1") \
@@ -589,9 +623,7 @@ def merge_upsert(
         if st is not None and n is not None:
             return (_stats_decode(st[0]), _stats_decode(st[1])), n
         md = pq.ParquetFile(os.path.join(path, rel)).metadata
-        idx = _top_level_column_index(md)
-        return (footer_range(md, idx[key_col]) if key_col in idx else None,
-                md.num_rows)
+        return footer_ranges(md, [key_col]).get(key_col), md.num_rows
 
     untouched, touched, untouched_rows = [], [], 0
     for rel in snap.files:
@@ -607,34 +639,20 @@ def merge_upsert(
         untouched.append(rel)
         untouched_rows += n
 
-    new_version = cur + 1
+    to_write = updates
     if touched:
-        survivors = spark.read.parquet(
-            *[os.path.join(path, f) for f in touched]
-        ).join(
+        to_write = _read(spark, path, snap, touched).join(
             F.broadcast(updates.select(key_col).distinct()
                         .where(F.col(key_col).isNotNull())),
             on=key_col, how="left_anti",
-        )
-        to_write = survivors.unionByName(updates)
-    else:
-        to_write = updates
-    new_files, new_rows, new_stats = _stage_files(
-        to_write, path, new_version, stats_cols=_stats_cols_of(snap))
-    untouched_set = set(untouched)
-    stats = {f: st for f, st in snap.file_stats.items() if f in untouched_set}
-    stats.update(new_stats)
-    file_rows = {f: n for f, n in snap.file_rows.items() if f in untouched_set}
-    file_rows.update(new_rows)
-    manifest = {
-        "version": new_version, "ts": time.time(), "operation": "merge",
-        "files": untouched + new_files,
-        "rows": untouched_rows + sum(new_rows.values()),
-        "parent": cur, "schema": updates.schema.json(),
-        "batch_seq": snap.batch_seq, "file_stats": stats,
-        "file_rows": file_rows,
-    }
-    return _commit_manifest(path, new_version, manifest, new_files)
+        ).unionByName(updates)
+    keep = set(untouched)
+    carried = replace(
+        snap, files=untouched, rows=untouched_rows,
+        file_stats={f: st for f, st in snap.file_stats.items() if f in keep},
+        file_rows={f: n for f, n in snap.file_rows.items() if f in keep})
+    return _commit(path, snap, "merge", updates.schema.json(), carried,
+                   _stage_files(to_write, path, snap))
 
 
 def compact(
@@ -648,55 +666,31 @@ def compact(
     fold into a few scan-friendly ones; history keeps the old layout
     until :func:`expire_snapshots` reclaims it). No-op (returns None)
     when the table already has one file or is empty — an idempotent
-    nightly run costs a metadata probe. ``batch_seq`` carries forward, so
-    compaction never disturbs the exactly-once gate."""
-    cur = current_version(path)
-    if cur is None:
-        return None
-    snap = _load_manifest(path, cur)
-    if len(snap.files) <= 1:
+    nightly run costs a metadata probe. The stream map carries forward,
+    so compaction never disturbs the exactly-once gate."""
+    snap = _current(path)
+    if snap is None or len(snap.files) <= 1:
         return None
     total = sum(os.path.getsize(os.path.join(path, f)) for f in snap.files)
     n = max(1, -(-total // (target_file_mb * 1024 * 1024)))
     if n >= len(snap.files):
         return None                  # already at/under target geometry
-    df = spark.read.parquet(*[os.path.join(path, f) for f in snap.files])
-    new_version = cur + 1
-    new_files, new_rows, new_stats = _stage_files(
-        df.coalesce(int(n)), path, new_version,
-        stats_cols=_stats_cols_of(snap))
-    manifest = {
-        "version": new_version, "ts": time.time(), "operation": "compact",
-        "files": new_files, "rows": sum(new_rows.values()), "parent": cur,
-        "schema": snap.schema_json, "batch_seq": snap.batch_seq,
-        "file_stats": new_stats, "file_rows": new_rows,
-    }
-    return _commit_manifest(path, new_version, manifest, new_files)
+    df = _read(spark, path, snap, snap.files).coalesce(int(n))
+    return _commit(path, snap, "compact", snap.schema_json,
+                   staged=_stage_files(df, path, snap))
 
 
 def rollback(path: str, version: int) -> Snapshot:
     """Commit a NEW version whose content is ``version``'s file list —
-    history stays append-only (Iceberg rollback_to_snapshot). The running
-    ``batch_seq`` is carried from CURRENT, not the rollback target: a
-    replay of a rolled-back batch stays a no-op (re-ingest deliberately,
-    with fresh batch ids)."""
+    history stays append-only (Iceberg rollback_to_snapshot). The stream
+    map is carried from CURRENT, not the rollback target: a replay of a
+    rolled-back batch stays a no-op (re-ingest deliberately, with fresh
+    batch ids). The file list is exactly ``version``'s, so its stats and
+    row counts ride along — dropping them would silently kill pruning AND
+    the append-inheritance chain for the whole table (review find)."""
     old = _load_manifest(path, version)
-    cur = current_version(path)
-    cur_seq = _load_manifest(path, cur).batch_seq if cur is not None else -1
-    new_version = (cur or 0) + 1
-    manifest = {
-        "version": new_version, "ts": time.time(),
-        "operation": f"rollback-to-v{version}",
-        "files": old.files, "rows": old.rows, "parent": cur,
-        "schema": old.schema_json, "batch_seq": cur_seq,
-        # the file list is exactly old.files, so old's stats and row
-        # counts are exactly valid — dropping them would silently kill
-        # pruning AND the append-inheritance chain for the whole table
-        # (review find)
-        "file_stats": old.file_stats,
-        "file_rows": old.file_rows,
-    }
-    return _commit_manifest(path, new_version, manifest)
+    return _commit(path, _current(path), f"rollback-to-v{version}",
+                   old.schema_json, old)
 
 
 def expire_snapshots(

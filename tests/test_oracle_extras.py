@@ -1,12 +1,13 @@
-"""Oracle coverage for library queries that live OUTSIDE the 50-entry
+"""Oracle coverage for a library query that lives OUTSIDE the 50-entry
 driver catalog (the driver samples the first 50 registered entries, so the
-round-3 consolidation moved these two here):
+round-3 consolidation moved it here):
 
 - q_topk_orders — top-k by aggregate with deterministic tiebreak
   (TakeOrderedAndProject); its plan shape also appears in
   s_knn_bruteforce's two-phase top-k.
-- p_grok_pandas — the Arrow-batched mapInPandas grok variant, asserted
-  equal to the JVM regexp_extract path on the same documents.
+
+The Arrow-batched grok variant (``parse.grok_extract_pandas``) is asserted
+equal to the JVM ``grok_extract`` path in tests/test_parse.py.
 """
 
 import os
@@ -14,7 +15,7 @@ import os
 import pytest
 
 from hypertrace_ingester_spark.oracle import compare, duckdb_connection
-from hypertrace_ingester_spark.queries import p_grok_extract, p_grok_pandas, q_topk_orders
+from hypertrace_ingester_spark.queries import q_topk_orders
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -39,10 +40,3 @@ def test_topk_orders_matches_oracle(spark):
     problems = compare(spark_pdf, duck_pdf)
     assert not problems, "; ".join(problems)
 
-
-def test_grok_pandas_equals_jvm_path(spark):
-    jvm = p_grok_extract(spark, SF_DIR).select("doc_id", "first_word").toPandas()
-    pandas_path = p_grok_pandas(spark, SF_DIR).toPandas()
-    merged = jvm.merge(pandas_path, on="doc_id", suffixes=("_jvm", "_pd"))
-    assert len(merged) == len(jvm) == len(pandas_path)
-    assert (merged["first_word_jvm"] == merged["first_word_pd"]).all()

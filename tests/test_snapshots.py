@@ -122,8 +122,8 @@ def test_expire_snapshots_gc(spark, tmp_path):
 
 def test_commit_stream_batch_is_idempotent(spark, tmp_path):
     """The exactly-once gate: a retry replay (same batch_id) no-ops; a
-    later batch id lands; an OLDER id (impossible in practice, but the
-    monotone contract) also no-ops."""
+    later batch id lands; an OLDER id within the same stream (impossible
+    in practice, but the monotone contract) raises BatchRegression."""
     t = str(tmp_path / "tbl")
     s = sn.commit_stream_batch(_df(spark, 0, 4), t, batch_id=0)
     assert s is not None and s.batch_id == 0
@@ -131,8 +131,47 @@ def test_commit_stream_batch_is_idempotent(spark, tmp_path):
     assert sn.read_snapshot(spark, t).count() == 4       # no double-append
     s2 = sn.commit_stream_batch(_df(spark, 4, 6), t, batch_id=1)
     assert s2.batch_id == 1
-    assert sn.commit_stream_batch(_df(spark, 9, 10), t, batch_id=0) is None
+    with pytest.raises(sn.BatchRegression):
+        sn.commit_stream_batch(_df(spark, 9, 10), t, batch_id=0)
     assert sn.read_snapshot(spark, t).count() == 6
+
+
+def test_regressed_batch_id_within_a_stream_raises(spark, tmp_path):
+    """The gate is kept per stream: an id below the stream's last one
+    raises a named error and lands nothing; another stream's ids are
+    independent of it; an equal id is still a replay no-op."""
+    t = str(tmp_path / "tbl")
+    assert sn.commit_stream_batch(_df(spark, 0, 3), t, 5, app_id="a")
+    with pytest.raises(sn.BatchRegression, match="batch 4 .* after committing batch 5"):
+        sn.commit_stream_batch(_df(spark, 3, 6), t, 4, app_id="a")
+    assert sn.commit_stream_batch(_df(spark, 3, 6), t, 0, app_id="b")
+    assert sn.commit_stream_batch(_df(spark, 3, 6), t, 0, app_id="b") is None
+    assert sn.commit_stream_batch(_df(spark, 6, 9), t, 5, app_id="a") is None
+    assert sn.read_snapshot(spark, t).count() == 6
+    assert sn.snapshots(t)[-1].streams == {"a": 5, "b": 0}
+
+
+def test_legacy_batch_seq_gates_the_default_stream(spark, tmp_path):
+    """A manifest written before per-stream gates (a table-wide
+    ``batch_seq``, no stream map) still loads, and its ``batch_seq`` is
+    the default stream's last batch id."""
+    t = str(tmp_path / "tbl")
+    sn.commit_stream_batch(_df(spark, 0, 3), t, 0)
+    sn.commit_stream_batch(_df(spark, 3, 5), t, 1)
+    mpath = os.path.join(t, "_snapshots", f"v{sn.current_version(t):06d}.json")
+    with open(mpath) as fh:
+        manifest = json.load(fh)
+    del manifest["streams"]
+    manifest["batch_seq"] = 1
+    with open(mpath, "w") as fh:
+        json.dump(manifest, fh)
+    assert sn.snapshots(t)[-1].streams == {"": 1}
+    assert sn.commit_stream_batch(_df(spark, 3, 5), t, 1) is None
+    with pytest.raises(sn.BatchRegression):
+        sn.commit_stream_batch(_df(spark, 0, 3), t, 0)
+    assert sn.commit_stream_batch(_df(spark, 5, 6), t, 2)
+    assert sn.commit_stream_batch(_df(spark, 6, 7), t, 0, app_id="fresh")
+    assert sn.read_snapshot(spark, t).count() == 7
 
 
 def test_streaming_pipeline_snapshot_sink_exactly_once(spark, tmp_path):
@@ -173,17 +212,47 @@ def test_streaming_pipeline_snapshot_sink_exactly_once(spark, tmp_path):
            .agg(F.count("*").alias("n")).collect()}
     assert got == m["stages"]["route"]["sink_counts"]
 
-    # replay an already-committed batch id: exactly-once means a no-op
+    # replay the stream's last committed batch id: exactly-once means a
+    # no-op (an older id of the stream raises BatchRegression instead)
     ctx = enrich_ops.EnrichContext(
         endpoints=datagen.endpoints_dim(spark),
         services=datagen.services_dim(spark),
         status_codes=datagen.status_codes_dim(spark),
     )
     before = sn.read_snapshot(spark, table).count()
-    process_batch(spark.read.parquet(in_dir), hist[0].batch_id, cfg, ctx,
-                  datagen.route_rules_dim(spark))
+    (app_id,) = hist[-1].streams
+    process_batch(spark.read.parquet(in_dir), hist[-1].batch_id, cfg, ctx,
+                  datagen.route_rules_dim(spark), app_id=app_id)
     assert sn.read_snapshot(spark, table).count() == before
     assert len(sn.snapshots(table)) == len(hist)
+
+
+def test_fresh_checkpoint_against_existing_table_loses_no_rows(spark, tmp_path):
+    """A new checkpoint directory writing to an existing snapshot table is
+    a new stream: its batch ids restart at 0, and every batch still lands
+    (a table-wide gate no-opped them all and dropped their rows
+    silently). The table then holds one stream per checkpoint."""
+    import shutil
+
+    from hypertrace_ingester_spark import datagen
+    from hypertrace_ingester_spark.plans.pipeline import PipelineConfig
+    from hypertrace_ingester_spark.plans.streaming_pipeline import run_streaming_pipeline
+
+    seqs = datagen.generate_sequences(spark, 600)
+    in_dir = str(tmp_path / "seqs")
+    seqs.repartition(2).write.parquet(in_dir)
+    out = str(tmp_path / "out")
+    cfg = PipelineConfig(out_dir=out, snapshot_routed=True)
+    table = out + "/routed_snap"
+    counts = []
+    for _ in range(2):
+        shutil.rmtree(os.path.join(out, "_stream_checkpoint"), ignore_errors=True)
+        stream = (spark.readStream.schema(seqs.schema)
+                  .option("maxFilesPerTrigger", 1).parquet(in_dir))
+        run_streaming_pipeline(spark, stream, cfg).awaitTermination(180)
+        counts.append(sn.read_snapshot(spark, table).count())
+    assert counts[0] > 0 and counts[1] == 2 * counts[0]
+    assert len(sn.snapshots(table)[-1].streams) == 2
 
 
 def test_schema_enforcement_and_empty_reads(spark, tmp_path):
@@ -292,14 +361,34 @@ def test_orphan_data_files_swept_after_grace(spark, tmp_path):
 def test_batch_seq_survives_expiry_and_maintenance(spark, tmp_path):
     """The exactly-once gate must hold after maintenance commits and
     snapshot expiry drop every batch_id-bearing manifest (review find:
-    a history-scan gate was voided here). batch_seq rides every
-    manifest."""
+    a history-scan gate was voided here). The per-stream map rides every
+    manifest, and every write path — commit, merge, compaction, rollback
+    — writes a manifest with the same keys."""
     t = str(tmp_path / "tbl")
+    written = []
+
+    def manifest():
+        mpath = os.path.join(t, "_snapshots", f"v{sn.current_version(t):06d}.json")
+        with open(mpath) as fh:
+            written.append(json.load(fh))
+
     assert sn.commit_stream_batch(_df(spark, 0, 3), t, batch_id=0) is not None
+    manifest()
     assert sn.commit_stream_batch(_df(spark, 3, 5), t, batch_id=1) is not None
-    # maintenance: a merge and a rollback, both batch_id=None
+    manifest()
+    sn.commit(_df(spark, 10, 12), t)
+    manifest()
+    # maintenance: a merge, a compaction and a rollback, all batch_id=None
     sn.merge_upsert(spark, _df(spark, 4, 6), t, "id")
+    manifest()
+    assert sn.compact(spark, t, target_file_mb=1) is not None
+    manifest()
     sn.rollback(t, sn.current_version(t) - 1)
+    manifest()
+    assert [m["operation"] for m in written] == [
+        "append", "append", "append", "merge", "compact", "rollback-to-v4"]
+    assert len({frozenset(m) for m in written}) == 1, [sorted(m) for m in written]
+    assert [m["streams"] for m in written] == [{"": 0}] + [{"": 1}] * 5
     # expire everything but the tail: all batch-bearing manifests gone
     sn.expire_snapshots(t, keep_last=2, orphan_grace_sec=3600)
     assert all(s.batch_id is None for s in sn.snapshots(t))
