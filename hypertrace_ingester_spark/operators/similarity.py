@@ -612,8 +612,9 @@ def semdedup(
     Scale shape: one Arrow pass to assign cells, one self-join shuffle
     keyed by cell (per-cell work bounded by cell size — raise ``n_cells``
     so cells stay bounded at corpus scale), narrow CC rounds, and one
-    partial-agg'd min(struct) per duplicate group. The centroid dim is
-    ``n_cells`` rows, broadcast.
+    windowed min(struct) per duplicate group over the labeled rows, which
+    reads the signer output once. The centroid dim is ``n_cells`` rows,
+    broadcast.
     """
     from pyspark.sql import types as T
 
@@ -654,21 +655,20 @@ def semdedup(
         F.col("doc_id").alias(id_col),
         F.col("cluster_id").alias("semdedup_cluster"),
     )
-    labeled = scored.join(clusters, id_col, "left")
-    keepers = (
-        labeled.where(F.col("semdedup_cluster").isNotNull())
-        .groupBy("semdedup_cluster")
-        .agg(
-            F.min(
-                F.struct(F.col("cent_sim").alias("s"), F.col(id_col).alias("i"))
-            ).alias("k")
-        )
-        .select(F.col("k.i").alias(id_col), F.lit(True).alias("_keep"))
-    )
+    # the keep rule in the same pass as the labels: a window per duplicate
+    # group, each non-duplicate row its own group (keyed by its id, not by
+    # the null cluster, which would gather them all into one partition),
+    # so the signer output is read once
+    cluster = F.col("semdedup_cluster")
+    group = Window.partitionBy(cluster, F.when(cluster.isNull(), F.col(id_col)))
+    keeper = F.min(
+        F.struct(F.col("cent_sim").alias("s"), F.col(id_col).alias("i"))
+    ).over(group)["i"]
     return (
-        labeled.join(keepers, id_col, "left")
-        .where(F.col("semdedup_cluster").isNull() | F.col("_keep").isNotNull())
-        .drop("_keep", "vnorm")
+        scored.join(clusters, id_col, "left")
+        .withColumn("_keeper", keeper)
+        .where(cluster.isNull() | (F.col("_keeper") == F.col(id_col)))
+        .drop("_keeper", "vnorm")
     )
 
 

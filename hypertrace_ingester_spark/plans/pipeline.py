@@ -11,14 +11,20 @@ lineage + metrics manifest the north rule requires.
 
 The reference's metrics generator and view writers are separate
 sub-topologies on their own stream threads (HypertraceIngester.java:52-77):
-none waits for another. ``run_pipeline`` keeps that shape for its Spark
-actions. The per-tenant counters are collected while the routed fan-out is
-written, and the metrics write runs beside the histogram write; a helper
-joins them all before the call returns or raises. Per-sink counts are
-summed on the driver from the histogram output (a few rows, no Spark job)
-instead of a Spark read-back of the metrics output. With the session's
+none waits for another, and the metrics generator reads views already
+emitted. ``run_pipeline`` keeps that shape. The per-tenant counters are
+collected while the routed fan-out is written. The sink metrics and the
+token histogram are then computed from the fan-out's files on the driver
+with pyarrow (``aggregate.read_local``, ``sink_metrics_local``,
+``token_histogram_local``; the streaming face's landed batches use the same
+helpers), while those files hold at most
+``aggregate.LOCAL_METRICS_MAX_ROWS`` rows; above it they are read back
+through Spark and the two aggregate writes run concurrently. Per-sink
+counts are summed from the histogram in memory. A helper joins every
+concurrent action before the call returns or raises. With the session's
 default dims built once (``datagen.default_dims``), a warm call on 20k
-rows went from 16 Spark jobs to 9.
+rows went from 16 Spark jobs to 9, and with the driver aggregates to 5:
+the counters collect (2), the two dim broadcasts and the fan-out write.
 """
 
 from __future__ import annotations
@@ -44,6 +50,7 @@ from ..operators import group as group_ops
 from ..operators import parse as parse_ops
 from ..operators import route as route_ops
 from ..sources import bucketing
+from ..sources.compaction import parquet_files
 
 
 @dataclass
@@ -227,6 +234,12 @@ def _partition_lineage(df: DataFrame) -> list[dict]:
     return [{"partition_id": r["partition_id"], "rows": r["count"]} for r in rows]
 
 
+def _read_back(spark: SparkSession, routed: DataFrame, routed_dir: str) -> DataFrame:
+    """The fan-out of ``routed`` read back through Spark. The explicit
+    schema keeps an empty fan-out (no files, nothing to infer) readable."""
+    return spark.read.schema(routed.schema).parquet(routed_dir)
+
+
 def run_pipeline(
     spark: SparkSession,
     sequences: DataFrame,
@@ -240,14 +253,19 @@ def run_pipeline(
 
     ``ctx`` and ``route_rules`` default to the session's
     :func:`datagen.default_dims`, so repeated calls in one session collect
-    the composite dim and build the hot chain once. After the routed
-    fan-out, the metrics and histogram writes run concurrently, and the
-    per-tenant counters are collected beside the fan-out itself; every
-    action has finished when the call returns or raises. The manifest's
-    ``stage_walls`` (beside ``stages``, not inside: stage entries stay pure
-    counts) gives the wall seconds of ``build`` (dims and chain), ``route``
-    (through the fan-out write), ``aggregate`` (until every post-write
-    action is done) and ``manifest``.
+    the composite dim and build the hot chain once. The per-tenant counters
+    are collected beside the routed fan-out. A fan-out of at most
+    ``aggregate.LOCAL_METRICS_MAX_ROWS`` rows (summed from the file
+    footers) gets its metrics and histogram on the driver, each written as
+    its directory's one parquet file, with no Spark job; a larger one is
+    read back through Spark, and its two aggregate writes run concurrently.
+    Every action has finished when the call returns or raises. The
+    manifest's ``stage_walls`` (beside ``stages``, not inside: stage
+    entries stay pure counts) gives the wall seconds of ``build`` (dims and
+    chain), ``route`` (through the fan-out write), ``aggregate`` (until
+    both aggregates are written and the counters are collected) and
+    ``manifest``. ``lineage=True`` adds per-partition row counts of the
+    routed files, read back through Spark.
 
     With ``resume=True``, stages already marked complete in the manifest are
     skipped and their checkpointed output is re-read — restart-safe the way
@@ -341,34 +359,42 @@ def run_pipeline(
     # re-materializes the wide token payload.
     routed = chain.route(alive)
     routed_dir = os.path.join(cfg.out_dir, "routed")
+    metrics_dir = os.path.join(cfg.out_dir, "metrics")
     histogram_dir = os.path.join(cfg.out_dir, "histogram")
     with _concurrent_actions() as submit:
         # the counters do not read the routed output: their job overlaps
-        # the fan-out write
+        # the fan-out write and the aggregates
         tenant_rows = submit(counters.collect)
         if not (resume and manifest["stages"].get("route", {}).get("complete")):
             route_ops.fan_out(routed, routed_dir, cfg.salt_buckets)
         lap("route")
-        # explicit schema: robust to an empty fan-out (no files ⇒ no inference)
-        routed_back = spark.read.schema(routed.schema).parquet(routed_dir)
 
         # ---- AGGREGATE -------------------------------------------------
-        # two pruned scans of the routed parquet (neither touches tokens),
-        # written concurrently
-        metrics = agg_ops.sink_metrics(routed_back, cfg.metric_window_ms)
-        metrics_dir = os.path.join(cfg.out_dir, "metrics")
-        submit(lambda: metrics.write.mode("overwrite").parquet(metrics_dir))
-        agg_ops.token_histogram(routed_back).write.mode("overwrite").parquet(histogram_dir)
+        # a fan-out within the bound is aggregated on the driver from its
+        # files (no Spark job); a larger one is read back through Spark in
+        # two pruned scans (neither touches tokens), written concurrently
+        files = parquet_files(routed_dir)
+        if agg_ops.footer_rows(files) <= agg_ops.LOCAL_METRICS_MAX_ROWS:
+            routed_local = agg_ops.read_local(files)
+            agg_ops.overwrite_partition(
+                agg_ops.sink_metrics_local(routed_local, cfg.metric_window_ms), metrics_dir)
+            hist = agg_ops.token_histogram_local(routed_local)
+            agg_ops.overwrite_partition(hist, histogram_dir)
+        else:
+            routed_back = _read_back(spark, routed, routed_dir)
+            metrics = agg_ops.sink_metrics(routed_back, cfg.metric_window_ms)
+            submit(lambda: metrics.write.mode("overwrite").parquet(metrics_dir))
+            agg_ops.token_histogram(routed_back).write.mode("overwrite").parquet(histogram_dir)
+            hist = pq.read_table(histogram_dir, columns=["sink", "num_rows"])
     lap("aggregate")
 
     # ---- manifest: per-sink counts + per-tenant counters + lineage ------
-    # sink counts sum the histogram output (at most sinks × token buckets
-    # rows), read on the driver: no Spark job. An Observation on the write
-    # would also cost no job, but on Spark 4.1 it leaves the session
-    # unserializable (SparkSession.observationManager), which breaks every
-    # later Spark ML model UDF in that session.
+    # sink counts sum the histogram (at most sinks × token buckets rows) on
+    # the driver: no Spark job. An Observation on a write would also cost
+    # no job, but on Spark 4.1 it leaves the session unserializable
+    # (SparkSession.observationManager), which breaks every later Spark ML
+    # model UDF in that session.
     sink_counts: dict = {}
-    hist = pq.read_table(histogram_dir, columns=["sink", "num_rows"])
     for sink, n in zip(hist["sink"].to_pylist(), hist["num_rows"].to_pylist()):
         sink_counts[sink] = sink_counts.get(sink, 0) + n
     tenant_counters = [r.asDict() for r in tenant_rows.result()]
@@ -398,7 +424,8 @@ def run_pipeline(
     manifest["tenant_counters"] = tenant_counters
     manifest["total_routed_rows"] = int(sum(sink_counts.values()))
     if lineage:
-        manifest["stages"]["route"]["partition_lineage"] = _partition_lineage(routed_back)
+        manifest["stages"]["route"]["partition_lineage"] = _partition_lineage(
+            _read_back(spark, routed, routed_dir))
     lap("manifest")
     manifest["elapsed_sec"] = round(time.time() - t0, 3)
     _write_manifest(cfg.out_dir, manifest)

@@ -5,7 +5,8 @@ The batch DAG (plans/pipeline.py) and this streaming face share every
 transformation: ``foreachBatch`` applies the identical
 parse → enrich → route stages to each micro-batch and APPENDS to the same
 partitioned sink layout, and appends incremental per-batch windowed
-metrics (mergeable partial counts; use streaming/jobs.streaming_metrics
+metrics (mergeable partial counts, one file per stream in each
+``metrics/batch_id=<id>`` partition; use streaming/jobs.streaming_metrics
 for the watermark-driven single-emission variant). This is the
 SURVEY §0 mapping — "read → narrow transforms → … → N sinks" with Kafka
 topic edges replaced by micro-batch lineage — and the deployment shape a
@@ -27,9 +28,11 @@ the same hook swaps to Iceberg ``writeTo(...).append()``
 exists. On that path the parse → enrich → route chain runs ONCE per batch:
 the commit executes it, and the batch metrics are computed from the files
 the commit landed instead of re-running the chain — on the driver with
-pyarrow (``aggregate.sink_metrics_local``, never reading ``tokens``), so a
-landed batch of up to ``LOCAL_METRICS_MAX_ROWS`` rows starts no Spark job
-for its metrics. On 2k-row batches (4-core box) that took a batch from 5
+pyarrow (``aggregate.read_local`` + ``aggregate.sink_metrics_local``,
+never reading ``tokens``; ``run_pipeline`` aggregates its fan-out with the
+same helpers), so a landed batch of up to
+``aggregate.LOCAL_METRICS_MAX_ROWS`` rows starts no Spark job for its
+metrics. On 2k-row batches (4-core box) that took a batch from 5
 Spark jobs to 3 and perfbench ``microbatch`` ``op_p50_s`` from 1.40 to
 1.06 s; the pyarrow partial itself takes ~4 ms.
 
@@ -45,47 +48,28 @@ and re-broadcast per batch).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
-import uuid
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators import aggregate as agg_ops
 from ..operators import enrich as enrich_ops
 from ..operators import route as route_ops
+from ..sources.compaction import parquet_files
 from .pipeline import PipelineConfig, dims_or_default, hot_chain
 
-# A landed snapshot batch of at most this many rows gets its metrics
-# partial on the driver (pyarrow over the staged files); a larger one reads
-# them back through Spark. aggregate.sink_metrics_local on a 4-core box,
-# one file, ~1 group per 2 rows: 2k rows 4 ms, 200k rows 92 ms, 1M rows
-# 0.47 s; peak Python RSS over the post-import baseline +52 MB (mostly
-# pyarrow's first-call setup), +133 MB and +286 MB.
-LOCAL_METRICS_MAX_ROWS = 1_000_000
 
-
-def _overwrite_partition(table: pa.Table, part_dir: str) -> None:
-    """Write ``table`` as the only parquet file of ``part_dir``, the way
-    ``write.mode("overwrite")`` replaces a partition: the file is staged
-    under a dot-name that readers skip, the partition's old entries are
-    removed, then the staged file is renamed into place."""
-    os.makedirs(part_dir, exist_ok=True)
-    tag = uuid.uuid4().hex
-    staged = f".tmp-{tag}"
-    pq.write_table(table, os.path.join(part_dir, staged))
-    for name in os.listdir(part_dir):
-        if name != staged:
-            old = os.path.join(part_dir, name)
-            if os.path.isdir(old):
-                shutil.rmtree(old)
-            else:
-                os.remove(old)
-    os.rename(os.path.join(part_dir, staged),
-              os.path.join(part_dir, f"part-00000-{tag}.parquet"))
+def _stream_prefix(app_id: str | None) -> str:
+    """The file-name prefix of one stream's metrics partials: every stream
+    writes its own files into a ``batch_id=<id>`` partition, so a fresh
+    checkpoint's batch ids, which restart at 0, never replace another
+    stream's partials."""
+    if app_id is None:
+        return "stream-default-"
+    return f"stream-{hashlib.md5(app_id.encode()).hexdigest()[:16]}-"
 
 
 def process_batch(
@@ -97,30 +81,34 @@ def process_batch(
     app_id: str | None = None,
 ) -> None:
     """One micro-batch: routed rows APPEND (at-least-once, the reference's
-    Kafka Streams ALOS default); per-batch metrics OVERWRITE their own
-    ``batch_id=<id>`` partition directory, so a foreachBatch retry
-    re-writes the same partition instead of double-appending partials
-    (round-2 ADVICE: downstream sums over metrics stay idempotent under
-    micro-batch retries — asserted in tests/test_streaming.py). Each
-    partition is a mergeable partial (sum downstream), the analog of the
-    reference's per-window gauge emissions; the batch pipeline's one-shot
-    metrics are the closed-input special case.
+    Kafka Streams ALOS default); per-batch metrics OVERWRITE this
+    stream's files in their ``batch_id=<id>`` partition directory
+    (``aggregate.replace_files`` with the stream's file-name prefix), so a
+    foreachBatch retry re-writes the same partial instead of
+    double-appending it (downstream sums over metrics stay idempotent under
+    micro-batch retries — asserted in tests/test_streaming.py), and
+    another stream's partial of the same batch id, say from a fresh
+    checkpoint, stays. Each partial is mergeable (sum downstream), the
+    analog of the reference's per-window gauge emissions; the batch
+    pipeline's one-shot metrics are the closed-input special case.
 
     With ``cfg.snapshot_routed`` the chain executes once per batch: the
     commit runs it, and the metrics come from the files that commit staged
-    (``Snapshot.added_files``). Up to ``LOCAL_METRICS_MAX_ROWS`` rows
-    (``Snapshot.added_rows``) the partial is computed on the driver with
-    pyarrow and written as the partition's one file — no Spark job; a
-    larger batch reads the files back column-pruned through Spark,
-    run_pipeline's ``routed_back`` pattern. A replayed ``batch_id`` makes
-    the commit no-op without running the chain, so the metrics then come
-    from ``routed`` itself (still one execution); that rewrites the
-    metrics partition of a batch whose commit landed but whose metrics
-    write was lost.
+    (``Snapshot.added_files``). Up to ``aggregate.LOCAL_METRICS_MAX_ROWS``
+    rows (``Snapshot.added_rows``) the partial is computed on the driver
+    with pyarrow and written as the stream's one file in the partition —
+    no Spark job; a larger batch reads the files back column-pruned
+    through Spark, as ``run_pipeline`` does above the same bound, and the
+    Spark partial is staged under a dot-name, then its files renamed into
+    place. A replayed ``batch_id`` makes the commit no-op without running
+    the chain, so the metrics then come from ``routed`` itself (still one
+    execution); that rewrites the metrics partial of a batch whose commit
+    landed but whose metrics write was lost.
 
     ``app_id`` names the stream for the snapshot sink's exactly-once gate
-    (``snapshots.commit_stream_batch``): ``run_streaming_pipeline`` passes
-    its query's checkpoint-stable id; None is one default stream.
+    (``snapshots.commit_stream_batch``) and for its metrics files:
+    ``run_streaming_pipeline`` passes its query's checkpoint-stable id;
+    None is one default stream.
 
     The chain comes from ``pipeline.hot_chain``: built on the first batch
     that sees this ``ctx`` with these ``route_rules`` (same object) and
@@ -129,6 +117,7 @@ def process_batch(
     routed = hot_chain(ctx, route_rules, cfg.drop_criteria).apply(batch_df)
     metrics_input = routed
     metrics_dir = os.path.join(cfg.out_dir, "metrics", f"batch_id={batch_id}")
+    prefix = _stream_prefix(app_id)
     if cfg.snapshot_routed:
         # exactly-once: idempotent snapshot commit keyed by batch_id — a
         # foreachBatch retry replay of an already-landed batch no-ops
@@ -139,9 +128,11 @@ def process_batch(
         landed = snap.commit_stream_batch(routed, table, batch_id, app_id=app_id)
         if landed is not None and landed.added_files:
             files = [os.path.join(table, f) for f in landed.added_files]
-            if landed.added_rows <= LOCAL_METRICS_MAX_ROWS:
-                _overwrite_partition(
-                    agg_ops.sink_metrics_local(files, cfg.metric_window_ms), metrics_dir)
+            if landed.added_rows <= agg_ops.LOCAL_METRICS_MAX_ROWS:
+                routed_local = agg_ops.read_local(files, agg_ops.METRIC_INPUTS)
+                agg_ops.overwrite_partition(
+                    agg_ops.sink_metrics_local(routed_local, cfg.metric_window_ms),
+                    metrics_dir, prefix)
                 return
             metrics_input = batch_df.sparkSession.read.schema(routed.schema).parquet(*files)
     else:
@@ -149,8 +140,10 @@ def process_batch(
             routed, os.path.join(cfg.out_dir, "routed"), cfg.salt_buckets,
             mode="append",
         )
-    agg_ops.sink_metrics(metrics_input, cfg.metric_window_ms).write.mode("overwrite").parquet(
-        metrics_dir)
+    stage = agg_ops.staging_path(metrics_dir, prefix)
+    agg_ops.sink_metrics(metrics_input, cfg.metric_window_ms).write.parquet(stage)
+    agg_ops.replace_files(metrics_dir, parquet_files(stage), prefix)
+    shutil.rmtree(stage)
 
 
 def run_streaming_pipeline(

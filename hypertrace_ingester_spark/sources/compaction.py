@@ -61,7 +61,8 @@ def data_files(path: str):
                 yield os.path.join(root, f)
 
 
-def _parquet_files(path: str) -> list[str]:
+def parquet_files(path: str) -> list[str]:
+    """The ``.parquet`` files among :func:`data_files`."""
     return [f for f in data_files(path) if f.endswith(".parquet")]
 
 
@@ -411,7 +412,7 @@ def clustering_stats(path: str, column: str) -> dict:
     import pyarrow.parquet as pq
 
     ranges = []
-    for fpath in _parquet_files(path):
+    for fpath in parquet_files(path):
         md = pq.ParquetFile(fpath).metadata
         idx = _top_level_column_index(md)
         if column not in idx:
@@ -493,7 +494,7 @@ def delete_ids(
     files_scanned = 0
     files_rewritten = 0
     rows_deleted = 0
-    for fpath in _parquet_files(path):
+    for fpath in parquet_files(path):
         md = pq.ParquetFile(fpath).metadata
         rng = footer_ranges(md, [id_col])
         if id_col not in rng:
@@ -525,7 +526,7 @@ def delete_ids(
             .option("parquet.page.size", str(4 * 1024 * 1024))
             .parquet(tmp)
         )
-        parts = _parquet_files(tmp)
+        parts = parquet_files(tmp)
         new_rows = sum(pq.ParquetFile(p).metadata.num_rows for p in parts)
         rows_deleted += n_rows - new_rows
         # the local Hadoop FS keeps a `.<name>.crc` sidecar per file;

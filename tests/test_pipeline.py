@@ -236,11 +236,14 @@ def test_default_dims_are_per_session(spark):
     assert other_rules.sparkSession is other
 
 
-def test_default_dims_pipeline_builds_once_and_runs_nine_jobs(spark, tmp_path, monkeypatch):
+def test_default_dims_pipeline_builds_once_and_runs_five_jobs(spark, tmp_path, monkeypatch):
     """Two default-dims calls in one session collect the composite dim
-    once, and the second call runs at most 9 Spark jobs (16 when each call
-    rebuilt the dims and ran its actions one after another). The jobs of
-    the helper threads count too: they inherit the caller's job group."""
+    once, and the second call runs at most 5 Spark jobs (16 when each call
+    rebuilt the dims and ran its actions one after another, 9 while the
+    aggregates were Spark jobs). The aggregate step, counted in its own job
+    group, starts none. The counters collect runs on a helper thread and
+    its jobs still land in the caller's job group."""
+    from hypertrace_ingester_spark.operators import aggregate as agg_ops
     from hypertrace_ingester_spark.operators import enrich as enrich_ops
 
     collected = []
@@ -251,44 +254,127 @@ def test_default_dims_pipeline_builds_once_and_runs_nine_jobs(spark, tmp_path, m
         return collect_local(*args, **kwargs)
 
     monkeypatch.setattr(enrich_ops, "collect_local", counting)
+    sc = spark.sparkContext
+    tag = f"counters-{tmp_path.name}"
+    operational_counters = agg_ops.operational_counters
+
+    class Tagged:
+        """The counters frame, its collect's jobs tagged."""
+
+        def __init__(self, df):
+            self.df = df
+
+        def collect(self):
+            sc.addJobTag(tag)
+            try:
+                return self.df.collect()
+            finally:
+                sc.removeJobTag(tag)
+
+    monkeypatch.setattr(agg_ops, "operational_counters",
+                        lambda parsed: Tagged(operational_counters(parsed)))
+    read_local = agg_ops.read_local
+    aggregate_groups = []
+
+    def in_own_group(*args, **kwargs):
+        # the aggregate step starts here, on the calling thread; its jobs,
+        # if any, land in this group until run_pipeline returns
+        aggregate_groups.append(f"{sc.getLocalProperty('spark.jobGroup.id')}-aggregate")
+        sc.setJobGroup(aggregate_groups[-1], aggregate_groups[-1])
+        return read_local(*args, **kwargs)
+
+    monkeypatch.setattr(agg_ops, "read_local", in_own_group)
     session = spark.newSession()  # fresh default dims, not built yet
     seq = datagen.generate_sequences(session, 2000, partitions=8)
-    sc = spark.sparkContext
-    jobs = []
+    tracker = sc.statusTracker()
+    jobs, aggregate_jobs, counters_in_group = [], [], []
     try:
         for i in range(2):
             group = f"default-dims-{tmp_path.name}-{i}"
             sc.setJobGroup(group, group)
             run_pipeline(session, seq, PipelineConfig(out_dir=str(tmp_path / str(i))))
-            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            ids = set(tracker.getJobIdsForGroup(group))
+            counters = set(sc._jsc.sc().statusTracker().getJobIdsForTag(tag))
+            jobs.append(len(ids))
+            aggregate_jobs.append(len(tracker.getJobIdsForGroup(aggregate_groups[-1])))
+            counters_in_group.append(len(counters & ids))
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(collected) == 1
-    # the caller's own jobs are 5 (fan-out write, histogram write, ...);
-    # the counters and the metrics write add theirs
-    assert 5 < jobs[1] <= 9, jobs
+    assert aggregate_jobs == [0, 0], aggregate_jobs
+    assert all(n > 0 for n in counters_in_group), counters_in_group
+    assert jobs[1] <= 5, jobs
 
 
-def test_failing_metrics_write_raises_and_joins_threads(spark, sequences, tmp_path, monkeypatch):
-    """A failure in a concurrently run action raises from run_pipeline,
-    and no helper thread is left running."""
+def test_failing_counters_collect_raises_and_joins_threads(spark, sequences, tmp_path, monkeypatch):
+    """A failure in the concurrently run action, the operational-counters
+    collect, raises from run_pipeline, and no helper thread is left
+    running."""
+    from hypertrace_ingester_spark.operators import aggregate as agg_ops
+
+    operational_counters = agg_ops.operational_counters
+
+    def failing(*args, **kwargs):
+        return operational_counters(*args, **kwargs).withColumn(
+            "boom", F.raise_error(F.lit("counters collect failed")))
+
+    monkeypatch.setattr(agg_ops, "operational_counters", failing)
+    with pytest.raises(Exception, match="counters collect failed"):
+        run_pipeline(spark, sequences, PipelineConfig(out_dir=str(tmp_path / "fail")))
+    assert not _live_helper_threads()
+
+
+def test_corrupt_routed_file_fails_local_aggregate_and_joins_threads(
+        spark, sequences, tmp_path, monkeypatch):
+    """The driver aggregate reads the fan-out's files: a corrupt one
+    raises from run_pipeline, and no helper thread is left running."""
+    import pyarrow as pa
+
+    from hypertrace_ingester_spark.operators import route as route_ops
+
+    fan_out = route_ops.fan_out
+
+    def corrupting(routed, out_dir, *args, **kwargs):
+        fan_out(routed, out_dir, *args, **kwargs)
+        victim = next(os.path.join(d, n) for d, _, names in os.walk(out_dir)
+                      for n in names if n.endswith(".parquet"))
+        with open(victim, "wb") as fh:
+            fh.write(b"not a parquet file")
+
+    monkeypatch.setattr(route_ops, "fan_out", corrupting)
+    with pytest.raises(pa.ArrowInvalid):
+        run_pipeline(spark, sequences, PipelineConfig(out_dir=str(tmp_path / "corrupt")))
+    assert not _live_helper_threads()
+
+
+def _live_helper_threads():
     import threading
 
     from pyspark import InheritableThread
 
+    return [t for t in threading.enumerate()
+            if isinstance(t, InheritableThread) and t.is_alive()]
+
+
+def test_spark_aggregate_path_above_bound_gives_same_outputs(spark, sequences, run, tmp_path,
+                                                             monkeypatch):
+    """Over ``LOCAL_METRICS_MAX_ROWS`` the aggregates are read back and
+    grouped by Spark; the outputs, row for row and in schema, and the
+    manifest's sink counts are those of the driver path."""
     from hypertrace_ingester_spark.operators import aggregate as agg_ops
 
-    sink_metrics = agg_ops.sink_metrics
-
-    def failing(*args, **kwargs):
-        return sink_metrics(*args, **kwargs).withColumn(
-            "boom", F.raise_error(F.lit("metrics write failed")))
-
-    monkeypatch.setattr(agg_ops, "sink_metrics", failing)
-    with pytest.raises(Exception, match="metrics write failed"):
-        run_pipeline(spark, sequences, PipelineConfig(out_dir=str(tmp_path / "fail")))
-    assert not [t for t in threading.enumerate()
-                if isinstance(t, InheritableThread) and t.is_alive()]
+    out, manifest = run
+    spark_out = str(tmp_path / "spark_path")
+    monkeypatch.setattr(agg_ops, "LOCAL_METRICS_MAX_ROWS", 0)
+    above = run_pipeline(spark, sequences, PipelineConfig(out_dir=spark_out))
+    assert above["stages"]["route"]["sink_counts"] == manifest["stages"]["route"]["sink_counts"]
+    for d in ("metrics", "histogram"):
+        got = spark.read.parquet(os.path.join(out, d))
+        want = spark.read.parquet(os.path.join(spark_out, d))
+        assert got.schema == want.schema
+        assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect()))
+    # Spark's writer (the driver path leaves no _SUCCESS marker)
+    assert os.path.exists(os.path.join(spark_out, "metrics", "_SUCCESS"))
 
 
 def test_concurrent_actions_inherit_group_join_all_and_raise_first(spark):

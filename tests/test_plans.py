@@ -68,3 +68,33 @@ def test_salted_repartition_spreads_hot_key(spark):
     finally:
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
     assert n_parts >= 4  # one hot key occupies many partitions, not one
+
+
+def test_hot_stage_codegen_stays_above_huge_method_limit(spark, tmp_path):
+    """The parse -> enrich -> route stage is one whole-stage codegen
+    subtree whose largest method is over ``hugeMethodLimit``, so Spark
+    runs it per operator instead (CLAUDE.md "HOT STAGE CODEGEN STATE").
+    Small expression changes cross the limit and move both benchmarks
+    (the JIT then compiles one huge method), so an expression change that
+    flips the stage fails here and has to be measured first. The frame
+    is built fresh with AQE off: an adaptive plan reports no subtrees."""
+    import re
+
+    from hypertrace_ingester_spark import datagen
+    from hypertrace_ingester_spark.operators import parse as P
+    from hypertrace_ingester_spark.plans.pipeline import hot_chain
+
+    path = str(tmp_path / "seq")
+    datagen.generate_sequences(spark, 200, partitions=2).write.parquet(path)
+    ctx, rules = datagen.default_dims(spark)
+    limit = int(spark.conf.get("spark.sql.codegen.hugeMethodLimit"))
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        routed = hot_chain(ctx, rules, P.DEFAULT_DROP).apply(spark.read.parquet(path))
+        code = spark._jvm.PythonSQLUtils.explainString(routed._jdf.queryExecution(), "codegen")
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    sizes = [int(s) for s in re.findall(r"== Subtree \d+ / \d+ \(maxMethodCodeSize:(\d+);", code)]
+    assert limit == 8000
+    assert len(sizes) == 1 and sizes[0] > limit, sizes

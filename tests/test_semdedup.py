@@ -84,3 +84,14 @@ def test_centroid_dim_is_jvm_local(spark):
     assert any("LocalRelation" in ln for ln in lines), lines
     assert not any("LogicalRDD" in ln for ln in lines), lines
     assert {r["vec_id"] for r in out.collect()} == {2, 3}
+
+
+def test_signer_output_read_once(spark):
+    """The keep rule is taken in the same pass as the labels, so the
+    returned frame's plan runs the ``ivf_assign`` signer once (twice while
+    an aggregate and a join each read the labeled rows)."""
+    emb = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
+    dim = len(emb.select("embedding").first()[0])
+    out = sim.semdedup(emb.select("vec_id", "embedding"), dim=dim, n_cells=8)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan

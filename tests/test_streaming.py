@@ -313,6 +313,68 @@ def test_snapshot_batch_metrics_rewritten_on_replay(spark, tmp_path):
     assert _batch_metrics(spark, cfg, 0) == metrics
 
 
+def test_metrics_partials_are_scoped_to_their_stream(spark, tmp_path):
+    """Two streams into one out_dir, the second on a fresh checkpoint
+    (its batch ids restart at 0): every stream keeps its own partial in
+    each ``batch_id=<id>`` partition, so the metrics add up to the
+    snapshot table's rows, and ``metrics/`` stays one readable
+    partitioned table."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from hypertrace_ingester_spark import datagen
+    from hypertrace_ingester_spark.plans.pipeline import PipelineConfig
+    from hypertrace_ingester_spark.plans.streaming_pipeline import run_streaming_pipeline
+    from hypertrace_ingester_spark.sources import snapshots as sn
+
+    seqs = datagen.generate_sequences(spark, 600)
+    in_dir = str(tmp_path / "scoped_in")
+    seqs.repartition(2).write.parquet(in_dir)
+    cfg = PipelineConfig(out_dir=str(tmp_path / "scoped_out"), snapshot_routed=True)
+    for _ in range(2):
+        shutil.rmtree(f"{cfg.out_dir}/_stream_checkpoint", ignore_errors=True)
+        stream = (spark.readStream.schema(seqs.schema)
+                  .option("maxFilesPerTrigger", 1).parquet(in_dir))
+        run_streaming_pipeline(spark, stream, cfg).awaitTermination(180)
+
+    table_rows = sn.read_snapshot(spark, f"{cfg.out_dir}/routed_snap").count()
+    files = [os.path.join(d, n) for d, _, names in os.walk(f"{cfg.out_dir}/metrics")
+             for n in names if n.endswith(".parquet")]
+    assert sum(pq.read_table(f, columns=["num_rows"])["num_rows"].to_numpy().sum()
+               for f in files) == table_rows > 0
+    metrics = spark.read.parquet(f"{cfg.out_dir}/metrics")
+    assert metrics.agg(F.sum("num_rows")).first()[0] == table_rows
+    assert {r["batch_id"] for r in metrics.select("batch_id").distinct().collect()} == {0, 1}
+
+
+def test_batch_rewrite_replaces_only_its_streams_partial(spark, tmp_path):
+    """Two streams land batch 0 (partials written on the driver); a retry
+    of one stream's batch 0 (a replay: the commit no-ops and Spark
+    rewrites the partial) replaces that stream's file only."""
+    import os
+
+    from hypertrace_ingester_spark.plans.streaming_pipeline import _stream_prefix, process_batch
+
+    batches, cfg, ctx, rules = _snapshot_batch_setup(spark, tmp_path)
+    part = f"{cfg.out_dir}/metrics/batch_id=0"
+    process_batch(batches[0], 0, cfg, ctx, rules, app_id="stream-a")
+    process_batch(batches[1], 0, cfg, ctx, rules, app_id="stream-b")
+    both = _batch_metrics(spark, cfg, 0)
+    before = sorted(os.listdir(part))
+    process_batch(batches[0], 0, cfg, ctx, rules, app_id="stream-a")
+    after = sorted(os.listdir(part))
+
+    def of(names, app_id):
+        return [n for n in names if n.startswith(_stream_prefix(app_id))]
+
+    assert _batch_metrics(spark, cfg, 0) == both
+    assert of(after, "stream-b") == of(before, "stream-b") != []
+    assert of(after, "stream-a") and not set(of(after, "stream-a")) & set(of(before, "stream-a"))
+    assert len(after) == len(before) and not [n for n in after if n.startswith(".")]
+
+
 def test_snapshot_batches_reuse_built_chain(spark, tmp_path, monkeypatch):
     """Micro-batches sharing a context and rules frame build the chain
     once: two snapshot-path batches collect the composite dim once, and
@@ -333,7 +395,7 @@ def test_snapshot_batches_reuse_built_chain(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(enrich_ops, "collect_local", counting)
     sc = spark.sparkContext
-    metrics_local = agg_ops.sink_metrics_local
+    read_local = agg_ops.read_local
     metric_groups = []
 
     def in_own_group(*args, **kwargs):
@@ -341,9 +403,9 @@ def test_snapshot_batches_reuse_built_chain(spark, tmp_path, monkeypatch):
         # in this group until process_batch returns
         metric_groups.append(f"{sc.getLocalProperty('spark.jobGroup.id')}-metrics")
         sc.setJobGroup(metric_groups[-1], metric_groups[-1])
-        return metrics_local(*args, **kwargs)
+        return read_local(*args, **kwargs)
 
-    monkeypatch.setattr(agg_ops, "sink_metrics_local", in_own_group)
+    monkeypatch.setattr(agg_ops, "read_local", in_own_group)
     batches, cfg, ctx, rules = _snapshot_batch_setup(spark, tmp_path)
     jobs, metric_jobs = [], []
     try:
@@ -387,19 +449,18 @@ def _driver_vs_spark_metrics(spark, tmp_path, landed, table, window_ms):
     import shutil
 
     from hypertrace_ingester_spark.operators import aggregate as agg
-    from hypertrace_ingester_spark.plans.streaming_pipeline import _overwrite_partition
-
     files = [os.path.join(table, f) for f in landed.added_files]
     want_dir, got_dir = str(tmp_path / "spark_part"), str(tmp_path / "driver_part")
     agg.sink_metrics(spark.read.parquet(*files), window_ms).repartition(2) \
         .write.mode("overwrite").parquet(want_dir)
     shutil.copytree(want_dir, got_dir)
     open(os.path.join(got_dir, ".tmp-stale"), "wb").close()
-    _overwrite_partition(agg.sink_metrics_local(files, window_ms), got_dir)
+    routed = agg.read_local(files, agg.METRIC_INPUTS)
+    agg.overwrite_partition(agg.sink_metrics_local(routed, window_ms), got_dir)
 
     names = os.listdir(got_dir)
     assert len([n for n in names if n.endswith(".parquet")]) == 1, names
-    assert not [n for n in names if n.startswith(".tmp-")], names
+    assert not [n for n in names if n.startswith(".")], names
     got, want = spark.read.parquet(got_dir), spark.read.parquet(want_dir)
     assert [(f.name, f.dataType) for f in got.schema] == \
         [(f.name, f.dataType) for f in want.schema]
