@@ -31,7 +31,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--resume", action="store_true", help="resume from the run manifest")
     ap.add_argument("--checkpoint-parse", action="store_true")
     ap.add_argument("--salt-buckets", type=int, default=None)
-    ap.add_argument("--lineage", action="store_true", help="record per-partition lineage")
+    ap.add_argument("--lineage", action="store_true",
+                    help='record each routed file\'s row count (manifest '
+                         'partition_lineage: {"file", "rows"} per file)')
     ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
 

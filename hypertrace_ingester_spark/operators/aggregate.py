@@ -18,8 +18,11 @@ import uuid
 import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from ..sources.compaction import parquet_files
 
 METRIC_WINDOW_MS = 5_000  # metric.aggregation.timeMs analog (metrics-gen conf:14)
 
@@ -48,15 +51,15 @@ ROUTED_INPUTS = tuple(dict.fromkeys(METRIC_INPUTS + HIST_KEYS + tuple(c for _, c
 
 HIST_BUCKETS = ["1-16", "17-64", "65-256", "257-1024", "1025-4096"]
 
-# Routed files holding at most this many rows are aggregated on the driver
-# with pyarrow (read_local + *_local + overwrite_partition); more are read
-# back through Spark. On a 4-core box: sink_metrics_local over one file, ~1
-# group per 2 rows, 2k rows 4 ms, 200k rows 92 ms, 1M rows 0.47 s (peak
-# Python RSS over the post-import baseline +52 MB, mostly pyarrow's
-# first-call setup, +133 MB and +286 MB). Both run_pipeline aggregates over
-# a 970k-row, 48-file fan-out (364k metric groups): 0.50-0.59 s on the
-# driver against 1.30-1.61 s through Spark, so the driver path still wins
-# at the bound.
+# The aggregate step's one bound: routed files holding at most this many
+# rows are aggregated on the driver with pyarrow, more through Spark
+# (read_routed picks the form, write_metrics / write_histogram take
+# either). On a 4-core box the driver metrics over one file, ~1 group per 2
+# rows: 2k rows 4 ms, 200k rows 92 ms, 1M rows 0.47 s (peak Python RSS
+# over the post-import baseline +52 MB, mostly pyarrow's first-call setup,
+# +133 MB and +286 MB). Both run_pipeline aggregates over a 970k-row,
+# 48-file fan-out (364k metric groups): 0.50-0.59 s on the driver against
+# 1.30-1.61 s through Spark, so the driver path still wins at the bound.
 LOCAL_METRICS_MAX_ROWS = 1_000_000
 
 
@@ -103,21 +106,25 @@ def _hive_value(path: str, column: str) -> str | None:
     raise KeyError(f"{path}: no column or {prefix}<value> directory for {column!r}")
 
 
-def footer_rows(paths: list[str]) -> int:
-    """Rows in the parquet files at ``paths``, summed from their footers."""
-    return sum(pq.read_metadata(p).num_rows for p in paths)
-
-
-def read_local(paths: list[str], columns: tuple[str, ...] = ROUTED_INPUTS) -> pa.Table:
-    """``columns`` of the routed parquet files at ``paths``, read on the
-    driver for :func:`sink_metrics_local` and :func:`token_histogram_local`.
-    A column a file lacks comes from its hive directory (``sink=<v>`` of a
-    ``partitionBy("sink")`` fan-out), decoded the way Spark decodes it; a
-    snapshot table's files hold ``sink`` themselves. Callers bound the rows
-    they read (:data:`LOCAL_METRICS_MAX_ROWS`)."""
+def read_routed(spark: SparkSession, root: str, files: list[str], schema: StructType,
+                columns: tuple[str, ...] = ROUTED_INPUTS) -> pa.Table | DataFrame:
+    """``columns`` of the routed parquet ``files`` under ``root``, in the
+    form the aggregate step runs on: a pyarrow Table read on the driver
+    while the files hold at most :data:`LOCAL_METRICS_MAX_ROWS` rows
+    (summed from the footers the read opens anyway), else a Spark scan of
+    exactly those files. A column a file lacks comes from its hive
+    directory (``sink=<v>`` of a ``partitionBy("sink")`` fan-out), decoded
+    the way Spark decodes it; a snapshot table's files hold ``sink``
+    themselves. The scan reads with ``schema`` (nothing is inferred, so no
+    file is listed twice) and ``basePath`` at ``root``: without it a file
+    list discovers no partition column and every ``sink`` reads null."""
+    footers = [pq.read_metadata(p) for p in files]
+    if sum(md.num_rows for md in footers) > LOCAL_METRICS_MAX_ROWS:
+        return (spark.read.schema(schema).option("basePath", root).parquet(*files)
+                .select(*columns))
     parts = []
-    for p in paths:
-        f = pq.ParquetFile(p)
+    for p, md in zip(files, footers):
+        f = pq.ParquetFile(p, metadata=md)
         stored = set(f.schema_arrow.names)
         t = f.read(columns=[c for c in columns if c in stored])
         zeros = pa.array(np.zeros(t.num_rows, np.int32))
@@ -130,6 +137,8 @@ def read_local(paths: list[str], columns: tuple[str, ...] = ROUTED_INPUTS) -> pa
 
 def _aggregate_local(t: pa.Table, keys: tuple[str, ...],
                      sums: tuple[tuple[str, str], ...], schema: pa.Schema) -> pa.Table:
+    """:func:`_aggregate` on the driver: the same groups and values (a
+    null key is its own group, an all-null sum null) in ``schema``."""
     if t.num_rows == 0:
         return schema.empty_table()
     # single-threaded: with use_threads=True (pyarrow 16) this group_by left
@@ -140,28 +149,6 @@ def _aggregate_local(t: pa.Table, keys: tuple[str, ...],
     names = {"count_all": METRIC_COUNT} | {f"{src}_sum": name for name, src in sums}
     out = out.rename_columns([names.get(c, c) for c in out.column_names])
     return out.select(schema.names).cast(schema)
-
-
-def sink_metrics_local(routed: pa.Table, window_ms: int = METRIC_WINDOW_MS) -> pa.Table:
-    """:func:`sink_metrics` over ``routed`` (a :func:`read_local` table),
-    computed on the driver with pyarrow: no Spark job. The same groups and
-    values (a null key is its own group, a null ``ts_ms`` a null bucket, an
-    all-null sum null) in :data:`METRICS_SCHEMA`."""
-    if window_ms == 0:
-        raise ValueError("sink_metrics_local: window_ms must be non-zero")
-    # Spark's ts - pmod(ts, w): numpy's integer mod takes the divisor's sign,
-    # as pmod does, so a negative ts floors into the bucket below it
-    ts = routed.column("ts_ms").cast(pa.int64())
-    vals = ts.fill_null(0).to_numpy()
-    bucket = pa.array(vals - np.mod(vals, window_ms), mask=ts.is_null().to_numpy())
-    t = routed.append_column("bucket_start_ms", bucket)
-    return _aggregate_local(t, METRIC_KEYS, METRIC_SUMS, METRICS_SCHEMA)
-
-
-def token_histogram_local(routed: pa.Table) -> pa.Table:
-    """:func:`token_histogram` over ``routed`` (a :func:`read_local`
-    table), on the driver in :data:`HIST_SCHEMA`."""
-    return _aggregate_local(routed, HIST_KEYS, HIST_SUMS, HIST_SCHEMA)
 
 
 def staging_path(part_dir: str, prefix: str = "") -> str:
@@ -198,6 +185,44 @@ def overwrite_partition(table: pa.Table, part_dir: str, prefix: str = "") -> Non
     staged = staging_path(part_dir, prefix)
     pq.write_table(table, staged)
     replace_files(part_dir, [staged], prefix)
+
+
+def write_metrics(routed: pa.Table | DataFrame, out_dir: str,
+                  window_ms: int = METRIC_WINDOW_MS, prefix: str = "") -> None:
+    """:func:`sink_metrics` of ``routed`` (a :func:`read_routed` result or
+    any routed frame) as the files of ``out_dir`` named with ``prefix``
+    (:func:`replace_files`). A Table is aggregated on the driver and
+    written as one file; a DataFrame is aggregated by Spark, written under
+    a :func:`staging_path` and its files renamed into place. Both give the
+    same rows in :data:`METRICS_SCHEMA`."""
+    if window_ms == 0:
+        raise ValueError("write_metrics: window_ms must be non-zero")
+    if isinstance(routed, DataFrame):
+        stage = staging_path(out_dir, prefix)
+        sink_metrics(routed, window_ms).write.parquet(stage)
+        replace_files(out_dir, parquet_files(stage), prefix)
+        shutil.rmtree(stage)
+        return
+    # Spark's ts - pmod(ts, w): numpy's integer mod takes the divisor's sign,
+    # as pmod does, so a negative ts floors into the bucket below it
+    ts = routed.column("ts_ms").cast(pa.int64())
+    vals = ts.fill_null(0).to_numpy()
+    bucket = pa.array(vals - np.mod(vals, window_ms), mask=ts.is_null().to_numpy())
+    t = routed.append_column("bucket_start_ms", bucket)
+    overwrite_partition(_aggregate_local(t, METRIC_KEYS, METRIC_SUMS, METRICS_SCHEMA),
+                        out_dir, prefix)
+
+
+def write_histogram(routed: pa.Table | DataFrame, out_dir: str) -> pa.Table:
+    """:func:`token_histogram` of ``routed`` as ``out_dir``'s one file;
+    returns it. A Table is aggregated on the driver, a DataFrame by Spark
+    and collected (at most sinks × :data:`HIST_BUCKETS` rows)."""
+    if isinstance(routed, DataFrame):
+        hist = token_histogram(routed).toArrow().cast(HIST_SCHEMA)
+    else:
+        hist = _aggregate_local(routed, HIST_KEYS, HIST_SUMS, HIST_SCHEMA)
+    overwrite_partition(hist, out_dir)
+    return hist
 
 
 def operational_counters(parsed_with_flags: DataFrame) -> DataFrame:

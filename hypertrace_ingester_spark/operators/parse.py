@@ -11,10 +11,8 @@ features — both vectorized, never per-row Python (input_hint).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from dataclasses import dataclass, field
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -55,33 +53,6 @@ def grok_extract(df: DataFrame, line_col: str = "source_line",
                  fields: list[tuple[str, str, str | None]] | None = None) -> DataFrame:
     """Apply :func:`grok_columns` to ``df``."""
     return df.withColumns(grok_columns(line_col, fields))
-
-
-def grok_extract_pandas(df: DataFrame, line_col: str = "source_line",
-                        fields: list[tuple[str, str, str | None]] | None = None) -> DataFrame:
-    """Arrow-batched pandas-UDF grok path (for Python-only regex features).
-
-    Semantically identical to :func:`grok_extract`; used where patterns need
-    lookbehind/named-group features Java regex lacks. Batched `.str.extract`
-    — never per-row Python (north_rule / input_hint requirement).
-    """
-    fields = fields or DEFAULT_GROK_FIELDS
-    out_schema = ", ".join(
-        [*(f"`{c}` {t}" for c, t in zip(df.columns, (f.dataType.simpleString() for f in df.schema)))]
-        + [f"`{name}` {'bigint' if cast == 'long' else 'string'}" for name, _, cast in fields]
-    )
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for name, pattern, cast in fields:
-                extracted = pdf[line_col].str.extract(pattern, expand=False)
-                extracted = extracted.replace("", None)  # empty match → NULL (native-path parity)
-                if cast == "long":
-                    extracted = pd.to_numeric(extracted, errors="coerce").astype("Int64")
-                pdf[name] = extracted
-            yield pdf
-
-    return df.mapInPandas(extract, schema=out_schema)
 
 
 def url_columns(url_col: str = "url") -> dict[str, Column]:

@@ -54,7 +54,6 @@ from __future__ import annotations
 
 from collections import deque
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -539,69 +538,4 @@ def span_boundary_types(spans: DataFrame) -> DataFrame:
         "s.tenant_id", "s.trace_id", "s.span_id",
         F.coalesce(is_api_entry, F.lit(False)).alias("is_api_entry"),
         F.coalesce(is_api_exit, F.lit(False)).alias("is_api_exit"),
-    )
-
-
-def spans_fixture(spark, n_traces: int = 4):
-    """Deterministic golden fixture: multi-level trees with entry/exit
-    boundaries, an orphan-exit root and a dangling parent
-    (RawSpansGrouperTest.java / ApiTraceGraph test shapes)."""
-    rows = []
-    for t in range(n_traces):
-        base_id = 1000 * (t + 1)
-        tenant = t % 2
-        base = 1_700_000_000_000 + t * 10_000
-
-        def span(off, parent, kind, svc, has_ref=None):
-            return {
-                "tenant_id": tenant, "trace_id": t + 1,
-                "span_id": base_id + off,
-                "parent_span_id": None if parent is None else base_id + parent,
-                "ts_ms": base + off * 10, "kind": kind, "service": svc,
-                "api_name": f"api_{off}", "op_name": f"op_{off}",
-                "start_ms": base + off * 10, "end_ms": base + off * 10 + 5,
-                "duration_ms": 5, "error_count": 1 if off == 3 else 0,
-                "exception_count": 1 if off == 2 else 0, "status_code": 200,
-                "backend_name": f"be_{off}" if kind == "EXIT" and off % 2 == 0 else None,
-                "backend_path": f"/bp{off}" if kind == "EXIT" and off % 4 == 0 else None,
-                "is_entry_api": False, "is_exit_api": False,
-                "has_parent_ref": parent is not None if has_ref is None else has_ref,
-            }
-
-        # entry(1) -> exit(2) -> entry(3, svc-b) -> exit(4, backend)
-        #          -> internal(5) -> exit(6)
-        # exit root(7): broken parent ref on even traces, real root on odd
-        rows += [
-            span(1, None, "ENTRY", "svc-a"),
-            span(2, 1, "EXIT", "svc-a"),
-            span(3, 2, "ENTRY", "svc-b"),
-            span(4, 3, "EXIT", "svc-b"),
-            span(5, 1, "UNSPECIFIED", "svc-a"),
-            span(6, 5, "EXIT", "svc-a"),
-            span(7, None, "EXIT", "svc-c", has_ref=(t % 2 == 0)),
-        ]
-    df = spark.createDataFrame(
-        pd.DataFrame(rows),
-        schema=(
-            "tenant_id long, trace_id long, span_id long, parent_span_id long, "
-            "ts_ms long, kind string, service string, api_name string, "
-            "op_name string, start_ms long, end_ms long, duration_ms long, "
-            "error_count long, exception_count long, status_code long, "
-            "backend_name string, backend_path string, is_entry_api boolean, "
-            "is_exit_api boolean, has_parent_ref boolean"
-        ),
-    )
-    # boundary flags derived relationally so fixtures stay consistent
-    flags = span_boundary_types(df).withColumnRenamed("span_id", "f_span_id")
-    return (
-        df.drop("is_entry_api", "is_exit_api")
-        .join(
-            flags.select(
-                F.col("trace_id").alias("f_trace_id"), "f_span_id",
-                F.col("is_api_entry").alias("is_entry_api"),
-                F.col("is_api_exit").alias("is_exit_api"),
-            ),
-            (F.col("trace_id") == F.col("f_trace_id")) & (F.col("span_id") == F.col("f_span_id")),
-        )
-        .drop("f_trace_id", "f_span_id")
     )

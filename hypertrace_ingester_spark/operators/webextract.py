@@ -285,95 +285,3 @@ def roundtrip_documents(docs: DataFrame, n_files: int = 32) -> DataFrame:
         F.col("page_lang").alias("lang"),
         F.col("text"),
     )
-
-
-# ---------------------------------------------------------------------------
-# Deterministic page generator (closed-form laws over the row index) — the
-# richer structural fixture for tests: multi-paragraph pages, varying nav
-# sizes, an occasional link farm, so the keep rule is exercised beyond the
-# single-block gate wrap. Laws are restatable in plain python/SQL.
-# ---------------------------------------------------------------------------
-
-PAGE_LANGS = ["en", "es", "fr"]
-
-
-def page_laws(i: int) -> dict:
-    """Expected structure of generated page ``i`` (shared with tests)."""
-    n_paras = 1 + i % 4
-    para_words = [5 + (i + j) % 5 for j in range(n_paras)]
-    return {
-        "lang": PAGE_LANGS[i % 3],
-        "title": f"Page {i}",
-        "n_paras": n_paras,
-        "para_words": para_words,
-        "nav_links": 2 + i % 3,
-        "has_linkfarm": i % 5 == 0,
-        "paras": [
-            " ".join(f"tok{(i * 7 + j * 3 + k) % 11}" for k in range(para_words[j]))
-            for j in range(n_paras)
-        ],
-    }
-
-
-def generate_pages(spark, n_rows: int, partitions: int = 8) -> DataFrame:
-    """Law-driven synthetic pages (JVM-side, seedless — pure index math,
-    same style as operators/multimodal.generate_media)."""
-    i = F.col("id")
-    n_paras = F.lit(1) + i % 4
-    para = lambda j: F.array_join(  # noqa: E731
-        F.transform(
-            F.sequence(F.lit(0), F.lit(4) + (i + F.lit(j)) % 5),
-            lambda k: F.concat(
-                F.lit("tok"), ((i * 7 + F.lit(j * 3) + k) % 11).cast("string")
-            ),
-        ),
-        " ",
-    )
-    paras = F.concat_ws(
-        "",
-        *[
-            F.when(F.lit(j) < n_paras, F.concat(F.lit("<p>"), para(j), F.lit("</p>"))).otherwise("")
-            for j in range(4)
-        ],
-    )
-    nav = F.concat(
-        F.lit("<nav>"),
-        F.array_join(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(1) + i % 3),
-                lambda k: F.concat(
-                    F.lit('<a href="/s'), k.cast("string"), F.lit('">L'),
-                    k.cast("string"), F.lit("</a>"),
-                ),
-            ),
-            " ",
-        ),
-        F.lit("</nav>"),
-    )
-    linkfarm = F.when(
-        i % 5 == 0,
-        F.lit(
-            '<aside><a href="/a">ad one</a> <a href="/b">ad two</a> '
-            '<a href="/c">ad three</a> <a href="/d">ad four</a></aside>'
-        ),
-    ).otherwise("")
-    html = F.concat(
-        F.lit('<!DOCTYPE html><html lang="'),
-        F.element_at(F.array(*[F.lit(x) for x in PAGE_LANGS]), (i % 3 + 1).cast("int")),
-        F.lit('"><head><title>Page '),
-        i.cast("string"),
-        F.lit("</title>"),
-        F.lit(_HEAD_JUNK),
-        F.lit("</head><body>"),
-        nav,
-        paras,
-        linkfarm,
-        F.lit(_FOOTER),
-        F.lit("</body></html>"),
-    )
-    return (
-        spark.range(0, n_rows, numPartitions=partitions)
-        .withColumn("page_id", i)
-        .withColumn("html", html)
-        .drop("id")
-    )

@@ -13,18 +13,17 @@ The reference's metrics generator and view writers are separate
 sub-topologies on their own stream threads (HypertraceIngester.java:52-77):
 none waits for another, and the metrics generator reads views already
 emitted. ``run_pipeline`` keeps that shape. The per-tenant counters are
-collected while the routed fan-out is written. The sink metrics and the
-token histogram are then computed from the fan-out's files on the driver
-with pyarrow (``aggregate.read_local``, ``sink_metrics_local``,
-``token_histogram_local``; the streaming face's landed batches use the same
-helpers), while those files hold at most
-``aggregate.LOCAL_METRICS_MAX_ROWS`` rows; above it they are read back
-through Spark and the two aggregate writes run concurrently. Per-sink
-counts are summed from the histogram in memory. A helper joins every
-concurrent action before the call returns or raises. With the session's
-default dims built once (``datagen.default_dims``), a warm call on 20k
-rows went from 16 Spark jobs to 9, and with the driver aggregates to 5:
-the counters collect (2), the two dim broadcasts and the fan-out write.
+collected while the routed fan-out is written. The aggregate step then
+reads the fan-out's files once (``aggregate.read_routed``, which alone
+knows the driver-or-Spark bound and picks the form; the streaming face's
+batches go through the same step) and writes the sink metrics and the
+token histogram from that (``aggregate.write_metrics``,
+``aggregate.write_histogram``). Per-sink counts are summed from the
+histogram in memory. A helper joins every concurrent action before the
+call returns or raises. With the session's default dims built once
+(``datagen.default_dims``), a warm call on 20k rows went from 16 Spark
+jobs to 9, and with the driver aggregates to 5: the counters collect (2),
+the two dim broadcasts and the fan-out write.
 """
 
 from __future__ import annotations
@@ -41,7 +40,6 @@ from typing import Any
 import pyarrow.parquet as pq
 from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from .. import datagen
 from ..operators import aggregate as agg_ops
@@ -220,26 +218,6 @@ def _write_manifest(out_dir: str, manifest: dict) -> None:
         json.dump(manifest, f, indent=2, sort_keys=True, default=str)
 
 
-def _partition_lineage(df: DataFrame) -> list[dict]:
-    """Per-partition row counts — lineage evidence without a full collect.
-
-    Uses a spark_partition_id groupBy (one extra pass over the cached stage
-    output), the distributed analog of the reference's per-task counters."""
-    rows = (
-        df.groupBy(F.spark_partition_id().alias("partition_id"))
-        .count()
-        .orderBy("partition_id")
-        .collect()
-    )
-    return [{"partition_id": r["partition_id"], "rows": r["count"]} for r in rows]
-
-
-def _read_back(spark: SparkSession, routed: DataFrame, routed_dir: str) -> DataFrame:
-    """The fan-out of ``routed`` read back through Spark. The explicit
-    schema keeps an empty fan-out (no files, nothing to infer) readable."""
-    return spark.read.schema(routed.schema).parquet(routed_dir)
-
-
 def run_pipeline(
     spark: SparkSession,
     sequences: DataFrame,
@@ -254,18 +232,19 @@ def run_pipeline(
     ``ctx`` and ``route_rules`` default to the session's
     :func:`datagen.default_dims`, so repeated calls in one session collect
     the composite dim and build the hot chain once. The per-tenant counters
-    are collected beside the routed fan-out. A fan-out of at most
-    ``aggregate.LOCAL_METRICS_MAX_ROWS`` rows (summed from the file
-    footers) gets its metrics and histogram on the driver, each written as
-    its directory's one parquet file, with no Spark job; a larger one is
-    read back through Spark, and its two aggregate writes run concurrently.
-    Every action has finished when the call returns or raises. The
-    manifest's ``stage_walls`` (beside ``stages``, not inside: stage
-    entries stay pure counts) gives the wall seconds of ``build`` (dims and
-    chain), ``route`` (through the fan-out write), ``aggregate`` (until
-    both aggregates are written and the counters are collected) and
-    ``manifest``. ``lineage=True`` adds per-partition row counts of the
-    routed files, read back through Spark.
+    are collected beside the routed fan-out. The aggregate step reads the
+    fan-out's files once with ``aggregate.read_routed``: within that
+    module's row bound (1M, summed from the footers) the metrics and
+    histogram are computed on the driver, each written as its directory's
+    one parquet file, with no Spark job; above it Spark aggregates them,
+    one after the other. Every action has finished when
+    the call returns or raises. The manifest's ``stage_walls`` (beside
+    ``stages``, not inside: stage entries stay pure counts) gives the wall
+    seconds of ``build`` (dims and chain), ``route`` (through the fan-out
+    write), ``aggregate`` (until both aggregates are written and the
+    counters are collected) and ``manifest``. ``lineage=True`` adds the
+    routed files' row counts, one ``{"file", "rows"}`` entry per file
+    (path relative to ``routed/``), read from their footers.
 
     With ``resume=True``, stages already marked complete in the manifest are
     skipped and their checkpointed output is re-read — restart-safe the way
@@ -370,22 +349,12 @@ def run_pipeline(
         lap("route")
 
         # ---- AGGREGATE -------------------------------------------------
-        # a fan-out within the bound is aggregated on the driver from its
-        # files (no Spark job); a larger one is read back through Spark in
-        # two pruned scans (neither touches tokens), written concurrently
+        # the fan-out's narrow columns (never tokens), read once in the
+        # form the aggregate module picks for its size
         files = parquet_files(routed_dir)
-        if agg_ops.footer_rows(files) <= agg_ops.LOCAL_METRICS_MAX_ROWS:
-            routed_local = agg_ops.read_local(files)
-            agg_ops.overwrite_partition(
-                agg_ops.sink_metrics_local(routed_local, cfg.metric_window_ms), metrics_dir)
-            hist = agg_ops.token_histogram_local(routed_local)
-            agg_ops.overwrite_partition(hist, histogram_dir)
-        else:
-            routed_back = _read_back(spark, routed, routed_dir)
-            metrics = agg_ops.sink_metrics(routed_back, cfg.metric_window_ms)
-            submit(lambda: metrics.write.mode("overwrite").parquet(metrics_dir))
-            agg_ops.token_histogram(routed_back).write.mode("overwrite").parquet(histogram_dir)
-            hist = pq.read_table(histogram_dir, columns=["sink", "num_rows"])
+        routed_back = agg_ops.read_routed(spark, routed_dir, files, routed.schema)
+        agg_ops.write_metrics(routed_back, metrics_dir, cfg.metric_window_ms)
+        hist = agg_ops.write_histogram(routed_back, histogram_dir)
     lap("aggregate")
 
     # ---- manifest: per-sink counts + per-tenant counters + lineage ------
@@ -424,8 +393,9 @@ def run_pipeline(
     manifest["tenant_counters"] = tenant_counters
     manifest["total_routed_rows"] = int(sum(sink_counts.values()))
     if lineage:
-        manifest["stages"]["route"]["partition_lineage"] = _partition_lineage(
-            _read_back(spark, routed, routed_dir))
+        manifest["stages"]["route"]["partition_lineage"] = [
+            {"file": os.path.relpath(f, routed_dir), "rows": pq.read_metadata(f).num_rows}
+            for f in files]
     lap("manifest")
     manifest["elapsed_sec"] = round(time.time() - t0, 3)
     _write_manifest(cfg.out_dir, manifest)

@@ -27,14 +27,14 @@ the same hook swaps to Iceberg ``writeTo(...).append()``
 (whose idempotent commits use the identical recipe) when the runtime jar
 exists. On that path the parse → enrich → route chain runs ONCE per batch:
 the commit executes it, and the batch metrics are computed from the files
-the commit landed instead of re-running the chain — on the driver with
-pyarrow (``aggregate.read_local`` + ``aggregate.sink_metrics_local``,
-never reading ``tokens``; ``run_pipeline`` aggregates its fan-out with the
-same helpers), so a landed batch of up to
-``aggregate.LOCAL_METRICS_MAX_ROWS`` rows starts no Spark job for its
-metrics. On 2k-row batches (4-core box) that took a batch from 5
-Spark jobs to 3 and perfbench ``microbatch`` ``op_p50_s`` from 1.40 to
-1.06 s; the pyarrow partial itself takes ~4 ms.
+the commit landed instead of re-running the chain. They go through the
+aggregate step ``run_pipeline`` uses (``aggregate.read_routed`` +
+``aggregate.write_metrics``, never reading ``tokens``), so a landed batch
+within that module's row bound (1M) is aggregated on the driver with
+pyarrow and starts no Spark job for its metrics. On 2k-row batches
+(4-core box) that took a batch from 5 Spark jobs to 3 and perfbench
+``microbatch`` ``op_p50_s`` from 1.40 to 1.06 s; the pyarrow partial
+itself takes ~4 ms.
 
 The chain is also BUILT once, not per batch: its column expressions, the
 composite enrichment dim (collected into a JVM-local table) and the
@@ -51,14 +51,12 @@ from __future__ import annotations
 import hashlib
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators import aggregate as agg_ops
 from ..operators import enrich as enrich_ops
 from ..operators import route as route_ops
-from ..sources.compaction import parquet_files
 from .pipeline import PipelineConfig, dims_or_default, hot_chain
 
 
@@ -83,7 +81,7 @@ def process_batch(
     """One micro-batch: routed rows APPEND (at-least-once, the reference's
     Kafka Streams ALOS default); per-batch metrics OVERWRITE this
     stream's files in their ``batch_id=<id>`` partition directory
-    (``aggregate.replace_files`` with the stream's file-name prefix), so a
+    (``aggregate.write_metrics`` with the stream's file-name prefix), so a
     foreachBatch retry re-writes the same partial instead of
     double-appending it (downstream sums over metrics stay idempotent under
     micro-batch retries — asserted in tests/test_streaming.py), and
@@ -94,16 +92,16 @@ def process_batch(
 
     With ``cfg.snapshot_routed`` the chain executes once per batch: the
     commit runs it, and the metrics come from the files that commit staged
-    (``Snapshot.added_files``). Up to ``aggregate.LOCAL_METRICS_MAX_ROWS``
-    rows (``Snapshot.added_rows``) the partial is computed on the driver
-    with pyarrow and written as the stream's one file in the partition —
-    no Spark job; a larger batch reads the files back column-pruned
-    through Spark, as ``run_pipeline`` does above the same bound, and the
-    Spark partial is staged under a dot-name, then its files renamed into
-    place. A replayed ``batch_id`` makes the commit no-op without running
-    the chain, so the metrics then come from ``routed`` itself (still one
-    execution); that rewrites the metrics partial of a batch whose commit
-    landed but whose metrics write was lost.
+    (``Snapshot.added_files``), read by ``aggregate.read_routed``: on the
+    driver up to the aggregate module's row bound (no Spark job), through
+    Spark above it, as in ``run_pipeline``. A replayed ``batch_id`` makes
+    the commit no-op without running the chain, so the metrics then come
+    from ``routed`` itself (still one execution); that rewrites the
+    metrics partial of a batch whose commit landed but whose metrics
+    write was lost. Without ``cfg.snapshot_routed`` they come from
+    ``routed`` too, which runs the chain a second time after the fan-out
+    append. ``aggregate.write_metrics`` writes either form as this
+    stream's files.
 
     ``app_id`` names the stream for the snapshot sink's exactly-once gate
     (``snapshots.commit_stream_batch``) and for its metrics files:
@@ -115,9 +113,6 @@ def process_batch(
     ``cfg.drop_criteria``, then reused. Pass the same context and rules
     frame to every batch."""
     routed = hot_chain(ctx, route_rules, cfg.drop_criteria).apply(batch_df)
-    metrics_input = routed
-    metrics_dir = os.path.join(cfg.out_dir, "metrics", f"batch_id={batch_id}")
-    prefix = _stream_prefix(app_id)
     if cfg.snapshot_routed:
         # exactly-once: idempotent snapshot commit keyed by batch_id — a
         # foreachBatch retry replay of an already-landed batch no-ops
@@ -127,23 +122,18 @@ def process_batch(
         table = os.path.join(cfg.out_dir, "routed_snap")
         landed = snap.commit_stream_batch(routed, table, batch_id, app_id=app_id)
         if landed is not None and landed.added_files:
-            files = [os.path.join(table, f) for f in landed.added_files]
-            if landed.added_rows <= agg_ops.LOCAL_METRICS_MAX_ROWS:
-                routed_local = agg_ops.read_local(files, agg_ops.METRIC_INPUTS)
-                agg_ops.overwrite_partition(
-                    agg_ops.sink_metrics_local(routed_local, cfg.metric_window_ms),
-                    metrics_dir, prefix)
-                return
-            metrics_input = batch_df.sparkSession.read.schema(routed.schema).parquet(*files)
+            routed = agg_ops.read_routed(
+                batch_df.sparkSession, table,
+                [os.path.join(table, f) for f in landed.added_files],
+                routed.schema, agg_ops.METRIC_INPUTS)
     else:
         route_ops.fan_out(
             routed, os.path.join(cfg.out_dir, "routed"), cfg.salt_buckets,
             mode="append",
         )
-    stage = agg_ops.staging_path(metrics_dir, prefix)
-    agg_ops.sink_metrics(metrics_input, cfg.metric_window_ms).write.parquet(stage)
-    agg_ops.replace_files(metrics_dir, parquet_files(stage), prefix)
-    shutil.rmtree(stage)
+    agg_ops.write_metrics(
+        routed, os.path.join(cfg.out_dir, "metrics", f"batch_id={batch_id}"),
+        cfg.metric_window_ms, _stream_prefix(app_id))
 
 
 def run_streaming_pipeline(

@@ -683,25 +683,6 @@ def q1_pricing_summary(spark, sf_dir):
     )
 
 
-def q_topk_orders(spark, sf_dir):
-    """Top-k by aggregate with deterministic tiebreak — TakeOrderedAndProject
-    physical op (no global sort). Out of the 50-entry driver catalog (its
-    plan shape is also exercised by s_knn_bruteforce's two-phase top-k);
-    kept as a library query, oracle-checked in tests/test_oracle_extras.py."""
-    l = load_table(spark, sf_dir, "lineitem")
-    o = load_table(spark, sf_dir, "orders")
-    return (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .groupBy("o_orderkey")
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .orderBy(F.desc("revenue"), F.asc("o_orderkey"))
-        .limit(10)
-    )
-
-
 # ---------------------------------------------------------------------------
 # Training-data ops: dedup / text / similarity (driver mandate)
 # ---------------------------------------------------------------------------

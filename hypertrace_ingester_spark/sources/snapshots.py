@@ -89,12 +89,11 @@ class Snapshot:
     # every stream's last committed batch id ("" = the default stream),
     # carried by every commit
     streams: dict = None  # {app_id: batch id}
-    # data files THIS commit staged (relative paths) and their total rows —
-    # set on the Snapshot a write returns, so a caller can read back exactly
-    # what it landed; not persisted (a manifest loaded later leaves them
-    # empty)
+    # data files THIS commit staged (relative paths; their rows are in
+    # file_rows) — set on the Snapshot a write returns, so a caller can read
+    # back exactly what it landed; not persisted (a manifest loaded later
+    # leaves it empty)
     added_files: tuple = ()
-    added_rows: int = 0
 
 
 # what a commit that carries no existing file builds on
@@ -209,8 +208,7 @@ def _commit_manifest(path: str, new_version: int, manifest: dict,
     removed on EVERY exit, including a serialization failure mid-dump
     (review find: a raise inside the write block leaked it). Returns the
     Snapshot of ``manifest`` itself (no re-read), reporting
-    ``added_files`` and ``added_rows``, the files this commit staged and
-    their rows."""
+    ``added_files``, the files this commit staged."""
     tmp = os.path.join(_snap_dir(path), f".tmp-{uuid.uuid4().hex}")
     try:
         with open(tmp, "w") as fh:
@@ -229,9 +227,7 @@ def _commit_manifest(path: str, new_version: int, manifest: dict,
             os.unlink(tmp)
         except FileNotFoundError:
             pass
-    snap = _decode(manifest)
-    return replace(snap, added_files=tuple(added_files),
-                   added_rows=sum(snap.file_rows[f] for f in added_files))
+    return replace(_decode(manifest), added_files=tuple(added_files))
 
 
 def _commit(path: str, parent: Snapshot | None, operation: str,
@@ -390,8 +386,7 @@ def commit(
     manifest already exists (a racing writer won).
 
     The returned Snapshot's ``added_files`` lists the data files this
-    commit staged (for ``overwrite`` that is the whole new file list) and
-    ``added_rows`` their row count.
+    commit staged (for ``overwrite`` that is the whole new file list).
     """
     prev = _current(path)
     cur = None if prev is None else prev.version
@@ -424,8 +419,7 @@ def commit_stream_batch(
       skipping it could lose them;
     - a higher id, or any id of a stream the table has not seen (a fresh
       checkpoint, whose ids restart at 0), lands and returns the commit's
-      Snapshot, whose ``added_files`` hold exactly this batch's rows
-      (``added_rows`` of them).
+      Snapshot, whose ``added_files`` hold exactly this batch's rows.
 
     The gate reads ONE manifest (the current one) — O(1) per batch — and
     the commit builds on that same read. Every commit, including

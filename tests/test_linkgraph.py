@@ -4,6 +4,7 @@ the crawl-to-rank composition over the deterministic page generator."""
 
 import numpy as np
 import pytest
+from helpers import generate_pages
 from pyspark.sql import functions as F
 
 from hypertrace_ingester_spark.operators import linkgraph as lg
@@ -79,7 +80,7 @@ def test_domain_edges_from_extracted_links(spark):
 def test_crawl_to_rank_composition(spark):
     """Generator pages → extract_links → domain_edges → page_rank → join
     back as a per-doc quality column (the full curation-signal path)."""
-    pages = wx.generate_pages(spark, 30).withColumn(
+    pages = generate_pages(spark, 30).withColumn(
         "url",
         F.concat(
             F.lit("https://site"), (F.col("page_id") % 3).cast("string"),

@@ -1,10 +1,14 @@
-"""The driver aggregates (``aggregate.read_local`` + ``sink_metrics_local``
-/ ``token_histogram_local`` + ``overwrite_partition``) against the Spark
-aggregates ``run_pipeline`` runs above ``LOCAL_METRICS_MAX_ROWS``: over
-the same ``partitionBy("sink")`` fan-out, the same rows and schema."""
+"""The aggregate step (``aggregate.read_routed`` + ``write_metrics`` /
+``write_histogram``) against Spark's aggregates over the same
+``partitionBy("sink")`` fan-out read back as a directory: the same rows
+and schema whether the step reads the files on the driver (within
+``LOCAL_METRICS_MAX_ROWS``) or as a Spark scan (the bound lowered below
+the fan-out's rows)."""
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from hypertrace_ingester_spark.operators import aggregate as agg
@@ -38,50 +42,71 @@ def _routed(spark, copies=5):
     return spark.createDataFrame(rows, _SCHEMA).repartition(3)
 
 
-def _spark_vs_local(spark, tmp_path, routed, salt_buckets):
-    """Both aggregates of the fan-out of ``routed``, each output written
-    and read back by Spark: (Spark's, the driver's) per aggregate."""
+def _spark_vs_step(spark, tmp_path, monkeypatch, routed, salt_buckets, bounds):
+    """Spark's aggregates of the fan-out of ``routed`` and, for each of
+    ``bounds`` as ``LOCAL_METRICS_MAX_ROWS``, the aggregate step's, each
+    output written and read back by Spark: {bound: (the step's input,
+    {aggregate: (Spark's, the step's)})}."""
     routed_dir = str(tmp_path / "routed")
     route_ops.fan_out(routed, routed_dir, salt_buckets)
     back = spark.read.schema(routed.schema).parquet(routed_dir)
+    want = {}
+    for name, spark_agg in (("metrics", agg.sink_metrics(back)),
+                            ("histogram", agg.token_histogram(back))):
+        spark_agg.write.parquet(str(tmp_path / f"spark_{name}"))
+        want[name] = spark.read.parquet(str(tmp_path / f"spark_{name}"))
     files = parquet_files(routed_dir)
-    local = agg.read_local(files)
-    assert local.num_rows == agg.footer_rows(files) == routed.count()
-    pairs = {}
-    for name, spark_agg, local_agg in (
-            ("metrics", agg.sink_metrics(back), agg.sink_metrics_local(local)),
-            ("histogram", agg.token_histogram(back), agg.token_histogram_local(local))):
-        want_dir, got_dir = str(tmp_path / f"spark_{name}"), str(tmp_path / f"local_{name}")
-        spark_agg.write.parquet(want_dir)
-        agg.overwrite_partition(local_agg, got_dir)
-        pairs[name] = spark.read.parquet(want_dir), spark.read.parquet(got_dir)
-    return pairs
+    footer_rows = sum(pq.read_metadata(f).num_rows for f in files)
+    assert footer_rows == routed.count()
+    runs = {}
+    for bound in bounds:
+        monkeypatch.setattr(agg, "LOCAL_METRICS_MAX_ROWS", bound)
+        step = agg.read_routed(spark, routed_dir, files, routed.schema)
+        assert isinstance(step, pa.Table) == (footer_rows <= bound), bound
+        assert (step.num_rows if isinstance(step, pa.Table) else step.count()) == footer_rows
+        got = tmp_path / f"step_{bound}"
+        agg.write_metrics(step, str(got / "metrics"))
+        agg.write_histogram(step, str(got / "histogram"))
+        runs[bound] = step, {name: (want[name], spark.read.parquet(str(got / name)))
+                             for name in want}
+    return runs
 
 
 @pytest.mark.parametrize("salt_buckets", [None, 4])
-def test_local_aggregates_match_spark(spark, tmp_path, salt_buckets):
-    """Sorted rows and schema equal to Spark's, including every escaped
-    sink name, the default partition, null keys and all-null sums."""
-    pairs = _spark_vs_local(spark, tmp_path, _routed(spark), salt_buckets)
-    for name, (want, got) in pairs.items():
-        assert [(f.name, f.dataType) for f in got.schema] == \
-            [(f.name, f.dataType) for f in want.schema], name
-        rows = sorted(map(repr, got.collect()))
-        assert rows == sorted(map(repr, want.collect())), name
-    sinks = {r["sink"] for r in pairs["metrics"][1].select("sink").collect()}
-    assert sinks == {"sink-0", "a b", "x/y", "k=v", "50%", None}
-    hist = {(r["sink"], r["tok_bucket"]): r for r in pairs["histogram"][1].collect()}
-    assert hist[("x/y", "1025-4096")]["sum_tokens"] is None
-    assert hist[("x/y", "1025-4096")]["num_rows"] == 10
+def test_local_aggregates_match_spark(spark, tmp_path, monkeypatch, salt_buckets):
+    """At the real bound the step aggregates on the driver, at 0 through
+    Spark; both give sorted rows and schema equal to Spark's, including
+    every escaped sink name, the default partition, null keys and
+    all-null sums. The Spark scan takes each sink from its directory:
+    only the default partition's rows read null."""
+    runs = _spark_vs_step(spark, tmp_path, monkeypatch, _routed(spark), salt_buckets,
+                          (agg.LOCAL_METRICS_MAX_ROWS, 0))
+    for bound, (_, pairs) in runs.items():
+        for name, (want, got) in pairs.items():
+            assert [(f.name, f.dataType) for f in got.schema] == \
+                [(f.name, f.dataType) for f in want.schema], (bound, name)
+            rows = sorted(map(repr, got.collect()))
+            assert rows == sorted(map(repr, want.collect())), (bound, name)
+        sinks = {r["sink"] for r in pairs["metrics"][1].select("sink").collect()}
+        assert sinks == {"sink-0", "a b", "x/y", "k=v", "50%", None}, bound
+        hist = {(r["sink"], r["tok_bucket"]): r for r in pairs["histogram"][1].collect()}
+        assert hist[("x/y", "1025-4096")]["sum_tokens"] is None
+        assert hist[("x/y", "1025-4096")]["num_rows"] == 10
+    scanned = sorted((r["sink"] or "") for r in runs[0][0].select("sink").collect())
+    assert scanned == sorted((r[0] or "") for r in _ROWS for _ in range(5))
 
 
-def test_local_aggregates_of_empty_fan_out(spark, tmp_path):
-    """An empty fan-out writes no data files; the driver outputs are then
-    schema-only files with the Spark outputs' schema."""
-    pairs = _spark_vs_local(spark, tmp_path, _routed(spark).limit(0), None)
-    for name, (want, got) in pairs.items():
-        assert got.schema == want.schema, name
-        assert got.count() == want.count() == 0, name
+def test_local_aggregates_of_empty_fan_out(spark, tmp_path, monkeypatch):
+    """An empty fan-out writes no data files. The step's outputs are then
+    empty with the Spark outputs' schema: schema-only files from the
+    driver at the real bound, and from the Spark scan of no files at a
+    bound below 0 (no row count exceeds a bound of 0)."""
+    runs = _spark_vs_step(spark, tmp_path, monkeypatch, _routed(spark).limit(0), None,
+                          (agg.LOCAL_METRICS_MAX_ROWS, -1))
+    for bound, (_, pairs) in runs.items():
+        for name, (want, got) in pairs.items():
+            assert got.schema == want.schema, (bound, name)
+            assert got.count() == want.count() == 0, (bound, name)
 
 
 def test_overwrite_partition_scopes_by_prefix(tmp_path):

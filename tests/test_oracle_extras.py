@@ -1,27 +1,45 @@
-"""Oracle coverage for a library query that lives OUTSIDE the 50-entry
-driver catalog (the driver samples the first 50 registered entries, so the
+"""Oracle coverage for a query that lives OUTSIDE the 50-entry driver
+catalog (the driver samples the first 50 registered entries, so the
 round-3 consolidation moved it here):
 
 - q_topk_orders — top-k by aggregate with deterministic tiebreak
   (TakeOrderedAndProject); its plan shape also appears in
-  s_knn_bruteforce's two-phase top-k.
-
-The Arrow-batched grok variant (``parse.grok_extract_pandas``) is asserted
-equal to the JVM ``grok_extract`` path in tests/test_parse.py.
+  s_knn_bruteforce's two-phase top-k. No library code calls it, so the
+  query itself lives here too.
 """
 
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from hypertrace_ingester_spark.oracle import compare, duckdb_connection
-from hypertrace_ingester_spark.queries import q_topk_orders
+from hypertrace_ingester_spark.sources import load_table
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 pytestmark = pytest.mark.skipif(
     not os.path.isdir(SF_DIR), reason=f"testdata dir {SF_DIR} missing"
 )
+
+
+def q_topk_orders(spark, sf_dir):
+    """Top-k by aggregate with deterministic tiebreak — TakeOrderedAndProject
+    physical op (no global sort). Out of the 50-entry driver catalog (its
+    plan shape is also exercised by s_knn_bruteforce's two-phase top-k)."""
+    l = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    return (
+        l.join(o, l.l_orderkey == o.o_orderkey)
+        .groupBy("o_orderkey")
+        .agg(
+            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2).alias("revenue"),
+            F.count(F.lit(1)).alias("n_items"),
+        )
+        .orderBy(F.desc("revenue"), F.asc("o_orderkey"))
+        .limit(10)
+    )
+
 
 _TOPK_SQL = """
     SELECT o.o_orderkey, round(sum(l.l_extendedprice * (1 - l.l_discount)), 2) AS revenue,

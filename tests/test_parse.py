@@ -22,15 +22,6 @@ def test_grok_extract_fields(spark):
     assert row.query_params == {"q": "55", "lang": "fr"}
 
 
-def test_grok_pandas_path_equivalent(spark, sequences):
-    """The pandas-UDF grok path must agree with the native regexp path."""
-    cols = ["doc_id", "ts_ms", "tenant_raw", "operation", "status_code", "bypass_raw"]
-    native = P.grok_extract(sequences).select(cols)
-    pandas_path = P.grok_extract_pandas(sequences).select(cols)
-    assert native.exceptAll(pandas_path).count() == 0
-    assert pandas_path.exceptAll(native).count() == 0
-
-
 def test_missing_tenant_is_null(spark):
     df = spark.createDataFrame(
         [("ts=1 tenant= op=a status=200 url=/x?q=1 bypass=false",)], ["source_line"]

@@ -62,9 +62,17 @@ def test_metrics_totals(spark, run):
 
 
 def test_partition_lineage_recorded(run):
+    """One ``{"file", "rows"}`` entry per routed file, read from its
+    footer."""
+    import pyarrow.parquet as pq
+
     out, manifest = run
     lineage = manifest["stages"]["route"]["partition_lineage"]
     assert sum(p["rows"] for p in lineage) == manifest["total_routed_rows"]
+    routed = os.path.join(out, "routed")
+    for p in lineage:
+        assert set(p) == {"file", "rows"}
+        assert pq.read_metadata(os.path.join(routed, p["file"])).num_rows == p["rows"]
 
 
 def test_resume_skips_completed_stages(spark, sequences, run):
@@ -243,6 +251,8 @@ def test_default_dims_pipeline_builds_once_and_runs_five_jobs(spark, tmp_path, m
     aggregates were Spark jobs). The aggregate step, counted in its own job
     group, starts none. The counters collect runs on a helper thread and
     its jobs still land in the caller's job group."""
+    from helpers import own_job_group
+
     from hypertrace_ingester_spark.operators import aggregate as agg_ops
     from hypertrace_ingester_spark.operators import enrich as enrich_ops
 
@@ -273,17 +283,9 @@ def test_default_dims_pipeline_builds_once_and_runs_five_jobs(spark, tmp_path, m
 
     monkeypatch.setattr(agg_ops, "operational_counters",
                         lambda parsed: Tagged(operational_counters(parsed)))
-    read_local = agg_ops.read_local
-    aggregate_groups = []
-
-    def in_own_group(*args, **kwargs):
-        # the aggregate step starts here, on the calling thread; its jobs,
-        # if any, land in this group until run_pipeline returns
-        aggregate_groups.append(f"{sc.getLocalProperty('spark.jobGroup.id')}-aggregate")
-        sc.setJobGroup(aggregate_groups[-1], aggregate_groups[-1])
-        return read_local(*args, **kwargs)
-
-    monkeypatch.setattr(agg_ops, "read_local", in_own_group)
+    # the aggregate step starts with read_routed, on the calling thread;
+    # its jobs, if any, land in this group until run_pipeline returns
+    aggregate_groups = own_job_group(monkeypatch, sc, agg_ops, "read_routed", "aggregate")
     session = spark.newSession()  # fresh default dims, not built yet
     seq = datagen.generate_sequences(session, 2000, partitions=8)
     tracker = sc.statusTracker()
@@ -359,22 +361,34 @@ def _live_helper_threads():
 def test_spark_aggregate_path_above_bound_gives_same_outputs(spark, sequences, run, tmp_path,
                                                              monkeypatch):
     """Over ``LOCAL_METRICS_MAX_ROWS`` the aggregates are read back and
-    grouped by Spark; the outputs, row for row and in schema, and the
-    manifest's sink counts are those of the driver path."""
+    grouped by Spark: the aggregate step, counted in its own job group,
+    runs Spark jobs. The outputs, row for row and in schema, and the
+    manifest's sink counts are those of the driver path, and the staged
+    metrics write leaves no dot-name or Spark bookkeeping entry."""
+    from helpers import own_job_group
+
     from hypertrace_ingester_spark.operators import aggregate as agg_ops
 
     out, manifest = run
     spark_out = str(tmp_path / "spark_path")
     monkeypatch.setattr(agg_ops, "LOCAL_METRICS_MAX_ROWS", 0)
-    above = run_pipeline(spark, sequences, PipelineConfig(out_dir=spark_out))
+    sc = spark.sparkContext
+    groups = own_job_group(monkeypatch, sc, agg_ops, "read_routed", "aggregate")
+    sc.setJobGroup(f"above-bound-{tmp_path.name}", "above-bound")
+    try:
+        above = run_pipeline(spark, sequences, PipelineConfig(out_dir=spark_out))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the metrics write and the histogram collect, each at least one job
+    assert len(sc.statusTracker().getJobIdsForGroup(groups[-1])) >= 2
     assert above["stages"]["route"]["sink_counts"] == manifest["stages"]["route"]["sink_counts"]
     for d in ("metrics", "histogram"):
         got = spark.read.parquet(os.path.join(out, d))
         want = spark.read.parquet(os.path.join(spark_out, d))
         assert got.schema == want.schema
         assert sorted(map(repr, got.collect())) == sorted(map(repr, want.collect()))
-    # Spark's writer (the driver path leaves no _SUCCESS marker)
-    assert os.path.exists(os.path.join(spark_out, "metrics", "_SUCCESS"))
+        assert not [n for n in os.listdir(os.path.join(spark_out, d))
+                    if n.startswith((".", "_"))]
 
 
 def test_concurrent_actions_inherit_group_join_all_and_raise_first(spark):

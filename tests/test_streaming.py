@@ -382,6 +382,8 @@ def test_snapshot_batches_reuse_built_chain(spark, tmp_path, monkeypatch):
     write (it was 8 while every batch rebuilt the chain and its dim, and 6
     while the metrics were a Spark aggregate). A landed batch's metrics
     step, counted in its own job group, starts no Spark job."""
+    from helpers import own_job_group
+
     from hypertrace_ingester_spark.operators import aggregate as agg_ops
     from hypertrace_ingester_spark.operators import enrich as enrich_ops
     from hypertrace_ingester_spark.plans.streaming_pipeline import process_batch
@@ -395,17 +397,9 @@ def test_snapshot_batches_reuse_built_chain(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(enrich_ops, "collect_local", counting)
     sc = spark.sparkContext
-    read_local = agg_ops.read_local
-    metric_groups = []
-
-    def in_own_group(*args, **kwargs):
-        # the metrics step runs after the commit; its jobs, if any, land
-        # in this group until process_batch returns
-        metric_groups.append(f"{sc.getLocalProperty('spark.jobGroup.id')}-metrics")
-        sc.setJobGroup(metric_groups[-1], metric_groups[-1])
-        return read_local(*args, **kwargs)
-
-    monkeypatch.setattr(agg_ops, "read_local", in_own_group)
+    # the metrics step starts with read_routed, after the commit; its jobs,
+    # if any, land in this group until process_batch returns
+    metric_groups = own_job_group(monkeypatch, sc, agg_ops, "read_routed", "metrics")
     batches, cfg, ctx, rules = _snapshot_batch_setup(spark, tmp_path)
     jobs, metric_jobs = [], []
     try:
@@ -441,22 +435,27 @@ _EDGE_ROWS = [
 
 
 def _driver_vs_spark_metrics(spark, tmp_path, landed, table, window_ms):
-    """The driver partial and ``aggregate.sink_metrics`` over the same staged
-    files, each written as a partition and read back by Spark. The driver's
-    partition is first filled with a Spark-written partition and a stray
-    staging file, so the write is a rewrite."""
+    """The driver partial (``read_routed`` + ``write_metrics``) and
+    ``aggregate.sink_metrics`` over the same staged files, each written as
+    a partition and read back by Spark. The driver's partition is first
+    filled with a Spark-written partition and a stray staging file, so the
+    write is a rewrite."""
     import os
     import shutil
+
+    import pyarrow as pa
 
     from hypertrace_ingester_spark.operators import aggregate as agg
     files = [os.path.join(table, f) for f in landed.added_files]
     want_dir, got_dir = str(tmp_path / "spark_part"), str(tmp_path / "driver_part")
-    agg.sink_metrics(spark.read.parquet(*files), window_ms).repartition(2) \
+    scan = spark.read.parquet(*files)
+    agg.sink_metrics(scan, window_ms).repartition(2) \
         .write.mode("overwrite").parquet(want_dir)
     shutil.copytree(want_dir, got_dir)
     open(os.path.join(got_dir, ".tmp-stale"), "wb").close()
-    routed = agg.read_local(files, agg.METRIC_INPUTS)
-    agg.overwrite_partition(agg.sink_metrics_local(routed, window_ms), got_dir)
+    routed = agg.read_routed(spark, table, files, scan.schema, agg.METRIC_INPUTS)
+    assert isinstance(routed, pa.Table)
+    agg.write_metrics(routed, got_dir, window_ms)
 
     names = os.listdir(got_dir)
     assert len([n for n in names if n.endswith(".parquet")]) == 1, names
@@ -481,7 +480,8 @@ def test_driver_metrics_partial_matches_spark(spark, tmp_path, window_ms):
     table = str(tmp_path / "routed_snap")
     batch = spark.createDataFrame(_EDGE_ROWS * 3, _EDGE_SCHEMA).repartition(3)
     landed = sn.commit_stream_batch(batch, table, 0)
-    assert len(landed.added_files) > 1 and landed.added_rows == 3 * len(_EDGE_ROWS)
+    assert len(landed.added_files) > 1
+    assert sum(landed.file_rows[f] for f in landed.added_files) == 3 * len(_EDGE_ROWS)
     rows = _driver_vs_spark_metrics(spark, tmp_path, landed, table, window_ms)
     assert any("bucket_start_ms=None" in r for r in rows)
     assert any("bucket_start_ms=-" in r for r in rows)
@@ -499,7 +499,7 @@ def test_driver_metrics_partial_of_empty_batch(spark, tmp_path):
     table = str(tmp_path / "routed_snap")
     empty = spark.createDataFrame(_EDGE_ROWS, _EDGE_SCHEMA).limit(0)
     landed = sn.commit_stream_batch(empty, table, 0)
-    assert landed.added_files and landed.added_rows == 0
+    assert landed.added_files and sum(landed.file_rows[f] for f in landed.added_files) == 0
     assert _driver_vs_spark_metrics(spark, tmp_path, landed, table, 5_000) == []
 
     batches, cfg, ctx, rules = _snapshot_batch_setup(spark, tmp_path)
@@ -507,6 +507,53 @@ def test_driver_metrics_partial_of_empty_batch(spark, tmp_path):
     part = f"{cfg.out_dir}/metrics/batch_id=0"
     assert [n for n in os.listdir(part) if n.endswith(".parquet")]
     assert spark.read.parquet(part).count() == 0
+
+
+def test_snapshot_batch_above_bound_matches_driver_partial(spark, tmp_path, monkeypatch):
+    """Over ``LOCAL_METRICS_MAX_ROWS`` a landed snapshot batch's partial
+    goes through Spark (its metrics step starts Spark jobs) and has the
+    rows and schema of the driver path's partial of the same batch. In a
+    partition that already holds another stream's partial it writes only
+    its own stream's files, a replay of the batch replaces them, and no
+    dot-name staging entry is left."""
+    import os
+
+    from helpers import own_job_group
+
+    from hypertrace_ingester_spark.operators import aggregate as agg
+    from hypertrace_ingester_spark.plans.streaming_pipeline import _stream_prefix, process_batch
+
+    batches, cfg, ctx, rules = _snapshot_batch_setup(spark, tmp_path)
+    part = f"{cfg.out_dir}/metrics/batch_id=0"
+    process_batch(batches[0], 0, cfg, ctx, rules, app_id="driver")
+    driver = sorted(os.listdir(part))
+    monkeypatch.setattr(agg, "LOCAL_METRICS_MAX_ROWS", 0)
+    sc = spark.sparkContext
+    groups = own_job_group(monkeypatch, sc, agg, "read_routed", "metrics")
+    prefix = _stream_prefix("spark")
+
+    def partial(names):
+        df = spark.read.parquet(*[os.path.join(part, n) for n in names])
+        return [(f.name, f.dataType) for f in df.schema], sorted(map(repr, df.collect()))
+
+    listings, partials, step_jobs = [], [], []
+    try:
+        for _ in range(2):  # the batch, then its replay
+            sc.setJobGroup(f"above-bound-{tmp_path.name}", "above-bound")
+            process_batch(batches[0], 0, cfg, ctx, rules, app_id="spark")
+            step_jobs.append(len(sc.statusTracker().getJobIdsForGroup(groups[-1])))
+            listings.append(sorted(os.listdir(part)))
+            partials.append(partial([n for n in listings[-1] if n.startswith(prefix)]))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the replay's commit no-ops, so only the landed batch read its files
+    assert len(groups) == 1 and step_jobs[0] > 0, step_jobs
+    ours = [[n for n in names if n.startswith(prefix)] for names in listings]
+    assert ours[0] and ours[1] and not set(ours[0]) & set(ours[1]), ours
+    for names, own in zip(listings, ours):
+        assert sorted(set(names) - set(own)) == driver, names
+        assert not [n for n in names if n.startswith((".", "_"))], names
+    assert partials[0] == partials[1] == partial(driver)
 
 
 def test_streaming_dedup_drops_repeat_fingerprints(spark, tmp_path):

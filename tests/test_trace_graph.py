@@ -12,13 +12,14 @@ Expected (ApiTraceGraph.java:155-366 semantics):
 """
 
 import pytest
+from helpers import spans_fixture
 
 from hypertrace_ingester_spark.operators import trace_graph as tg
 
 
 @pytest.fixture(scope="module")
 def spans(spark):
-    return tg.spans_fixture(spark, n_traces=4).cache()
+    return spans_fixture(spark, n_traces=4).cache()
 
 
 def _ids(base, *offs):

@@ -7,6 +7,7 @@ the structural laws the gate's benign corpus can't reach.
 """
 
 import pytest
+from helpers import PAGE_LANGS, generate_pages, page_laws
 from pyspark.sql import functions as F
 
 from hypertrace_ingester_spark.operators import webextract as wx
@@ -72,10 +73,10 @@ def test_generator_laws_hold(spark):
     """extract_text over the law-driven page generator recovers exactly the
     closed-form paragraphs, lang, title, and kept-block count for every
     page — nav (2-4 links), the i%5 link farm, and head junk all drop."""
-    ex = wx.extract_text(wx.generate_pages(spark, 60)).collect()
+    ex = wx.extract_text(generate_pages(spark, 60)).collect()
     assert len(ex) == 60
     for r in ex:
-        law = wx.page_laws(r.page_id)
+        law = page_laws(r.page_id)
         assert r.text == "\n\n".join(law["paras"]), r.page_id
         assert r.page_lang == law["lang"]
         assert r.page_title == law["title"]
@@ -84,19 +85,19 @@ def test_generator_laws_hold(spark):
 
 def test_min_words_threshold(spark):
     """min_words drops short content blocks (justext's length rule)."""
-    pages = wx.generate_pages(spark, 20)
+    pages = generate_pages(spark, 20)
     ex = wx.extract_text(pages, min_words=8).collect()
     for r in ex:
-        law = wx.page_laws(r.page_id)
+        law = page_laws(r.page_id)
         want = [p for p, w in zip(law["paras"], law["para_words"]) if w >= 8]
         assert r.text == "\n\n".join(want), r.page_id
 
 
 def test_extract_links_outlink_frontier(spark):
-    pages = wx.generate_pages(spark, 10)
+    pages = generate_pages(spark, 10)
     links = {r.page_id: r.links for r in wx.extract_links(pages).collect()}
     for i in range(10):
-        law = wx.page_laws(i)
+        law = page_laws(i)
         want = [f"/s{k}" for k in range(law["nav_links"])]
         if law["has_linkfarm"]:
             want += ["/a", "/b", "/c", "/d"]
@@ -205,7 +206,7 @@ def test_ingest_crawl_to_curation(spark, tmp_path):
         run_curation,
     )
 
-    pages = wx.generate_pages(spark, 80)
+    pages = generate_pages(spark, 80)
     uri = F.concat(
         F.lit("https://www.site"),
         (F.col("page_id") % 4).cast("string"),
@@ -228,10 +229,10 @@ def test_ingest_crawl_to_curation(spark, tmp_path):
     # source = REGISTERED domain of the target URI (www. stripped by the
     # registrable-domain rule), the per-source grain mixture/datacard use
     assert {r.source for r in rows} == {f"site{k}.org" for k in range(4)}
-    assert all(r.lang in wx.PAGE_LANGS for r in rows)
+    assert all(r.lang in PAGE_LANGS for r in rows)
     by_title = {r.title: r for r in rows}
     for i in (0, 7, 41):
-        law = wx.page_laws(i)
+        law = page_laws(i)
         assert by_title[f"Page {i}"].text == "\n\n".join(law["paras"])
 
     cfg = CurationConfig(
